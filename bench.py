@@ -122,7 +122,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     from spk_sl_validation_spark.plans.registry import headline_queries
-    from spk_sl_validation_spark.session import build_session
+    from spk_sl_validation_spark.session import build_session, release
 
     spark = build_session(app_name="bench")
     specs = headline_queries()
@@ -133,16 +133,6 @@ def main() -> None:
     # Python-worker calibrator BEFORE the query loop (it also warms
     # the Python worker pool the pandas_udf queries reuse).
     py_cal = _py_worker_calibrator(spark, RUNS)
-
-    import gc
-
-    def _cleanup() -> None:
-        # Isolate measurements: drop cached/checkpointed RDDs and
-        # broadcast blocks between runs. Without this, leaked session
-        # state piles up across the suite and later queries pay its GC
-        # bill — measured 2.6x total inflation at sf0.1.
-        gc.collect()
-        spark.catalog.clearCache()
 
     medians: dict[str, float] = {}
     detail: dict[str, dict] = {}
@@ -157,7 +147,11 @@ def main() -> None:
                 samples.append(dt)
             else:
                 warmup_s = dt
-            _cleanup()
+            # Isolate measurements: drop cached/checkpointed RDDs and
+            # broadcast blocks between runs. Without this, leaked session
+            # state piles up across the suite and later queries pay its
+            # GC bill — measured 2.6x total inflation at sf0.1.
+            release(spark)
         med = statistics.median(samples)
         medians[name] = round(med, 3)
         detail[name] = {

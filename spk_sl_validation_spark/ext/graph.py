@@ -397,9 +397,9 @@ def min_label_propagation(
     """Connected components by min-label propagation over a SYMMETRIC
     (src, dst) edge relation — the oracle-replayable mode (its
     per-round semantics are exactly a recursive CTE, which is what
-    DuckDB can evaluate; `dedup_clusters(method='propagate')` and
-    `tools/cc_probe.py` both run THIS implementation, so the probe
-    measures the production loop, not a replica).
+    DuckDB can evaluate; `dedup_clusters(method='propagate')` and the
+    round-6 diameter sweep in SCALE.md §7 both run THIS implementation,
+    so the sweep measured the production loop, not a replica).
 
     Labels cover only nodes appearing in the edge relation — a node
     with no edges never receives a neighbor_min row, so iterating

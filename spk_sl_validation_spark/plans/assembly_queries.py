@@ -148,7 +148,7 @@ FROM o
         "sampling → sequence packing — every stage individually oracle-checked, "
         "and the composition value-checked here end-to-end"
     ),
-    oracle=None,  # set below (composed from the stage oracles)
+    oracle=_corpus_pipeline_oracle(),
 )
 def training_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -194,14 +194,6 @@ def compose_training_pipeline(
     sampled = A.mixture_sample(kept, weights)
     packed = A.pack_sequences(sampled, tokens_col="n_tokens", seq_len=seq_len)
     return packed.select("doc_id", "n_tokens", "tok_offset", "seq_id", "offset_in_seq")
-
-
-from spk_sl_validation_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-import dataclasses as _dc  # noqa: E402
-
-_REG["training_corpus_pipeline"] = _dc.replace(
-    _REG["training_corpus_pipeline"], oracle=_corpus_pipeline_oracle()
-)
 
 
 @register(

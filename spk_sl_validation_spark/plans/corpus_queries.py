@@ -9,6 +9,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spk_sl_validation_spark.ext.hashing import ws_tokens
+from spk_sl_validation_spark.ext.textrank import textrank_keywords_sql
+from spk_sl_validation_spark.plans.dedup_shared import BP_MIN_DOCS, SPAN_W
 from spk_sl_validation_spark.plans.registry import register
 from spk_sl_validation_spark.sources.readers import load_table, load_table_spread
 
@@ -209,25 +211,13 @@ def corpus_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
         "order so iterated double arithmetic is bit-exact vs the oracle's "
         "unrolled-CTE replay — an iterative graph algorithm under a value hash"
     ),
-    oracle=None,  # set below (generated to stay in lockstep with n_iter/top_k)
+    oracle=textrank_keywords_sql("documents", n_iter=3, top_k=20),
 )
 def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spk_sl_validation_spark.ext.textrank import textrank_keywords
 
     docs = load_table(spark, sf_dir, "documents")
     return textrank_keywords(docs, n_iter=3, top_k=20)
-
-
-from spk_sl_validation_spark.ext.textrank import textrank_keywords_sql as _tr_sql  # noqa: E402
-from spk_sl_validation_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-import dataclasses as _dc  # noqa: E402
-
-_REG["text_textrank_keywords"] = _dc.replace(
-    _REG["text_textrank_keywords"], oracle=_tr_sql("documents", n_iter=3, top_k=20)
-)
-
-
-SPAN_W = 8  # words per non-overlapping span
 
 
 @register(
@@ -400,19 +390,7 @@ def corpus_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return substring_dedup(docs, "doc_id", "text", SUBSTR_W, SUBSTR_MIN_LEN)
 
 
-BP_MIN_DOCS = 3  # spans in >= this many distinct docs are boilerplate
-
-
-@register(
-    "corpus_boilerplate_removal",
-    doc=(
-        f"CCNet-style boilerplate removal: an {SPAN_W}-word span occurring in "
-        f">= {BP_MIN_DOCS} distinct documents is template noise and removed "
-        "from EVERY document (vs span dedup, which keeps one owner copy). "
-        "Census groupBy on the span hash -> tiny hash-only boilerplate set -> "
-        "broadcast anti-join back; the corpus is never shuffled for the join"
-    ),
-    oracle=f"""
+_BOILERPLATE_ORACLE = f"""
 WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
 spans AS (
   SELECT doc_id, CAST(i AS INTEGER) AS span_idx,
@@ -434,7 +412,19 @@ SELECT doc_id,
        count(*) FILTER (WHERE kept) AS n_spans_kept,
        count(*) FILTER (WHERE NOT kept) AS n_spans_dropped
 FROM flagged GROUP BY doc_id
-""",
+"""
+
+
+@register(
+    "corpus_boilerplate_removal",
+    doc=(
+        f"CCNet-style boilerplate removal: an {SPAN_W}-word span occurring in "
+        f">= {BP_MIN_DOCS} distinct documents is template noise and removed "
+        "from EVERY document (vs span dedup, which keeps one owner copy). "
+        "Census groupBy on the span hash -> tiny hash-only boilerplate set -> "
+        "broadcast anti-join back; the corpus is never shuffled for the join"
+    ),
+    oracle=_BOILERPLATE_ORACLE,
 )
 def corpus_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boilerplate-span removal (the CCNet hashed-paragraph move at span
@@ -456,7 +446,7 @@ def corpus_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         "census. Oracle = corpus_boilerplate_removal's SQL verbatim: "
         "identical output is the claim"
     ),
-    oracle=None,  # patched below with the direct path's oracle
+    oracle=_BOILERPLATE_ORACLE,
 )
 def boilerplate_apply_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-apply split of corpus_boilerplate_removal (same artifact
@@ -469,14 +459,6 @@ def boilerplate_apply_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=True
     )
     return apply_boilerplate_index(docs, index, "doc_id", "text", SPAN_W)
-
-
-from spk_sl_validation_spark.plans.registry import REGISTRY as _REG2  # noqa: E402
-import dataclasses as _dc2  # noqa: E402
-
-_REG2["boilerplate_apply_indexed"] = _dc2.replace(
-    _REG2["boilerplate_apply_indexed"], oracle=_REG2["corpus_boilerplate_removal"].oracle
-)
 
 
 OVERLAP_N = 8  # shingle width for cross-source containment
@@ -792,6 +774,27 @@ def ingest_novelty_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _dedup_impact_oracle() -> str:
+    from spk_sl_validation_spark.plans.dedup_shared import _verified_pairs_ctes
+
+    return f"""
+WITH {_verified_pairs_ctes()},
+keepflag AS (
+  SELECT d.doc_id, d.source, len({_TOKS}) AS n_tok, (v.id_b IS NULL) AS keep
+  FROM documents d
+  LEFT JOIN (SELECT DISTINCT id_b FROM verified) v ON d.doc_id = v.id_b
+)
+SELECT source,
+       count(*) AS n_docs,
+       CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
+       count(*) FILTER (WHERE keep) AS n_docs_kept,
+       CAST(SUM(CASE WHEN keep THEN n_tok ELSE 0 END) AS BIGINT) AS n_tokens_kept,
+       round(1.0 - CAST(SUM(CASE WHEN keep THEN n_tok ELSE 0 END) AS DOUBLE)
+                 / CAST(SUM(n_tok) AS DOUBLE), 6) AS dropped_token_frac
+FROM keepflag GROUP BY source
+"""
+
+
 @register(
     "dedup_impact_report",
     doc=(
@@ -802,7 +805,7 @@ def ingest_novelty_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "token aggregate; oracle reuses the shared verified-pairs CTEs "
         "verbatim"
     ),
-    oracle=None,
+    oracle=_dedup_impact_oracle(),
 )
 def dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spk_sl_validation_spark.ext.dedup import dedup_corpus
@@ -831,30 +834,25 @@ def dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dedup_impact_oracle() -> str:
+def _quality_by_dup_oracle() -> str:
     from spk_sl_validation_spark.plans.dedup_shared import _verified_pairs_ctes
+    from spk_sl_validation_spark.plans.text_queries import _Z
 
     return f"""
 WITH {_verified_pairs_ctes()},
-keepflag AS (
-  SELECT d.doc_id, d.source, len({_TOKS}) AS n_tok, (v.id_b IS NULL) AS keep
+scored AS (
+  SELECT d.doc_id, (v.id_b IS NULL) AS keep,
+         CAST(round(1.0 / (1.0 + exp(-({_Z}))), 12) AS DECIMAL(28,12)) AS p12
   FROM documents d
   LEFT JOIN (SELECT DISTINCT id_b FROM verified) v ON d.doc_id = v.id_b
 )
-SELECT source,
+SELECT keep,
        count(*) AS n_docs,
-       CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
-       count(*) FILTER (WHERE keep) AS n_docs_kept,
-       CAST(SUM(CASE WHEN keep THEN n_tok ELSE 0 END) AS BIGINT) AS n_tokens_kept,
-       round(1.0 - CAST(SUM(CASE WHEN keep THEN n_tok ELSE 0 END) AS DOUBLE)
-                 / CAST(SUM(n_tok) AS DOUBLE), 6) AS dropped_token_frac
-FROM keepflag GROUP BY source
+       round(CAST(SUM(p12) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS mean_quality,
+       round(CAST(MIN(p12) AS DOUBLE), 6) AS min_quality,
+       round(CAST(MAX(p12) AS DOUBLE), 6) AS max_quality
+FROM scored GROUP BY keep
 """
-
-
-_REG["dedup_impact_report"] = _dc.replace(
-    _REG["dedup_impact_report"], oracle=_dedup_impact_oracle()
-)
 
 
 @register(
@@ -866,7 +864,7 @@ _REG["dedup_impact_report"] = _dc.replace(
         "survivorship). Exact decimal score sums per group; composes the "
         "shared verified-pairs CTEs with the logistic quality model"
     ),
-    oracle=None,
+    oracle=_quality_by_dup_oracle(),
 )
 def quality_by_dup_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spk_sl_validation_spark.ext.dedup import dedup_corpus
@@ -889,29 +887,3 @@ def quality_by_dup_status(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.min("p12").cast("double"), 6).alias("min_quality"),
         F.round(F.max("p12").cast("double"), 6).alias("max_quality"),
     )
-
-
-def _quality_by_dup_oracle() -> str:
-    from spk_sl_validation_spark.plans.dedup_shared import _verified_pairs_ctes
-    from spk_sl_validation_spark.plans.text_queries import _Z
-
-    return f"""
-WITH {_verified_pairs_ctes()},
-scored AS (
-  SELECT d.doc_id, (v.id_b IS NULL) AS keep,
-         CAST(round(1.0 / (1.0 + exp(-({_Z}))), 12) AS DECIMAL(28,12)) AS p12
-  FROM documents d
-  LEFT JOIN (SELECT DISTINCT id_b FROM verified) v ON d.doc_id = v.id_b
-)
-SELECT keep,
-       count(*) AS n_docs,
-       round(CAST(SUM(p12) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS mean_quality,
-       round(CAST(MIN(p12) AS DOUBLE), 6) AS min_quality,
-       round(CAST(MAX(p12) AS DOUBLE), 6) AS max_quality
-FROM scored GROUP BY keep
-"""
-
-
-_REG["quality_by_dup_status"] = _dc.replace(
-    _REG["quality_by_dup_status"], oracle=_quality_by_dup_oracle()
-)

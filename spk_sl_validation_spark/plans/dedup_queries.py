@@ -17,6 +17,7 @@ from spk_sl_validation_spark.plans.dedup_shared import (  # noqa: F401
     JACCARD_TAU,
     NUM_HASHES,
     ROWS_PER_BAND,
+    _clusters_cte_body,
     _verified_pairs_ctes,
     capped_bands_cte,
 )
@@ -97,7 +98,7 @@ JOIN sig sb ON sb.doc_id = id_b
     "dedup_minhash_lsh",
     headline=True,
     doc=f"MinHash({NUM_HASHES})+LSH({BANDS} bands) near-dup candidate pairs with signature Jaccard estimate",
-    oracle=None,  # set below — needs the generator
+    oracle=_minhash_lsh_oracle(),
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread: the 128-hash/shingle HOF stage is the dominant per-row
@@ -110,10 +111,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Patch in the generated oracle (register() takes literals; the LSH
 # oracle is assembled programmatically to stay in lockstep with the
 # constants above).
-from spk_sl_validation_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-import dataclasses as _dc  # noqa: E402
-
-_REG["dedup_minhash_lsh"] = _dc.replace(_REG["dedup_minhash_lsh"], oracle=_minhash_lsh_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -139,7 +136,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {MAX_HAMMING}
 @register(
     "dedup_simhash",
     doc=f"SimHash({SIMHASH_BITS}-bit) near-dup pairs, Hamming ≤ {MAX_HAMMING}, lossless banded join",
-    oracle=None,
+    oracle=_simhash_oracle(),
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
@@ -147,9 +144,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = D.simhash_near_dup_pairs(docs, "doc_id", "text", SIMHASH_BITS, MAX_HAMMING)
     return pairs.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
-
-
-_REG["dedup_simhash"] = _dc.replace(_REG["dedup_simhash"], oracle=_simhash_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -162,24 +156,6 @@ WITH {_verified_pairs_ctes()}
 SELECT d.doc_id, (v.id_b IS NULL) AS keep
 FROM documents d LEFT JOIN (SELECT DISTINCT id_b FROM verified) v ON d.doc_id = v.id_b
 """
-
-
-def _clusters_cte_body() -> str:
-    """Connected components over the verified pair graph via a
-    recursive CTE (min reachable id = cluster label); shared by the
-    clusters and soft-weights oracles."""
-    return f"""{_verified_pairs_ctes()},
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM verified
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM verified
-),
-reach(id, r) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT re.id, e.dst FROM reach re JOIN edges e ON e.src = re.r
-),
-clusters AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id)"""
 
 
 def _dedup_clusters_oracle() -> str:
@@ -210,16 +186,13 @@ JOIN toks t USING (doc_id)
     "dedup_pipeline",
     headline=True,
     doc=f"end-to-end near-dup dedup: LSH candidates → exact Jaccard ≥ {JACCARD_TAU} → keep/drop per doc",
-    oracle=None,
+    oracle=_dedup_pipeline_oracle(),
 )
 def dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return D.dedup_corpus(
         docs, "doc_id", "text", NUM_HASHES, BANDS, 3, jaccard_threshold=JACCARD_TAU
     )
-
-
-_REG["dedup_pipeline"] = _dc.replace(_REG["dedup_pipeline"], oracle=_dedup_pipeline_oracle())
 
 
 @register(
@@ -233,7 +206,7 @@ _REG["dedup_pipeline"] = _dc.replace(_REG["dedup_pipeline"], oracle=_dedup_pipel
         "Oracle = dedup_pipeline's pure-LSH SQL, verbatim: the whole point "
         "is identical output"
     ),
-    oracle=None,
+    oracle=_dedup_pipeline_oracle(),
 )
 def dedup_pipeline_exact_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -249,24 +222,16 @@ def dedup_pipeline_exact_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REG["dedup_pipeline_exact_first"] = _dc.replace(
-    _REG["dedup_pipeline_exact_first"], oracle=_dedup_pipeline_oracle()
-)
-
-
 @register(
     "dedup_clusters",
     doc="transitive near-dup clusters: iterative min-label propagation == recursive-CTE connected components",
-    oracle=None,
+    oracle=_dedup_clusters_oracle(),
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return D.dedup_clusters(
         docs, "doc_id", "text", NUM_HASHES, BANDS, 3, jaccard_threshold=JACCARD_TAU
     )
-
-
-_REG["dedup_clusters"] = _dc.replace(_REG["dedup_clusters"], oracle=_dedup_clusters_oracle())
 
 
 @register(
@@ -279,7 +244,7 @@ _REG["dedup_clusters"] = _dc.replace(_REG["dedup_clusters"], oracle=_dedup_clust
         "99,999 — SCALE.md §7). Identical output to dedup_clusters wherever "
         "both converge; same oracle"
     ),
-    oracle=None,
+    oracle=_dedup_clusters_oracle(),
 )
 def dedup_clusters_stars(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -295,11 +260,6 @@ def dedup_clusters_stars(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REG["dedup_clusters_stars"] = _dc.replace(
-    _REG["dedup_clusters_stars"], oracle=_dedup_clusters_oracle()
-)
-
-
 @register(
     "dedup_soft_weights",
     doc=(
@@ -307,16 +267,13 @@ _REG["dedup_clusters_stars"] = _dc.replace(
         "from its transitive near-dup cluster (mass-conserving alternative to "
         "dropping); eff_tokens = the dedup-adjusted token budget per doc"
     ),
-    oracle=None,
+    oracle=_soft_weights_oracle(),
 )
 def dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return D.duplicate_soft_weights(
         docs, "doc_id", "text", NUM_HASHES, BANDS, 3, jaccard_threshold=JACCARD_TAU
     )
-
-
-_REG["dedup_soft_weights"] = _dc.replace(_REG["dedup_soft_weights"], oracle=_soft_weights_oracle())
 
 
 @register(
@@ -328,7 +285,7 @@ _REG["dedup_soft_weights"] = _dc.replace(_REG["dedup_soft_weights"], oracle=_sof
         "dominant cost of every cluster-derived query. Oracle = "
         "dedup_soft_weights' SQL verbatim: identical output is the claim"
     ),
-    oracle=None,
+    oracle=_soft_weights_oracle(),
 )
 def dedup_soft_weights_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -338,19 +295,11 @@ def dedup_soft_weights_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.duplicate_soft_weights(docs, "doc_id", "text", clusters=stored)
 
 
-_REG["dedup_soft_weights_indexed"] = _dc.replace(
-    _REG["dedup_soft_weights_indexed"], oracle=_soft_weights_oracle()
-)
-
-
 # ---------------------------------------------------------------------------
 # Exact n-gram Jaccard
 # ---------------------------------------------------------------------------
 
-@register(
-    "dedup_ngram_jaccard",
-    doc="exact 3-gram Jaccard near-dup pairs (threshold 0.5) — the verification path for LSH candidates",
-    oracle=rf"""
+_NGRAM_JACCARD_ORACLE = rf"""
 WITH sh AS (
   SELECT doc_id, unnest(list_distinct({word_shingles_sql(_TOKS, 3)})) AS s
   FROM documents
@@ -367,17 +316,20 @@ FROM inter
 JOIN sizes sa ON sa.doc_id = id_a
 JOIN sizes sb ON sb.doc_id = id_b
 WHERE CAST(n_inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_inter AS DOUBLE) >= 0.5
-""",
+"""
+
+
+@register(
+    "dedup_ngram_jaccard",
+    doc="exact 3-gram Jaccard near-dup pairs (threshold 0.5) — the verification path for LSH candidates",
+    oracle=_NGRAM_JACCARD_ORACLE,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return D.ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.5)
 
 
-@register(
-    "decontaminate_benchmark",
-    doc="benchmark decontamination: training docs sharing any 8-gram with the held-out set doc_id%97==0 (ext/decontaminate.py; broadcast bench n-gram set, one corpus shuffle)",
-    oracle=rf"""
+_DECONTAMINATE_ORACLE = rf"""
 WITH g AS (
   SELECT doc_id, unnest(list_distinct({word_shingles_sql(_TOKS, 8)})) AS s
   FROM documents
@@ -389,7 +341,13 @@ SELECT t.doc_id,
        (COUNT(b.s) > 0) AS contaminated
 FROM train t LEFT JOIN bench b ON t.s = b.s
 GROUP BY t.doc_id
-""",
+"""
+
+
+@register(
+    "decontaminate_benchmark",
+    doc="benchmark decontamination: training docs sharing any 8-gram with the held-out set doc_id%97==0 (ext/decontaminate.py; broadcast bench n-gram set, one corpus shuffle)",
+    oracle=_DECONTAMINATE_ORACLE,
 )
 def decontaminate_benchmark(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
@@ -445,7 +403,7 @@ WHERE d.doc_id % 5 = 0
         f">= {JACCARD_TAU}) / unique — asymmetric band join, index-index pairs "
         "never expand"
     ),
-    oracle=None,
+    oracle=_dedup_incremental_oracle(),
 )
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
@@ -463,11 +421,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REG["dedup_incremental"] = _dc.replace(
-    _REG["dedup_incremental"], oracle=_dedup_incremental_oracle()
-)
-
-
 @register(
     "dedup_incremental_indexed",
     doc=(
@@ -481,7 +434,7 @@ _REG["dedup_incremental"] = _dc.replace(
         "this corpus; the per-side-vs-joint cap is the one documented "
         "semantic difference)"
     ),
-    oracle=None,
+    oracle=_dedup_incremental_oracle(),
 )
 def dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
@@ -501,11 +454,6 @@ def dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_n=3,
         jaccard_threshold=JACCARD_TAU,
     )
-
-
-_REG["dedup_incremental_indexed"] = _dc.replace(
-    _REG["dedup_incremental_indexed"], oracle=_dedup_incremental_oracle()
-)
 
 
 # ---------------------------------------------------------------------------
@@ -779,16 +727,11 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Oracle = the exact all-pairs SQL verbatim: identical output is the "
         "claim"
     ),
-    oracle=None,
+    oracle=_NGRAM_JACCARD_ORACLE,
 )
 def dedup_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return D.jaccard_join_prefix(docs, "doc_id", "text", 3, 0.5)
-
-
-_REG["dedup_jaccard_prefix_join"] = _dc.replace(
-    _REG["dedup_jaccard_prefix_join"], oracle=_REG["dedup_ngram_jaccard"].oracle
-)
 
 
 SWEEP_THRESHOLDS = (0.3, 0.5, 0.7, 0.8, 0.9)
@@ -879,17 +822,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_incremental_exact",
-    doc=(
-        "incremental EXACT near-dup: every 5th doc plays the fresh batch; "
-        "batch-vs-corpus Jaccard >= 0.5 pairs via one-sided prefix "
-        "filtering (only the batch builds rarest-first prefixes; the "
-        "corpus side is the persisted index shingle table, probed on the "
-        "shingle key) — the lossless twin of dedup_incremental's LSH "
-        "candidates: recall 1.0, probe cost proportional to batch size"
-    ),
-    oracle=rf"""
+_INCREMENTAL_EXACT_ORACLE = rf"""
 WITH sh AS (
   SELECT doc_id, unnest(list_distinct({word_shingles_sql(_TOKS, 3)})) AS s
   FROM documents
@@ -909,7 +842,20 @@ FROM inter
 JOIN nb ON nb.doc_id = id_batch
 JOIN nc ON nc.doc_id = id_corpus
 WHERE CAST(n_inter AS DOUBLE) / CAST(nb.n_b + nc.n_c - n_inter AS DOUBLE) >= 0.5
-""",
+"""
+
+
+@register(
+    "dedup_incremental_exact",
+    doc=(
+        "incremental EXACT near-dup: every 5th doc plays the fresh batch; "
+        "batch-vs-corpus Jaccard >= 0.5 pairs via one-sided prefix "
+        "filtering (only the batch builds rarest-first prefixes; the "
+        "corpus side is the persisted index shingle table, probed on the "
+        "shingle key) — the lossless twin of dedup_incremental's LSH "
+        "candidates: recall 1.0, probe cost proportional to batch size"
+    ),
+    oracle=_INCREMENTAL_EXACT_ORACLE,
 )
 def dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
@@ -929,7 +875,7 @@ def dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "oracle as dedup_incremental_exact: the index is an access path, "
         "not a semantic change"
     ),
-    oracle=None,
+    oracle=_INCREMENTAL_EXACT_ORACLE,
 )
 def dedup_incremental_exact_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
@@ -941,11 +887,6 @@ def dedup_incremental_exact_indexed(spark: SparkSession, sf_dir: str) -> DataFra
     return D.jaccard_incremental_prefix_indexed(batch, sh, freq)
 
 
-_REG["dedup_incremental_exact_indexed"] = _dc.replace(
-    _REG["dedup_incremental_exact_indexed"], oracle=_REG["dedup_incremental_exact"].oracle
-)
-
-
 @register(
     "decontaminate_bloom",
     doc=(
@@ -955,7 +896,7 @@ _REG["dedup_incremental_exact_indexed"] = _dc.replace(
         "verify only on Bloom candidates — row-identical to "
         "decontaminate_benchmark, same oracle"
     ),
-    oracle=None,
+    oracle=_DECONTAMINATE_ORACLE,
 )
 def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
@@ -966,8 +907,3 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     train = docs.filter(F.col("doc_id") % 97 != 0)
     return benchmark_overlap_bloom(train, bench, "doc_id", "text", n=8)
-
-
-_REG["decontaminate_bloom"] = _dc.replace(
-    _REG["decontaminate_bloom"], oracle=_REG["decontaminate_benchmark"].oracle
-)

@@ -1,9 +1,12 @@
-"""Shared MinHash-LSH oracle construction (no query registration).
+"""Shared MinHash-LSH and boilerplate-span oracle construction (no
+query registration).
 
-Split out of dedup_queries so modules composing the dedup oracle
-(assembly_queries' end-to-end corpus pipeline) can import it WITHOUT
-triggering dedup_queries' registrations — registration order drives
-the driver's correctness sampling (plans/registry.py)."""
+Split out of dedup_queries and corpus_queries so modules composing
+their oracles (assembly_queries' end-to-end corpus pipeline,
+sampling_queries' leakage-safe split, streaming_queries' boilerplate
+gate) can import them WITHOUT triggering those modules' registrations —
+registration order drives the driver's correctness sampling
+(plans/registry.py)."""
 
 from __future__ import annotations
 
@@ -20,6 +23,11 @@ BANDS = 6
 ROWS_PER_BAND = NUM_HASHES // BANDS
 
 JACCARD_TAU = 0.8
+
+# Boilerplate-span geometry: the batch census (corpus_queries) and the
+# streaming ingest gate (streaming_queries) must agree with their oracles.
+SPAN_W = 8  # words per non-overlapping span
+BP_MIN_DOCS = 3  # spans in >= this many distinct docs are boilerplate
 
 
 def capped_bands_cte(rows_per_band: int = ROWS_PER_BAND, cap: int = MAX_BUCKET_SIZE) -> str:
@@ -92,3 +100,19 @@ verified AS (
 )"""
 
 
+def _clusters_cte_body() -> str:
+    """Connected components over the verified pair graph via a
+    recursive CTE (min reachable id = cluster label); shared by the
+    clusters and soft-weights oracles."""
+    return f"""{_verified_pairs_ctes()},
+edges AS (
+  SELECT id_a AS src, id_b AS dst FROM verified
+  UNION
+  SELECT id_b AS src, id_a AS dst FROM verified
+),
+reach(id, r) AS (
+  SELECT doc_id, doc_id FROM documents
+  UNION
+  SELECT re.id, e.dst FROM reach re JOIN edges e ON e.src = re.r
+),
+clusters AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id)"""

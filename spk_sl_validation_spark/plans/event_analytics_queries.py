@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spk_sl_validation_spark.ext.events import rate_limit_oracle_sql
 from spk_sl_validation_spark.plans.registry import register
 from spk_sl_validation_spark.sources.readers import load_table
 
@@ -641,20 +642,10 @@ RL_USERS = 60
         "parallel), value-verified against a recursive-CTE replay of the "
         "identical IEEE arithmetic"
     ),
-    oracle=None,
+    oracle=rate_limit_oracle_sql("events", RL_CAP, RL_RATE, f"user_id < {RL_USERS}"),
 )
 def rate_limit_accept(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spk_sl_validation_spark.ext.events import rate_limit_accept as _rl
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") < RL_USERS)
     return _rl(ev, RL_CAP, RL_RATE)
-
-
-from spk_sl_validation_spark.ext.events import rate_limit_oracle_sql as _rl_sql  # noqa: E402
-from spk_sl_validation_spark.plans.registry import REGISTRY as _REG2  # noqa: E402
-import dataclasses as _dc2  # noqa: E402
-
-_REG2["rate_limit_accept"] = _dc2.replace(
-    _REG2["rate_limit_accept"],
-    oracle=_rl_sql("events", RL_CAP, RL_RATE, f"user_id < {RL_USERS}"),
-)

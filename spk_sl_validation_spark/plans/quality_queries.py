@@ -211,29 +211,6 @@ def dataset_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "table_checksum",
-    doc=(
-        "order-independent distributed content checksum of orders (commutative "
-        "md5 sum mod 2^61-1): one map-side-combined aggregate at any scale — "
-        "the data-contract primitive for verifiable exports/replication; "
-        "float column pinned via DECIMAL cast so the string form is "
-        "engine-stable"
-    ),
-    oracle=None,  # generated below next to the Spark builder
-)
-def table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spk_sl_validation_spark.sources.sinks import dataset_checksum
-
-    o = load_table(spark, sf_dir, "orders").withColumn(
-        "o_totalprice_dec", F.col("o_totalprice").cast("decimal(18,2)")
-    )
-    return dataset_checksum(
-        o,
-        ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice_dec", "o_orderpriority"],
-    )
-
-
 def _table_checksum_oracle() -> str:
     from spk_sl_validation_spark.sources.sinks import dataset_checksum_sql
 
@@ -249,10 +226,27 @@ def _table_checksum_oracle() -> str:
     )
 
 
-from spk_sl_validation_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-import dataclasses as _dc  # noqa: E402
+@register(
+    "table_checksum",
+    doc=(
+        "order-independent distributed content checksum of orders (commutative "
+        "md5 sum mod 2^61-1): one map-side-combined aggregate at any scale — "
+        "the data-contract primitive for verifiable exports/replication; "
+        "float column pinned via DECIMAL cast so the string form is "
+        "engine-stable"
+    ),
+    oracle=_table_checksum_oracle(),
+)
+def table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from spk_sl_validation_spark.sources.sinks import dataset_checksum
 
-_REG["table_checksum"] = _dc.replace(_REG["table_checksum"], oracle=_table_checksum_oracle())
+    o = load_table(spark, sf_dir, "orders").withColumn(
+        "o_totalprice_dec", F.col("o_totalprice").cast("decimal(18,2)")
+    )
+    return dataset_checksum(
+        o,
+        ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice_dec", "o_orderpriority"],
+    )
 
 
 @register(

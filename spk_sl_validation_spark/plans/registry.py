@@ -2,8 +2,8 @@
 
 Every operator from SURVEY.md §2 (plus the north-star extensions)
 registers here as a ``QuerySpec``: a Spark builder ``(spark, sf_dir)
-→ DataFrame`` and, where SQL-expressible, an equivalent ANSI-SQL
-oracle string that DuckDB runs on the same parquet tables.
+→ DataFrame`` and a required, equivalent ANSI-SQL oracle string that
+DuckDB runs on the same parquet tables.
 
 Determinism contract (the driver hash-compares values):
 - Floating aggregates are summed as exact ``DECIMAL(18,2)`` and cast
@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 class QuerySpec:
     name: str
     builder: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # ANSI SQL for DuckDB; None → rows-only check
+    oracle: str  # ANSI SQL that DuckDB runs on the same parquet tables
     headline: bool = False  # include in bench.py
     doc: str = ""
 
@@ -34,7 +34,7 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 
 def register(
-    name: str, oracle: str | None = None, headline: bool = False, doc: str = ""
+    name: str, oracle: str, headline: bool = False, doc: str = ""
 ) -> Callable[[Callable[[SparkSession, str], DataFrame]], Callable[[SparkSession, str], DataFrame]]:
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in REGISTRY:
@@ -46,222 +46,44 @@ def register(
 
 
 # The driver's correctness gate samples a PREFIX of the registry, so
-# iteration order is verification-provenance policy. Rounds 1–2 left 53
-# registered queries with self-check-only evidence (never in a driver
-# sample); round 3 pins them — plus the nine round-3-new queries —
-# into the prefix explicitly:
-#   1–6   the six queries that were red in round 1 (fixed in round 2,
-#         fixes never driver-confirmed) — hardest-signal first;
-#   7–20  the fourteen queries NEW in round 3 (streaming_user_activity,
-#         corpus_span_dedup, k_anonymity, dedup_incremental,
-#         sketch_quantile_sample, corpus_source_overlap,
-#         events_debounce, fuzzy_match_parts, streaming_debounce,
-#         text_gopher_filters, sample_priority_weighted,
-#         layout_zorder_stats, text_bigram_logprob,
-#         mixture_token_budget) — new code has the least evidence;
-#   21–30 the judge-named never-sampled set (bucketed near-dup, corpus
-#         pipeline, packing, TPC-H stragglers, validation, SCD2);
-#   31+   the remaining never-sampled queries in registration order.
-# The insertions push the tail of the old 50-prefix
-# (dataset_shard_assignment, pii_masking, text_bpe_pair_stats,
-# range_join … ) past position 50; they join the four deferred
-# pure-SQL shapes as round 4's sample prefix, followed by the 94
-# already-driver-green queries in registration order.
-SAMPLE_PRIORITY: tuple[str, ...] = (
-    # -- NEW in round 4's second half: the four structurally novel
-    #    operators (prefix-filter exact join, one-pass sweep, recursive
-    #    greedy MMR, RRF fusion) — newest code, least evidence, and
-    #    without a pin the late-loading dedup/similarity/retrieval
-    #    modules would push them past the 50-query sample prefix --
-    "dedup_jaccard_prefix_join",
-    "dedup_incremental_exact",
-    "python_datasource_scan",
-    "rate_limit_accept",
-    "dedup_threshold_sweep",
-    "embedding_mmr_select",
-    "hybrid_rrf_retrieval",
-    # -- newest additions (boilerplate removal / soft weighting):
-    #    remove-everywhere census semantics and the cluster-mass
-    #    weighting both deserve the driver's independent replay first --
-    "corpus_boilerplate_removal",
-    "dedup_soft_weights",
-    "graph_triangle_parts",
-    "dataset_split_leakage_safe",
-    # (sql_udf_pricing deliberately NOT pinned: pure-SQL arithmetic,
-    #  the lowest-risk addition — deferred so the last judge-named
-    #  never-sampled query, event_paths_topk, stays in the 50-prefix)
-    "basket_association_rules",
-    "embedding_dim_stats",
-    # (streaming_boilerplate_gate / dedup_soft_weights_indexed /
-    #  trimmed_mean_events / correlation_suite deliberately NOT pinned:
-    #  each pin displaces one judge-named never-sampled query from the
-    #  50-prefix; they follow in registration order as round 5's
-    #  frontier. The indexed variants additionally carry their direct
-    #  path's oracle verbatim, so their novel surface is the plumbing,
-    #  not the values.)
-    "boilerplate_apply_indexed",
-    # -- round-1 reds, fixed in round 2, never re-sampled --
-    "sessionize_events",
-    "text_feature_hashing",
-    "embedding_quantize_int8",
-    "kmeans_clusters",
-    "multimodal_features",
-    "events_json_extract",
-    # -- new this round --
-    "streaming_user_activity",
-    "corpus_span_dedup",
-    "k_anonymity",
-    "dedup_incremental",
-    "sketch_quantile_sample",
-    "corpus_source_overlap",
-    "events_debounce",
-    "fuzzy_match_parts",
-    "streaming_debounce",
-    "text_gopher_filters",
-    "sample_priority_weighted",
-    "layout_zorder_stats",
-    "text_bigram_logprob",
-    "mixture_token_budget",
-    # -- judge-named never-sampled --
-    "similarity_near_dup_bucketed",
-    "training_corpus_pipeline",
-    "pack_sequences",
-    "sql_tpch_q3",
-    "sql_tpch_q17",
-    "sql_tpch_q18",
-    "sql_tpch_q22",
-    "validation_report",
-    "validation_flags",
-    "scd2_intervals",
-    # -- remaining never-sampled, registration order --
-    "config_rule_cascade",
-    "recursive_capped_cumsum",
-    "events_variant_extract",
-    "udtf_token_runs",
-    "mixture_sample",
-    "text_unigram_logprob",
-    "funnel_conversion",
-    "cohort_retention",
-    "cdc_apply_latest",
-    "temporal_dim_join",
-    "incremental_watermark_batch",
-    "timeseries_gapfill",
-    "zscore_outliers",
-    "time_rollup_multigrain",
-    "window_trailing_median",
-    "referential_integrity",
-    "table_profile",
-    "equidepth_histogram",
-    "dataset_drift_psi",
-    "table_checksum",
-    "dataset_version_diff",
-    "corpus_top_terms",
-    "text_tfidf",
-    "text_chunking",
-    "embedding_centroids",
-    "corpus_cooccurrence",
-    "text_textrank_keywords",
-    "dataset_split",
-    "stratified_sample",
-    "dataset_shard_assignment",
-    "pii_masking",
-    "text_bpe_pair_stats",
-    "range_join_clicks_before_purchase",
-    # -- positions 51+: never-sampled, deferred to round 4's prefix --
-    "conditional_agg_suite",
-    "approx_topk_event_types",
-    "unpivot_lineitem_measures",
-    "datetime_suite",
-    # -- new in round 3's second half (self-check evidence only so far) --
-    "dedup_containment",
-    "graph_pagerank_events",
-    "text_quality_model",
-    "similarity_topk_projected",
-    "text_quality_topfrac",
-    "streaming_quality_gate",
-    "dedup_lsh_recall",
-    "similarity_ann_recall",
-    "dedup_source_priority",
-    "contrastive_pairs",
-    "timeseries_seasonal_baseline",
-    "corpus_datasheet",
-    # -- final round-3 additions (retrieval/eval/batch-shape; self-check
-    #    evidence only until a driver sample reaches them) --
-    "bm25_retrieval",
-    "bm25_retrieval_indexed",
-    "length_bucketing",
-    "skew_key_stats",
-    "langid_eval",
-    "text_token_entropy",
-    "event_paths_topk",
-)
-
-
-def _driver_green() -> frozenset[str]:
-    """Names that have passed ALL driver checks in some recorded round
-    (tools/driver_green.json — updated each round from the newest
-    CORRECTNESS_r*.json). Missing/unreadable file → empty set, which
-    degrades to the pure SAMPLE_PRIORITY ordering."""
+# iteration order is verification-provenance policy. The ledger
+# (tools/driver_green.json, updated each round from the newest
+# CORRECTNESS_r*.json) is its only input.
+def _ledger() -> tuple[frozenset[str], dict[str, int]]:
+    """(driver-green names, name → most recent round whose driver
+    sample verified it) from tools/driver_green.json. Missing or
+    unreadable file → nothing green, so registration order rules."""
     import json
     import pathlib
 
     path = pathlib.Path(__file__).resolve().parents[2] / "tools" / "driver_green.json"
     try:
-        return frozenset(json.loads(path.read_text())["green"])
+        ledger = json.loads(path.read_text())
+        return frozenset(ledger["green"]), dict(ledger.get("last_green_round", {}))
     except (OSError, ValueError, KeyError):
-        return frozenset()
-
-
-def _last_green_round() -> dict[str, int]:
-    """name → most recent round whose driver sample verified it
-    (tools/driver_green.json ``last_green_round``). Once the whole
-    registry is driver-green, the sample prefix rotates onto the
-    STALEST evidence: a green from round 1 has survived five rounds of
-    code churn unverified and deserves re-validation before a green
-    from last round. Missing data → 0 (sorts first, i.e. most stale)."""
-    import json
-    import pathlib
-
-    path = pathlib.Path(__file__).resolve().parents[2] / "tools" / "driver_green.json"
-    try:
-        return dict(json.loads(path.read_text())["last_green_round"])
-    except (OSError, ValueError, KeyError):
-        return {}
+        return frozenset(), {}
 
 
 def _ordered_registry() -> dict[str, QuerySpec]:
-    """REGISTRY reordered for the driver's prefix sample — the
-    verification-provenance policy, mechanized:
+    """REGISTRY reordered for the driver's prefix sample:
 
-    1. SAMPLE_PRIORITY names that are NOT yet driver-green (hand-pinned
-       order: hardest signal first);
-    2. every other not-yet-driver-green name, registration order —
-       so a newly registered query automatically enters the sample
-       frontier without editing the priority list;
-    3. driver-green names, OLDEST evidence first (ascending
-       ``last_green_round``, registration order as tiebreak) — once
-       the registry is fully green, each round's sample re-validates
-       the stalest greens (r1/r2 survivors) instead of repeating the
+    1. every not-yet-driver-green name, registration order — so a newly
+       registered query automatically enters the sample frontier;
+    2. driver-green names, OLDEST evidence first (ascending
+       ``last_green_round``, missing → 0; registration order as
+       tiebreak) — once the registry is fully green, each round's
+       sample re-validates the stalest greens instead of repeating the
        freshest ones.
 
     Updating tools/driver_green.json with a new round's results
     auto-rotates the next round's sample onto whatever still lacks
-    driver evidence. A SAMPLE_PRIORITY typo is a hard error — it would
-    silently demote a query out of the sample."""
+    driver evidence."""
     _ensure_loaded()
-    missing = [n for n in SAMPLE_PRIORITY if n not in REGISTRY]
-    if missing:
-        raise KeyError(f"SAMPLE_PRIORITY names not in REGISTRY: {missing}")
-    green = _driver_green()
-    out = {n: REGISTRY[n] for n in SAMPLE_PRIORITY if n not in green}
-    out.update((n, s) for n, s in REGISTRY.items() if n not in out and n not in green)
-    last = _last_green_round()
-    reg_pos = {n: i for i, n in enumerate(REGISTRY)}
-    stale_first = sorted(
-        (n for n in REGISTRY if n not in out), key=lambda n: (last.get(n, 0), reg_pos[n])
-    )
-    out.update((n, REGISTRY[n]) for n in stale_first)
-    return out
+    green, last = _ledger()
+    never = [n for n in REGISTRY if n not in green]
+    # sorted() is stable, so registration order breaks the ties
+    stale_first = sorted((n for n in REGISTRY if n in green), key=lambda n: last.get(n, 0))
+    return {n: REGISTRY[n] for n in never + stale_first}
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -269,9 +91,7 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def all_oracles() -> dict[str, str]:
-    return {
-        name: spec.oracle for name, spec in _ordered_registry().items() if spec.oracle is not None
-    }
+    return {name: spec.oracle for name, spec in _ordered_registry().items()}
 
 
 def headline_queries() -> dict[str, QuerySpec]:
@@ -286,9 +106,9 @@ _LOADED = False
 # any of these is a bug that must surface, never a reason to silently
 # shrink the driver-contract surface (a swallowed ImportError here would
 # make the driver report *nothing* for the lost queries instead of red).
-# Module order is only a tiebreak now: SAMPLE_PRIORITY (above) pins
-# the driver's sample prefix explicitly; names not in that list follow
-# in registration order.
+# Module order sets registration order, the sample-order tiebreak (see
+# _ordered_registry); a module that imports another query module
+# registers that one at the import.
 QUERY_MODULES = (
     "pipeline_queries",
     "sql_tpch_suite",

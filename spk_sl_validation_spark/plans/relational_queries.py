@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from spk_sl_validation_spark.functions.scalar import neq, slash_key, status_str, strip_prefix
 from spk_sl_validation_spark.operators import relational as R
 from spk_sl_validation_spark.operators.rules import Guard, Rule, compile_to_column, compile_to_sql
-from spk_sl_validation_spark.plans.registry import REGISTRY, register
+from spk_sl_validation_spark.plans.registry import register
 from spk_sl_validation_spark.sources.readers import load_table
 
 
@@ -627,15 +627,7 @@ def windowed_event_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 FUZZY_MAX_DIST = 4
 
 
-@register(
-    "fuzzy_match_parts",
-    doc=(
-        "entity resolution (record linkage): per part, its best fuzzy match — "
-        "multi-attribute blocking (first char + last name token), levenshtein "
-        f"<= {FUZZY_MAX_DIST} verify, rank (distance, key), keep the top "
-        "match. Block-join + window, no all-pairs"
-    ),
-    oracle=f"""
+_FUZZY_ORACLE = f"""
 WITH p AS (
   SELECT p_partkey, p_name,
          substr(p_name, 1, 1) || '|' || split_part(p_name, ' ', -1) AS blk
@@ -651,7 +643,18 @@ SELECT p_partkey, p_name, match_key, match_name, CAST(dist AS INTEGER) AS dist
 FROM cand
 WHERE dist <= {FUZZY_MAX_DIST}
 QUALIFY row_number() OVER (PARTITION BY p_partkey ORDER BY dist, match_key) = 1
-""",
+"""
+
+
+@register(
+    "fuzzy_match_parts",
+    doc=(
+        "entity resolution (record linkage): per part, its best fuzzy match — "
+        "multi-attribute blocking (first char + last name token), levenshtein "
+        f"<= {FUZZY_MAX_DIST} verify, rank (distance, key), keep the top "
+        "match. Block-join + window, no all-pairs"
+    ),
+    oracle=_FUZZY_ORACLE,
 )
 def fuzzy_match_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Best fuzzy match per record — the block-verify-rank shape every
@@ -686,9 +689,6 @@ def fuzzy_match_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         block_firstchar_lasttoken("p_name"),
         FUZZY_MAX_DIST,
     )
-
-
-_FUZZY_ORACLE = REGISTRY["fuzzy_match_parts"].oracle
 
 
 @register(

@@ -43,13 +43,7 @@ BM25_QUERIES: tuple[tuple[int, str], ...] = (
 _QUERY_VALUES = ", ".join(f"({qid}, '{text}')" for qid, text in BM25_QUERIES)
 
 
-@register(
-    "bm25_retrieval",
-    doc=(
-        f"BM25 top-{BM25_TOP_K} documents per query (k1={BM25_K1}, b={BM25_B}): "
-        "term-pruned tf shuffle + broadcast df/query joins — the eval-curation retrieval primitive"
-    ),
-    oracle=f"""
+_BM25_ORACLE = f"""
 WITH q(query_id, qtext) AS (VALUES {_QUERY_VALUES}),
 qterm AS (SELECT query_id, unnest(string_split(qtext, ' ')) AS term FROM q),
 tok AS (
@@ -85,18 +79,20 @@ SELECT query_id, doc_id,
        round(CAST(sc AS DOUBLE), 6) AS score,
        CAST(rnk AS INTEGER) AS rnk
 FROM ranked WHERE rnk <= {BM25_TOP_K}
-""",
+"""
+
+
+@register(
+    "bm25_retrieval",
+    doc=(
+        f"BM25 top-{BM25_TOP_K} documents per query (k1={BM25_K1}, b={BM25_B}): "
+        "term-pruned tf shuffle + broadcast df/query joins — the eval-curation retrieval primitive"
+    ),
+    oracle=_BM25_ORACLE,
 )
 def bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return bm25_rank(docs, BM25_QUERIES, top_k=BM25_TOP_K)
-
-
-import dataclasses as _dc  # noqa: E402
-
-from spk_sl_validation_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-
-_BM25_ORACLE = _REG["bm25_retrieval"].oracle
 
 
 @register(
@@ -106,7 +102,7 @@ _BM25_ORACLE = _REG["bm25_retrieval"].oracle
         "no text scan at query time) — result-identical to bm25_retrieval, "
         "same oracle"
     ),
-    oracle=None,
+    oracle=_BM25_ORACLE,
 )
 def bm25_retrieval_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Query-time path when the inverted index already exists: build
@@ -117,11 +113,6 @@ def bm25_retrieval_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     postings, df_tbl, stats = bm25_index_tables(docs)
     return bm25_rank_indexed(BM25_QUERIES, postings, df_tbl, stats, top_k=BM25_TOP_K)
-
-
-_REG["bm25_retrieval_indexed"] = _dc.replace(
-    _REG["bm25_retrieval_indexed"], oracle=_BM25_ORACLE
-)
 
 
 RRF_K = 60  # standard reciprocal-rank-fusion constant (Cormack et al. 2009)
@@ -144,18 +135,7 @@ _RRF_QTERM_VALUES = ", ".join(
 )
 
 
-@register(
-    "hybrid_rrf_retrieval",
-    headline=True,
-    doc=(
-        f"hybrid retrieval: reciprocal-rank fusion (k={RRF_K}) of BM25 and "
-        f"binary-cosine coordinate-match rankers, top-{RRF_POOL} pools fused "
-        f"to top-{RRF_TOP_K} per query — the sparse+second-signal fusion shape "
-        "modern retrieval stacks use (RRF is ranker-agnostic: the dense arm "
-        "plugs in identically). Union + one groupBy-sum — no full-outer "
-        "join, no sort-merge join; rank windows only over per-query pools"
-    ),
-    oracle=f"""
+_RRF_ORACLE = f"""
 WITH q(query_id, qtext) AS (VALUES {_QUERY_VALUES}),
 qterm(query_id, term, nq) AS (VALUES {_RRF_QTERM_VALUES}),
 tok AS (
@@ -224,7 +204,21 @@ SELECT query_id, doc_id, rrf_score, bm25_rnk, cos_rnk,
          PARTITION BY query_id ORDER BY rrf_score DESC, doc_id ASC) AS INTEGER) AS rnk
 FROM fused
 QUALIFY rnk <= {RRF_TOP_K}
-""",
+"""
+
+
+@register(
+    "hybrid_rrf_retrieval",
+    headline=True,
+    doc=(
+        f"hybrid retrieval: reciprocal-rank fusion (k={RRF_K}) of BM25 and "
+        f"binary-cosine coordinate-match rankers, top-{RRF_POOL} pools fused "
+        f"to top-{RRF_TOP_K} per query — the sparse+second-signal fusion shape "
+        "modern retrieval stacks use (RRF is ranker-agnostic: the dense arm "
+        "plugs in identically). Union + one groupBy-sum — no full-outer "
+        "join, no sort-merge join; rank windows only over per-query pools"
+    ),
+    oracle=_RRF_ORACLE,
 )
 def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RRF fusion of the BM25 pool and a binary-cosine coordinate-match
@@ -306,7 +300,7 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "scan query-time property holds for the persisted-artifact "
         "path and is plan-pinned in tests/test_retrieval.py"
     ),
-    oracle=None,
+    oracle=_RRF_ORACLE,
 )
 def hybrid_rrf_retrieval_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production query-time path for repeated query batches: the
@@ -334,11 +328,6 @@ def hybrid_rrf_retrieval_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REG["hybrid_rrf_retrieval_indexed"] = _dc.replace(
-    _REG["hybrid_rrf_retrieval_indexed"], oracle=_REG["hybrid_rrf_retrieval"].oracle
-)
-
-
 @register(
     "bm25_retrieval_churn",
     doc=(
@@ -349,7 +338,7 @@ _REG["hybrid_rrf_retrieval_indexed"] = _dc.replace(
         "same oracle (remove==rebuild and roundtrip laws pinned in "
         "tests/test_retrieval.py)"
     ),
-    oracle=None,
+    oracle=_BM25_ORACLE,
 )
 def bm25_retrieval_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The re-crawl cycle a real corpus index lives through: docs get
@@ -371,11 +360,6 @@ def bm25_retrieval_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     merged = merge_into_bm25_index(*after_rm, churn)
     return bm25_rank_indexed(BM25_QUERIES, *merged, top_k=BM25_TOP_K)
-
-
-_REG["bm25_retrieval_churn"] = _dc.replace(
-    _REG["bm25_retrieval_churn"], oracle=_BM25_ORACLE
-)
 
 
 # ---------------------------------------------------------------------------

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spk_sl_validation_spark.ext.hashing import md5_long, md5_long_sql
+from spk_sl_validation_spark.plans.dedup_shared import _clusters_cte_body
 from spk_sl_validation_spark.plans.registry import register
 from spk_sl_validation_spark.sources.readers import load_table
 
@@ -40,8 +41,6 @@ def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _leakage_safe_oracle() -> str:
-    from spk_sl_validation_spark.plans.dedup_queries import _clusters_cte_body
-
     h = md5_long_sql("CAST(cluster_id AS VARCHAR)")
     return f"""
 WITH RECURSIVE {_clusters_cte_body()}
@@ -61,7 +60,7 @@ FROM clusters
         "straddle train and test (the eval-contamination failure mode of "
         "per-doc splits); unique docs get exactly dataset_split's assignment"
     ),
-    oracle=None,
+    oracle=_leakage_safe_oracle(),
 )
 def dataset_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split by near-dup cluster (SURVEY.md SS2.6 extension): a per-doc
@@ -84,12 +83,9 @@ def dataset_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clusters.select("doc_id", "cluster_id", split.alias("split"))
 
 
-from spk_sl_validation_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-import dataclasses as _dc  # noqa: E402
-
-_REG["dataset_split_leakage_safe"] = _dc.replace(
-    _REG["dataset_split_leakage_safe"], oracle=_leakage_safe_oracle()
-)
+# dedup_queries registers here, right after the split: registration order
+# is the driver's sample tiebreak (registry._ordered_registry)
+from spk_sl_validation_spark.plans import dedup_queries  # noqa: E402, F401
 
 
 @register(

@@ -82,10 +82,9 @@ N_CENTROIDS = 16
 _L2_QC = S.sq_l2_sql("v.embedding", "c.embedding")
 
 
-@register(
-    "similarity_topk_ivf",
-    doc=f"IVF({N_CENTROIDS} lists, nprobe=1) ANN top-k: coarse-quantizer assignment + exact rerank in the probed list",
-    oracle=f"""
+# also the oracle of similarity_ivf_churn and streaming_ivf_ingest: a
+# churned or stream-maintained index must answer exactly like this one
+IVF_TOPK_ORACLE = f"""
 WITH centroids AS (
   SELECT vec_id AS centroid_id, embedding FROM embeddings WHERE vec_id < {N_CENTROIDS}
 ),
@@ -109,7 +108,13 @@ ranked AS (
   FROM scored
 )
 SELECT q_id, vec_id, cos_sim, CAST(rank AS INTEGER) AS rank FROM ranked WHERE rank <= 5
-""",
+"""
+
+
+@register(
+    "similarity_topk_ivf",
+    doc=f"IVF({N_CENTROIDS} lists, nprobe=1) ANN top-k: coarse-quantizer assignment + exact rerank in the probed list",
+    oracle=IVF_TOPK_ORACLE,
 )
 def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -703,7 +708,7 @@ def similarity_topk_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the same batch back under the frozen quantizer — remove∘merge is "
         "the identity, checked against the direct IVF oracle verbatim"
     ),
-    oracle=None,
+    oracle=IVF_TOPK_ORACLE,
 )
 def similarity_ivf_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -717,15 +722,6 @@ def similarity_ivf_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     out = S.ivf_topk_indexed(queries, centroids, merged, k=5, nprobe=1)
     return out.select("q_id", "vec_id", "cos_sim", F.col("rank").cast("int").alias("rank"))
-
-
-import dataclasses as _dc  # noqa: E402
-
-from spk_sl_validation_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["similarity_ivf_churn"] = _dc.replace(
-    _REG["similarity_ivf_churn"], oracle=_REG["similarity_topk_ivf"].oracle
-)
 
 
 @register(
@@ -785,7 +781,6 @@ def similarity_ivf_quantization_stats(spark: SparkSession, sf_dir: str) -> DataF
             F.round(F.max("d"), 6).alias("max_sq_dist"),
         )
     )
-
 
 
 CROSS_MODAL_BITS = 4

@@ -198,7 +198,7 @@ def python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "shard — stream == the batch connector == the generator-replay "
         "oracle"
     ),
-    oracle=None,
+    oracle=_pyds_oracle(),
 )
 def python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
@@ -227,11 +227,3 @@ def python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "min_id",
         "max_id",
     )
-
-
-from spk_sl_validation_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-import dataclasses as _dc  # noqa: E402
-
-_REG["python_datasource_stream"] = _dc.replace(
-    _REG["python_datasource_stream"], oracle=_REG["python_datasource_scan"].oracle
-)

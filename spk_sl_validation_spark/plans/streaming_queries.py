@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spk_sl_validation_spark.ext.assembly import pack_sequences_sql
 from spk_sl_validation_spark.ext.webcure import NORM_URL_ORACLE_LAW
 from spk_sl_validation_spark.plans.registry import register
 from spk_sl_validation_spark.streaming import pipeline as P
@@ -311,7 +312,7 @@ GROUP BY 1
         "CASE projection inside the streaming plan, aggregated per comment; "
         "availableNow replay == the batch cascade oracle"
     ),
-    oracle=None,  # set below (generated from the shared config)
+    oracle=_streaming_cascade_oracle(),
 )
 def streaming_rule_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spk_sl_validation_spark.operators.rules import compile_to_column, rules_from_config
@@ -325,14 +326,6 @@ def streaming_rule_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
     )
     return P.run_available_now(agg, output_mode="complete")
-
-
-from spk_sl_validation_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-import dataclasses as _dc  # noqa: E402
-
-_REG["streaming_rule_cascade"] = _dc.replace(
-    _REG["streaming_rule_cascade"], oracle=_streaming_cascade_oracle()
-)
 
 
 @register(
@@ -464,7 +457,7 @@ def streaming_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _streaming_boilerplate_oracle() -> str:
-    from spk_sl_validation_spark.plans.corpus_queries import BP_MIN_DOCS, SPAN_W, _TOKS
+    from spk_sl_validation_spark.plans.dedup_shared import _TOKS, BP_MIN_DOCS, SPAN_W
 
     return f"""
 WITH toks AS (SELECT doc_id, source, {_TOKS} AS t FROM documents),
@@ -499,12 +492,12 @@ FROM flagged GROUP BY source
         "counts (complete mode, availableNow replay) == the batch census "
         "aggregate — governance telemetry for a crawling ingest"
     ),
-    oracle=None,  # patched below (generated to share SPAN_W/BP_MIN_DOCS)
+    oracle=_streaming_boilerplate_oracle(),
 )
 def streaming_boilerplate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spk_sl_validation_spark.ext.hashing import md5_long
     from spk_sl_validation_spark.ext.text import _doc_spans, boilerplate_index
-    from spk_sl_validation_spark.plans.corpus_queries import BP_MIN_DOCS, SPAN_W
+    from spk_sl_validation_spark.plans.dedup_shared import BP_MIN_DOCS, SPAN_W
     from spk_sl_validation_spark.sources.readers import load_table
 
     # static side: the persisted census index (batch read, checkpointed
@@ -528,12 +521,9 @@ def streaming_boilerplate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return P.run_available_now(agg, output_mode="complete")
 
 
-from spk_sl_validation_spark.plans.registry import REGISTRY as _REG_BP  # noqa: E402
-import dataclasses as _dc_bp  # noqa: E402
-
-_REG_BP["streaming_boilerplate_gate"] = _dc_bp.replace(
-    _REG_BP["streaming_boilerplate_gate"], oracle=_streaming_boilerplate_oracle()
-)
+# corpus_queries registers here, right after the gate: registration order
+# is the driver's sample tiebreak (registry._ordered_registry)
+from spk_sl_validation_spark.plans import corpus_queries  # noqa: E402, F401
 
 
 DECON_N = 8
@@ -579,7 +569,7 @@ FROM tot LEFT JOIN conta ON tot.source = conta.source
         "decontaminate_bloom. False positives die in the verify join, so "
         "stream == batch == oracle"
     ),
-    oracle=None,  # patched below (generated to share DECON_* params)
+    oracle=_streaming_decontaminate_oracle(),
 )
 def streaming_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spk_sl_validation_spark.ext.decontaminate import bloom_bit_tests, bloom_mask_row
@@ -634,14 +624,6 @@ def streaming_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         F.coalesce(F.col("n_contaminated"), F.lit(0).cast("long")).alias("n_contaminated"),
     )
-
-
-from spk_sl_validation_spark.plans.registry import REGISTRY as _REG_DC  # noqa: E402
-import dataclasses as _dc_dc  # noqa: E402
-
-_REG_DC["streaming_decontaminate_gate"] = _dc_dc.replace(
-    _REG_DC["streaming_decontaminate_gate"], oracle=_streaming_decontaminate_oracle()
-)
 
 
 @register(
@@ -700,6 +682,11 @@ def streaming_media_decode_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return P.run_available_now(agg, output_mode="complete")
 
 
+# the stream-maintained index must answer EXACTLY like the batch-built
+# one — the direct IVF query's oracle, verbatim
+from spk_sl_validation_spark.plans.similarity_queries import IVF_TOPK_ORACLE  # noqa: E402
+
+
 @register(
     "streaming_ivf_ingest",
     doc=(
@@ -710,7 +697,7 @@ def streaming_media_decode_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "probed — results equal the batch-built index, i.e. the direct IVF "
         "oracle verbatim"
     ),
-    oracle=None,  # replaced below with the direct-IVF oracle (nprobe=1)
+    oracle=IVF_TOPK_ORACLE,
 )
 def streaming_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream == batch for the ANN index: bootstrap the IVF index from
@@ -746,18 +733,6 @@ def streaming_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("q_id", "vec_id", "cos_sim", F.col("rank").cast("int").alias("rank"))
 
 
-import dataclasses as _dc  # noqa: E402
-
-from spk_sl_validation_spark.plans import similarity_queries as _simq  # noqa: E402
-from spk_sl_validation_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-
-# the stream-maintained index must answer EXACTLY like the batch-built
-# one — same oracle as the direct IVF query, verbatim
-_REG["streaming_ivf_ingest"] = _dc.replace(
-    _REG["streaming_ivf_ingest"], oracle=_REG["similarity_topk_ivf"].oracle
-)
-
-
 @register(
     "streaming_pack_ingest",
     doc=(
@@ -770,7 +745,7 @@ _REG["streaming_ivf_ingest"] = _dc.replace(
         "batch pack_sequences over the whole corpus, i.e. its oracle "
         "verbatim"
     ),
-    oracle=None,  # replaced below with pack_sequences' oracle verbatim
+    oracle=pack_sequences_sql("documents", seq_len=2048),
 )
 def streaming_pack_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream == batch for the packed token stream: bootstrap a zero
@@ -806,16 +781,6 @@ def streaming_pack_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return packed.select(
         "doc_id", "n_tokens", "tok_offset", "seq_id", "offset_in_seq", "end_seq_id"
     )
-
-
-from spk_sl_validation_spark.ext import assembly as _A  # noqa: E402
-
-# the stream-maintained packed table must equal the batch pack over the
-# full corpus — pack_sequences' oracle verbatim
-_REG["streaming_pack_ingest"] = _dc.replace(
-    _REG["streaming_pack_ingest"],
-    oracle=_A.pack_sequences_sql("documents", seq_len=2048),
-)
 
 
 @register(

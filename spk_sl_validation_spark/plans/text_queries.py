@@ -512,7 +512,10 @@ FROM enc GROUP BY doc_id
 )
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    merges = [tuple(r) for r in X.learn_bpe_merges(docs, "text", BPE_MERGES).collect()]
+    # merges apply in learn order; collect() order follows the union's
+    # partition order, so sort on the step column
+    rows = X.learn_bpe_merges(docs, "text", BPE_MERGES).collect()
+    merges = sorted((tuple(r) for r in rows), key=lambda m: m[0])
     return X.bpe_encode_stats(docs, merges)
 
 

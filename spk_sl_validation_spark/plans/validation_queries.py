@@ -51,17 +51,11 @@ def _report_oracle() -> str:
 @register(
     "validation_report",
     doc="declarative validation suite: 5 checks evaluated in ONE scan → per-check violation report",
-    oracle=None,
+    oracle=_report_oracle(),
 )
 def validation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return validate(li, _lineitem_checks())
-
-
-from spk_sl_validation_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-import dataclasses as _dc  # noqa: E402
-
-_REG["validation_report"] = _dc.replace(_REG["validation_report"], oracle=_report_oracle())
 
 
 def _flags_oracle() -> str:
@@ -81,7 +75,7 @@ WHERE len(list_filter([{entries}], x -> x IS NOT NULL)) > 0
 @register(
     "validation_flags",
     doc="row-level violation flagging: sorted array of failed checks per offending row (quarantine feed)",
-    oracle=None,
+    oracle=_flags_oracle(),
 )
 def validation_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -93,15 +87,19 @@ def validation_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REG["validation_flags"] = _dc.replace(_REG["validation_flags"], oracle=_flags_oracle())
-
-
 CONFIG_CASCADE = [
     {"id": "vip", "when": "o_totalprice > 300000", "message": "escalate: whale order", "guard": "always"},
     {"id": "urgent_open", "when": "o_orderpriority = '1-URGENT' AND o_orderstatus = 'O'", "message": "review: urgent still open"},
     {"id": "stale_f", "when": "o_orderstatus = 'F' AND o_orderdate < TIMESTAMP '1993-01-01 00:00:00'", "message": "archive candidate"},
     {"id": "fallback", "when": "TRUE", "message": "ok"},
 ]
+
+
+def _config_cascade_oracle() -> str:
+    from spk_sl_validation_spark.operators.rules import compile_to_sql, rules_from_config
+
+    expr = compile_to_sql(rules_from_config(CONFIG_CASCADE))
+    return f"SELECT o_orderkey, {expr} AS Comment FROM orders"
 
 
 @register(
@@ -113,7 +111,7 @@ CONFIG_CASCADE = [
         "both the Spark plan and the oracle, so a config edit stays "
         "DuckDB-verifiable by construction"
     ),
-    oracle=None,  # generated from the same config below
+    oracle=_config_cascade_oracle(),
 )
 def config_rule_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spk_sl_validation_spark.operators.rules import compile_to_column, rules_from_config
@@ -123,18 +121,3 @@ def config_rule_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.select(
         "o_orderkey", compile_to_column(rules).alias("Comment")
     )
-
-
-def _config_cascade_oracle() -> str:
-    from spk_sl_validation_spark.operators.rules import compile_to_sql, rules_from_config
-
-    expr = compile_to_sql(rules_from_config(CONFIG_CASCADE))
-    return f"SELECT o_orderkey, {expr} AS Comment FROM orders"
-
-
-from spk_sl_validation_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-import dataclasses as _dc  # noqa: E402
-
-_REG["config_rule_cascade"] = _dc.replace(
-    _REG["config_rule_cascade"], oracle=_config_cascade_oracle()
-)

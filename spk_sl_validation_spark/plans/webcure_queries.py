@@ -62,7 +62,8 @@ def _blocked_df(spark: SparkSession) -> DataFrame:
 # push the generated hashAgg method past the JVM's 64 KB limit —
 # janino spends seconds compiling, FAILS (`Code grows beyond 64 KB`),
 # and Spark silently falls back to interpreted mode. Measured at
-# sf0.1 (tools/webcure_wall_probe.py, interleaved): lazy-checkpoint
+# sf0.1 (interleaved; BENCH_HISTORY.md, Round 10, "web_curation_pipeline:
+# manifest materialization"): lazy-checkpoint
 # 13.6 s, eager 10.0 s, no-checkpoint 15.5 s, parquet-manifest 4.5 s
 # total (2.5 s one-time write + 2.0 s exec). Materializing once per
 # (session, sf, key) and planning over scans is also the production
@@ -345,7 +346,7 @@ def web_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     limit — janino spent ~10 s failing to compile, then Spark ran the
     stage interpreted. With manifests each stage's codegen is small
     and compiles; no checkpoints needed. A/B at sf0.1
-    (tools/webcure_wall_probe.py): 13.6 s (r9's lazy-checkpoint
+    (BENCH_HISTORY.md, Round 10): 13.6 s (r9's lazy-checkpoint
     shape) → 4.5 s total, execution ~2 s unchanged. This is also the
     production shape — a crawl curates manifests it read, it doesn't
     synthesize them inline (SCALE.md §7 holds the 8M-URL probe)."""

@@ -64,3 +64,20 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def release(spark: SparkSession) -> None:
+    """Drop the persisted state a query run leaves behind: cached frames,
+    eager/lazy ``localCheckpoint`` RDDs and the SQL cache.
+
+    ``catalog.clearCache()`` alone forgets only the SQL cache; checkpoint
+    RDDs stay in ``getPersistentRDDs()`` and pile up across runs. The
+    ``gc.collect()`` first lets py4j release dead DataFrame handles so
+    their broadcast blocks can go too.
+    """
+    import gc
+
+    gc.collect()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
+    spark.catalog.clearCache()

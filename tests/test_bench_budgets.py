@@ -78,15 +78,13 @@ CALIBRATOR_MAX_SEC = 20.0
 
 @pytest.fixture(scope="module")
 def headline_times(spark):
-    import gc
-
     from spk_sl_validation_spark.plans.registry import headline_queries
+    from spk_sl_validation_spark.session import release
 
     specs = headline_queries()
     # isolate from whatever the shared test session ran before —
     # accumulated cache/checkpoint state inflates wall times ~2.6x
-    gc.collect()
-    spark.catalog.clearCache()
+    release(spark)
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm-up
     times = {}
     for name, spec in specs.items():
@@ -96,8 +94,7 @@ def headline_times(spark):
             spec.builder(spark, SF_DIR).write.mode("overwrite").format("noop").save()
             best = min(best, time.time() - t0)
         times[name] = best
-        gc.collect()
-        spark.catalog.clearCache()
+        release(spark)
     return times
 
 

@@ -37,9 +37,6 @@ def test_query_matches_oracle(spec, spark, sf_dir, duck):
             f"driver hasher — serialize with to_json on both sides"
         )
     spdf = df.toPandas()
-    if spec.oracle is None:
-        assert len(spdf) >= 0  # rows-only check (driver does the same)
-        return
     ddf = duck.execute(spec.oracle).df()
     s = frame_fingerprint(spdf)
     d = frame_fingerprint(ddf)
@@ -58,8 +55,6 @@ _BANNED_ORACLE_TYPES = ("HUGEINT", "INT128", "DECIMAL", "STRUCT", "MAP(", "[]")
 def test_oracle_output_types_driver_safe(duck):
     bad = []
     for spec in _specs():
-        if spec.oracle is None:
-            continue
         info = duck.execute(f"DESCRIBE ({spec.oracle.rstrip().rstrip(';')})").fetchall()
         for row in info:
             colname, coltype = row[0], str(row[1])
@@ -100,33 +95,14 @@ def test_queries_and_oracles_contract():
     import __spark_entry__ as contract
 
     qs, os_ = contract.queries(), contract.oracle_sql()
-    assert set(os_) <= set(qs)
+    assert set(os_) == set(qs)
     assert len(qs) >= 19
-
-
-def test_sample_priority_names_registered():
-    """Every SAMPLE_PRIORITY name must exist in the registry (a typo
-    would silently demote a query out of the driver sample), no name
-    may repeat, and the sample prefix must be oracle-backed. (The
-    prefix itself is mechanized: not-yet-green SAMPLE_PRIORITY names
-    lead — test_sample_order_puts_never_driver_green_first — so this
-    no longer pins a literal round's prefix; ledger ingestion rotates
-    it by design.)"""
-    from spk_sl_validation_spark.plans.registry import SAMPLE_PRIORITY, all_oracles, all_queries
-
-    names = list(all_queries())
-    assert len(SAMPLE_PRIORITY) == len(set(SAMPLE_PRIORITY))
-    assert set(SAMPLE_PRIORITY) <= set(names)
-    oracles = all_oracles()
-    missing = [n for n in names[:50] if n not in oracles]
-    assert not missing, f"sample-prefix queries without oracles: {missing}"
 
 
 def test_sample_order_puts_never_driver_green_first():
     """The driver samples a registry prefix; every name without
     recorded driver-green evidence (tools/driver_green.json) must sort
-    before every name with it, with the hand-pinned SAMPLE_PRIORITY
-    ordering leading the never-green block."""
+    before every name with it."""
     import json
     import pathlib
 
@@ -141,5 +117,3 @@ def test_sample_order_puts_never_driver_green_first():
     flags = [n in green for n in names]
     # monotone: once green begins, no non-green follows
     assert flags == sorted(flags), "a never-driver-green query sorts after a green one"
-    nongreen_priority = [n for n in reg.SAMPLE_PRIORITY if n not in green]
-    assert names[: len(nongreen_priority)] == nongreen_priority

@@ -8,7 +8,6 @@ drift attribution. Works on ANY registered query, not just headline.
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import statistics
@@ -26,16 +25,12 @@ def main() -> None:
     from bench import _py_worker_calibrator
 
     from spk_sl_validation_spark.plans.registry import all_queries
-    from spk_sl_validation_spark.session import build_session
+    from spk_sl_validation_spark.session import build_session, release
 
     spark = build_session(app_name="bench_some")
     specs = all_queries()
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     py_cal = _py_worker_calibrator(spark, RUNS)
-
-    def _cleanup() -> None:
-        gc.collect()
-        spark.catalog.clearCache()
 
     out: dict[str, dict] = {}
     for name in names:
@@ -46,7 +41,7 @@ def main() -> None:
             dt = time.time() - t0
             if run > 0:
                 samples.append(dt)
-            _cleanup()
+            release(spark)
         out[name] = {
             "median": round(statistics.median(samples), 3),
             "min": round(min(samples), 3),
