@@ -1140,18 +1140,16 @@ def dedup_incremental_indexed(
     # fingerprints broadcasts back — the index fp table is scanned,
     # never shuffled, so this stage's data movement is ∝ shard even
     # against a corpus-scale index.
-    if batch_tables is not None:
-        # Caller already built the batch's artifacts (e.g. the
-        # streaming ingest loop, which also merges them into the
-        # index) — reuse instead of recomputing the tokenize→hash→
-        # aggregate pipeline. Must come from dedup_index_tables with
-        # the same num_hashes/bands/shingle_n/cap parameters.
-        fp, batch_bands, batch_hs = batch_tables
-    else:
-        sig = minhash_signatures(batch_df, id_col, text_col, num_hashes, shingle_n)
-        fp = batch_df.select(id_col, md5_fingerprint(text_col).alias("fp"))
-        batch_bands = capped_band_rows(sig, id_col, rows_per_band, bands, max_bucket_size)
-        batch_hs = shingle_hash_sets(batch_df, id_col, text_col, shingle_n)
+    if batch_tables is None:
+        batch_tables = dedup_index_tables(
+            batch_df, id_col, text_col, num_hashes, bands, shingle_n, max_bucket_size
+        )
+    # A caller that already built the batch's artifacts (e.g. the
+    # streaming ingest loop, which also merges them into the index)
+    # passes them in instead of recomputing the tokenize→hash→aggregate
+    # pipeline. They must come from dedup_index_tables with the same
+    # num_hashes/bands/shingle_n/cap parameters.
+    fp, batch_bands, batch_hs = batch_tables
     batch_fps = fp.select("fp").distinct()
     hit_fps = (
         index_fp.join(F.broadcast(batch_fps), "fp", "left_semi").select("fp").distinct()

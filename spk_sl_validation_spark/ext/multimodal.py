@@ -42,6 +42,15 @@ North-star extension. Design (the part that matters at 100 TB):
 Metadata-only operators stay JVM-side (length/md5/prefix sniff are
 built-in functions over binary) — Python is reserved for actual
 byte-level decode work.
+
+Totality contract: every decode op is total per row. A payload whose
+parser raises one of ``_MALFORMED`` (``ValueError``, ``IndexError``,
+``TypeError`` — which is what ``bytes(None)`` raises for a NULL media
+cell — or ``RecursionError``) yields ``ok=false`` with every other
+field at its schema zero (``""``, ``False``, ``0.0``, ``0``); at 100 TB
+a single corrupt payload must never kill the stage. The one-row-per-
+payload ops get this from :func:`_map_payloads`; the row-expanding
+ops apply the same policy in their own loops.
 """
 
 from __future__ import annotations
@@ -84,6 +93,58 @@ def media_meta(df: DataFrame, media_col: str = "media") -> DataFrame:
         F.md5(m).alias("content_md5"),
         F.hex(F.expr(f"substring({media_col}, 1, 4)")).alias("magic_hex"),
     )
+
+
+# ---------------------------------------------------------------------------
+# Shared plumbing: fixture synthesis and the total per-payload map
+# ---------------------------------------------------------------------------
+
+_MALFORMED = (ValueError, IndexError, TypeError, RecursionError)
+
+
+def _synthesize(
+    docs: DataFrame, writer: Callable[[int], bytes], media_type: str | None = None
+) -> DataFrame:
+    """(doc_id, media binary[, media_type]) — Arrow-batched synthesis of
+    ``writer(doc_id)`` payloads from doc_id alone."""
+
+    @F.pandas_udf(T.BinaryType())
+    def make(ids: pd.Series) -> pd.Series:
+        return ids.apply(lambda d: writer(int(d)))
+
+    cols = ["doc_id", make(F.col("doc_id")).alias("media")]
+    if media_type is not None:
+        cols.append(F.lit(media_type).alias("media_type"))
+    return docs.select(*cols)
+
+
+_SCHEMA_ZERO = {"string": "", "boolean": False, "double": 0.0}  # integer types: 0
+
+
+def _map_payloads(
+    df: DataFrame,
+    schema: T.StructType,
+    parse: Callable[[bytes], tuple],
+    media_col: str,
+) -> DataFrame:
+    """One output row per payload: ``schema`` is (doc_id, *fields, ok)
+    and ``parse(payload)`` returns the middle fields. A payload that
+    raises ``_MALFORMED`` gets the failure row (schema zeros, ok=false)
+    — the module's totality contract."""
+    names = schema.fieldNames()
+    failed = tuple(_SCHEMA_ZERO.get(f.dataType.simpleString(), 0) for f in schema.fields[1:])
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, data in zip(pdf["doc_id"], pdf[media_col]):
+                try:
+                    rows.append((doc_id, *parse(bytes(data)), True))
+                except _MALFORMED:
+                    rows.append((doc_id, *failed))
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -153,9 +214,9 @@ def decode_media(df: DataFrame, media_col: str = "media") -> DataFrame:
     """Decode each media payload to (width, height, channels) via the
     per-media-type decoder registry. Arrow-batched; one Python worker
     per input partition; rows with no registered decoder — and rows a
-    real codec rejects as malformed (ValueError) — get ok=false rather
-    than failing the job (at 100 TB a single corrupt payload must
-    never kill the stage)."""
+    real codec rejects as malformed (``_MALFORMED``, NULL media
+    included) — get ok=false rather than failing the job (at 100 TB a
+    single corrupt payload must never kill the stage)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -168,7 +229,7 @@ def decode_media(df: DataFrame, media_col: str = "media") -> DataFrame:
                     w, h, c = decoder(bytes(data))
                     out["width"].append(w), out["height"].append(h), out["channels"].append(c)
                     out["ok"].append(True)
-                except (NotImplementedError, ValueError, IndexError):
+                except (NotImplementedError, *_MALFORMED):
                     out["width"].append(0), out["height"].append(0), out["channels"].append(0)
                     out["ok"].append(False)
                 out["doc_id"].append(doc_id)
@@ -392,14 +453,7 @@ def _parse_wav(data: bytes) -> tuple[int, int, int, bytes]:
 def synthesize_wav_table(docs: DataFrame) -> DataFrame:
     """(doc_id, media binary, media_type='audio/wav') — Arrow-batched
     synthesis from doc_id alone (the generation law above)."""
-
-    @F.pandas_udf(T.BinaryType())
-    def make(ids: pd.Series) -> pd.Series:
-        return ids.apply(lambda d: _make_wav(int(d)))
-
-    return docs.select(
-        "doc_id", make(F.col("doc_id")).alias("media"), F.lit("audio/wav").alias("media_type")
-    )
+    return _synthesize(docs, _make_wav, "audio/wav")
 
 
 def decode_wav(df: DataFrame, media_col: str = "media") -> DataFrame:
@@ -410,49 +464,15 @@ def decode_wav(df: DataFrame, media_col: str = "media") -> DataFrame:
     Malformed payloads yield ok=false, zeroed stats."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list[Any]] = {f.name: [] for f in WAV_SCHEMA.fields}
-            for doc_id, data in zip(pdf["doc_id"], pdf[media_col]):
-                try:
-                    rate, channels, bits, pcm = _parse_wav(bytes(data))
-                    samples = np.frombuffer(pcm, dtype="<i2").astype("int64")
-                    n_frames = samples.size // channels
-                    row = (
-                        rate,
-                        channels,
-                        bits,
-                        n_frames,
-                        n_frames / rate,
-                        int(samples.sum()),
-                        int(np.abs(samples).sum()),
-                        int((np.arange(samples.size) * samples).sum()),
-                        True,
-                    )
-                except (ValueError, IndexError):
-                    # _parse_wav length-validates every chunk before
-                    # unpacking, so malformed input surfaces here, never
-                    # as struct.error
-                    row = (0, 0, 0, 0, 0.0, 0, 0, 0, False)
-                out["doc_id"].append(doc_id)
-                for name, v in zip(
-                    (
-                        "sample_rate",
-                        "channels",
-                        "bits_per_sample",
-                        "n_frames",
-                        "duration_s",
-                        "sum_amp",
-                        "sum_abs_amp",
-                        "wsum_amp",
-                        "ok",
-                    ),
-                    row,
-                ):
-                    out[name].append(v)
-            yield pd.DataFrame(out)
+    def parse(raw: bytes) -> tuple:
+        rate, channels, bits, pcm = _parse_wav(raw)
+        samples = np.frombuffer(pcm, dtype="<i2").astype("int64")
+        n_frames = samples.size // channels
+        wsum = int((np.arange(samples.size) * samples).sum())
+        sums = (int(samples.sum()), int(np.abs(samples).sum()), wsum)
+        return (rate, channels, bits, n_frames, n_frames / rate, *sums)
 
-    return df.mapInPandas(run, WAV_SCHEMA)
+    return _map_payloads(df, WAV_SCHEMA, parse, media_col)
 
 
 BMP_STATS_SCHEMA = T.StructType(
@@ -494,14 +514,46 @@ def _make_bmp(doc_id: int) -> bytes:
 
 def synthesize_bmp_table(docs: DataFrame) -> DataFrame:
     """(doc_id, media binary, media_type='image/bmp')."""
+    return _synthesize(docs, _make_bmp, "image/bmp")
 
-    @F.pandas_udf(T.BinaryType())
-    def make(ids: pd.Series) -> pd.Series:
-        return ids.apply(lambda d: _make_bmp(int(d)))
 
-    return docs.select(
-        "doc_id", make(F.col("doc_id")).alias("media"), F.lit("image/bmp").alias("media_type")
-    )
+def _bmp_pixels(raw: bytes):
+    """(width, height, channels, pixels): header via ``_decode_bmp``,
+    pixel array re-ordered top-down with the 4-byte row stride
+    stripped — a (height, width*channels) uint8 grid."""
+    import struct
+
+    import numpy as np
+
+    width, height, chans = _decode_bmp(raw)
+    off = struct.unpack_from("<I", raw, 10)[0]
+    raw_height = struct.unpack_from("<i", raw, 22)[0]
+    stride = (width * chans + 3) & ~3
+    arr = np.frombuffer(raw, dtype=np.uint8, count=stride * height, offset=off)
+    grid = arr.reshape(height, stride)[:, : width * chans]
+    if raw_height > 0:  # positive biHeight = bottom-up rows
+        grid = grid[::-1]
+    return width, height, chans, grid
+
+
+def _pixel_stats(
+    df: DataFrame, decode: Callable[[bytes], tuple], media_col: str
+) -> DataFrame:
+    """BMP_STATS_SCHEMA rows from ``decode(payload)`` = (width, height,
+    channels, pixels), pixels being the top-down row-major samples as
+    bytes or a uint8 array: integer-exact sum and index-weighted sum
+    (the order-sensitive witness — a plain sum is order-invariant)."""
+    import numpy as np
+
+    def parse(raw: bytes) -> tuple:
+        width, height, chans, pixels = decode(raw)
+        if isinstance(pixels, bytes):
+            pixels = np.frombuffer(pixels, dtype=np.uint8)
+        flat = pixels.reshape(-1).astype("int64")
+        wsum = int((np.arange(flat.size) * flat).sum())
+        return (width, height, chans, int(flat.sum()), wsum)
+
+    return _map_payloads(df, BMP_STATS_SCHEMA, parse, media_col)
 
 
 def bmp_pixel_stats(df: DataFrame, media_col: str = "media") -> DataFrame:
@@ -510,43 +562,7 @@ def bmp_pixel_stats(df: DataFrame, media_col: str = "media") -> DataFrame:
     integer-exact sum and top-down-index-weighted sum (the weighted
     sum is what catches stride/row-order bugs — a plain sum is
     order-invariant). Malformed payloads yield ok=false."""
-    import struct
-
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list[Any]] = {f.name: [] for f in BMP_STATS_SCHEMA.fields}
-            for doc_id, data in zip(pdf["doc_id"], pdf[media_col]):
-                try:
-                    raw = bytes(data)
-                    width, height, chans = _decode_bmp(raw)
-                    off = struct.unpack_from("<I", raw, 10)[0]
-                    raw_height = struct.unpack_from("<i", raw, 22)[0]
-                    stride = (width * chans + 3) & ~3
-                    arr = np.frombuffer(raw, dtype=np.uint8, count=stride * height, offset=off)
-                    grid = arr.reshape(height, stride)[:, : width * chans]
-                    if raw_height > 0:  # positive biHeight = bottom-up rows
-                        grid = grid[::-1]
-                    flat = grid.reshape(-1).astype("int64")
-                    row = (
-                        width,
-                        height,
-                        chans,
-                        int(flat.sum()),
-                        int((np.arange(flat.size) * flat).sum()),
-                        True,
-                    )
-                except (ValueError, IndexError):
-                    row = (0, 0, 0, 0, 0, False)
-                out["doc_id"].append(doc_id)
-                for name, v in zip(
-                    ("width", "height", "channels", "pixel_sum", "pixel_wsum", "ok"), row
-                ):
-                    out[name].append(v)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, BMP_STATS_SCHEMA)
+    return _pixel_stats(df, _bmp_pixels, media_col)
 
 
 # ---------------------------------------------------------------------------
@@ -749,14 +765,7 @@ DECODERS["image/png"] = _decode_png
 
 def synthesize_png_table(docs: DataFrame) -> DataFrame:
     """(doc_id, media binary, media_type='image/png')."""
-
-    @F.pandas_udf(T.BinaryType())
-    def make(ids: pd.Series) -> pd.Series:
-        return ids.apply(lambda d: _make_png(int(d)))
-
-    return docs.select(
-        "doc_id", make(F.col("doc_id")).alias("media"), F.lit("image/png").alias("media_type")
-    )
+    return _synthesize(docs, _make_png, "image/png")
 
 
 def png_pixel_stats(df: DataFrame, media_col: str = "media") -> DataFrame:
@@ -765,33 +774,7 @@ def png_pixel_stats(df: DataFrame, media_col: str = "media") -> DataFrame:
     the order-sensitive witness: a wrong unfilter, row order, or IDAT
     concatenation produces different bytes and misses the oracle.
     Malformed payloads yield ok=false, zeroed stats."""
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list[Any]] = {f.name: [] for f in BMP_STATS_SCHEMA.fields}
-            for doc_id, data in zip(pdf["doc_id"], pdf[media_col]):
-                try:
-                    width, height, chans, raw = _parse_png(bytes(data))
-                    flat = np.frombuffer(raw, dtype=np.uint8).astype("int64")
-                    row = (
-                        width,
-                        height,
-                        chans,
-                        int(flat.sum()),
-                        int((np.arange(flat.size) * flat).sum()),
-                        True,
-                    )
-                except (ValueError, IndexError):
-                    row = (0, 0, 0, 0, 0, False)
-                out["doc_id"].append(doc_id)
-                for name, v in zip(
-                    ("width", "height", "channels", "pixel_sum", "pixel_wsum", "ok"), row
-                ):
-                    out[name].append(v)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, BMP_STATS_SCHEMA)
+    return _pixel_stats(df, _parse_png, media_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1047,14 +1030,7 @@ DECODERS["image/gif"] = _decode_gif
 
 def synthesize_gif_table(docs: DataFrame) -> DataFrame:
     """(doc_id, media binary, media_type='image/gif')."""
-
-    @F.pandas_udf(T.BinaryType())
-    def make(ids: pd.Series) -> pd.Series:
-        return ids.apply(lambda d: _make_gif(int(d)))
-
-    return docs.select(
-        "doc_id", make(F.col("doc_id")).alias("media"), F.lit("image/gif").alias("media_type")
-    )
+    return _synthesize(docs, _make_gif, "image/gif")
 
 
 def gif_pixel_stats(df: DataFrame, media_col: str = "media") -> DataFrame:
@@ -1065,32 +1041,12 @@ def gif_pixel_stats(df: DataFrame, media_col: str = "media") -> DataFrame:
     ok=false, zeroed stats."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list[Any]] = {f.name: [] for f in BMP_STATS_SCHEMA.fields}
-            for doc_id, data in zip(pdf["doc_id"], pdf[media_col]):
-                try:
-                    width, height, pal, idx = _parse_gif(bytes(data))
-                    palette = np.frombuffer(pal, dtype=np.uint8).reshape(-1, 3)
-                    flat = palette[np.frombuffer(idx, dtype=np.uint8)].reshape(-1).astype("int64")
-                    row = (
-                        width,
-                        height,
-                        3,
-                        int(flat.sum()),
-                        int((np.arange(flat.size) * flat).sum()),
-                        True,
-                    )
-                except (ValueError, IndexError):
-                    row = (0, 0, 0, 0, 0, False)
-                out["doc_id"].append(doc_id)
-                for name, v in zip(
-                    ("width", "height", "channels", "pixel_sum", "pixel_wsum", "ok"), row
-                ):
-                    out[name].append(v)
-            yield pd.DataFrame(out)
+    def decode(raw: bytes) -> tuple:
+        width, height, pal, idx = _parse_gif(raw)
+        palette = np.frombuffer(pal, dtype=np.uint8).reshape(-1, 3)
+        return width, height, 3, palette[np.frombuffer(idx, dtype=np.uint8)]
 
-    return df.mapInPandas(run, BMP_STATS_SCHEMA)
+    return _pixel_stats(df, decode, media_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1690,14 +1646,7 @@ def _make_jpeg(doc_id: int) -> bytes:
 
 def synthesize_jpeg_table(docs: DataFrame) -> DataFrame:
     """(doc_id, media binary, media_type='image/jpeg')."""
-
-    @F.pandas_udf(T.BinaryType())
-    def make(ids: pd.Series) -> pd.Series:
-        return ids.apply(lambda d: _make_jpeg(int(d)))
-
-    return docs.select(
-        "doc_id", make(F.col("doc_id")).alias("media"), F.lit("image/jpeg").alias("media_type")
-    )
+    return _synthesize(docs, _make_jpeg, "image/jpeg")
 
 
 def jpeg_pixel_stats(df: DataFrame, media_col: str = "media") -> DataFrame:
@@ -1706,33 +1655,7 @@ def jpeg_pixel_stats(df: DataFrame, media_col: str = "media") -> DataFrame:
     the order-sensitive witness: a wrong Huffman read, DC prediction,
     zigzag, or IDCT produces different bytes and misses the oracle.
     Malformed payloads yield ok=false, zeroed stats."""
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list[Any]] = {f.name: [] for f in BMP_STATS_SCHEMA.fields}
-            for doc_id, data in zip(pdf["doc_id"], pdf[media_col]):
-                try:
-                    width, height, chans, raw = _parse_jpeg(bytes(data))
-                    flat = np.frombuffer(raw, dtype=np.uint8).astype("int64")
-                    row = (
-                        width,
-                        height,
-                        chans,
-                        int(flat.sum()),
-                        int((np.arange(flat.size) * flat).sum()),
-                        True,
-                    )
-                except (ValueError, IndexError):
-                    row = (0, 0, 0, 0, 0, False)
-                out["doc_id"].append(doc_id)
-                for name, v in zip(
-                    ("width", "height", "channels", "pixel_sum", "pixel_wsum", "ok"), row
-                ):
-                    out[name].append(v)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, BMP_STATS_SCHEMA)
+    return _pixel_stats(df, _parse_jpeg, media_col)
 
 
 # ---------------------------------------------------------------------------
@@ -2176,14 +2099,7 @@ MP4_META_SCHEMA = T.StructType(
 
 def synthesize_mp4_table(docs: DataFrame) -> DataFrame:
     """(doc_id, media binary, media_type='video/mp4')."""
-
-    @F.pandas_udf(T.BinaryType())
-    def make(ids: pd.Series) -> pd.Series:
-        return ids.apply(lambda d: _make_mp4(int(d)))
-
-    return docs.select(
-        "doc_id", make(F.col("doc_id")).alias("media"), F.lit("video/mp4").alias("media_type")
-    )
+    return _synthesize(docs, _make_mp4, "video/mp4")
 
 
 def mp4_container_meta(df: DataFrame, media_col: str = "media") -> DataFrame:
@@ -2193,26 +2109,7 @@ def mp4_container_meta(df: DataFrame, media_col: str = "media") -> DataFrame:
     corrupt video in a 100 TB corpus must never kill the stage. Frame
     decode remains intentionally unavailable (needs ffmpeg); this is
     the filter/stats surface a video corpus needs before any decode."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list[Any]] = {f.name: [] for f in MP4_META_SCHEMA.fields}
-            for doc_id, data in zip(pdf["doc_id"], pdf[media_col]):
-                try:
-                    # TypeError: bytes(None) — a NULL media column must
-                    # degrade like a corrupt payload, never kill the stage
-                    w, h, dur, nt, codec = parse_mp4_meta(bytes(data))
-                    row = (w, h, dur, nt, codec, True)
-                except (ValueError, IndexError, TypeError):
-                    row = (0, 0, 0, 0, "", False)
-                out["doc_id"].append(doc_id)
-                for name, v in zip(
-                    ("width", "height", "duration_ms", "n_tracks", "video_codec", "ok"), row
-                ):
-                    out[name].append(v)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, MP4_META_SCHEMA)
+    return _map_payloads(df, MP4_META_SCHEMA, parse_mp4_meta, media_col)
 
 
 MP4_SAMPLE_SCHEMA = T.StructType(
@@ -2233,25 +2130,7 @@ def mp4_sample_stats(df: DataFrame, media_col: str = "media") -> DataFrame:
     average bitrate — the size/bitrate filters a video corpus applies
     before ever decoding a frame. Same totality contract as
     :func:`mp4_container_meta`: malformed payloads yield ok=false."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list[Any]] = {f.name: [] for f in MP4_SAMPLE_SCHEMA.fields}
-            for doc_id, data in zip(pdf["doc_id"], pdf[media_col]):
-                try:
-                    ns, tb, nc, br = parse_mp4_samples(bytes(data))
-                    row = (ns, tb, nc, br, True)
-                except (ValueError, IndexError, TypeError):
-                    row = (0, 0, 0, 0, False)
-                out["doc_id"].append(doc_id)
-                for name, v in zip(
-                    ("n_samples", "total_sample_bytes", "n_chunks",
-                     "avg_bitrate_bps", "ok"), row
-                ):
-                    out[name].append(v)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, MP4_SAMPLE_SCHEMA)
+    return _map_payloads(df, MP4_SAMPLE_SCHEMA, parse_mp4_samples, media_col)
 
 
 # ---------------------------------------------------------------------------
@@ -2389,15 +2268,7 @@ def parse_webp(data: bytes) -> tuple[int, int, str, bool, bool, int]:
 def synthesize_webp_table(docs: DataFrame) -> DataFrame:
     """(doc_id, media binary, media_type='image/webp') — Arrow-batched
     synthesis from doc_id alone (the generation law above)."""
-
-    @F.pandas_udf(T.BinaryType())
-    def make(ids: pd.Series) -> pd.Series:
-        return ids.apply(lambda d: _make_webp(int(d)))
-
-    return docs.select(
-        "doc_id", make(F.col("doc_id")).alias("media"),
-        F.lit("image/webp").alias("media_type"),
-    )
+    return _synthesize(docs, _make_webp, "image/webp")
 
 
 def webp_container_meta(df: DataFrame, media_col: str = "media") -> DataFrame:
@@ -2406,25 +2277,7 @@ def webp_container_meta(df: DataFrame, media_col: str = "media") -> DataFrame:
     count — the pre-decode filter fields of an image corpus. Same
     totality contract as the other codecs: malformed payloads yield
     ok=false, never a stage kill."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list[Any]] = {f.name: [] for f in WEBP_META_SCHEMA.fields}
-            for doc_id, data in zip(pdf["doc_id"], pdf[media_col]):
-                try:
-                    w, h, fmt, lossless, alpha, nc = parse_webp(bytes(data))
-                    row = (w, h, fmt, lossless, alpha, nc, True)
-                except (ValueError, IndexError, TypeError):
-                    row = (0, 0, "", False, False, 0, False)
-                out["doc_id"].append(doc_id)
-                for name, v in zip(
-                    ("width", "height", "format", "lossless", "has_alpha",
-                     "n_chunks", "ok"), row
-                ):
-                    out[name].append(v)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, WEBP_META_SCHEMA)
+    return _map_payloads(df, WEBP_META_SCHEMA, parse_webp, media_col)
 
 
 # ---------------------------------------------------------------------------
@@ -2522,45 +2375,21 @@ def image_dhash(df: DataFrame, media_col: str = "media") -> DataFrame:
     two's-complement value). Hamming distance between dhash values is
     then the standard near-dup metric; exact-dup grouping is a plain
     groupBy on the 8-byte key. Malformed payloads yield ok=false."""
-    import struct
-
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list[Any]] = {f.name: [] for f in IMAGE_DHASH_SCHEMA.fields}
-            for doc_id, data in zip(pdf["doc_id"], pdf[media_col]):
-                try:
-                    raw = bytes(data)
-                    width, height, chans = _decode_bmp(raw)
-                    if chans != 3:
-                        raise ValueError("dhash expects 24bpp")
-                    off = struct.unpack_from("<I", raw, 10)[0]
-                    raw_height = struct.unpack_from("<i", raw, 22)[0]
-                    stride = (width * 3 + 3) & ~3
-                    arr = np.frombuffer(
-                        raw, dtype=np.uint8, count=stride * height, offset=off
-                    )
-                    grid = arr.reshape(height, stride)[:, : width * 3]
-                    if raw_height > 0:
-                        grid = grid[::-1]
-                    px = grid.reshape(height, width, 3).astype("int64")
-                    gray = px.sum(axis=2) // 3
-                    ys = (np.arange(8) * height) // 8
-                    xs = (np.arange(9) * width) // 9
-                    small = gray[np.ix_(ys, xs)]
-                    bits = (small[:, :8] < small[:, 1:]).astype(np.uint8)
-                    packed = np.packbits(bits.reshape(-1)).tobytes()
-                    dh = int.from_bytes(packed, "big", signed=True)
-                    row = (width, height, dh, True)
-                except (ValueError, IndexError, TypeError):
-                    row = (0, 0, 0, False)
-                out["doc_id"].append(doc_id)
-                for name, v in zip(("width", "height", "dhash", "ok"), row):
-                    out[name].append(v)
-            yield pd.DataFrame(out)
+    def parse(raw: bytes) -> tuple:
+        width, height, chans, grid = _bmp_pixels(raw)
+        if chans != 3:
+            raise ValueError("dhash expects 24bpp")
+        gray = grid.reshape(height, width, 3).astype("int64").sum(axis=2) // 3
+        ys = (np.arange(8) * height) // 8
+        xs = (np.arange(9) * width) // 9
+        small = gray[np.ix_(ys, xs)]
+        bits = (small[:, :8] < small[:, 1:]).astype(np.uint8)
+        packed = np.packbits(bits.reshape(-1)).tobytes()
+        return (width, height, int.from_bytes(packed, "big", signed=True))
 
-    return df.mapInPandas(run, IMAGE_DHASH_SCHEMA)
+    return _map_payloads(df, IMAGE_DHASH_SCHEMA, parse, media_col)
 
 
 def _make_bmp_variant(doc_id: int) -> bytes:
@@ -2585,12 +2414,7 @@ def _make_bmp_variant(doc_id: int) -> bytes:
 
 def synthesize_bmp_variant_table(docs: DataFrame) -> DataFrame:
     """(doc_id, media binary) under the near-duplicate-pair law."""
-
-    @F.pandas_udf(T.BinaryType())
-    def make(ids: pd.Series) -> pd.Series:
-        return ids.apply(lambda d: _make_bmp_variant(int(d)))
-
-    return docs.select("doc_id", make(F.col("doc_id")).alias("media"))
+    return _synthesize(docs, _make_bmp_variant)
 
 
 def _make_bmp_group(doc_id: int) -> bytes:
@@ -2629,12 +2453,7 @@ def _make_bmp_group(doc_id: int) -> bytes:
 
 def synthesize_bmp_group_table(docs: DataFrame) -> DataFrame:
     """(doc_id, media binary) under the duplicate-group law."""
-
-    @F.pandas_udf(T.BinaryType())
-    def make(ids: pd.Series) -> pd.Series:
-        return ids.apply(lambda d: _make_bmp_group(int(d)))
-
-    return docs.select("doc_id", make(F.col("doc_id")).alias("media"))
+    return _synthesize(docs, _make_bmp_group)
 
 
 # ---------------------------------------------------------------------------
@@ -3147,15 +2966,7 @@ def _parse_pdf(data: bytes) -> tuple[int, list[str]]:
 
 def synthesize_pdf_table(docs: DataFrame) -> DataFrame:
     """(doc_id, media binary, media_type='application/pdf')."""
-
-    @F.pandas_udf(T.BinaryType())
-    def make(ids: pd.Series) -> pd.Series:
-        return ids.apply(lambda d: _make_pdf(int(d)))
-
-    return docs.select(
-        "doc_id", make(F.col("doc_id")).alias("media"),
-        F.lit("application/pdf").alias("media_type"),
-    )
+    return _synthesize(docs, _make_pdf, "application/pdf")
 
 
 def pdf_extract_text(df: DataFrame, media_col: str = "media") -> DataFrame:
@@ -3163,22 +2974,12 @@ def pdf_extract_text(df: DataFrame, media_col: str = "media") -> DataFrame:
     page count, char count, the extracted text (pages joined by
     newline). Total: malformed payloads yield ok=false, empty text."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list[Any]] = {f.name: [] for f in PDF_TEXT_SCHEMA.fields}
-            for doc_id, data in zip(pdf["doc_id"], pdf[media_col]):
-                try:
-                    n_pages, texts = _parse_pdf(bytes(data))
-                    text = "\n".join(texts)
-                    row = (n_pages, len(text), text, True)
-                except (ValueError, IndexError, TypeError, RecursionError):
-                    row = (0, 0, "", False)
-                out["doc_id"].append(doc_id)
-                for name, v in zip(("n_pages", "n_chars", "text", "ok"), row):
-                    out[name].append(v)
-            yield pd.DataFrame(out)
+    def parse(raw: bytes) -> tuple:
+        n_pages, texts = _parse_pdf(raw)
+        text = "\n".join(texts)
+        return (n_pages, len(text), text)
 
-    return df.mapInPandas(run, PDF_TEXT_SCHEMA)
+    return _map_payloads(df, PDF_TEXT_SCHEMA, parse, media_col)
 
 
 # ---------------------------------------------------------------------------
@@ -3213,31 +3014,18 @@ def audio_fingerprint(df: DataFrame, media_col: str = "media") -> DataFrame:
     malformed payloads yield ok=false."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list[Any]] = {f.name: [] for f in AUDIO_FP_SCHEMA.fields}
-            for doc_id, data in zip(pdf["doc_id"], pdf[media_col]):
-                try:
-                    rate, channels, bits, pcm = _parse_wav(bytes(data))
-                    samples = np.frombuffer(pcm, dtype="<i2")
-                    ch0 = samples[::channels].astype("int64")
-                    n = ch0.size
-                    if n < AUDIO_FP_SEGMENTS:
-                        raise ValueError("too short for fingerprint")
-                    starts = (np.arange(AUDIO_FP_SEGMENTS) * n) // AUDIO_FP_SEGMENTS
-                    e = np.add.reduceat(ch0 * ch0, starts)
-                    fp_bits = (e[:-1] < e[1:]).astype(np.uint8)
-                    packed = np.packbits(fp_bits).tobytes()
-                    afp = int.from_bytes(packed, "big", signed=True)
-                    row = (n, afp, True)
-                except (ValueError, IndexError, TypeError):
-                    row = (0, 0, False)
-                out["doc_id"].append(doc_id)
-                for name, v in zip(("n_frames", "afp", "ok"), row):
-                    out[name].append(v)
-            yield pd.DataFrame(out)
+    def parse(raw: bytes) -> tuple:
+        _rate, channels, _bits, pcm = _parse_wav(raw)
+        ch0 = np.frombuffer(pcm, dtype="<i2")[::channels].astype("int64")
+        n = ch0.size
+        if n < AUDIO_FP_SEGMENTS:
+            raise ValueError("too short for fingerprint")
+        starts = (np.arange(AUDIO_FP_SEGMENTS) * n) // AUDIO_FP_SEGMENTS
+        e = np.add.reduceat(ch0 * ch0, starts)
+        packed = np.packbits((e[:-1] < e[1:]).astype(np.uint8)).tobytes()
+        return (n, int.from_bytes(packed, "big", signed=True))
 
-    return df.mapInPandas(run, AUDIO_FP_SCHEMA)
+    return _map_payloads(df, AUDIO_FP_SCHEMA, parse, media_col)
 
 
 def _make_wav_variant(doc_id: int) -> bytes:
@@ -3264,9 +3052,4 @@ def _make_wav_variant(doc_id: int) -> bytes:
 
 def synthesize_wav_variant_table(docs: DataFrame) -> DataFrame:
     """(doc_id, media binary) under the near-duplicate-pair law."""
-
-    @F.pandas_udf(T.BinaryType())
-    def make(ids: pd.Series) -> pd.Series:
-        return ids.apply(lambda d: _make_wav_variant(int(d)))
-
-    return docs.select("doc_id", make(F.col("doc_id")).alias("media"))
+    return _synthesize(docs, _make_wav_variant)

@@ -447,6 +447,10 @@ def debounce_events(events: DataFrame, gap_us: int = DEBOUNCE_GAP_US) -> DataFra
 # Streaming ingest dedup (foreachBatch against a persisted dedup index)
 # ---------------------------------------------------------------------------
 
+# Every ingest_*_stream reads one source file per micro-batch: the replay
+# tests and the stream == batch queries count batches as shards.
+_FILES_PER_TRIGGER = 1
+
 DOC_STREAM_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -527,7 +531,6 @@ def ingest_dedup_stream(
     index_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
 ):
     """The production crawl-ingest shape: a file stream of document
     shards, each micro-batch deduped against the PERSISTED index
@@ -558,7 +561,7 @@ def ingest_dedup_stream(
 
     stream = (
         spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", _FILES_PER_TRIGGER)
         .parquet(source_dir)
     )
     return (
@@ -648,7 +651,6 @@ def ingest_ivf_stream(
     source_dir: str,
     index_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
 ):
     """The production embedding-ingest shape: a file stream of vector
     shards, each micro-batch folded into the PERSISTED IVF index under
@@ -669,7 +671,7 @@ def ingest_ivf_stream(
 
     stream = (
         spark.readStream.schema(VEC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", _FILES_PER_TRIGGER)
         .parquet(source_dir)
     )
     return (
@@ -773,7 +775,6 @@ def ingest_pack_stream(
     pack_dir: str,
     checkpoint_dir: str,
     seq_len: int = 2048,
-    max_files_per_trigger: int = 1,
 ):
     """The production packing-ingest shape: a file stream of document
     shards, each micro-batch appended to the PERSISTED packed token
@@ -794,7 +795,7 @@ def ingest_pack_stream(
 
     stream = (
         spark.readStream.schema(schemas.DOCUMENTS)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", _FILES_PER_TRIGGER)
         .parquet(source_dir)
     )
     return (
@@ -971,7 +972,6 @@ def ingest_frontier_stream(
     source_dir: str,
     frontier_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
     compact_threshold: int = 16,
 ):
     """The production crawl-frontier shape: a file stream of
@@ -993,7 +993,7 @@ def ingest_frontier_stream(
 
     stream = (
         spark.readStream.schema(URL_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", _FILES_PER_TRIGGER)
         .parquet(source_dir)
     )
     return (

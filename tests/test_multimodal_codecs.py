@@ -1109,19 +1109,6 @@ def test_mp4_sample_parser_rejects_duplicate_sibling_tables():
         M.parse_mp4_samples(bytes(mutated))
 
 
-def test_mp4_ops_total_on_null_media(spark):
-    import pyspark.sql.functions as F
-
-    docs = spark.range(3).selectExpr("id AS doc_id")
-    media = M.synthesize_mp4_table(docs).withColumn(
-        "media", F.when(F.col("doc_id") == 1, F.lit(None)).otherwise(F.col("media"))
-    )
-    meta = {r.doc_id: r.ok for r in M.mp4_container_meta(media).collect()}
-    stats = {r.doc_id: r.ok for r in M.mp4_sample_stats(media).collect()}
-    assert meta == {0: True, 1: False, 2: True}
-    assert stats == {0: True, 1: False, 2: True}
-
-
 # ---------------------------------------------------------------------------
 # WebP (round 10): RIFF container walk + VP8/VP8L/VP8X header parses
 # ---------------------------------------------------------------------------
@@ -1211,13 +1198,6 @@ def test_webp_parser_total_on_mutated_valid_payloads():
             pass
 
     run()
-
-
-def test_webp_meta_flags_bad_rows(spark):
-    rows = [(0, M._make_webp(0)), (1, b"garbage"), (2, None)]
-    df = spark.createDataFrame(rows, "doc_id long, media binary")
-    got = {r.doc_id: r.ok for r in M.webp_container_meta(df).collect()}
-    assert got == {0: True, 1: False, 2: False}
 
 
 def test_wav_window_features_reference_and_totality(spark):
@@ -1461,3 +1441,38 @@ def test_audio_fingerprint_total_on_bad_payloads(spark):
     )
     rows = {r["doc_id"]: r for r in M.audio_fingerprint(df).collect()}
     assert not any(rows[i]["ok"] for i in (1, 2, 3))
+
+
+# ---------------------------------------------------------------------------
+# Totality across every one-row-per-payload op: garbage and NULL media
+# ---------------------------------------------------------------------------
+
+_PAYLOAD_OPS = [
+    ("decode_wav", M._make_wav, "audio/wav"),
+    ("bmp_pixel_stats", M._make_bmp, "image/bmp"),
+    ("png_pixel_stats", M._make_png, "image/png"),
+    ("gif_pixel_stats", M._make_gif, "image/gif"),
+    ("jpeg_pixel_stats", M._make_jpeg, "image/jpeg"),
+    ("mp4_container_meta", M._make_mp4, "video/mp4"),
+    ("mp4_sample_stats", M._make_mp4, "video/mp4"),
+    ("webp_container_meta", M._make_webp, "image/webp"),
+    ("image_dhash", M._make_bmp, "image/bmp"),
+    ("pdf_extract_text", M._make_pdf, "application/pdf"),
+    ("audio_fingerprint", M._make_wav, "audio/wav"),
+    ("decode_media", M._make_bmp, "image/bmp"),
+]
+
+
+@pytest.mark.parametrize("op,writer,media_type", _PAYLOAD_OPS, ids=[c[0] for c in _PAYLOAD_OPS])
+def test_payload_op_total_on_garbage_and_null_media(spark, op, writer, media_type):
+    """A corrupt payload and a NULL media cell both yield ok=false with
+    every non-key field at its schema zero — never a killed stage."""
+    rows = [(0, writer(3), media_type), (1, b"garbage", media_type), (2, None, media_type)]
+    df = spark.createDataFrame(rows, "doc_id long, media binary, media_type string")
+    out = getattr(M, op)(df)
+    got = sorted(out.collect(), key=lambda r: r.doc_id)
+    assert [r.ok for r in got] == [True, False, False]
+    zero = {"string": "", "boolean": False, "double": 0.0}
+    for r in got[1:]:
+        for f in out.schema.fields[1:]:
+            assert r[f.name] == zero.get(f.dataType.simpleString(), 0), (op, f.name)

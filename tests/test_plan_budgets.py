@@ -49,7 +49,7 @@ BUDGETS = {
     # incremental dedup = exact fp semi + asymmetric banding + verify,
     # every join broadcast or pinned shuffle-hash (checkpointed sides).
     "corpus_span_dedup": (4, 0),
-    "dedup_incremental": (6, 0),
+    "dedup_incremental": (4, 0),  # tightened 6 -> 4 (stale pin; actual static plan)
     # bigram LM scoring (round-4 rewrite, 10 -> 5 exchanges): pairs
     # derived map-side via arrays_zip(slice, slice) — no lag window —
     # so the exchanges are the model aggregate, the window-sum context
@@ -64,7 +64,7 @@ BUDGETS = {
     # 100 TB) onto a pinned shuffle-hash join; AQE re-upgrades small
     # cases to broadcast at runtime, but the static plan pins
     # the shuffle shape.
-    "hybrid_rrf_retrieval": (12, 0),
+    "hybrid_rrf_retrieval": (8, 0),  # tightened 12 -> 8 (stale pin; actual static plan)
     # round-8 headline additions (the round-7 operator surface joins
     # the regression bench): substring dedup = fingerprint groupBy +
     # gated ownership join-back (the AQE-splittable de-skew shape) +
