@@ -13,9 +13,10 @@ Attributability (round-3 contract): per query, one unmeasured warm-up
 run (JVM/codegen/file-index warm) followed by ``BENCH_RUNS`` measured
 runs. ``queries`` reports per-query MEDIANS (the headline ``value`` is
 their sum — robust to one-off host hiccups); ``queries_detail`` adds
-min and spread per query and ``host`` fingerprints the machine, so a
-cross-round delta can be attributed to a plan change vs host drift by
-ratio, not guesswork. BENCH_HISTORY.md keeps one row per round.
+min, spread and measured-run codegen compiles per query and ``host``
+fingerprints the machine, so a cross-round delta can be attributed to
+a plan change vs host drift by ratio, not guesswork. BENCH_HISTORY.md
+keeps one row per round.
 """
 
 from __future__ import annotations
@@ -122,7 +123,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     from spk_sl_validation_spark.plans.registry import headline_queries
-    from spk_sl_validation_spark.session import build_session, release
+    from spk_sl_validation_spark.session import build_session, codegen_compiles, release
 
     spark = build_session(app_name="bench")
     specs = headline_queries()
@@ -139,12 +140,15 @@ def main() -> None:
     for name, spec in specs.items():
         samples: list[float] = []
         warmup_s = 0.0
+        compiles = 0
         for run in range(RUNS + 1):  # run 0 = unmeasured warm-up
+            c0 = codegen_compiles(spark)
             t0 = time.time()
             spec.builder(spark, sf_dir).write.mode("overwrite").format("noop").save()
             dt = time.time() - t0
             if run > 0:
                 samples.append(dt)
+                compiles += codegen_compiles(spark) - c0
             else:
                 warmup_s = dt
             # Isolate measurements: drop cached/checkpointed RDDs and
@@ -165,6 +169,9 @@ def main() -> None:
             # (webcure_queries._materialized) — lands HERE, visibly,
             # instead of silently vanishing from the medians.
             "warmup_s": round(warmup_s, 3),
+            # Janino compiles during the measured runs. Non-zero after
+            # the warm-up means the generated-code cache is thrashing.
+            "codegen_compiles": compiles,
         }
 
     host = _host_fingerprint()

@@ -56,6 +56,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from spk_sl_validation_spark.session import app_memo
+
 #: Tracking parameter keys stripped by :func:`normalize_url`.
 TRACKING_PARAM_RE = r"(utm_[A-Za-z0-9_]*|fbclid|gclid|msclkid)"
 
@@ -74,7 +76,8 @@ _SLD_SUFFIXES = ("co", "ac", "gov", "org", "net")
 # DRIVER time per composed-pipeline run. The unresolved Column is
 # immutable and not bound to any DataFrame, so reusing one object per
 # (application, source column) is safe; keyed on applicationId so a
-# fresh JVM/session never sees a stale py4j reference.
+# fresh JVM/session never sees a stale py4j reference, and a miss
+# drops the entries of stopped applications (session.app_memo).
 _EXPR_CACHE: dict[tuple[str, str, str], Column] = {}
 
 
@@ -84,12 +87,7 @@ def _cached_expr(kind: str, name: str, build) -> Column:
     sc = SparkContext._active_spark_context
     if sc is None:
         return build()
-    key = (sc.applicationId, kind, name)
-    col = _EXPR_CACHE.get(key)
-    if col is None:
-        col = build()
-        _EXPR_CACHE[key] = col
-    return col
+    return app_memo(_EXPR_CACHE, (sc.applicationId, kind, name), build)
 
 
 def _strip_tracking(query: Column) -> Column:

@@ -21,6 +21,7 @@ from spk_sl_validation_spark.ext import psl as PSL
 from spk_sl_validation_spark.ext import webcure as W
 from spk_sl_validation_spark.operators.relational import evaluate_once
 from spk_sl_validation_spark.plans.registry import register
+from spk_sl_validation_spark.session import app_memo
 from spk_sl_validation_spark.sources.readers import load_table, load_table_spread
 
 DOMAIN_CAP_K = 3
@@ -42,18 +43,17 @@ def _urls(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Python-built local relation scans as ExistingRDD with UNKNOWN size
 # stats — without the hint the planner assumes it is huge and
 # sort-merges; the call site knows it is 2 rows.
-_BLOCKED_CACHE: dict[str, DataFrame] = {}
+_BLOCKED_CACHE: dict[tuple[str], DataFrame] = {}
 
 
 def _blocked_df(spark: SparkSession) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    df = _BLOCKED_CACHE.get(app)
-    if df is None:
-        df = F.broadcast(
+    return app_memo(
+        _BLOCKED_CACHE,
+        (spark.sparkContext.applicationId,),
+        lambda: F.broadcast(
             spark.createDataFrame([(d,) for d in BLOCKED_DOMAINS], "domain string")
-        )
-        _BLOCKED_CACHE[app] = df
-    return df
+        ),
+    )
 
 
 # Session-scoped fixture manifests for the COMPOSED pipeline: the
@@ -76,9 +76,7 @@ def _materialized(
 ) -> DataFrame:
     import tempfile
 
-    ck = (spark.sparkContext.applicationId, sf_dir, key)
-    df = _FIXTURE_CACHE.get(ck)
-    if df is None:
+    def write_and_scan() -> DataFrame:
         path = tempfile.mkdtemp(prefix=f"webcure_fixture_{key}_")
         build().write.mode("overwrite").parquet(path)
         # cache the scan DataFrame, not just the path: re-running
@@ -87,9 +85,11 @@ def _materialized(
         # (~0.1 s of pure driver latency per read on this host). The
         # DataFrame is an immutable logical plan over a write-once
         # manifest — nothing data-dependent is memoized.
-        df = spark.read.parquet(path)
-        _FIXTURE_CACHE[ck] = df
-    return df
+        return spark.read.parquet(path)
+
+    return app_memo(
+        _FIXTURE_CACHE, (spark.sparkContext.applicationId, sf_dir, key), write_and_scan
+    )
 
 
 @register(

@@ -458,7 +458,14 @@ DOC_STREAM_SCHEMA = T.StructType(
     ]
 )
 
-_INDEX_PARTS = ("fp", "bands", "hs")
+# The three index parts (ext/dedup.py dedup_index_tables) and their
+# on-disk schemas. Reading with the schema given skips one inference
+# job per part on every micro-batch.
+_INDEX_PARTS = {
+    "fp": "doc_id long, fp string, batch_id int",
+    "bands": "doc_id long, band int, h0 long, h1 long, batch_id int",
+    "hs": "doc_id long, hs array<bigint>, batch_id int",
+}
 
 
 def write_dedup_index(docs: DataFrame, index_dir: str, batch_id: int = -1) -> None:
@@ -496,8 +503,10 @@ def _ingest_process_batch(
 
     batch_df = batch_df.localCheckpoint(eager=True)
     index = tuple(
-        spark.read.parquet(f"{index_dir}/{n}").filter(F.col("batch_id") < batch_id)
-        for n in _INDEX_PARTS
+        spark.read.schema(schema)
+        .parquet(f"{index_dir}/{n}")
+        .filter(F.col("batch_id") < batch_id)
+        for n, schema in _INDEX_PARTS.items()
     )
     # Batch artifacts are computed ONCE (materialized) and shared by
     # the dedup pass and the index-merge writes — without this the
@@ -513,7 +522,8 @@ def _ingest_process_batch(
         .partitionBy("batch_id")
         .parquet(out_dir)
     )
-    kept = res.filter("keep").select("doc_id")
+    # bounded by the shard size: broadcast instead of shuffling both sides
+    kept = F.broadcast(res.filter("keep").select("doc_id"))
     for name, part in zip(_INDEX_PARTS, arts):
         (
             part.join(kept, "doc_id", "left_semi")

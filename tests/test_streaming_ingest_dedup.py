@@ -8,6 +8,9 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
+
+from spk_sl_validation_spark.session import codegen_compiles
 from spk_sl_validation_spark.sources.readers import load_table
 from spk_sl_validation_spark.streaming.pipeline import (
     ingest_dedup_stream,
@@ -58,12 +61,10 @@ def test_streaming_batches_dedup_against_index_and_each_other(spark, sf_dir, tmp
     assert {r.batch_id for r in fp.select("batch_id").distinct().collect()} >= {-1, 0, 1}
 
 
-def test_batch_replay_is_idempotent(spark, sf_dir, tmp_path):
-    """A replayed micro-batch (same contents, same batch_id — the
-    crash-before-checkpoint-commit case) must reproduce its original
-    verdicts: the index read excludes the partition the failed attempt
-    wrote, so a batch never sees its own docs as 'index' and
-    misclassifies them as exact dups of themselves."""
+@pytest.fixture
+def replay_batch(spark, sf_dir, tmp_path):
+    """Batch 0 (one novel doc) against a 30-doc index; each call runs
+    the micro-batch again and returns the sorted result rows."""
     from spk_sl_validation_spark.streaming.pipeline import _ingest_process_batch
 
     docs = load_table(spark, sf_dir, "documents").limit(30).cache()
@@ -79,8 +80,28 @@ def test_batch_replay_is_idempotent(spark, sf_dir, tmp_path):
             (r.doc_id, r.keep, r.reason) for r in spark.read.parquet(out_dir).collect()
         )
 
-    first = run()
+    return run
+
+
+def test_batch_replay_is_idempotent(spark, tmp_path, replay_batch):
+    """A replayed micro-batch (same contents, same batch_id — the
+    crash-before-checkpoint-commit case) must reproduce its original
+    verdicts: the index read excludes the partition the failed attempt
+    wrote, so a batch never sees its own docs as 'index' and
+    misclassifies them as exact dups of themselves."""
+    first = replay_batch()
     assert first == [(501, True, "unique")]
-    assert run() == first  # replay after the first attempt's index write
-    fp = spark.read.parquet(f"{index_dir}/fp")
+    assert replay_batch() == first  # replay after the first attempt's index write
+    fp = spark.read.parquet(str(tmp_path / "index" / "fp"))
     assert fp.filter("batch_id = 0").count() == 1  # no duplicate artifact rows
+
+
+def test_replayed_batch_compiles_nothing(spark, replay_batch):
+    """Every class a micro-batch generates stays in the codegen cache:
+    replaying it compiles nothing. At Spark's default cache size (100)
+    one trigger's ~140 classes evict each other and the replay
+    re-compiled about 20 of them."""
+    replay_batch()
+    before = codegen_compiles(spark)
+    replay_batch()
+    assert codegen_compiles(spark) == before
