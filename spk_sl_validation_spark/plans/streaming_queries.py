@@ -58,6 +58,21 @@ def _ingest_tmp_base(spark, sf_dir: str, prefix: str):
     return base
 
 
+def _write_shards(df: DataFrame, source_dir: str, preds) -> None:
+    """One single-file shard of ``df`` per predicate under
+    ``source_dir``, with mtimes pinned in predicate order: the file
+    source orders by mtime, so shard i forms micro-batch i."""
+    import os
+    import pathlib
+
+    for i, pred in enumerate(preds):
+        shard = f"{source_dir}/shard{i}"
+        df.filter(pred).coalesce(1).write.mode("overwrite").parquet(shard)
+        t = 1_700_000_000 + i * 60
+        for p in pathlib.Path(shard).rglob("*"):
+            os.utime(p, (t, t))
+
+
 @register(
     "streaming_windowed_counts",
     doc="Structured Streaming tumbling-window agg (watermark + availableNow replay) == batch answer",
@@ -706,8 +721,6 @@ def streaming_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer is frozen at bootstrap, so the final lists are EXACTLY
     the batch build over the full corpus and the probe matches the
     full-corpus direct-IVF oracle hash-for-hash."""
-    import pathlib
-
     from spk_sl_validation_spark.ext import similarity as S
     from spk_sl_validation_spark.plans.similarity_queries import N_CENTROIDS, N_QUERIES
     from spk_sl_validation_spark.sources.readers import load_table
@@ -722,8 +735,7 @@ def streaming_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_dir, source_dir, ckpt = str(base / "index"), str(base / "incoming"), str(base / "ckpt")
     P.write_ivf_index(bootstrap, centroids, index_dir)
     # two shard files -> two micro-batches (maxFilesPerTrigger=1)
-    for i, pred in enumerate(((F.col("vec_id") % 8) == 3, (F.col("vec_id") % 8) == 7)):
-        emb.filter(pred).coalesce(1).write.mode("overwrite").parquet(f"{source_dir}/shard{i}")
+    _write_shards(emb, source_dir, ((F.col("vec_id") % 8) == 3, (F.col("vec_id") % 8) == 7))
     q = P.ingest_ivf_stream(spark, f"{source_dir}/*", index_dir, ckpt)
     q.awaitTermination()
 
@@ -754,9 +766,6 @@ def streaming_pack_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     id order), continue-pack each against the persisted state, and
     read back the packed table — byte-identical to packing the whole
     corpus at once."""
-    import os
-    import pathlib
-
     from spk_sl_validation_spark.plans.assembly_queries import SEQ_LEN
     from spk_sl_validation_spark.sources.readers import load_table
 
@@ -766,14 +775,8 @@ def streaming_pack_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _ingest_tmp_base(spark, sf_dir, "spk_sl_pack_ingest")
     pack_dir, source_dir, ckpt = str(base / "pack"), str(base / "incoming"), str(base / "ckpt")
     P.write_pack_state(spark, pack_dir)  # zero bootstrap state
-    for i, pred in enumerate((F.col("doc_id") <= k, F.col("doc_id") > k)):
-        shard = f"{source_dir}/shard{i}"
-        docs.filter(pred).coalesce(1).write.mode("overwrite").parquet(shard)
-        # pin shard order for the file source (it sorts by mtime): the
-        # low-id shard must form the earlier micro-batch
-        t = 1_700_000_000 + i * 60
-        for p in pathlib.Path(shard).rglob("*"):
-            os.utime(p, (t, t))
+    # the low-id shard must form the earlier micro-batch
+    _write_shards(docs, source_dir, (F.col("doc_id") <= k, F.col("doc_id") > k))
     q = P.ingest_pack_stream(spark, f"{source_dir}/*", pack_dir, ckpt, seq_len=SEQ_LEN)
     q.awaitTermination()
 
@@ -836,9 +839,6 @@ def streaming_frontier_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     processes them in id order — though the frontier merge is
     order-insensitive by construction: min is commutative), ingest
     both against the persisted state, read back via the LSM fold."""
-    import os
-    import pathlib
-
     from spk_sl_validation_spark.ext import webcure as W
     from spk_sl_validation_spark.sources.readers import load_table
 
@@ -852,12 +852,7 @@ def streaming_frontier_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     empty = spark.createDataFrame([], P.URL_STREAM_SCHEMA)
     P.write_frontier(empty, frontier_dir)  # zero bootstrap state
-    for i, pred in enumerate((F.col("doc_id") <= k, F.col("doc_id") > k)):
-        shard = f"{source_dir}/shard{i}"
-        urls.filter(pred).coalesce(1).write.mode("overwrite").parquet(shard)
-        t = 1_700_000_000 + i * 60
-        for p in pathlib.Path(shard).rglob("*"):
-            os.utime(p, (t, t))
+    _write_shards(urls, source_dir, (F.col("doc_id") <= k, F.col("doc_id") > k))
     q = P.ingest_frontier_stream(spark, f"{source_dir}/*", frontier_dir, ckpt)
     q.awaitTermination()
     return P.read_frontier(spark, frontier_dir)

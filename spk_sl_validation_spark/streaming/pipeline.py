@@ -444,12 +444,80 @@ def debounce_events(events: DataFrame, gap_us: int = DEBOUNCE_GAP_US) -> DataFra
 
 
 # ---------------------------------------------------------------------------
-# Streaming ingest dedup (foreachBatch against a persisted dedup index)
+# Exactly-once ingest stores (the four foreachBatch ingest streams below)
 # ---------------------------------------------------------------------------
+#
+# Every table an ingest stream persists is partitioned by the micro-batch
+# that wrote it, and every state read sees only earlier batches:
+# - _write_batch dynamically overwrites the batch's OWN partition, so a
+#   batch replayed from the checkpoint after a crash replaces its failed
+#   attempt's rows instead of duplicating them. Bootstraps write the same
+#   layout as batch -1.
+# - _read_before reads only ``batch_id < current``, so a replayed batch
+#   starts from the state its failed attempt started from and never sees
+#   that attempt's own writes (the dedup stream would otherwise flag its
+#   kept docs as exact dups of themselves).
+# So each ``_*_process_batch`` is idempotent for a fixed (batch contents,
+# batch_id) — the idempotent-sink recipe Structured Streaming's
+# exactly-once guarantee rests on — without a transactional store. The
+# process functions are module-level so tests can drive a replay directly.
+# _start_ingest runs one over an availableNow file stream.
 
 # Every ingest_*_stream reads one source file per micro-batch: the replay
 # tests and the stream == batch queries count batches as shards.
 _FILES_PER_TRIGGER = 1
+
+
+def _write_batch(df: DataFrame, path: str, batch_id: int) -> None:
+    """Write ``df`` as ``batch_id``'s partition of ``path``, replacing only it."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
+
+
+def _read_before(spark: SparkSession, path: str, batch_id: int, schema: str) -> DataFrame:
+    """The partitions of ``path`` that batches before ``batch_id`` wrote.
+    ``schema`` (including ``batch_id int``) is always given: it skips an
+    inference job, and an EMPTY bootstrap — a dir with no parquet files
+    yet — has nothing to infer from."""
+    return spark.read.schema(schema).parquet(path).filter(F.col("batch_id") < batch_id)
+
+
+def _start_ingest(
+    spark: SparkSession,
+    schema: T.StructType,
+    source_dir: str,
+    checkpoint_dir: str,
+    process_batch,
+    *args,
+):
+    """Start ``process_batch(spark, batch_df, batch_id, *args)`` on
+    each micro-batch of a parquet file stream (availableNow trigger).
+    The micro-batch is materialized once, so the process function may
+    read it several times without re-reading the source files. Returns
+    the started StreamingQuery."""
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        process_batch(spark, batch_df.localCheckpoint(eager=True), batch_id, *args)
+
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", _FILES_PER_TRIGGER)
+        .parquet(source_dir)
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+# ---------------------------------------------------------------------------
+# Streaming ingest dedup (foreachBatch against a persisted dedup index)
+# ---------------------------------------------------------------------------
 
 DOC_STREAM_SCHEMA = T.StructType(
     [
@@ -459,8 +527,7 @@ DOC_STREAM_SCHEMA = T.StructType(
 )
 
 # The three index parts (ext/dedup.py dedup_index_tables) and their
-# on-disk schemas. Reading with the schema given skips one inference
-# job per part on every micro-batch.
+# on-disk schemas.
 _INDEX_PARTS = {
     "fp": "doc_id long, fp string, batch_id int",
     "bands": "doc_id long, band int, h0 long, h1 long, batch_id int",
@@ -470,42 +537,27 @@ _INDEX_PARTS = {
 
 def write_dedup_index(docs: DataFrame, index_dir: str, batch_id: int = -1) -> None:
     """Persist the three dedup-index artifacts (ext/dedup.py
-    dedup_index_tables) under ``index_dir``, partitioned by the batch
-    that contributed them — the layout :func:`ingest_dedup_stream`
-    appends to with exactly-once semantics (a replayed batch
-    dynamically overwrites ITS OWN partition instead of duplicating
-    rows)."""
+    dedup_index_tables) under ``index_dir`` as ``batch_id``'s
+    partition — the layout :func:`ingest_dedup_stream` appends to."""
     from spk_sl_validation_spark.ext.dedup import dedup_index_tables
 
     for name, part in zip(_INDEX_PARTS, dedup_index_tables(docs)):
-        (
-            part.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{index_dir}/{name}")
-        )
+        _write_batch(part, f"{index_dir}/{name}", batch_id)
 
 
 def _ingest_process_batch(
     spark: SparkSession, batch_df: DataFrame, batch_id: int, index_dir: str, out_dir: str
 ) -> None:
-    """One micro-batch of :func:`ingest_dedup_stream` (module-level so
-    tests can drive a replay directly). Idempotent for a fixed
-    (batch contents, batch_id): the index read excludes partitions
-    with ``batch_id >= current`` — i.e. anything a previous attempt of
-    THIS batch wrote — and every output partition is dynamically
-    overwritten."""
+    """One micro-batch of :func:`ingest_dedup_stream`: dedup against
+    the prior index, write the verdicts, fold the kept docs'
+    artifacts into the index."""
     from spk_sl_validation_spark.ext.dedup import (
         dedup_incremental_indexed,
         dedup_index_tables,
     )
 
-    batch_df = batch_df.localCheckpoint(eager=True)
     index = tuple(
-        spark.read.schema(schema)
-        .parquet(f"{index_dir}/{n}")
-        .filter(F.col("batch_id") < batch_id)
+        _read_before(spark, f"{index_dir}/{n}", batch_id, schema)
         for n, schema in _INDEX_PARTS.items()
     )
     # Batch artifacts are computed ONCE (materialized) and shared by
@@ -515,24 +567,11 @@ def _ingest_process_batch(
     res = dedup_incremental_indexed(
         batch_df, *index, batch_tables=arts
     ).localCheckpoint(eager=True)
-    (
-        res.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(out_dir)
-    )
+    _write_batch(res, out_dir, batch_id)
     # bounded by the shard size: broadcast instead of shuffling both sides
     kept = F.broadcast(res.filter("keep").select("doc_id"))
     for name, part in zip(_INDEX_PARTS, arts):
-        (
-            part.join(kept, "doc_id", "left_semi")
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{index_dir}/{name}")
-        )
+        _write_batch(part.join(kept, "doc_id", "left_semi"), f"{index_dir}/{name}", batch_id)
 
 
 def ingest_dedup_stream(
@@ -549,15 +588,6 @@ def ingest_dedup_stream(
     documents' artifacts folded back into the index so later batches
     see earlier ones.
 
-    Exactly-once across restarts without a transactional store: every
-    write (results AND the three index parts) is partitioned by
-    batch_id with dynamic partition overwrite, so a batch replayed
-    from the checkpoint overwrites its own partitions — the same
-    idempotent-sink recipe as the foreachBatch file sink test. The
-    index read filters to ``batch_id < current`` so a replayed batch
-    never sees the partition its own failed attempt wrote (it would
-    misclassify its kept docs as exact dups of themselves).
-
     Precondition: ``index_dir`` must hold a bootstrapped index
     (``write_dedup_index`` on the existing corpus — an empty corpus
     is fine) before the stream starts; batch 0 reads the fp/bands/hs
@@ -565,20 +595,9 @@ def ingest_dedup_stream(
 
     Returns the started StreamingQuery (availableNow trigger).
     """
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _ingest_process_batch(spark, batch_df, batch_id, index_dir, out_dir)
-
-    stream = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", _FILES_PER_TRIGGER)
-        .parquet(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_ingest(
+        spark, DOC_STREAM_SCHEMA, source_dir, checkpoint_dir,
+        _ingest_process_batch, index_dir, out_dir,
     )
 
 
@@ -600,19 +619,12 @@ def write_ivf_index(
     """Bootstrap the persisted IVF index: the frozen centroid table
     (written once — the quantizer NEVER changes after this, which is
     what makes streaming merge == rebuild exact) and the inverted-list
-    table partitioned by contributing batch — the layout
-    :func:`ingest_ivf_stream` appends to with exactly-once semantics."""
+    table as ``batch_id``'s partition — the layout
+    :func:`ingest_ivf_stream` appends to."""
     from spk_sl_validation_spark.ext.similarity import ivf_index_tables
 
     centroids.write.mode("overwrite").parquet(f"{index_dir}/centroids")
-    (
-        ivf_index_tables(corpus, centroids)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{index_dir}/lists")
-    )
+    _write_batch(ivf_index_tables(corpus, centroids), f"{index_dir}/lists", batch_id)
 
 
 def _ivf_ingest_process_batch(
@@ -625,19 +637,14 @@ def _ivf_ingest_process_batch(
     same frozen-quantizer assignment; the union lives in the at-rest
     partition layout instead of a lazy unionByName).
 
-    Idempotent for a fixed (batch contents, batch_id): the overlap
-    guard reads only partitions with ``batch_id < current`` — a
-    replayed batch never trips on the rows its own failed attempt
-    wrote — and the write dynamically overwrites the batch's own
-    partition. Disjoint ids are ENFORCED like the batch merge (one
-    LIMIT-1 semi-join probe on the pruned vec_id column): an
-    overlapping id would leave two versions of the vector in the
-    lists, silently corrupting every subsequent top-k."""
-    batch_df = batch_df.localCheckpoint(eager=True)
+    Disjoint ids are ENFORCED like the batch merge (one LIMIT-1
+    semi-join probe on the pruned vec_id column of the prior batches'
+    lists): an overlapping id would leave two versions of the vector
+    in the lists, silently corrupting every subsequent top-k."""
     from spk_sl_validation_spark.ext.similarity import ivf_index_tables
 
     centroids = spark.read.parquet(f"{index_dir}/centroids")
-    prior = spark.read.parquet(f"{index_dir}/lists").filter(F.col("batch_id") < batch_id)
+    prior = _read_before(spark, f"{index_dir}/lists", batch_id, "vec_id long, batch_id int")
     ids = batch_df.select("vec_id").distinct()
     overlap = prior.join(F.broadcast(ids), "vec_id", "left_semi").limit(1).take(1)
     if overlap:
@@ -646,14 +653,7 @@ def _ivf_ingest_process_batch(
             "requires disjoint ids (remove_from_ivf_index the stale version "
             "in a maintenance pass first)"
         )
-    (
-        ivf_index_tables(batch_df, centroids)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{index_dir}/lists")
-    )
+    _write_batch(ivf_index_tables(batch_df, centroids), f"{index_dir}/lists", batch_id)
 
 
 def ingest_ivf_stream(
@@ -669,27 +669,17 @@ def ingest_ivf_stream(
     the existing index is never rewritten, only appended to as a new
     batch partition).
 
-    Exactly-once across restarts: batch-partitioned dynamic-overwrite
-    writes + a prior-batches-only overlap guard (see
-    :func:`_ivf_ingest_process_batch`). Precondition: ``index_dir``
-    holds a bootstrapped index (:func:`write_ivf_index`; an empty
-    corpus is fine). Returns the started StreamingQuery (availableNow
-    trigger)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _ivf_ingest_process_batch(spark, batch_df, batch_id, index_dir)
-
-    stream = (
-        spark.readStream.schema(VEC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", _FILES_PER_TRIGGER)
-        .parquet(source_dir)
+    Precondition: ``index_dir`` holds a bootstrapped index
+    (:func:`write_ivf_index`; an empty corpus is fine). Returns the
+    started StreamingQuery (availableNow trigger)."""
+    return _start_ingest(
+        spark, VEC_STREAM_SCHEMA, source_dir, checkpoint_dir,
+        _ivf_ingest_process_batch, index_dir,
     )
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+
+
+# One cumulative packing-state row per batch (ext/assembly.pack_state).
+_PACK_STATE_SCHEMA = "n_docs long, max_id long, total_tokens long"
 
 
 def write_pack_state(
@@ -704,19 +694,10 @@ def write_pack_state(
     partition of ``{pack_dir}/state`` — the persisted form of
     ext/assembly.pack_state. Bootstrap with the defaults (zero state at
     batch_id=-1); :func:`ingest_pack_stream` appends one row per
-    micro-batch, so the replay-safe state for batch N is the row with
-    the greatest ``batch_id < N``."""
-    df = spark.createDataFrame(
-        [(int(n_docs), max_id, int(total_tokens))],
-        "n_docs long, max_id long, total_tokens long",
-    )
-    (
-        df.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{pack_dir}/state")
-    )
+    micro-batch, so the state for batch N is the row with the greatest
+    ``batch_id < N``."""
+    df = spark.createDataFrame([(int(n_docs), max_id, int(total_tokens))], _PACK_STATE_SCHEMA)
+    _write_batch(df, f"{pack_dir}/state", batch_id)
 
 
 def _pack_ingest_process_batch(
@@ -732,34 +713,22 @@ def _pack_ingest_process_batch(
     state table), append the batch's packed rows as its partition, and
     write the new cumulative state row.
 
-    Idempotent for a fixed (batch contents, batch_id): state is read
-    only from partitions with ``batch_id < current`` — a replayed
-    batch resumes from the state its own failed attempt STARTED from —
-    and both writes dynamically overwrite the batch's own partition.
     Ordering is ENFORCED, not assumed: pack_sequences_continue raises
     if the batch's min id does not exceed the state's max_id, because
     packing is id-ordered and a silent out-of-order append would
     corrupt every downstream offset."""
-    from spk_sl_validation_spark.ext.assembly import pack_sequences_continue, pack_state
+    from spk_sl_validation_spark.ext.assembly import pack_sequences_continue
     from spk_sl_validation_spark.ext.hashing import ws_tokens
 
-    batch_df = batch_df.localCheckpoint(eager=True)
     prior = (
-        spark.read.parquet(f"{pack_dir}/state")
-        .filter(F.col("batch_id") < batch_id)
+        _read_before(spark, f"{pack_dir}/state", batch_id, f"{_PACK_STATE_SCHEMA}, batch_id int")
         .orderBy(F.col("batch_id").desc())
         .limit(1)
         .drop("batch_id")
         .localCheckpoint(eager=True)
     )
     packed = pack_sequences_continue(batch_df, prior, seq_len=seq_len)
-    (
-        packed.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{pack_dir}/packed")
-    )
+    _write_batch(packed, f"{pack_dir}/packed", batch_id)
     st = prior.first()
     b = batch_df.agg(
         F.count(F.lit(1)).alias("n"),
@@ -793,26 +762,13 @@ def ingest_pack_stream(
     prefix sum plus a 1-row state read — the packed corpus is never
     re-packed).
 
-    Exactly-once across restarts: batch-partitioned dynamic-overwrite
-    writes + prior-batches-only state reads (see
-    :func:`_pack_ingest_process_batch`). Precondition: ``pack_dir``
-    holds a bootstrap state row (:func:`write_pack_state`) and shards
-    arrive in id order — out-of-order batches raise. Returns the
-    started StreamingQuery (availableNow trigger)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _pack_ingest_process_batch(spark, batch_df, batch_id, pack_dir, seq_len)
-
-    stream = (
-        spark.readStream.schema(schemas.DOCUMENTS)
-        .option("maxFilesPerTrigger", _FILES_PER_TRIGGER)
-        .parquet(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    Precondition: ``pack_dir`` holds a bootstrap state row
+    (:func:`write_pack_state`) and shards arrive in id order —
+    out-of-order batches raise. Returns the started StreamingQuery
+    (availableNow trigger)."""
+    return _start_ingest(
+        spark, schemas.DOCUMENTS, source_dir, checkpoint_dir,
+        _pack_ingest_process_batch, pack_dir, seq_len,
     )
 
 
@@ -830,31 +786,24 @@ URL_STREAM_SCHEMA = T.StructType(
 )
 
 #: On-disk frontier schema (batch_id is the delta partition column).
-#: Reads pass it explicitly so an EMPTY bootstrap — a dir with no
-#: parquet files yet — does not fail schema inference.
 FRONTIER_SCHEMA = "norm_url string, doc_id long, batch_id int"
+
+
+def _min_doc_per_url(df: DataFrame) -> DataFrame:
+    """The frontier's merge rule: one ``(norm_url, doc_id)`` winner per
+    normalized URL, the lowest doc_id."""
+    return df.groupBy("norm_url").agg(F.min("doc_id").alias("doc_id"))
 
 
 def write_frontier(urls: DataFrame, frontier_dir: str, batch_id: int = -1) -> None:
     """Bootstrap the persisted crawl frontier under ``frontier_dir``:
-    one ``(norm_url, doc_id)`` winner per normalized URL of the
-    existing crawl (an empty ``(doc_id, url)`` frame is fine),
-    partitioned by the batch that contributed it — the LSM-style
-    delta layout :func:`ingest_frontier_stream` appends to."""
+    one winner per normalized URL of the existing crawl (an empty
+    ``(doc_id, url)`` frame is fine) as ``batch_id``'s partition — the
+    LSM-style delta layout :func:`ingest_frontier_stream` appends to."""
     from spk_sl_validation_spark.ext.webcure import normalize_url
 
-    f = (
-        urls.select(normalize_url("url").alias("norm_url"), "doc_id")
-        .groupBy("norm_url")
-        .agg(F.min("doc_id").alias("doc_id"))
-    )
-    (
-        f.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(frontier_dir)
-    )
+    f = _min_doc_per_url(urls.select(normalize_url("url").alias("norm_url"), "doc_id"))
+    _write_batch(f, frontier_dir, batch_id)
 
 
 def _frontier_partition_dirs(spark: SparkSession, frontier_dir: str) -> list:
@@ -888,9 +837,6 @@ def _frontier_process_batch(
     frontier size; correctness does not even depend on the dominance
     filter because :func:`read_frontier` folds deltas with a
     groupBy-min (the filter only bounds write amplification).
-    Idempotent for a fixed (batch contents, batch_id): the frontier
-    read excludes ``batch_id >= current`` and the delta write
-    dynamically overwrites its own partition.
 
     Auto-compaction: when the delta-partition COUNT (a filesystem
     name listing, no data read) exceeds ``compact_threshold``, all
@@ -905,31 +851,16 @@ def _frontier_process_batch(
     crash at ANY point folds to the same frontier."""
     from spk_sl_validation_spark.ext.webcure import normalize_url
 
-    batch_df = batch_df.localCheckpoint(eager=True)
-    cand = (
-        batch_df.select(normalize_url("url").alias("norm_url"), "doc_id")
-        .groupBy("norm_url")
-        .agg(F.min("doc_id").alias("doc_id"))
-    )
-    best_old = (
-        spark.read.schema(FRONTIER_SCHEMA)
-        .parquet(frontier_dir)
-        .filter(F.col("batch_id") < batch_id)
-        .groupBy("norm_url")
-        .agg(F.min("doc_id").alias("__old"))
-    )
+    cand = _min_doc_per_url(batch_df.select(normalize_url("url").alias("norm_url"), "doc_id"))
+    best_old = _min_doc_per_url(
+        _read_before(spark, frontier_dir, batch_id, FRONTIER_SCHEMA)
+    ).withColumnRenamed("doc_id", "__old")
     improved = (
         cand.join(best_old, "norm_url", "left")
         .filter(F.col("__old").isNull() | (F.col("doc_id") < F.col("__old")))
         .select("norm_url", "doc_id")
     )
-    (
-        improved.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(frontier_dir)
-    )
+    _write_batch(improved, frontier_dir, batch_id)
 
     parts = _frontier_partition_dirs(spark, frontier_dir)
     if len(parts) <= compact_threshold:
@@ -940,22 +871,9 @@ def _frontier_process_batch(
     # rewrites. Deletion preserves -1 and the current batch's delta.
     fs_path = spark._jvm.org.apache.hadoop.fs.Path
     tmp = frontier_dir.rstrip("/") + "/_compact_tmp"
-    fold = (
-        spark.read.schema(FRONTIER_SCHEMA)
-        .parquet(frontier_dir)
-        .filter(F.col("batch_id") < batch_id)
-        .groupBy("norm_url")
-        .agg(F.min("doc_id").alias("doc_id"))
-    )
+    fold = _min_doc_per_url(_read_before(spark, frontier_dir, batch_id, FRONTIER_SCHEMA))
     fold.write.mode("overwrite").parquet(tmp)
-    (
-        spark.read.parquet(tmp)
-        .withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(frontier_dir)
-    )
+    _write_batch(spark.read.parquet(tmp), frontier_dir, -1)
     fs = fs_path(frontier_dir).getFileSystem(spark._jsc.hadoopConfiguration())
     keep = {"batch_id=-1", f"batch_id={batch_id}"}
     for p in parts:
@@ -969,12 +887,7 @@ def read_frontier(spark: SparkSession, frontier_dir: str) -> DataFrame:
     (LSM read-side merge — O(compacted + recent) reads: the ingest
     path auto-compacts once the delta count crosses its threshold,
     see :func:`_frontier_process_batch`)."""
-    return (
-        spark.read.schema(FRONTIER_SCHEMA)
-        .parquet(frontier_dir)
-        .groupBy("norm_url")
-        .agg(F.min("doc_id").alias("doc_id"))
-    )
+    return _min_doc_per_url(spark.read.schema(FRONTIER_SCHEMA).parquet(frontier_dir))
 
 
 def ingest_frontier_stream(
@@ -988,27 +901,12 @@ def ingest_frontier_stream(
     ``(doc_id, url)`` shards, each micro-batch canonicalized and
     delta-merged into the persisted frontier — in contrast to the
     complete-mode aggregate twin, nothing ever re-emits the full
-    frontier per trigger. Exactly-once across restarts via the same
-    batch_id-partitioned dynamic-overwrite recipe as
-    :func:`ingest_dedup_stream`.
+    frontier per trigger.
 
     Precondition: ``frontier_dir`` bootstrapped with
     :func:`write_frontier` (empty is fine). Returns the started
     StreamingQuery (availableNow trigger)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _frontier_process_batch(
-            spark, batch_df, batch_id, frontier_dir, compact_threshold
-        )
-
-    stream = (
-        spark.readStream.schema(URL_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", _FILES_PER_TRIGGER)
-        .parquet(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_ingest(
+        spark, URL_STREAM_SCHEMA, source_dir, checkpoint_dir,
+        _frontier_process_batch, frontier_dir, compact_threshold,
     )

@@ -127,3 +127,20 @@ def test_checkpoint_resumes_across_restarts(spark, sf_dir, tmp_path):
         for r in S.ivf_index_tables(emb, centroids).select("centroid_id", "vec_id").collect()
     )
     assert got == want
+
+
+def test_empty_bootstrap_then_batch(spark, sf_dir, tmp_path):
+    """An index bootstrapped from an EMPTY corpus (the documented
+    precondition allows it) has no parquet files in its lists table;
+    the first batch's overlap probe must still read it, as empty."""
+    emb, centroids, *_ = _setup(spark, sf_dir, tmp_path)
+    index_dir = str(tmp_path / "empty_index")
+    write_ivf_index(emb.limit(0), centroids, index_dir)
+    batch = emb.filter(F.col("vec_id") < 5)
+    _ivf_ingest_process_batch(spark, batch, 0, index_dir)
+    got = sorted((r.centroid_id, r.vec_id) for r in _lists(spark, index_dir))
+    want = sorted(
+        (r.centroid_id, r.vec_id)
+        for r in S.ivf_index_tables(batch, centroids).select("centroid_id", "vec_id").collect()
+    )
+    assert got == want

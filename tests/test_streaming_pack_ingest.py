@@ -5,13 +5,11 @@ replay-safe, out-of-order shards rejected."""
 
 from __future__ import annotations
 
-import os
-import pathlib
-
 import pytest
 from pyspark.sql import functions as F
 
 from spk_sl_validation_spark.ext import assembly as A
+from spk_sl_validation_spark.plans.streaming_queries import _write_shards
 from spk_sl_validation_spark.sources.readers import load_table
 from spk_sl_validation_spark.streaming.pipeline import (
     _pack_ingest_process_batch,
@@ -20,15 +18,6 @@ from spk_sl_validation_spark.streaming.pipeline import (
 )
 
 SEQ = 512
-
-
-def _shards(docs, source_dir, preds):
-    for i, pred in enumerate(preds):
-        shard = f"{source_dir}/shard{i}"
-        docs.filter(pred).coalesce(1).write.mode("overwrite").parquet(shard)
-        t = 1_700_000_000 + i * 60
-        for p in pathlib.Path(shard).rglob("*"):
-            os.utime(p, (t, t))
 
 
 def _packed_rows(spark, pack_dir):
@@ -49,7 +38,7 @@ def test_stream_built_pack_equals_batch(spark, sf_dir, tmp_path):
         str(tmp_path / "ckpt"),
     )
     write_pack_state(spark, pack_dir)
-    _shards(
+    _write_shards(
         docs,
         source_dir,
         (
