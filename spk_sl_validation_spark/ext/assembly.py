@@ -31,6 +31,10 @@ from pyspark.sql import functions as F
 
 from spk_sl_validation_spark.ext.hashing import md5_long, md5_long_sql, ws_tokens
 
+# Decimal places of every mean log-probability / log-ratio output:
+# absorbs libm ``ln`` last-ulp drift between the engines.
+_ROUND_DIGITS = 6
+
 
 # ---------------------------------------------------------------------------
 # Sequence packing (concat-and-chunk)
@@ -134,7 +138,6 @@ def pack_sequences_continue(
     id_col: str = "doc_id",
     text_col: str = "text",
     seq_len: int = 2048,
-    chunk_size: int = 1024,
     tokens_col: str | None = None,
 ) -> DataFrame:
     """Continue sequence packing from a :func:`pack_state` artifact:
@@ -156,7 +159,7 @@ def pack_sequences_continue(
             "re-key the batch"
         )
     base = int(st["total_tokens"] or 0)
-    packed = pack_sequences(batch, id_col, text_col, seq_len, chunk_size, tokens_col)
+    packed = pack_sequences(batch, id_col, text_col, seq_len, tokens_col=tokens_col)
     off = F.col("tok_offset") + F.lit(base)
     return packed.select(
         id_col,
@@ -262,7 +265,6 @@ def unigram_logprob(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    round_digits: int = 6,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Score each document by mean token log-probability under the
@@ -308,13 +310,13 @@ def unigram_logprob(
         "n_tokens",
         F.round(
             F.col("__sum_logp").cast("double") / F.col("n_tokens").cast("double"),
-            round_digits,
+            _ROUND_DIGITS,
         ).alias("avg_logprob"),
     )
 
 
 def unigram_logprob_sql(
-    table: str, id_col: str = "doc_id", text_col: str = "text", round_digits: int = 6
+    table: str, id_col: str = "doc_id", text_col: str = "text"
 ) -> str:
     """DuckDB twin of :func:`unigram_logprob` (same round-then-exact-
     decimal-sum rule, so summation order cannot matter)."""
@@ -333,7 +335,7 @@ j AS (
   FROM t JOIN freq f ON t.tok = f.tok CROSS JOIN tot
 )
 SELECT {id_col}, CAST(count(*) AS BIGINT) AS n_tokens,
-       round(CAST(sum(logp) AS DOUBLE) / count(*), {round_digits}) AS avg_logprob
+       round(CAST(sum(logp) AS DOUBLE) / count(*), {_ROUND_DIGITS}) AS avg_logprob
 FROM j GROUP BY {id_col}
 """
 
@@ -346,7 +348,6 @@ def bigram_logprob(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Score each document by mean CONDITIONAL log-probability
     ``ln P(tok | prev)`` under the corpus's own bigram LM (MLE; every
@@ -420,13 +421,13 @@ def bigram_logprob(
         "n_bigrams",
         F.round(
             F.col("__sum_logp").cast("double") / F.col("n_bigrams").cast("double"),
-            round_digits,
+            _ROUND_DIGITS,
         ).alias("avg_logprob"),
     )
 
 
 def bigram_logprob_sql(
-    table: str, id_col: str = "doc_id", text_col: str = "text", round_digits: int = 6
+    table: str, id_col: str = "doc_id", text_col: str = "text"
 ) -> str:
     """DuckDB twin of :func:`bigram_logprob` (same round-then-exact-
     decimal-sum rule, so summation order cannot matter)."""
@@ -450,7 +451,7 @@ j AS (
          JOIN cf ON t.prev = cf.prev
 )
 SELECT {id_col}, CAST(count(*) AS BIGINT) AS n_bigrams,
-       round(CAST(sum(logp) AS DOUBLE) / count(*), {round_digits}) AS avg_logprob
+       round(CAST(sum(logp) AS DOUBLE) / count(*), {_ROUND_DIGITS}) AS avg_logprob
 FROM j GROUP BY {id_col}
 """
 
@@ -468,7 +469,6 @@ def dsir_importance(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = DSIR_BUCKETS,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Per-document importance weight for target-distribution matching,
     the DSIR construction (Xie et al. 2023, "Data Selection for
@@ -532,7 +532,7 @@ def dsir_importance(
         .select(
             id_col,
             "n_tokens",
-            F.round(F.col("__s").cast("double"), round_digits).alias("logratio"),
+            F.round(F.col("__s").cast("double"), _ROUND_DIGITS).alias("logratio"),
         )
     )
 
@@ -542,17 +542,16 @@ def dsir_importance_sql(
     target_pred: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_buckets: int = DSIR_BUCKETS,
-    round_digits: int = 6,
 ) -> str:
-    """DuckDB twin of :func:`dsir_importance` (``target_pred`` is the
-    SQL predicate marking the target slice)."""
+    """DuckDB twin of :func:`dsir_importance` at ``DSIR_BUCKETS``
+    buckets (``target_pred`` is the SQL predicate marking the target
+    slice)."""
     toks = rf"string_split_regex(trim({text_col}), '\s+')"
     return f"""
 WITH t AS (
   SELECT {id_col}, ({target_pred}) AS tgt, unnest({toks}) AS tok FROM {table}
 ),
-bt AS (SELECT {id_col}, tgt, {md5_long_sql('tok')} % {n_buckets} AS bucket FROM t),
+bt AS (SELECT {id_col}, tgt, {md5_long_sql('tok')} % {DSIR_BUCKETS} AS bucket FROM t),
 ct AS (SELECT bucket, count(*) AS ct FROM bt WHERE tgt GROUP BY bucket),
 cr AS (SELECT bucket, count(*) AS cr FROM bt WHERE NOT tgt GROUP BY bucket),
 tot AS (
@@ -560,19 +559,19 @@ tot AS (
          sum(CASE WHEN tgt THEN 0 ELSE 1 END) AS nr
   FROM bt
 ),
-grid AS (SELECT unnest(range(0, {n_buckets})) AS bucket),
+grid AS (SELECT unnest(range(0, {DSIR_BUCKETS})) AS bucket),
 lam AS (
   SELECT g.bucket,
          round(
-           ln(CAST(coalesce(ct.ct, 0) + 1 AS DOUBLE) / CAST(tot.nt + {n_buckets} AS DOUBLE))
-           - ln(CAST(coalesce(cr.cr, 0) + 1 AS DOUBLE) / CAST(tot.nr + {n_buckets} AS DOUBLE)),
+           ln(CAST(coalesce(ct.ct, 0) + 1 AS DOUBLE) / CAST(tot.nt + {DSIR_BUCKETS} AS DOUBLE))
+           - ln(CAST(coalesce(cr.cr, 0) + 1 AS DOUBLE) / CAST(tot.nr + {DSIR_BUCKETS} AS DOUBLE)),
            12) AS lam
   FROM grid g LEFT JOIN ct ON ct.bucket = g.bucket
               LEFT JOIN cr ON cr.bucket = g.bucket
               CROSS JOIN tot
 )
 SELECT bt.{id_col}, CAST(count(*) AS BIGINT) AS n_tokens,
-       round(CAST(sum(CAST(lam.lam AS DECIMAL(28,12))) AS DOUBLE), {round_digits}) AS logratio
+       round(CAST(sum(CAST(lam.lam AS DECIMAL(28,12))) AS DOUBLE), {_ROUND_DIGITS}) AS logratio
 FROM bt JOIN lam ON lam.bucket = bt.bucket
 GROUP BY bt.{id_col}
 """

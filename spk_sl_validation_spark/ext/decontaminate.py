@@ -99,6 +99,10 @@ def bloom_bit_tests(m_bits: int, k: int, h_col: str = "__h", mask_col: str = "__
     return " AND ".join(tests)
 
 
+#: Bloom hash functions of :func:`benchmark_overlap_bloom`'s prefilter.
+_BLOOM_K = 5
+
+
 def benchmark_overlap_bloom(
     train: DataFrame,
     bench: DataFrame,
@@ -106,7 +110,6 @@ def benchmark_overlap_bloom(
     text_col: str = "text",
     n: int = 8,
     m_bits: int = 8192,
-    k: int = 5,
 ) -> DataFrame:
     """EXACTLY :func:`benchmark_overlap`'s output through a Bloom
     prefilter — the 100 TB shape when the benchmark n-gram STRING set
@@ -124,7 +127,7 @@ def benchmark_overlap_bloom(
        house fan-in pattern), so m_bits scales to millions of bits
        where a plan-text literal would hit the codegen method limit
        around 2^17.
-    2. The corpus-side probe is k ``element_at``+bit-test conditions
+    2. The corpus-side probe is ``_BLOOM_K`` ``element_at``+bit-test conditions
        per shingle — no shuffle; an absent map key means no bits set
        in that word, and the NULL bit-test correctly rejects. Bloom
        has no false negatives, so candidates ⊇ true matches and the
@@ -145,7 +148,7 @@ def benchmark_overlap_bloom(
     from spk_sl_validation_spark.ext.hashing import md5_long
 
     bench_g = shingle_rows(bench, id_col, text_col, n).select("s").distinct()
-    mask_row = bloom_mask_row(bench_g, "s", m_bits, k)
+    mask_row = bloom_mask_row(bench_g, "s", m_bits, _BLOOM_K)
 
     train_g = (
         shingle_rows(train, id_col, text_col, n)
@@ -154,7 +157,7 @@ def benchmark_overlap_bloom(
         .crossJoin(F.broadcast(mask_row))
     )
     cand = (
-        train_g.filter(F.expr(bloom_bit_tests(m_bits, k))).drop("__h", "__mask")
+        train_g.filter(F.expr(bloom_bit_tests(m_bits, _BLOOM_K))).drop("__h", "__mask")
     )
 
     overlap = (

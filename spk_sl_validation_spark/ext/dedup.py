@@ -102,11 +102,10 @@ def with_minhash_signature(
     df: DataFrame,
     text_col: str = "text",
     num_hashes: int = 12,
-    shingle_n: int = 3,
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Append ``sig`` to ``df`` (join-back over :func:`minhash_signatures`)."""
-    return df.join(minhash_signatures(df, id_col, text_col, num_hashes, shingle_n), id_col)
+    return df.join(minhash_signatures(df, id_col, text_col, num_hashes), id_col)
 
 
 #: Default hot-bucket cap for LSH candidate generation. A (band, band
@@ -435,9 +434,9 @@ def dedup_corpus(
     >``max_bucket_size`` bucket, removing copies can only RESTORE
     candidacy the copies' cap slots were wasting — strictly better
     recall.) On a dup-heavy corpus this removes the dominant LSH cost
-    — the scale probe (tools/scale_probe.py) measures the difference
-    at 1M docs — which is why the production composition is
-    exact → near, the same order :func:`dedup_incremental` uses.
+    — SCALE.md §7 records the difference at 1M docs (3.8×) — which is
+    why the production composition is exact → near, the same order
+    :func:`dedup_incremental` uses.
     """
     if exact_first:
         fp = df.select(F.col(id_col), md5_fingerprint(text_col).alias("__fp"))
@@ -700,18 +699,6 @@ def simhash_fingerprints(
     return counted.select(id_col, fp.alias("simhash"))
 
 
-def with_simhash(
-    df: DataFrame,
-    text_col: str = "text",
-    bits: int = 32,
-    out: str = "simhash",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Append ``out`` to ``df`` (join-back over :func:`simhash_fingerprints`)."""
-    sig = simhash_fingerprints(df, id_col, text_col, bits).withColumnRenamed("simhash", out)
-    return df.join(sig, id_col)
-
-
 def simhash_near_dup_pairs(
     df: DataFrame, id_col: str, text_col: str = "text", bits: int = 32, max_hamming: int = 2
 ) -> DataFrame:
@@ -951,7 +938,6 @@ def dedup_incremental(
     bands: int = 6,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.8,
-    max_bucket_size: int = MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Incremental dedup: flag each NEW document against the existing
     index — the shape a production corpus pipeline actually runs when
@@ -1004,7 +990,7 @@ def dedup_incremental(
     # each eager checkpoint paid a full job's AQE stage-latency chain
     # before the query proper could start).
     capped = (
-        capped_band_rows(sig_df, id_col, rows_per_band, bands, max_bucket_size)
+        capped_band_rows(sig_df, id_col, rows_per_band, bands)
         .join(new_flags, id_col)
         .localCheckpoint(eager=False)
     )
@@ -1081,7 +1067,6 @@ def dedup_index_tables(
     num_hashes: int = 12,
     bands: int = 6,
     shingle_n: int = 3,
-    max_bucket_size: int = MAX_BUCKET_SIZE,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The three persistable artifacts of a corpus dedup index:
 
@@ -1099,7 +1084,7 @@ def dedup_index_tables(
     assert num_hashes % bands == 0
     fp = df.select(id_col, md5_fingerprint(text_col).alias("fp"))
     sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    band_rows = capped_band_rows(sig, id_col, num_hashes // bands, bands, max_bucket_size)
+    band_rows = capped_band_rows(sig, id_col, num_hashes // bands, bands)
     hs = shingle_hash_sets(df, id_col, text_col, shingle_n)
     return fp, band_rows, hs
 
@@ -1115,7 +1100,6 @@ def dedup_incremental_indexed(
     bands: int = 6,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.8,
-    max_bucket_size: int = MAX_BUCKET_SIZE,
     batch_tables: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """:func:`dedup_incremental` against a PRECOMPUTED index — the
@@ -1142,7 +1126,7 @@ def dedup_incremental_indexed(
     # against a corpus-scale index.
     if batch_tables is None:
         batch_tables = dedup_index_tables(
-            batch_df, id_col, text_col, num_hashes, bands, shingle_n, max_bucket_size
+            batch_df, id_col, text_col, num_hashes, bands, shingle_n
         )
     # A caller that already built the batch's artifacts (e.g. the
     # streaming ingest loop, which also merges them into the index)
@@ -1312,8 +1296,14 @@ def jaccard_join_prefix(
     )
 
 
+#: Shingle width of the exact incremental-dedup index: the index
+#: (:func:`prefix_index_tables`) and its probe
+#: (:func:`jaccard_incremental_prefix_indexed`) must agree on it.
+_PREFIX_SHINGLE_N = 3
+
+
 def prefix_index_tables(
-    corpus: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
+    corpus: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> tuple[DataFrame, DataFrame]:
     """Persistable artifacts of the EXACT incremental-dedup index:
 
@@ -1329,7 +1319,7 @@ def prefix_index_tables(
     :func:`jaccard_incremental_prefix_indexed` against them."""
     from spk_sl_validation_spark.ext.hashing import shingle_rows
 
-    sh = shingle_rows(corpus, id_col, text_col, n).distinct()
+    sh = shingle_rows(corpus, id_col, text_col, _PREFIX_SHINGLE_N).distinct()
     freq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("cnt"))
     return sh, freq
 
@@ -1397,17 +1387,20 @@ def jaccard_incremental_prefix_indexed(
     index_freq: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
 ) -> DataFrame:
-    """Exact batch-vs-corpus Jaccard against a PREBUILT index
-    (:func:`prefix_index_tables`) — identical output to
-    :func:`jaccard_incremental_prefix`; the index tables are scanned,
-    never recomputed, so the batch pays everything."""
+    """Exact batch-vs-corpus Jaccard (threshold 0.5) against a PREBUILT
+    index (:func:`prefix_index_tables`) — identical output to
+    :func:`jaccard_incremental_prefix` at its defaults; the index
+    tables are scanned, never recomputed, so the batch pays
+    everything."""
     from spk_sl_validation_spark.ext.hashing import shingle_rows
 
-    sh_b = shingle_rows(batch, id_col, text_col, n).distinct().localCheckpoint(eager=True)
-    return _prefix_probe_tail(sh_b, index_sh, index_freq, id_col, threshold)
+    sh_b = (
+        shingle_rows(batch, id_col, text_col, _PREFIX_SHINGLE_N)
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    return _prefix_probe_tail(sh_b, index_sh, index_freq, id_col, 0.5)
 
 
 def jaccard_incremental_prefix(

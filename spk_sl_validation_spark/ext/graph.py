@@ -91,7 +91,6 @@ def _pagerank_step(
     n_df: DataFrame,
     out_w: DataFrame,
     ranks: DataFrame,
-    damping: float,
 ) -> DataFrame:
     """One synchronous power iteration (shared by the fixed-iteration
     oracle mode and the until_delta production mode)."""
@@ -127,8 +126,8 @@ def _pagerank_step(
         .select(
             "node",
             F.round(
-                F.lit(1.0 - damping) / F.col("__n")
-                + F.lit(damping)
+                F.lit(1.0 - DAMPING) / F.col("__n")
+                + F.lit(DAMPING)
                 * (
                     F.coalesce(F.col("__inflow"), F.lit(0.0))
                     + F.col("__dm") / F.col("__n")
@@ -141,11 +140,11 @@ def _pagerank_step(
 
 def pagerank(
     edges: DataFrame,
-    damping: float = DAMPING,
     iterations: int = ITERATIONS,
 ) -> DataFrame:
     """(node, rank): weighted PageRank with dangling-mass
-    redistribution, ``iterations`` fixed power iterations.
+    redistribution, ``iterations`` fixed power iterations, damping
+    ``d = DAMPING``.
 
     update: rank'(v) = (1-d)/N + d * (Σ_{u→v} rank(u)·w(u,v)/out(u)
     + dangling/N), where dangling = Σ rank(u) over nodes with no
@@ -160,7 +159,7 @@ def pagerank(
     """
     edges, nodes, n_df, out_w, ranks = _pagerank_setup(edges)
     for _ in range(iterations):
-        ranks = _pagerank_step(edges, nodes, n_df, out_w, ranks, damping)
+        ranks = _pagerank_step(edges, nodes, n_df, out_w, ranks)
         # rank_i feeds both next-iteration terms (inflow + dangling);
         # without truncation the lineage doubles per iteration. Lazy
         # checkpoint: materialized once at first use, N-node relation.
@@ -274,7 +273,6 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
 
 def pagerank_until_delta(
     edges: DataFrame,
-    damping: float = DAMPING,
     eps: float = 1e-9,
     max_iter: int = 50,
     checkpoint_every: int = 5,
@@ -299,7 +297,7 @@ def pagerank_until_delta(
     it = 0
     for it in range(1, max_iter + 1):
         prev = ranks
-        ranks = _pagerank_step(edges, nodes, n_df, out_w, prev, damping)
+        ranks = _pagerank_step(edges, nodes, n_df, out_w, prev)
         ranks = ranks.localCheckpoint(eager=(it % checkpoint_every == 0))
         delta_row = (
             ranks.join(prev.withColumnRenamed("rank", "__prev"), "node")

@@ -31,10 +31,9 @@ def md5_long(col: str | Column, seed: int | None = None) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
-def md5_long_sql(expr: str, seed: int | None = None) -> str:
-    """DuckDB SQL equivalent of :func:`md5_long` (same bit pattern)."""
-    if seed is not None:
-        expr = f"({expr} || '#{seed}')"
+def md5_long_sql(expr: str) -> str:
+    """DuckDB SQL equivalent of unseeded :func:`md5_long` (same bit
+    pattern)."""
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 

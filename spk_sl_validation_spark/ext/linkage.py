@@ -30,9 +30,9 @@ def block_firstchar_lasttoken(name_col: str) -> Column:
     )
 
 
-def block_firstchar_lasttoken_lenband(name_col: str, band: int = 4) -> Column:
+def block_firstchar_lasttoken_lenband(name_col: str) -> Column:
     """Higher-cardinality key for scaled catalogs: adds a name-length
-    band of width ``band``. Correct for verify distance d <= band - 1:
+    band of width ``band = 4``. Correct for verify distance d <= band - 1:
     levenshtein(a, b) <= d implies |len(a) - len(b)| <= d < band, so
     two matchable names can land in ADJACENT bands only — callers
     that need exact parity with unbanded blocking at distance d must
@@ -41,7 +41,7 @@ def block_firstchar_lasttoken_lenband(name_col: str, band: int = 4) -> Column:
     return F.concat(
         block_firstchar_lasttoken(name_col),
         F.lit("|"),
-        (F.length(name_col) / band).cast("int").cast("string"),
+        (F.length(name_col) / 4).cast("int").cast("string"),
     )
 
 

@@ -61,13 +61,12 @@ def _score_and_rank(
     dfreq: DataFrame,
     stats: DataFrame,
     id_col: str,
-    k1: float,
-    b: float,
     top_k: int,
 ) -> DataFrame:
     """Shared BM25 scoring tail: ``tf`` is (id, dl, term, tf) already
     restricted to query terms; ``dfreq`` is (term, df); ``stats`` is
     one row (n_docs, avgdl)."""
+    k1, b = BM25_K1, BM25_B
     idf = F.log(
         1.0
         + (F.col("n_docs").cast("double") - F.col("df").cast("double") + 0.5)
@@ -108,12 +107,10 @@ def bm25_rank(
     queries: Sequence[tuple[int, str]],
     id_col: str = "doc_id",
     text_col: str = "text",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
     top_k: int = 5,
 ) -> DataFrame:
-    """Top-``top_k`` documents per query under Okapi BM25 with the
-    standard +1-smoothed idf:
+    """Top-``top_k`` documents per query under Okapi BM25 (``k1 =
+    BM25_K1``, ``b = BM25_B``) with the standard +1-smoothed idf:
 
         idf(t)     = ln(1 + (N − df + 0.5) / (df + 0.5))
         score(q,d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
@@ -136,7 +133,7 @@ def bm25_rank(
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum(F.size(toks)).cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
-    return _score_and_rank(tf, qterm, dfreq, stats, id_col, k1, b, top_k)
+    return _score_and_rank(tf, qterm, dfreq, stats, id_col, top_k)
 
 
 def bm25_index_tables(
@@ -174,8 +171,6 @@ def bm25_rank_indexed(
     df_tbl: DataFrame,
     stats: DataFrame,
     id_col: str = "doc_id",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
     top_k: int = 5,
 ) -> DataFrame:
     """BM25 against prebuilt :func:`bm25_index_tables` artifacts —
@@ -191,7 +186,7 @@ def bm25_rank_indexed(
         "n_docs",
         (F.col("sum_dl").cast("double") / F.col("n_docs")).alias("avgdl"),
     )
-    return _score_and_rank(tf, qterm, dfreq, st, id_col, k1, b, top_k)
+    return _score_and_rank(tf, qterm, dfreq, st, id_col, top_k)
 
 
 def bm25_doc_term_counts(postings: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -290,8 +285,6 @@ def hybrid_rrf_rank_indexed(
     stats: DataFrame,
     nd_tbl: DataFrame,
     id_col: str = "doc_id",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
     rrf_k: int = 60,
     pool: int = 20,
     top_k: int = 10,
@@ -311,7 +304,7 @@ def hybrid_rrf_rank_indexed(
     contributions, so the fusion sum is order-independent.
     """
     bm25_pool = bm25_rank_indexed(
-        queries, postings, df_tbl, stats, id_col, k1, b, top_k=pool
+        queries, postings, df_tbl, stats, id_col, top_k=pool
     ).select("query_id", id_col, "rnk")
 
     qterm_n = rrf_query_terms_df(postings, queries)

@@ -783,16 +783,14 @@ RP_SEED = 1234
 RP_OUT_DIM = 16
 
 
-def _rp_signs(in_dim: int, out_dim: int = RP_OUT_DIM, seed: int = RP_SEED) -> list[list[int]]:
+def _rp_signs(in_dim: int, out_dim: int = RP_OUT_DIM) -> list[list[int]]:
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(RP_SEED)
     return [[1 if rng.random() < 0.5 else -1 for _ in range(in_dim)] for _ in range(out_dim)]
 
 
-def random_projection(
-    vec: str, in_dim: int, out_dim: int = RP_OUT_DIM, seed: int = RP_SEED
-) -> Column:
+def random_projection(vec: str, in_dim: int, out_dim: int = RP_OUT_DIM) -> Column:
     """JL sign random projection to ``out_dim`` dims: y_j = Σ_i ±x_i,
     as a fully codegen'd unrolled expression (no interpreted HOFs, no
     UDF). With ±1 entries each output coordinate is a fixed
@@ -811,7 +809,7 @@ def random_projection(
     distortion; the rerank restores exactness of the final ranking
     within the shortlist).
     """
-    signs = _rp_signs(in_dim, out_dim, seed)
+    signs = _rp_signs(in_dim, out_dim)
     coords = []
     for j in range(out_dim):
         terms = []
@@ -822,14 +820,12 @@ def random_projection(
     return F.expr("array(" + ", ".join(coords) + ")")
 
 
-def random_projection_sql(
-    vec: str, in_dim: int, out_dim: int = RP_OUT_DIM, seed: int = RP_SEED
-) -> str:
-    """DuckDB twin of :func:`random_projection` — same signs, same
-    left-associative order (1-based list indexing)."""
-    signs = _rp_signs(in_dim, out_dim, seed)
+def random_projection_sql(vec: str, in_dim: int) -> str:
+    """DuckDB twin of :func:`random_projection` at ``RP_OUT_DIM`` dims —
+    same signs, same left-associative order (1-based list indexing)."""
+    signs = _rp_signs(in_dim)
     coords = []
-    for j in range(out_dim):
+    for j in range(RP_OUT_DIM):
         terms = []
         for i in range(in_dim):
             t = f"CAST({vec}[{i + 1}] AS DOUBLE)"

@@ -679,15 +679,18 @@ FROM hits h LEFT JOIN actual a ON h.key = a.key
 # Bottom-k uniform-sample quantiles (mergeable)
 # ---------------------------------------------------------------------------
 
+#: Quantiles the bottom-k sketch reports (``est_p50``/``exact_p50``, …).
+_BOTTOMK_PS = (0.5, 0.9, 0.99)
+
+
 def bottomk_sample_quantiles(
     df: DataFrame,
     value_col: str,
     key_col: str,
     k: int = 1024,
-    ps: tuple[float, ...] = (0.5, 0.9, 0.99),
 ) -> DataFrame:
-    """Approximate quantiles from a bottom-k-by-hash uniform row sample
-    — the mergeable-quantile member of the sketch family.
+    """Approximate p50/p90/p99 from a bottom-k-by-hash uniform row
+    sample — the mergeable-quantile member of the sketch family.
 
     The sketch is the ``k`` rows whose 60-bit key hash is smallest: a
     deterministic uniform sample without replacement (the hash imposes
@@ -715,14 +718,14 @@ def bottomk_sample_quantiles(
     )
     est = sample.agg(
         F.count(F.lit(1)).alias("k"),
-        *[F.percentile(F.col("v"), F.lit(p)).alias(f"est_p{int(p * 100)}") for p in ps],
+        *[F.percentile(F.col("v"), F.lit(p)).alias(f"est_p{int(p * 100)}") for p in _BOTTOMK_PS],
     )
     exact = df.agg(
         *[
             F.percentile(F.col(value_col).cast("double"), F.lit(p)).alias(
                 f"exact_p{int(p * 100)}"
             )
-            for p in ps
+            for p in _BOTTOMK_PS
         ]
     )
     return est.crossJoin(exact)
@@ -733,17 +736,16 @@ def bottomk_sample_quantiles_sql(
     value_col: str,
     key_col: str,
     k: int = 1024,
-    ps: tuple[float, ...] = (0.5, 0.9, 0.99),
 ) -> str:
     """DuckDB twin of :func:`bottomk_sample_quantiles` (QUALIFY replays
     the deterministic bottom-k rule; quantile_cont == Spark percentile)."""
     hsql = md5_long_sql(f"CAST({key_col} AS VARCHAR)")
     est_cols = ", ".join(
-        f"quantile_cont(v, {p}) AS est_p{int(p * 100)}" for p in ps
+        f"quantile_cont(v, {p}) AS est_p{int(p * 100)}" for p in _BOTTOMK_PS
     )
     exact_cols = ", ".join(
         f"quantile_cont(CAST({value_col} AS DOUBLE), {p}) AS exact_p{int(p * 100)}"
-        for p in ps
+        for p in _BOTTOMK_PS
     )
     return f"""
 WITH s AS (

@@ -55,11 +55,6 @@ def punct_count(col: str | Column) -> Column:
     return F.regexp_count(F.lower(c), F.lit(r"[^a-z0-9\s]"))
 
 
-def stopword_count(col: str | Column, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
-    """Count of tokens in the stopword vocabulary (array filter, no explode)."""
-    return F.size(F.filter(ws_tokens(col), lambda t: t.isin(*stopwords)))
-
-
 def quality_components(col: str | Column) -> dict[str, Column]:
     """The raw ratios a quality classifier would threshold on.
 
@@ -199,7 +194,7 @@ def _quality_training_set(df, text_col: str, label_col: str | None):
     )
 
 
-def _gd_step(features, wdf, lr: float):
+def _gd_step(features, wdf):
     """One batch-GD iteration as pure DataFrame ops: broadcast the
     1-row weight relation, ONE hash aggregate for the full gradient
     (exact-decimal staging: per-doc contributions rounded to 12
@@ -232,7 +227,8 @@ def _gd_step(features, wdf, lr: float):
     upd = [
         F.round(
             F.col(f"w_{name}")
-            - F.lit(lr) * (F.col(f"g_{name}").cast("double") / F.col("n").cast("double")),
+            - F.lit(QUALITY_TRAIN_LR)
+            * (F.col(f"g_{name}").cast("double") / F.col("n").cast("double")),
             12,
         ).alias(f"w_{name}")
         for name in QUALITY_FEATURES
@@ -245,7 +241,6 @@ def train_quality_model(
     text_col: str = "text",
     label_col: str | None = None,
     iters: int = 3,
-    lr: float = QUALITY_TRAIN_LR,
 ):
     """Fit the logistic quality model by ``iters`` batch-GD iterations,
     entirely as chained DataFrame ops — no driver-side weight state, no
@@ -275,7 +270,7 @@ def train_quality_model(
         *[F.lit(0.0).alias(f"w_{name}") for name in QUALITY_FEATURES]
     )
     for _ in range(iters):
-        wdf = _gd_step(features, wdf, lr)
+        wdf = _gd_step(features, wdf)
     stack_args = ", ".join(f"'{name}', w_{name}" for name in QUALITY_FEATURES)
     # decimal(38,12) is STAGING only (exact gradient sums); the output
     # weights are plain doubles on the 12-decimal grid — decimal output
@@ -291,7 +286,6 @@ def train_quality_model_until_delta(
     label_col: str | None = None,
     tol: float = 1e-6,
     max_iters: int = 50,
-    lr: float = QUALITY_TRAIN_LR,
 ) -> tuple[dict[str, float], int]:
     """Production mode: iterate the identical GD step until the max
     absolute weight change drops below ``tol`` (or ``max_iters``).
@@ -308,7 +302,7 @@ def train_quality_model_until_delta(
     prev = {name: 0.0 for name in QUALITY_FEATURES}
     it = 0
     for it in range(1, max_iters + 1):
-        row = _gd_step(features, wdf, lr).collect()[0]
+        row = _gd_step(features, wdf).collect()[0]
         cur = {name: float(row[f"w_{name}"]) for name in QUALITY_FEATURES}
         wdf = spark.createDataFrame(
             [tuple(cur[n] for n in QUALITY_FEATURES)],
@@ -389,24 +383,6 @@ def md5_fingerprint(col: str | Column) -> Column:
     return F.md5(normalized_text(col))
 
 
-def rolling_fingerprint(col: str, n: int = 3) -> Column:
-    """Rolling-hash document fingerprint: the minimum 60-bit hash over
-    word n-gram windows (one representative shingle hash — the
-    1-permutation special case of MinHash). Stable under small edits
-    away from the minimizing window. ``col`` must be a column NAME
-    (the shingle builder is a SQL expression).
-
-    Per-row array expression — fine for point use; for whole-corpus
-    fingerprinting prefer :func:`rolling_fingerprints` (explode +
-    codegen'd min aggregate, ~20× faster — interpreted HOF md5 is the
-    bottleneck here).
-    """
-    from spk_sl_validation_spark.ext.hashing import word_shingles
-
-    sh = word_shingles(f"split(trim({col}), '\\\\s+')", n)
-    return F.array_min(F.transform(sh, lambda s: md5_long(s)))
-
-
 def rolling_fingerprints(df, id_col: str, text_col: str = "text", n: int = 3):
     """(id, rolling_fp) for a whole corpus: shingle rows → one
     codegen'd md5 each → groupBy(id).min. Same plan shape (and
@@ -447,12 +423,48 @@ def _doc_spans(df, id_col: str, text_col: str, span_w: int):
     )
 
 
+def _dup_positions(rows, id_col: str, pos_col: str):
+    """(id, pos) of every row of ``rows`` (id, pos, h) whose fingerprint
+    ``h`` also occurs in a lower-id document — the one ownership rule of
+    :func:`span_dedup` and :func:`substring_dedup` (the lowest id owns).
+
+    Ownership via groupBy + join-back, NOT min() over
+    Window.partitionBy("h"): a window puts every row of one fingerprint
+    in a single unsplittable task (a boilerplate span in 10^8 docs
+    stalls there — AQE cannot split window partitions), whereas the
+    groupBy's map-side partial aggregation absorbs the hot key and the
+    join-back IS AQE-skew-splittable. Fingerprints seen once can never
+    mark a duplicate (id == owner), so the __n > 1 gate shrinks the
+    join build side to duplicate-candidate hashes only — unique spans
+    dominate real corpora."""
+    cand = (
+        rows.groupBy("h")
+        .agg(F.min(id_col).alias("owner"), F.count(F.lit(1)).alias("__n"))
+        .where(F.col("__n") > 1)
+        .drop("__n")
+    )
+    # Lazy localCheckpoint: measured necessity, not style. With the agg
+    # inlined, OptimizeSkewedJoin never fires — its pattern requires
+    # BOTH join children to be plain ENSURE_REQUIREMENTS shuffle stages,
+    # and the agg-on-top-of-stage build side breaks it (SCALE.md §7,
+    # "Round-8 substring_dedup ownership de-skew": inline agg /
+    # repartition / rebalance hints all give 0 skew=true; the
+    # checkpointed leaf gives the split). The checkpoint materializes
+    # only (h, owner) for duplicated fingerprints and buys AQE the right
+    # to split a mega-hot fingerprint partition on the probe side.
+    cand = cand.localCheckpoint(eager=False)
+    return (
+        rows.join(cand.hint("shuffle_hash"), "h")
+        .where(F.col(id_col) != F.col("owner"))
+        .select(id_col, pos_col)
+    )
+
+
 def span_dedup(
     df,
     id_col: str = "doc_id",
     text_col: str = "text",
     span_w: int = 8,
-    ownership: str = "groupby",
 ):
     """C4-style cross-document duplicated-span removal.
 
@@ -480,39 +492,11 @@ def span_dedup(
     corpus-sized; AQE re-upgrades small cases) filters them in place.
     Duplicate spans *within* the owner document are kept — ownership
     is per-document, not global uniqueness.
-
-    ``ownership="window"`` keeps the legacy probe-only shape for
-    interleaved A/B in tools/skew_probe.py (op span_hot).
     """
-    if ownership not in ("groupby", "window"):
-        raise ValueError(f"unknown ownership mode {ownership!r}")
     skinny = _doc_spans(df, id_col, text_col, span_w).select(
         id_col, "span_idx", md5_long("span").alias("h")
     )
-    if ownership == "window":
-        from pyspark.sql import Window
-
-        dropped_pos = (
-            skinny.withColumn("owner", F.min(id_col).over(Window.partitionBy("h")))
-            .where(F.col(id_col) != F.col("owner"))
-            .select(id_col, "span_idx")
-        )
-    else:
-        cand = (
-            skinny.groupBy("h")
-            .agg(F.min(id_col).alias("owner"), F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > 1)
-            .drop("__n")
-        )
-        # Lazy localCheckpoint: same measured OptimizeSkewedJoin
-        # precondition as substring_dedup — both join children must be
-        # plain shuffle stages for AQE to split the hot fingerprint.
-        cand = cand.localCheckpoint(eager=False)
-        dropped_pos = (
-            skinny.join(cand.hint("shuffle_hash"), "h")
-            .where(F.col(id_col) != F.col("owner"))
-            .select(id_col, "span_idx")
-        )
+    dropped_pos = _dup_positions(skinny, id_col, "span_idx")
     drops = dropped_pos.groupBy(id_col).agg(
         F.collect_set("span_idx").alias("__drop")
     )
@@ -538,7 +522,6 @@ def boilerplate_removal(
     text_col: str = "text",
     span_w: int = 8,
     min_docs: int = 3,
-    broadcast_bp: bool = True,
 ):
     """CCNet/RefinedWeb-style boilerplate removal: a ``span_w``-word
     span occurring in at least ``min_docs`` DISTINCT documents is
@@ -563,12 +546,9 @@ def boilerplate_removal(
     definition heavily repeated). That set broadcast-anti-joins back
     against the span stream, so the corpus itself is never shuffled for
     the join; reassembly is the same doc-id aggregate as span_dedup.
-    For a pathological corpus where the boilerplate set itself exceeds
-    driver memory, pass ``broadcast_bp=False`` to fall back to a
-    shuffle join on the span hash.
     """
     index = boilerplate_index(df, id_col, text_col, span_w, min_docs)
-    return apply_boilerplate_index(df, index, id_col, text_col, span_w, broadcast_bp)
+    return apply_boilerplate_index(df, index, id_col, text_col, span_w)
 
 
 def boilerplate_census(
@@ -629,18 +609,14 @@ def apply_boilerplate_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     span_w: int = 8,
-    broadcast_bp: bool = True,
 ):
     """Strip every span of ``df`` whose hash appears in ``index``
     (see :func:`boilerplate_index`) and reassemble; returns the same
     ``(id, clean_text, n_spans_kept, n_spans_dropped)`` contract as
     :func:`boilerplate_removal`. The batch never shuffles: the index is
-    hashes-only and broadcasts (``broadcast_bp=False`` falls back to a
-    shuffle join for a pathological index)."""
+    hashes-only and broadcasts."""
     hashed = _doc_spans(df, id_col, text_col, span_w).withColumn("h", md5_long("span"))
-    bp = index.select("h", F.lit(True).alias("__bp"))
-    if broadcast_bp:
-        bp = F.broadcast(bp)
+    bp = F.broadcast(index.select("h", F.lit(True).alias("__bp")))
     flagged = hashed.join(bp, "h", "left").withColumn("kept", F.col("__bp").isNull())
     kept_struct = F.when(F.col("kept"), F.struct("span_idx", "span"))
     return flagged.groupBy(id_col).agg(
@@ -659,7 +635,6 @@ def substring_dedup(
     text_col: str = "text",
     w: int = 8,
     min_len: int = 12,
-    ownership: str = "groupby",
 ):
     """ExactSubstr-style maximal duplicated-substring removal
     (Lee et al. 2022, "Deduplicating Training Data Makes Language
@@ -709,49 +684,7 @@ def substring_dedup(
             )
         ).alias("pos", "span"),
     ).select(id_col, "pos", md5_long("span").alias("h"))
-    # Ownership via groupBy + join-back, NOT min() over
-    # Window.partitionBy("h"): a window puts every row of one
-    # fingerprint in a single unsplittable task (a boilerplate w-gram
-    # in 10^8 docs stalls there — AQE cannot split window partitions),
-    # whereas the groupBy's map-side partial aggregation absorbs the
-    # hot key and the join-back IS AQE-skew-splittable. Fingerprints
-    # seen once can never mark a duplicate (id == owner), so the
-    # __n > 1 gate shrinks the join build side to duplicate-candidate
-    # hashes only — unique windows dominate real corpora.
-    if ownership not in ("groupby", "window"):
-        raise ValueError(f"unknown ownership mode {ownership!r}")
-    if ownership == "window":
-        # Probe-only legacy shape (tools/skew_probe.py A/B): correct but
-        # pins every row of one fingerprint to a single window task.
-        dup = (
-            sh.withColumn("owner", F.min(id_col).over(Window.partitionBy("h")))
-            .where(F.col(id_col) != F.col("owner"))
-            .select(id_col, "pos")
-        )
-    else:
-        cand = (
-            sh.groupBy("h")
-            .agg(F.min(id_col).alias("owner"), F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > 1)
-            .drop("__n")
-        )
-        # Lazy localCheckpoint: measured necessity, not style. With the
-        # agg inlined, OptimizeSkewedJoin never fires — its pattern
-        # requires BOTH join children to be plain ENSURE_REQUIREMENTS
-        # shuffle stages, and the agg-on-top-of-stage build side breaks
-        # it (verified empirically in tools/skew_probe.py substr_hot:
-        # inline agg / repartition / rebalance hints all give 0
-        # skew=true; the checkpointed leaf gives the split). The
-        # checkpoint materializes only (h, owner) for duplicated
-        # fingerprints — orders of magnitude under the window-row
-        # frame — and buys AQE the right to split a mega-hot
-        # fingerprint partition on the probe side.
-        cand = cand.localCheckpoint(eager=False)
-        dup = (
-            sh.join(cand.hint("shuffle_hash"), "h")
-            .where(F.col(id_col) != F.col("owner"))
-            .select(id_col, "pos")
-        )
+    dup = _dup_positions(sh, id_col, "pos")
     wdoc = Window.partitionBy(id_col).orderBy("pos")
     islands = dup.withColumn("grp", F.col("pos") - F.row_number().over(wdoc))
     intervals = islands.groupBy(id_col, "grp").agg(

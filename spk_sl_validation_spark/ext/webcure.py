@@ -48,7 +48,8 @@ partial limit + final limit), which bounds a mega-domain's shuffle
 contribution at k rows per input partition — measured equal-or-better
 than a hand-salted two-phase top-k at 16M docs with 80% of the crawl
 on one domain, so the hand-salted variant was removed (let Catalyst
-optimize; tools/skew_probe.py domain_cap_hot holds the evidence).
+optimize; SCALE.md §7, "Round-8 URL-curation skew probe", holds the
+evidence).
 """
 
 from __future__ import annotations
@@ -203,7 +204,9 @@ def url_dedup(
     )
     keyed = df.withColumn("__nu", nu)
     # rank(), not row_number(): under a duplicated id every min-id row
-    # survives — identical keep SET to the old semi join shape.
+    # of a URL survives. The old semi join keyed on the id alone, so its
+    # keep set is the same only when no id spans two normalized URLs
+    # (such an id also kept its rows under URLs it did not win).
     w = Window.partitionBy("__nu").orderBy(id_col)
     return (
         keyed.withColumn("__rk", F.rank().over(w))
@@ -227,8 +230,8 @@ def domain_cap(
     final limit — so a mega-domain's shuffle mass is bounded at
     k × n_input_partitions, not its row count. A hand-salted two-phase
     top-k was built, probed, and REMOVED: it re-implements exactly
-    this rewrite one shuffle slower (tools/skew_probe.py
-    domain_cap_hot — 6.6 s vs 6.0 s min at 16M docs, 80% on one
+    this rewrite one shuffle slower (SCALE.md §7, "Round-8 URL-curation
+    skew probe" — 6.9 s vs 6.3 s min at 16M docs, 80% on one
     domain; the plan pin in tests/test_webcure.py keeps the rewrite
     from silently disappearing).
 
@@ -704,8 +707,32 @@ def _selected_group_lines(txt: Column, crawler_token: str | None) -> Column:
 
 def robots_rules_array(txt: Column, crawler_token: str | None = None) -> Column:
     """array<struct<rtype,prefix,pattern_re,is_lit>>: the Allow/
-    Disallow rules of the selected group, as one narrow per-row
-    expression (see :func:`_selected_group_lines`)."""
+    Disallow rules of the group a crawler must obey, as one narrow
+    per-row expression over a robots.txt cell (zero exchanges).
+    ``rtype`` is 'allow'|'disallow'; ``pattern_re`` is the RFC 9309
+    pattern compiled to an anchored regex (:func:`_robots_pattern_re`);
+    ``prefix`` keeps the raw pattern for specificity ranking (most
+    octets wins, per the RFC); ``is_lit`` marks plain-prefix patterns
+    (no '*', no trailing '$') so consumers can match with startswith
+    instead of regexp_like (regexp_like with per-rule non-foldable
+    patterns recompiles the regex per evaluation once rules alternate
+    — the JVM caches only the LAST pattern per expression instance).
+    Field extraction uses ``F.get`` (0-based, null on out-of-bounds)
+    so colon-less noise lines are total under ANSI mode regardless of
+    predicate evaluation order.
+
+    Group selection (RFC 9309 §2.2.1): with ``crawler_token`` set,
+    a user-agent group matches when its value is a case-insensitive
+    PREFIX of the token (``Googlebot`` matches ``googlebot-news`` —
+    the practice Google/Bing document; an exact match is the
+    longest-possible prefix so RFC exact matching is subsumed); among
+    matching named groups the MOST SPECIFIC (longest value) wins, and
+    every group at that specificity merges (the RFC's merge rule for
+    repeated groups). The ``*`` group applies only when NO named
+    group matches. ``crawler_token=None`` keeps the ``*``-group-only
+    behavior. Documented simplification: consecutive ``User-agent:``
+    lines each start their own tag (a rule line belongs to the
+    nearest preceding UA line, not to every UA line of the block)."""
     def _rule(x):
         parts = F.split(x["line"], ":", 2)
         rt = F.lower(F.trim(F.get(parts, 0)))
@@ -724,47 +751,6 @@ def robots_rules_array(txt: Column, crawler_token: str | None = None) -> Column:
     )
 
 
-def parse_robots_rules(
-    robots: DataFrame,
-    domain_col: str = "domain",
-    txt_col: str = "robots_txt",
-    crawler_token: str | None = None,
-) -> DataFrame:
-    """(domain, rtype 'allow'|'disallow', prefix, pattern_re) for the
-    group a crawler must obey. ``pattern_re`` is the RFC 9309 pattern
-    compiled to an anchored regex (:func:`_robots_pattern_re`);
-    ``prefix`` keeps the raw pattern for specificity ranking (most
-    octets wins, per the RFC). Field extraction uses ``F.get``
-    (0-based, null on out-of-bounds) so colon-less noise lines are
-    total under ANSI mode regardless of predicate evaluation order.
-
-    Group selection (RFC 9309 §2.2.1): with ``crawler_token`` set,
-    a user-agent group matches when its value is a case-insensitive
-    PREFIX of the token (``Googlebot`` matches ``googlebot-news`` —
-    the practice Google/Bing document; an exact match is the
-    longest-possible prefix so RFC exact matching is subsumed); among
-    matching named groups the MOST SPECIFIC (longest value) wins, and
-    every group at that specificity merges (the RFC's merge rule for
-    repeated groups). The ``*`` group applies only when NO named
-    group matches. ``crawler_token=None`` keeps the ``*``-group-only
-    behavior. Documented simplification: consecutive ``User-agent:``
-    lines each start their own tag (a rule line belongs to the
-    nearest preceding UA line, not to every UA line of the block)."""
-    # r12: per-row array parse (see robots_rules_array) + explode —
-    # same rows as the old explode/window shape, zero exchanges.
-    # `is_lit` marks plain-prefix patterns (no '*', no trailing '$')
-    # so consumers can match with startswith instead of regexp_like
-    # (regexp_like with per-rule non-foldable patterns recompiles the
-    # regex per evaluation once rules alternate — the JVM caches only
-    # the LAST pattern per expression instance).
-    return robots.select(
-        F.col(domain_col).alias("domain"),
-        F.explode(
-            robots_rules_array(F.col(txt_col), crawler_token)
-        ).alias("__r"),
-    ).select("domain", "__r.rtype", "__r.prefix", "__r.pattern_re", "__r.is_lit")
-
-
 def parse_crawl_delay(
     robots: DataFrame,
     domain_col: str = "domain",
@@ -779,11 +765,17 @@ def parse_crawl_delay(
     direction); non-numeric or non-positive values are ignored
     (``try_cast`` totality, never a stage kill); domains without a
     usable directive are ABSENT, so consumers left-join and fall back
-    to their global rate."""
+    to their global rate. Group selection via ``crawler_token`` as in
+    :func:`robots_rules_array`.
+
+    Precondition: ``robots`` holds ONE row per domain (what a crawl
+    stores). It is not enforced: each row is parsed on its own, so a
+    domain given twice yields one output row per row carrying a usable
+    directive, and a consumer's left join on ``domain`` then multiplies
+    that domain's URLs."""
     # r12: per-row array fold (see _selected_group_lines) — the max
     # over the selected group's usable directives needs no explode,
-    # window, or groupBy: zero exchanges. Contract: one robots_txt row
-    # per domain (duplicate domain rows are no longer max-merged).
+    # window, or groupBy: zero exchanges.
     def _delay(x):
         parts = F.split(x["line"], ":", 2)
         key = F.lower(F.trim(F.get(parts, 0)))
@@ -811,10 +803,18 @@ def robots_txt_filter(
     """Apply robots.txt decisions to a URL frame: adds ``allowed``
     (most-specific-match over the crawler's selected user-agent group
     of the URL's registrable domain — RFC 9309 group selection via
-    ``crawler_token``, see :func:`parse_robots_rules`; default the
+    ``crawler_token``, see :func:`robots_rules_array`; default the
     ``*`` group — with ``*`` wildcards and trailing-``$`` anchors
     supported, specificity = pattern octet count, Allow wins ties)
     and drops blocked rows unless ``keep_blocked``.
+
+    Precondition: ``robots`` holds ONE row per domain (what a crawl
+    stores). It is not enforced — merging duplicates would cost an
+    exchange. Each robots row is decided on its own: a domain given
+    twice yields each of its URLs twice, once per robots row, so with
+    ``keep_blocked=True`` a URL one file disallows comes out both
+    blocked and allowed, and with ``keep_blocked=False`` it survives
+    through the other row.
 
     Scale shape: the URL frame is NEVER aggregated or re-keyed — rules
     collapse to one array row per domain (robots files are KB-sized,
@@ -837,9 +837,8 @@ def robots_txt_filter(
     # and rule extraction never need the old explode → window →
     # Exchange → collect_list round-trip, which cost a full AQE stage
     # locally and shuffled the whole rules relation at corpus scale).
-    # Contract: one robots_txt row per domain (what a crawl stores);
-    # duplicate domain rows would join multiplicatively here where the
-    # old groupBy merged them.
+    # One robots_txt row per domain is the caller's precondition (see
+    # above); duplicate domain rows join multiplicatively here.
     per_domain = robots.select(
         F.col("domain").alias("__dom"),
         robots_rules_array(F.col("robots_txt"), crawler_token).alias("__rules"),
@@ -1574,7 +1573,6 @@ def politeness_schedule(
     url_col: str = "url",
     id_col: str = "doc_id",
     n_salts: int = 64,
-    psl: bool = False,
     delays: DataFrame | None = None,
     wave_seconds: float = 1.0,
 ) -> DataFrame:
@@ -1606,7 +1604,7 @@ def politeness_schedule(
     direction for politeness. Raise ``n_salts`` for crawls where one
     domain dominates. Deterministic (salt is id-derived, not a hash
     seed) and therefore oracle-replayable."""
-    dom = _with_domain(df, url_col, psl)
+    dom = _with_domain(df, url_col, False)
     if delays is None:
         rate_col = F.lit(rate)
     else:
@@ -1683,13 +1681,11 @@ def frontier_expand(
     )
 
 
-def domain_reputation(
-    df: DataFrame, score_col: str, url_col: str = "url", psl: bool = False
-) -> DataFrame:
+def domain_reputation(df: DataFrame, score_col: str, url_col: str = "url") -> DataFrame:
     """(domain, n_docs, avg_score): per-registrable-domain aggregate
     of any per-document quality score. Manifest-sized groupBy — the
     corpus never shuffles, only (domain, score) pairs."""
-    dom = _with_domain(df, url_col, psl)
+    dom = _with_domain(df, url_col, False)
     return dom.groupBy(F.col("__dom").alias("domain")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.avg(score_col).alias("avg_score"),
@@ -1702,18 +1698,17 @@ def domain_reputation_filter(
     score_col: str,
     url_col: str = "url",
     min_docs: int = 1,
-    psl: bool = False,
 ) -> DataFrame:
     """Keep documents whose registrable domain has ``avg_score >=
     min_avg`` over at least ``min_docs`` pages (small-sample domains
     below the floor are KEPT — no evidence is not negative evidence).
     Reputation is a domain-count-sized relation riding a semi join;
     the document frame shuffles once, on the domain key."""
-    rep = domain_reputation(df, score_col, url_col, psl)
+    rep = domain_reputation(df, score_col, url_col)
     passing = rep.filter(
         (F.col("avg_score") >= min_avg) | (F.col("n_docs") < min_docs)
     ).select("domain")
-    dom = _with_domain(df, url_col, psl)
+    dom = _with_domain(df, url_col, False)
     return (
         dom.join(
             passing.withColumnRenamed("domain", "__dom").hint("shuffle_hash"),
@@ -1734,7 +1729,6 @@ def paragraph_dedup(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    sep: str = "\n",
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Drop repeated paragraphs WITHIN each document, keeping first
@@ -1746,6 +1740,7 @@ def paragraph_dedup(
     ``(id, *carry, clean_text, n_paras_kept, n_paras_dropped)`` —
     ``carry`` passes provenance columns (URIs, batch ids) through a
     composed pipeline without a join-back."""
+    sep = "\n"
     paras = F.split(F.col(text_col), sep)
     kept = F.filter(
         paras, lambda p, i: F.array_position(paras, p) == i + F.lit(1)

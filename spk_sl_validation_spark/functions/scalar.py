@@ -32,12 +32,6 @@ def slash_key(*cols: str | Column) -> Column:
     return F.concat_ws("/", *[F.col(c) if isinstance(c, str) else c for c in cols])
 
 
-def concat_literal(col: str | Column, literal: str) -> Column:
-    """``Material + "/3090"`` — SL_SPK_Cleansing.py:143."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.concat(c, F.lit(literal))
-
-
 def strip_prefix(col: str | Column, n: int) -> Column:
     """``Vendor.str[n:]`` — SL_SPK_Cleansing.py:226 (n=3 there).
 
@@ -64,10 +58,3 @@ def neq(a: Column, b) -> Column:
     behavior. SQL equivalent: ``a IS DISTINCT FROM b``.
     """
     return ~a.eqNullSafe(b)
-
-
-def eq(a: Column, b) -> Column:
-    """Plain ``==`` — null yields null, falsy in masks, matching
-    pandas ``NaN == 'x' → False`` row selection. Provided for symmetry.
-    """
-    return a == b

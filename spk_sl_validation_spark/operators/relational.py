@@ -6,8 +6,9 @@ splits, deterministic dedup, duplicate marking). Everything here is
 declarative — Catalyst owns physical strategy; we only add broadcast
 hints where the build side is known dim-sized.
 
-Scale posture: every join helper takes ``broadcast_build`` — at
-100 TB the fact side never moves for dim joins; the only shuffles in
+Scale posture: every join helper broadcasts its build side (the semi
+and anti joins unless ``broadcast_build=False``) — at 100 TB the fact
+side never moves for dim joins; the only shuffles in
 the reference workload are the group-by aggregation and the
 duplicate-marking window, both keyed on high-cardinality composite
 keys (no skew concern; AQE skew-join covers residual hot keys).
@@ -23,37 +24,12 @@ from pyspark.sql import functions as F
 from spk_sl_validation_spark.functions.scalar import c as _c
 
 
-def normalize_types(
-    df: DataFrame,
-    string_cols: Sequence[str] = (),
-    status_cols: Sequence[str] = (),
-    long_cols: Sequence[str] = (),
-) -> DataFrame:
-    """The reference's type-normalization pass (SL_SPK_Cleansing.py:63-70,
-    Status_Cleansing.py:55-71): keys/codes → string, statuses through
-    the double→long→string chain, quantities → long.
-    """
-    exprs = []
-    string_set, status_set, long_set = set(string_cols), set(status_cols), set(long_cols)
-    for c in df.columns:
-        if c in status_set:
-            exprs.append(F.col(c).cast("long").cast("string").alias(c))
-        elif c in string_set:
-            exprs.append(F.col(c).cast("string").alias(c))
-        elif c in long_set:
-            exprs.append(F.col(c).cast("long").alias(c))
-        else:
-            exprs.append(F.col(c))
-    return df.select(*exprs)
-
-
 def left_join(
     probe: DataFrame,
     build: DataFrame,
     on: str | Sequence[str] | Column,
-    broadcast_build: bool = True,
 ) -> DataFrame:
-    """Left outer equi-join, build side broadcast by default.
+    """Left outer equi-join, build side broadcast.
 
     Every join in the reference is a left outer merge of a fact
     against a small dim/slice (SURVEY.md §2.5 J1–J12) → broadcast
@@ -61,8 +37,7 @@ def left_join(
     deduplicated: J5's row multiplication on dual-source materials is
     load-bearing (SL_SPK_Cleansing.py:153, SURVEY.md §4.4.5).
     """
-    b = F.broadcast(build) if broadcast_build else build
-    return probe.join(b, on=on, how="left")
+    return probe.join(F.broadcast(build), on=on, how="left")
 
 
 def semi_join(

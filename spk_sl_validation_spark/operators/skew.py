@@ -100,7 +100,6 @@ def write_bucketed(
     bucket_cols: Sequence[str],
     n_buckets: int = 32,
     sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Persist ``df`` hash-bucketed (and optionally sorted) on
     ``bucket_cols``. Subsequent equi-joins/aggregations on those
@@ -134,7 +133,7 @@ def write_bucketed(
             orphan = os.path.join(warehouse, table.lower())
             if os.path.isdir(orphan):
                 shutil.rmtree(orphan, ignore_errors=True)
-    writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
+    writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)

@@ -73,7 +73,7 @@ def validate(df: DataFrame, checks: Sequence[Check]) -> DataFrame:
 
 
 def observe_checks(
-    df: DataFrame, checks: Sequence[Check], name: str = "validation"
+    df: DataFrame, checks: Sequence[Check]
 ) -> tuple[DataFrame, "Observation"]:
     """Attach the check suite as an ``Observation``: violation counts
     are accumulated DURING whatever action the caller already runs on
@@ -88,7 +88,7 @@ def observe_checks(
     """
     from pyspark.sql import Observation
 
-    obs = Observation(name)
+    obs = Observation("validation")
     metrics = [
         F.sum(F.when(c.predicate.isNull() | ~c.predicate, F.lit(1)).otherwise(F.lit(0))).alias(
             c.name

@@ -155,14 +155,9 @@ def training_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compose_training_pipeline(docs)
 
 
-def compose_training_pipeline(
-    docs: DataFrame,
-    weights: dict[str, float] = MIX_WEIGHTS,
-    min_tokens: int = MIN_TOKENS,
-    seq_len: int = SEQ_LEN,
-) -> DataFrame:
-    """The composed pipeline over any (doc_id, source, text) relation —
-    shared by the registered query and tools/pipeline_probe.py.
+def compose_training_pipeline(docs: DataFrame) -> DataFrame:
+    """The composed pipeline over any (doc_id, source, text) relation
+    (``MIN_TOKENS`` gate, ``MIX_WEIGHTS`` mixture, ``SEQ_LEN`` packing).
 
     "Never shuffle the corpus", composed: text is consumed map-side
     only (token count at the scan; shingles/signatures inside
@@ -172,7 +167,8 @@ def compose_training_pipeline(
     once the keep-id set outgrows the broadcast threshold (~10 MB of
     ids), which a 100 TB corpus does by 7 orders of magnitude. Packing
     reads the precomputed n_tokens (tokens_col) so text never reaches
-    it. Measured at 10M docs in SCALE.md §7 (per-stage shuffle bytes).
+    it. Measured at 10M docs in SCALE.md §7, "Round-7 composed-pipeline
+    probe" (per-stage shuffle bytes).
     """
     import pyspark.sql.functions as F
 
@@ -185,14 +181,14 @@ def compose_training_pipeline(
     )
 
     n_tok = F.size(ws_tokens("text"))
-    q = docs.filter(n_tok >= min_tokens)
+    q = docs.filter(n_tok >= MIN_TOKENS)
     keep = D.dedup_corpus(q, "doc_id", "text", NUM_HASHES, BANDS, 3, JACCARD_TAU)
     meta = docs.select("doc_id", "source", n_tok.alias("n_tokens")).filter(
-        F.col("n_tokens") >= min_tokens
+        F.col("n_tokens") >= MIN_TOKENS
     )
     kept = meta.join(keep.filter("keep").select("doc_id"), "doc_id", "left_semi")
-    sampled = A.mixture_sample(kept, weights)
-    packed = A.pack_sequences(sampled, tokens_col="n_tokens", seq_len=seq_len)
+    sampled = A.mixture_sample(kept, MIX_WEIGHTS)
+    packed = A.pack_sequences(sampled, tokens_col="n_tokens", seq_len=SEQ_LEN)
     return packed.select("doc_id", "n_tokens", "tok_offset", "seq_id", "offset_in_seq")
 
 

@@ -30,16 +30,17 @@ SPAN_W = 8  # words per non-overlapping span
 BP_MIN_DOCS = 3  # spans in >= this many distinct docs are boilerplate
 
 
-def capped_bands_cte(rows_per_band: int = ROWS_PER_BAND, cap: int = MAX_BUCKET_SIZE) -> str:
+def capped_bands_cte() -> str:
     """The oracle replay of lsh_candidate_pairs' hot-bucket cap: keep
-    each (band, band-hashes) bucket's ``cap`` smallest doc_ids —
-    identical deterministic rule as the Spark window row_number."""
-    hcols = ", ".join(f"h{r}" for r in range(rows_per_band))
+    each (band, band-hashes) bucket's ``MAX_BUCKET_SIZE`` smallest
+    doc_ids — identical deterministic rule as the Spark window
+    row_number."""
+    hcols = ", ".join(f"h{r}" for r in range(ROWS_PER_BAND))
     return f"""
 capped AS (
   SELECT doc_id, band, {hcols}
   FROM bands
-  QUALIFY row_number() OVER (PARTITION BY band, {hcols} ORDER BY doc_id) <= {cap}
+  QUALIFY row_number() OVER (PARTITION BY band, {hcols} ORDER BY doc_id) <= {MAX_BUCKET_SIZE}
 )"""
 
 

@@ -26,7 +26,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spk_sl_validation_spark.functions.scalar import c, neq, strip_prefix
@@ -106,7 +106,6 @@ def run(
     tables: dict[str, DataFrame],
     run_ts: datetime,
     variant: Variant = CL,
-    spark: SparkSession | None = None,
 ) -> dict[str, DataFrame]:
     """Execute the pipeline; returns the report sheets by name."""
     t = _normalize(tables, variant)

@@ -932,9 +932,8 @@ def web_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _corpus_pipeline_over(docs: DataFrame) -> DataFrame:
-    """The composed crawl→corpus pass over a ``doc_id`` frame —
-    shared by the registered query and the ≥2M-doc scale probe
-    (tools/scale_probe.py web_corpus)."""
+    """The composed crawl→corpus pass over a ``doc_id`` frame (its
+    2M-doc throughput: SCALE.md §7, "Composed-throughput probe")."""
     from spk_sl_validation_spark.ext import text as TX
     from spk_sl_validation_spark.ext import warc as WC
     from spk_sl_validation_spark.ext.hashing import ws_tokens

@@ -12,7 +12,8 @@ Two families:
 The reference infers schemas from Excel and immediately re-normalizes
 every key/code column to string (SL_SPK_Cleansing.py:63-70); our engine
 declares schemas up front and applies the same normalization as an
-explicit, auditable pass (operators.relational.normalize_types).
+explicit, auditable pass (plans/spk_sl_cleansing.py ``_normalize``,
+plans/status_cleansing.py).
 """
 
 from __future__ import annotations

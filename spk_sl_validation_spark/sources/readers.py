@@ -139,6 +139,29 @@ def _events_ts_is_nanos(path: str) -> bool:
     return _TS_NANOS_PATHS[key]
 
 
+def _read_nanos_events(spark: SparkSession, reader, path: str) -> DataFrame:
+    """Events with ``ts`` stored as parquet TIMESTAMP(NANOS), which
+    Spark's vectorized reader rejects: read ``ts`` as raw nanos
+    (``nanosAsLong``) and convert to a microsecond timestamp
+    (``ts div 1000`` — matches DuckDB's truncation of ns → µs).
+    ``reader`` is ``spark.read`` or ``spark.readStream``, so the batch
+    and the streaming source share one conversion."""
+    # Redundant for sessions from build_session (pinned at session
+    # build, so behavior never depends on read order); kept as a
+    # safeguard for externally-built sessions.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    physical = T.StructType(
+        [
+            f if f.name != "ts" else T.StructField("ts", T.LongType(), True)
+            for f in schemas.EVENTS.fields
+        ]
+    )
+    raw = reader.schema(physical).parquet(path)
+    return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)")).select(
+        *[f.name for f in schemas.EVENTS.fields]
+    )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver-testdata table with its declared schema.
 
@@ -146,27 +169,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     it) validates the contract and lets Catalyst prune columns that a
     query never touches.
 
-    When ``events.ts`` is stored as parquet TIMESTAMP(NANOS) (which
-    Spark's vectorized reader rejects) we read it as raw nanos
-    (``nanosAsLong``) and convert to a microsecond timestamp
-    (``ts div 1000`` — matches DuckDB's truncation of ns → µs);
+    When ``events.ts`` is stored as parquet TIMESTAMP(NANOS) it is
+    truncated to microseconds (:func:`_read_nanos_events`);
     TIMESTAMP(MICROS) files read natively.
     """
     # Defensive: timestamp parity with the DuckDB oracle requires UTC
     # rendering even if the hosting session was built without our conf.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events" and _events_ts_is_nanos(f"{sf_dir}/{name}.parquet"):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        physical = T.StructType(
-            [
-                f if f.name != "ts" else T.StructField("ts", T.LongType(), True)
-                for f in schemas.EVENTS.fields
-            ]
-        )
-        df = spark.read.schema(physical).parquet(f"{sf_dir}/{name}.parquet")
-        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)")).select(
-            *[f.name for f in schemas.EVENTS.fields]
-        )
+        return _read_nanos_events(spark, spark.read, f"{sf_dir}/{name}.parquet")
     schema = schemas.TESTDATA_SCHEMAS.get(name)
     reader = spark.read
     if schema is not None:
@@ -192,11 +203,6 @@ def load_table_spread(
         f"{sf_dir}/{name}.parquet",
         min_rows_per_task=min_rows_per_task,
     )
-
-
-def load_all(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    names = names or list(schemas.TESTDATA_SCHEMAS)
-    return {n: load_table(spark, sf_dir, n) for n in names}
 
 
 def load_csv_table(

@@ -25,18 +25,12 @@ from pyspark.sql import functions as F
 logger = logging.getLogger("spk_sl_validation_spark")
 
 
-def write_report(
-    sheets: dict[str, DataFrame], out_dir: str, mode: str = "overwrite", partition_by: list[str] | None = None
-) -> None:
-    """Write each sheet as parquet under ``out_dir/<sheet-name>/``."""
+def write_report(sheets: dict[str, DataFrame], out_dir: str) -> None:
+    """Write each sheet as parquet under ``out_dir/<sheet-name>/``
+    (replacing an existing report)."""
     for name, df in sheets.items():
         safe = name.replace("/", "_").replace(" ", "_")
-        writer = df.write.mode(mode)
-        if partition_by:
-            cols = [c for c in partition_by if c in df.columns]
-            if cols:
-                writer = writer.partitionBy(*cols)
-        writer.parquet(f"{out_dir}/{safe}")
+        df.write.mode("overwrite").parquet(f"{out_dir}/{safe}")
 
 
 def write_clustered(
@@ -44,8 +38,6 @@ def write_clustered(
     path: str,
     range_cols: list[str],
     n_files: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Range-clustered parquet: ``repartitionByRange`` on ``range_cols``
     (one disjoint value range per output file) + ``sortWithinPartitions``
@@ -60,8 +52,8 @@ def write_clustered(
     tests/test_scale_plans.py from the written footers.
     """
     out = df.repartitionByRange(n_files, *range_cols)
-    out = out.sortWithinPartitions(*(sort_cols or range_cols))
-    out.write.mode(mode).parquet(path)
+    out = out.sortWithinPartitions(*range_cols)
+    out.write.mode("overwrite").parquet(path)
 
 
 def dataset_checksum(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -120,9 +112,7 @@ FROM {table}
 """
 
 
-def write_report_with_manifest(
-    sheets: dict[str, DataFrame], out_dir: str, mode: str = "overwrite"
-) -> dict:
+def write_report_with_manifest(sheets: dict[str, DataFrame], out_dir: str) -> dict:
     """write_report + a ``manifest.json`` of per-sheet (n_rows,
     checksum) — the verifiable-export contract: any consumer (or this
     engine on re-read) recomputes the checksum to prove integrity
@@ -130,7 +120,7 @@ def write_report_with_manifest(
     import json
     import os
 
-    write_report(sheets, out_dir, mode=mode)
+    write_report(sheets, out_dir)
     manifest = {}
     for name, df in sheets.items():
         safe = name.replace("/", "_").replace(" ", "_")
@@ -179,7 +169,6 @@ def write_zordered(
     cols: list[str],
     n_files: int = 32,
     bits: int = 16,
-    mode: str = "overwrite",
 ) -> None:
     """Z-order-clustered parquet: range-partition + sort by the Morton
     key of ``cols``, so parquet footers carry tight min/max on EVERY
@@ -198,7 +187,7 @@ def write_zordered(
         keyed.repartitionByRange(n_files, F.col(key))
         .sortWithinPartitions(key)
         .drop(key)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -208,7 +197,6 @@ def compact_small_files(
     path: str,
     out_path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    mode: str = "overwrite",
 ) -> dict:
     """Small-files compaction: rewrite a parquet directory with file
     count sized so each output file ≈ ``target_file_bytes``.
@@ -235,7 +223,7 @@ def compact_small_files(
     total_bytes = summary.getLength()
     files_before = _count_data_files(fs, hpath)
     n_out = max(1, math.ceil(total_bytes / target_file_bytes))
-    spark.read.parquet(path).repartition(n_out).write.mode(mode).parquet(out_path)
+    spark.read.parquet(path).repartition(n_out).write.mode("overwrite").parquet(out_path)
     return {"files_before": files_before, "bytes_total": total_bytes, "files_after": n_out}
 
 
@@ -252,12 +240,17 @@ def _count_data_files(fs, hpath) -> int:
     return n
 
 
-def write_report_xlsx(sheets: dict[str, DataFrame], path: str, max_rows: int = 1_000_000) -> None:
+#: Rows per sheet an xlsx report accepts (Excel's sheet limit is 2^20).
+_XLSX_MAX_ROWS = 1_000_000
+
+
+def write_report_xlsx(sheets: dict[str, DataFrame], path: str) -> None:
     """Edge converter: collect each sheet and write one xlsx workbook.
 
     Mirrors the reference's xlsxwriter sink; only sane for human-scale
-    output, hence the row cap. Requires an xlsx engine (openpyxl or
-    xlsxwriter) — import-guarded since the engine core never needs it.
+    output, hence the 1,000,000-row cap per sheet. Requires an xlsx
+    engine (openpyxl or xlsxwriter) — import-guarded since the engine
+    core never needs it.
     """
     try:
         import pandas as pd  # noqa: F401
@@ -275,8 +268,8 @@ def write_report_xlsx(sheets: dict[str, DataFrame], path: str, max_rows: int = 1
     frames = {}
     for name, df in sheets.items():
         n = df.count()
-        if n > max_rows:
-            raise ValueError(f"sheet {name!r} has {n} rows > xlsx cap {max_rows}")
+        if n > _XLSX_MAX_ROWS:
+            raise ValueError(f"sheet {name!r} has {n} rows > xlsx cap {_XLSX_MAX_ROWS}")
         # Stringify temporal columns: SAP-style sentinel dates (9999-12-31)
         # overflow Arrow's ns timestamps in toPandas, and Excel wants
         # readable dates anyway.
@@ -308,9 +301,7 @@ def write_zorder(
     path: str,
     col_x: str,
     col_y: str,
-    bits: int = 16,
     n_files: int = 32,
-    mode: str = "overwrite",
 ) -> None:
     """Z-order-clustered parquet: rows range-partitioned and sorted by
     the Morton interleave of ``col_x`` and ``col_y``, so every output
@@ -320,7 +311,7 @@ def write_zorder(
     OPTIMIZE ZORDER layout; both-dims-bounded property asserted from
     written footers in tests/test_scale_plans.py).
 
-    Each column is first NORMALIZED onto the full ``bits``-wide domain
+    Each column is first NORMALIZED onto the full 16-bit domain
     from its min/max (one cheap agg action — in production these come
     from table stats): naive interleaving of unequal domains
     degenerates to a single-column sort, because only the wider
@@ -328,6 +319,7 @@ def write_zorder(
     """
     from spk_sl_validation_spark.ext.hashing import z_value_expr
 
+    bits = 16
     top = (1 << bits) - 1
     lo_x, hi_x, lo_y, hi_y = df.agg(
         F.min(col_x), F.max(col_x), F.min(col_y), F.max(col_y)
@@ -342,4 +334,4 @@ def write_zorder(
     z = z_value_expr(norm(col_x, lo_x, hi_x), norm(col_y, lo_y, hi_y), bits)
     out = df.withColumn("__z", F.expr(z)).repartitionByRange(n_files, "__z")
     out = out.sortWithinPartitions("__z").drop("__z")
-    out.write.mode(mode).parquet(path)
+    out.write.mode("overwrite").parquet(path)

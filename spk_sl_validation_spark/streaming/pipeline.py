@@ -74,25 +74,14 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = pathlib.Path(_stage_single_file(src, "/tmp/spk_sl_stream_src"))
     staged = stage / "events.parquet"
 
-    from spk_sl_validation_spark.sources.readers import _events_ts_is_nanos
+    from spk_sl_validation_spark.sources.readers import (
+        _events_ts_is_nanos,
+        _read_nanos_events,
+    )
 
     if not _events_ts_is_nanos(str(staged)):
         return spark.readStream.schema(schemas.EVENTS).parquet(str(stage))
-
-    # Redundant for sessions from build_session (pinned at session
-    # build, so behavior never depends on read order); kept as a
-    # safeguard for externally-built sessions.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    physical = T.StructType(
-        [
-            f if f.name != "ts" else T.StructField("ts", T.LongType(), True)
-            for f in schemas.EVENTS.fields
-        ]
-    )
-    raw = spark.readStream.schema(physical).parquet(str(stage))
-    return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)")).select(
-        *[f.name for f in schemas.EVENTS.fields]
-    )
+    return _read_nanos_events(spark, spark.readStream, str(stage))
 
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -105,23 +94,24 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.readStream.schema(schemas.DOCUMENTS).parquet(stage)
 
 
-def run_available_now(
-    stream_df: DataFrame, output_mode: str = "complete", state_partitions: int = 8
-) -> DataFrame:
+#: Shuffle partitions of a replay's state store: each one instantiates
+#: a state-store provider, a fixed per-partition cost that dominates
+#: small replays (measured 2× at sf0.1 going 32→8). Size it to state
+#: volume in production — the value is pinned into the checkpoint at
+#: first run.
+_REPLAY_STATE_PARTITIONS = 8
+
+
+def run_available_now(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Execute a streaming DataFrame to completion on the available
     data (memory sink) and return the materialized result as a batch
-    DataFrame — the deterministic-replay harness for the oracle.
-
-    ``state_partitions`` sizes the state store: each shuffle partition
-    instantiates a state-store provider, a fixed per-partition cost
-    that dominates small replays (measured 2× at sf0.1 going 32→8).
-    Size it to state volume in production — the value is pinned into
-    the checkpoint at first run.
+    DataFrame — the deterministic-replay harness for the oracle. The
+    state store gets ``_REPLAY_STATE_PARTITIONS`` shuffle partitions.
     """
     spark = stream_df.sparkSession
     name = f"spk_sl_stream_sink_{next(_SINK_COUNTER)}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(_REPLAY_STATE_PARTITIONS))
     try:
         q = (
             stream_df.writeStream.format("memory")
@@ -142,13 +132,18 @@ def run_available_now(
     return out
 
 
-def windowed_counts(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """Tumbling event-time window aggregation — streaming twin of the
-    batch ``windowed_event_agg`` plan. The watermark bounds state to
-    (watermark / window) live windows per event_type."""
+#: Event-time watermark of every stream below: bounds window, session
+#: and join state to events at most this far behind the newest ``ts``.
+_WATERMARK = "2 hours"
+
+
+def windowed_counts(events: DataFrame) -> DataFrame:
+    """1-hour tumbling event-time window aggregation — streaming twin
+    of the batch ``windowed_event_agg`` plan. The watermark bounds state
+    to (watermark / window) = 2 live windows per event_type."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "event_type")
+        events.withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
@@ -157,12 +152,12 @@ def windowed_counts(events: DataFrame, window: str = "1 hour", watermark: str = 
     )
 
 
-def sessionized(events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
-    """Session windows (gap-based) per user — the built-in streaming
+def sessionized(events: DataFrame) -> DataFrame:
+    """Session windows (30-minute gap) per user — the built-in streaming
     sessionization; state merges adjacent sessions in the state store."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), "user_id")
+        events.withWatermark("ts", _WATERMARK)
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -176,12 +171,10 @@ def sessionized(events: DataFrame, gap: str = "30 minutes", watermark: str = "2 
 def interval_joined(
     clicks: DataFrame,
     purchases: DataFrame,
-    lookback: str = "1 hour",
-    watermark: str = "2 hours",
     how: str = "inner",
 ) -> DataFrame:
     """Stream-stream interval join: each click matched to purchases by
-    the same user within the preceding ``lookback``. Watermarks on
+    the same user within the preceding hour. Watermarks on
     both sides bound the join state (Spark buffers only rows younger
     than watermark + interval); inner time-bounded joins are the one
     stream-stream join shape that needs no output delay.
@@ -189,13 +182,13 @@ def interval_joined(
     ``how="left_outer"``: unmatched clicks additionally emit one
     null-padded row — but only once the watermark passes the click's
     last possible match time (state eviction), so rows younger than
-    ``max(ts) - watermark`` at stream end never surface their null.
+    ``max(ts) - _WATERMARK`` at stream end never surface their null.
     Callers comparing against batch semantics must truncate BOTH sides
     to the emitted region (see streaming_interval_join_outer)."""
-    c = clicks.withWatermark("ts", watermark).select(
+    c = clicks.withWatermark("ts", _WATERMARK).select(
         F.col("event_id").alias("click_id"), F.col("user_id"), F.col("ts").alias("click_ts")
     )
-    p = purchases.withWatermark("ts", watermark).select(
+    p = purchases.withWatermark("ts", _WATERMARK).select(
         F.col("event_id").alias("purchase_id"),
         F.col("user_id").alias("p_user_id"),
         F.col("ts").alias("purchase_ts"),
@@ -203,7 +196,7 @@ def interval_joined(
     return c.join(
         p,
         (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts") - F.expr(f"INTERVAL {lookback}"))
+        & (F.col("purchase_ts") >= F.col("click_ts") - F.expr("INTERVAL 1 hour"))
         & (F.col("purchase_ts") <= F.col("click_ts")),
         how,
     ).select("click_id", "user_id", "click_ts", "purchase_id", "purchase_ts")
@@ -396,9 +389,9 @@ _DEBOUNCE_OUT = T.StructType(
 _DEBOUNCE_STATE = T.StructType([T.StructField("last_us", T.LongType())])
 
 
-def debounce_events(events: DataFrame, gap_us: int = DEBOUNCE_GAP_US) -> DataFrame:
+def debounce_events(events: DataFrame) -> DataFrame:
     """Stateful streaming debounce: an event is emitted iff at least
-    ``gap_us`` elapsed since the previous RAW event of the same
+    ``DEBOUNCE_GAP_US`` elapsed since the previous RAW event of the same
     (user, type) — the streaming twin of the batch lag-window
     ``events_debounce`` with the identical contract (the timer resets
     on every event, kept or not, so state is ONE timestamp per key).
@@ -425,7 +418,7 @@ def debounce_events(events: DataFrame, gap_us: int = DEBOUNCE_GAP_US) -> DataFra
         ts_us = pdf["ts"].astype("datetime64[ns]").astype("int64") // 1000
         keep = []
         for t in ts_us:
-            keep.append(last_us is None or t - last_us >= gap_us)
+            keep.append(last_us is None or t - last_us >= DEBOUNCE_GAP_US)
             last_us = int(t)
         state.update((last_us,))
         out = pdf.loc[keep, ["event_id", "user_id", "event_type"]].copy()
@@ -535,14 +528,14 @@ _INDEX_PARTS = {
 }
 
 
-def write_dedup_index(docs: DataFrame, index_dir: str, batch_id: int = -1) -> None:
+def write_dedup_index(docs: DataFrame, index_dir: str) -> None:
     """Persist the three dedup-index artifacts (ext/dedup.py
-    dedup_index_tables) under ``index_dir`` as ``batch_id``'s
-    partition — the layout :func:`ingest_dedup_stream` appends to."""
+    dedup_index_tables) under ``index_dir`` as the bootstrap partition
+    ``batch_id=-1`` — the layout :func:`ingest_dedup_stream` appends to."""
     from spk_sl_validation_spark.ext.dedup import dedup_index_tables
 
     for name, part in zip(_INDEX_PARTS, dedup_index_tables(docs)):
-        _write_batch(part, f"{index_dir}/{name}", batch_id)
+        _write_batch(part, f"{index_dir}/{name}", -1)
 
 
 def _ingest_process_batch(
@@ -614,17 +607,17 @@ VEC_STREAM_SCHEMA = T.StructType(
 
 
 def write_ivf_index(
-    corpus: DataFrame, centroids: DataFrame, index_dir: str, batch_id: int = -1
+    corpus: DataFrame, centroids: DataFrame, index_dir: str
 ) -> None:
     """Bootstrap the persisted IVF index: the frozen centroid table
     (written once — the quantizer NEVER changes after this, which is
     what makes streaming merge == rebuild exact) and the inverted-list
-    table as ``batch_id``'s partition — the layout
+    table as the partition ``batch_id=-1`` — the layout
     :func:`ingest_ivf_stream` appends to."""
     from spk_sl_validation_spark.ext.similarity import ivf_index_tables
 
     centroids.write.mode("overwrite").parquet(f"{index_dir}/centroids")
-    _write_batch(ivf_index_tables(corpus, centroids), f"{index_dir}/lists", batch_id)
+    _write_batch(ivf_index_tables(corpus, centroids), f"{index_dir}/lists", -1)
 
 
 def _ivf_ingest_process_batch(
@@ -795,15 +788,15 @@ def _min_doc_per_url(df: DataFrame) -> DataFrame:
     return df.groupBy("norm_url").agg(F.min("doc_id").alias("doc_id"))
 
 
-def write_frontier(urls: DataFrame, frontier_dir: str, batch_id: int = -1) -> None:
+def write_frontier(urls: DataFrame, frontier_dir: str) -> None:
     """Bootstrap the persisted crawl frontier under ``frontier_dir``:
     one winner per normalized URL of the existing crawl (an empty
-    ``(doc_id, url)`` frame is fine) as ``batch_id``'s partition — the
-    LSM-style delta layout :func:`ingest_frontier_stream` appends to."""
+    ``(doc_id, url)`` frame is fine) as the partition ``batch_id=-1`` —
+    the LSM-style delta layout :func:`ingest_frontier_stream` appends to."""
     from spk_sl_validation_spark.ext.webcure import normalize_url
 
     f = _min_doc_per_url(urls.select(normalize_url("url").alias("norm_url"), "doc_id"))
-    _write_batch(f, frontier_dir, batch_id)
+    _write_batch(f, frontier_dir, -1)
 
 
 def _frontier_partition_dirs(spark: SparkSession, frontier_dir: str) -> list:
@@ -895,7 +888,6 @@ def ingest_frontier_stream(
     source_dir: str,
     frontier_dir: str,
     checkpoint_dir: str,
-    compact_threshold: int = 16,
 ):
     """The production crawl-frontier shape: a file stream of
     ``(doc_id, url)`` shards, each micro-batch canonicalized and
@@ -908,5 +900,5 @@ def ingest_frontier_stream(
     StreamingQuery (availableNow trigger)."""
     return _start_ingest(
         spark, URL_STREAM_SCHEMA, source_dir, checkpoint_dir,
-        _frontier_process_batch, frontier_dir, compact_threshold,
+        _frontier_process_batch, frontier_dir,
     )

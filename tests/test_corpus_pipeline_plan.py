@@ -4,8 +4,9 @@ no Exchange in the assembled frame carries the corpus text column.
 This is exactly the regression that existed before round 7 (the keep
 semi-join shipped the text-bearing relation — 3.0 GB of an 8.0 GB
 corpus through one shuffle at the 10M-doc probe, the whole corpus at
-100 TB). The probe (tools/pipeline_probe.py) measures it; this test
-makes reintroducing it a red test instead of a slow cluster.
+100 TB). SCALE.md §7, "Round-7 composed-pipeline probe", measures
+it; this test makes reintroducing it a red test instead of a slow
+cluster.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
-"""Adversarial-skew pins (tools/skew_probe.py is the measured story;
-these tests pin the two load-bearing mechanics at unit scale):
+"""Adversarial-skew pins (SCALE.md §7, "Round-7 adversarial-skew
+probe", is the measured story; these tests pin the two load-bearing mechanics at unit scale):
 
 1. the hot-bucket cap: a corpus where ONE near-dup cluster is 50% of
    all docs really does produce an over-cap bucket in every band, and

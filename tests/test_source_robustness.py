@@ -164,6 +164,50 @@ def test_load_table_reads_nanos_events_correctly(spark, tmp_path):
     assert rows[0].ts.replace(tzinfo=datetime.timezone.utc) == expected0
 
 
+def test_nanos_events_batch_and_stream_truncate_alike(spark, tmp_path):
+    """load_table and stream_events share one NANOS → µs conversion:
+    sub-µs digits truncate, a NULL ts stays NULL, and the batch and the
+    replayed stream read the same rows."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spk_sl_validation_spark.sources.readers import load_table
+    from spk_sl_validation_spark.streaming.pipeline import run_available_now, stream_events
+
+    base = 1_700_000_000_000_000_000
+    ns = [base + 123_456_789, None, base + 5_000_000_999]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([0, 1, 2], type=pa.int64()),
+                "ts": pa.array(ns, type=pa.timestamp("ns")),
+                "user_id": pa.array([7] * 3, type=pa.int64()),
+                "event_type": pa.array(["click"] * 3),
+                "value": pa.array([1.0] * 3),
+                "props": pa.array(["{}"] * 3),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    epoch = datetime.datetime(1970, 1, 1)
+    want = [
+        (i, None if t is None else epoch + datetime.timedelta(microseconds=t // 1000))
+        for i, t in enumerate(ns)
+    ]
+
+    def rows(df):
+        return sorted(
+            (r.event_id, r.ts if r.ts is None else r.ts.replace(tzinfo=None))
+            for r in df.select("event_id", "ts").collect()
+        )
+
+    sf_dir = str(tmp_path)
+    assert rows(load_table(spark, sf_dir, "events")) == want
+    assert rows(run_available_now(stream_events(spark, sf_dir), "append")) == want
+
+
 def test_xml_declared_schema_roundtrip(spark, tmp_path):
     """Native Spark 4 XML source through load_xml_table: declared
     schema (no inference pass), rowTag extraction, attribute field."""

@@ -215,13 +215,3 @@ def test_substring_dedup_matches_oracle(spark, sf_dir):
     )
     want = con.execute(spec.oracle).fetch_df()[cols]
     assert got_rows == {tuple(r) for r in want.itertuples(index=False)}
-
-
-def test_unknown_ownership_mode_rejected(spark):
-    import pytest
-
-    from spk_sl_validation_spark.ext.text import substring_dedup
-
-    df = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="ownership"):
-        substring_dedup(df, "doc_id", "text", ownership="Window")

@@ -124,7 +124,8 @@ def test_domain_cap_plan_uses_window_group_limit(spark):
     shuffle. domain_cap is deliberately the plain window BECAUSE of
     this rewrite — if it disappears (regression or a version change),
     the operator needs the hand-salted two-phase shape back
-    (tools/skew_probe.py domain_cap_hot documents the trade)."""
+    (SCALE.md §7, "Round-8 URL-curation skew probe", documents the
+    trade)."""
     import re
 
     df = W.domain_cap(_hot_crawl(spark), 5)
@@ -365,6 +366,40 @@ def test_robots_ua_group_selection(spark, token, path, want):
         urls, robots, keep_blocked=True, crawler_token=token
     ).first()
     assert out.allowed == want, (token, path)
+
+
+def test_robots_duplicate_domain_rows_decide_independently(spark):
+    """The documented, unenforced precondition of robots_txt_filter and
+    parse_crawl_delay: one robots row per domain. A domain given twice
+    is decided once per row, so a URL one file disallows comes out both
+    blocked and allowed, and survives the default filter."""
+    urls = spark.createDataFrame(
+        [(1, "https://site1.com/p/1"), (2, "https://site1.com/q"), (3, "https://site2.com/p/1")],
+        "doc_id long, url string",
+    )
+    robots = spark.createDataFrame(
+        [
+            ("site1.com", "User-agent: *\nDisallow: /p\n"),
+            ("site1.com", "User-agent: *\nCrawl-delay: 2\n"),
+        ],
+        "domain string, robots_txt string",
+    )
+    flagged = W.robots_txt_filter(urls, robots, keep_blocked=True)
+    assert sorted((r.doc_id, r.allowed) for r in flagged.collect()) == [
+        (1, False), (1, True), (2, True), (2, True), (3, True)
+    ]
+    kept = W.robots_txt_filter(urls, robots)
+    assert sorted(r.doc_id for r in kept.collect()) == [1, 2, 2, 3]
+    # one crawl-delay row per robots row that carries a usable directive
+    delays = robots.union(
+        spark.createDataFrame(
+            [("site1.com", "User-agent: *\nCrawl-delay: 4\n")],
+            "domain string, robots_txt string",
+        )
+    )
+    assert sorted(
+        (r.domain, r.crawl_delay) for r in W.parse_crawl_delay(delays).collect()
+    ) == [("site1.com", 2.0), ("site1.com", 4.0)]
 
 
 def test_parse_crawl_delay_semantics(spark):
