@@ -40,11 +40,16 @@ _ROUND_DIGITS = 6
 # Sequence packing (concat-and-chunk)
 # ---------------------------------------------------------------------------
 
+#: Training-sequence length of the packed corpus; the oracle twin
+#: :func:`pack_sequences_sql` replays exactly this length.
+SEQ_LEN = 2048
+
+
 def pack_sequences(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    seq_len: int = 2048,
+    seq_len: int = SEQ_LEN,
     chunk_size: int = 1024,
     tokens_col: str | None = None,
 ) -> DataFrame:
@@ -137,7 +142,7 @@ def pack_sequences_continue(
     state: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    seq_len: int = 2048,
+    seq_len: int = SEQ_LEN,
     tokens_col: str | None = None,
 ) -> DataFrame:
     """Continue sequence packing from a :func:`pack_state` artifact:
@@ -175,9 +180,7 @@ def pack_sequences_continue(
     )
 
 
-def pack_sequences_sql(
-    table: str, id_col: str = "doc_id", text_col: str = "text", seq_len: int = 2048
-) -> str:
+def pack_sequences_sql(table: str, id_col: str = "doc_id", text_col: str = "text") -> str:
     """DuckDB twin: the NAIVE single global window — the semantic spec
     the two-phase plan must reproduce exactly."""
     toks = rf"len(string_split_regex(trim({text_col}), '\s+'))"
@@ -190,9 +193,9 @@ o AS (
   FROM n
 )
 SELECT {id_col}, n_tokens, tok_offset,
-       tok_offset // {seq_len} AS seq_id,
-       tok_offset % {seq_len} AS offset_in_seq,
-       (CASE WHEN n_tokens > 0 THEN tok_offset + n_tokens - 1 ELSE tok_offset END) // {seq_len} AS end_seq_id
+       tok_offset // {SEQ_LEN} AS seq_id,
+       tok_offset % {SEQ_LEN} AS offset_in_seq,
+       (CASE WHEN n_tokens > 0 THEN tok_offset + n_tokens - 1 ELSE tok_offset END) // {SEQ_LEN} AS end_seq_id
 FROM o
 """
 

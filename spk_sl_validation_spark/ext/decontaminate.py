@@ -59,9 +59,12 @@ def benchmark_overlap(
     )
 
 
-def bloom_mask_row(
-    bench_g: DataFrame, s_col: str = "s", m_bits: int = 8192, k: int = 5
-) -> DataFrame:
+#: Bloom hash functions of the decontamination prefilter: the mask
+#: (:func:`bloom_mask_row`) and its probe (:func:`bloom_bit_tests`).
+_BLOOM_K = 5
+
+
+def bloom_mask_row(bench_g: DataFrame, s_col: str = "s", m_bits: int = 8192) -> DataFrame:
     """1-row ``map<word_idx, word>`` Bloom bitmask over the distinct
     strings in ``bench_g[s_col]`` — the persistable filter artifact.
     Built IN-PLAN (lazy): per 64-bit word, ``sum(shiftleft(1, pos%64))``
@@ -72,7 +75,7 @@ def bloom_mask_row(
     from spk_sl_validation_spark.ext.sketches import bloom_positions
 
     words = (
-        bloom_positions(bench_g, s_col, m_bits, k)
+        bloom_positions(bench_g, s_col, m_bits, _BLOOM_K)
         .groupBy((F.col("pos") / 64).cast("int").alias("w"))
         .agg(F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))")).alias("v"))
     )
@@ -81,26 +84,22 @@ def bloom_mask_row(
     )
 
 
-def bloom_bit_tests(m_bits: int, k: int, h_col: str = "__h", mask_col: str = "__mask") -> str:
+def bloom_bit_tests(m_bits: int, h_col: str = "__h", mask_col: str = "__mask") -> str:
     """SQL predicate string testing ``h_col`` against a crossJoined
-    :func:`bloom_mask_row` column: k shiftright-&-1 bit tests.
+    :func:`bloom_mask_row` column: ``_BLOOM_K`` shiftright-&-1 bit tests.
     Arithmetic shift is bit-test-safe (the ``& 1`` reads only the
     lowest post-shift bit, sign fill never reaches it for shifts
     < 64); a missing word key yields NULL, which ``= 1`` rejects."""
     from spk_sl_validation_spark.ext.hashing import seeded_perm_sql
 
     tests = []
-    for i in range(k):
+    for i in range(_BLOOM_K):
         pos = f"({seeded_perm_sql(h_col, i)} % {m_bits})"
         tests.append(
             f"(shiftright(element_at({mask_col}, CAST({pos} / 64 AS INT)),"
             f" CAST({pos} % 64 AS INT)) & 1) = 1"
         )
     return " AND ".join(tests)
-
-
-#: Bloom hash functions of :func:`benchmark_overlap_bloom`'s prefilter.
-_BLOOM_K = 5
 
 
 def benchmark_overlap_bloom(
@@ -148,7 +147,7 @@ def benchmark_overlap_bloom(
     from spk_sl_validation_spark.ext.hashing import md5_long
 
     bench_g = shingle_rows(bench, id_col, text_col, n).select("s").distinct()
-    mask_row = bloom_mask_row(bench_g, "s", m_bits, _BLOOM_K)
+    mask_row = bloom_mask_row(bench_g, "s", m_bits)
 
     train_g = (
         shingle_rows(train, id_col, text_col, n)
@@ -157,7 +156,7 @@ def benchmark_overlap_bloom(
         .crossJoin(F.broadcast(mask_row))
     )
     cand = (
-        train_g.filter(F.expr(bloom_bit_tests(m_bits, _BLOOM_K))).drop("__h", "__mask")
+        train_g.filter(F.expr(bloom_bit_tests(m_bits))).drop("__h", "__mask")
     )
 
     overlap = (

@@ -31,6 +31,18 @@ from pyspark.sql import functions as F
 from spk_sl_validation_spark.ext.hashing import md5_long, seeded_perm, ws_tokens
 from spk_sl_validation_spark.ext.text import md5_fingerprint
 
+# Dedup geometry. The operators below and their DuckDB oracles
+# (plans/dedup_shared.py, plans/dedup_queries.py) read these, so engine
+# and oracle cannot desync.
+NUM_HASHES = 12  # MinHash signature length
+BANDS = 6  # LSH bands of NUM_HASHES // BANDS rows each
+SHINGLE_N = 3  # word n-gram width of every shingle set
+JACCARD_TAU = 0.8  # near-dup Jaccard threshold
+PREFIX_JACCARD_TAU = 0.5  # threshold of the exact prefix-filter joins
+SIMHASH_BITS = 32
+MAX_HAMMING = 2  # Hamming radius of every fingerprint near-dup join
+MEDIA_FP_BITS = 64  # int64 media fingerprints (image dHash, audio)
+
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -96,16 +108,6 @@ def minhash_signatures(
         .agg(*aggs)
         .select(id_col, F.array(*[f"mh{i}" for i in range(num_hashes)]).alias("sig"))
     )
-
-
-def with_minhash_signature(
-    df: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 12,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Append ``sig`` to ``df`` (join-back over :func:`minhash_signatures`)."""
-    return df.join(minhash_signatures(df, id_col, text_col, num_hashes), id_col)
 
 
 #: Default hot-bucket cap for LSH candidate generation. A (band, band
@@ -364,7 +366,6 @@ def containment_for_pairs(
     pairs: DataFrame,
     id_col: str,
     text_col: str = "text",
-    n: int = 3,
 ) -> DataFrame:
     """Directional n-gram containment for the given (id_a, id_b)
     pairs: ``cont_a_in_b = |A ∩ B| / |A|`` and symmetrically
@@ -384,7 +385,7 @@ def containment_for_pairs(
     (suffix-array / seed-shingle sampling), out of scope here; within
     the candidate set the computed containment is exact.
     """
-    joined = _pair_doc_sets(df, pairs, id_col, text_col, n)
+    joined = _pair_doc_sets(df, pairs, id_col, text_col, SHINGLE_N)
     inter = F.size(F.array_intersect("__ha", "__hb")).cast("double")
     return joined.select(
         "id_a",
@@ -605,10 +606,6 @@ def duplicate_soft_weights(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 12,
-    bands: int = 6,
-    shingle_n: int = 3,
-    jaccard_threshold: float = 0.8,
     clusters: DataFrame | None = None,
 ) -> DataFrame:
     """Duplicate-aware soft weighting: instead of DROPPING near-dups
@@ -639,7 +636,7 @@ def duplicate_soft_weights(
     """
     if clusters is None:
         clusters = dedup_clusters(
-            df, id_col, text_col, num_hashes, bands, shingle_n, jaccard_threshold
+            df, id_col, text_col, NUM_HASHES, BANDS, SHINGLE_N, JACCARD_TAU
         )
     sizes = clusters.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
     toks = df.select(
@@ -668,16 +665,14 @@ def duplicate_soft_weights(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash_fingerprints(
-    df: DataFrame, id_col: str, text_col: str = "text", bits: int = 32
-) -> DataFrame:
-    """(id, simhash): ``bits``-wide SimHash of the token stream.
+def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
+    """(id, simhash): ``SIMHASH_BITS``-wide SimHash of the token stream.
 
     Frequency-weighted: bit p is set iff a strict majority of tokens
     (with multiplicity) have bit p set in their 60-bit hash.
 
     Shape: explode tokens → one md5 per token → groupBy(id) with
-    ``bits`` conditional-sum aggregates (codegen'd, map-side partial),
+    ``SIMHASH_BITS`` conditional-sum aggregates (codegen'd, map-side partial),
     then assemble the fingerprint from the bit counts. Same rationale
     as minhash_signatures: interpreted array HOFs re-inline the hash
     per bit (~bits× the work); the explode+aggregate plan hashes once
@@ -688,33 +683,30 @@ def simhash_fingerprints(
     )
     aggs = [F.count(F.lit(1)).alias("n")] + [
         F.sum(F.shiftright(F.col("h"), p).bitwiseAND(F.lit(1))).alias(f"ones{p}")
-        for p in range(bits)
+        for p in range(SIMHASH_BITS)
     ]
     counted = hashed.groupBy(id_col).agg(*aggs)
     fp = F.lit(0).cast("long")
-    for p in range(bits):
+    for p in range(SIMHASH_BITS):
         fp = fp + F.when(
             F.col(f"ones{p}") * 2 > F.col("n"), F.lit(1 << p).cast("long")
         ).otherwise(F.lit(0).cast("long"))
     return counted.select(id_col, fp.alias("simhash"))
 
 
-def simhash_near_dup_pairs(
-    df: DataFrame, id_col: str, text_col: str = "text", bits: int = 32, max_hamming: int = 2
-) -> DataFrame:
-    """Exact Hamming-≤k pairs on SimHash fingerprints — the text
-    front-end over :func:`hamming_near_dup_pairs`."""
-    fp_df = simhash_fingerprints(df, id_col, text_col, bits)
-    return hamming_near_dup_pairs(fp_df, id_col, "simhash", bits, max_hamming)
+def simhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
+    """Exact Hamming-≤``MAX_HAMMING`` pairs on SimHash fingerprints —
+    the text front-end over :func:`hamming_near_dup_pairs`."""
+    fp_df = simhash_fingerprints(df, id_col, text_col)
+    return hamming_near_dup_pairs(fp_df, id_col, "simhash", SIMHASH_BITS)
 
 
-def _hamming_fp_pairs(
-    reps: DataFrame, bits: int, max_hamming: int
-) -> DataFrame:
-    """DISTINCT-fingerprint pairs within Hamming ≤ k via banding.
+def _hamming_fp_pairs(reps: DataFrame, bits: int) -> DataFrame:
+    """DISTINCT-fingerprint pairs within Hamming ≤ k = ``MAX_HAMMING``
+    via banding.
 
     ``reps`` is one row per distinct fingerprint (column ``fp``).
-    The fingerprint is split into ``max_hamming + 1`` bit-bands; by
+    The fingerprint is split into ``MAX_HAMMING + 1`` bit-bands; by
     pigeonhole any pair within Hamming distance k agrees exactly on
     ≥1 band, so per-band bucketing + an exact popcount filter is
     *lossless*. Band values for the top band of a 64-bit fingerprint
@@ -724,7 +716,7 @@ def _hamming_fp_pairs(
     Returns (fp_a, fp_b, hamming) with fp_a < fp_b (fingerprints in
     a bucket are distinct by construction, so the order is total).
     """
-    n_bands = max_hamming + 1
+    n_bands = MAX_HAMMING + 1
     width = (bits + n_bands - 1) // n_bands
     bands = F.array(
         *[
@@ -754,7 +746,7 @@ def _hamming_fp_pairs(
         .select(F.col("p.a").alias("fp_a"), F.col("p.b").alias("fp_b"))
         .distinct()
         .select("fp_a", "fp_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= MAX_HAMMING)
     )
 
 
@@ -763,9 +755,8 @@ def hamming_near_dup_pairs(
     id_col: str = "doc_id",
     fp_col: str = "fp",
     bits: int = 32,
-    max_hamming: int = 2,
 ) -> DataFrame:
-    """Exact Hamming-≤k pairs on ANY int64 fingerprint relation
+    """Exact Hamming-≤``MAX_HAMMING`` pairs on ANY int64 fingerprint relation
     (SimHash, image dHash, audio fingerprints …) via banding, with an
     exact-duplicate PRE-COLLAPSE so a dominant identical fingerprint
     (the blank/logo-image flood of a real crawl) can never build an
@@ -791,7 +782,7 @@ def hamming_near_dup_pairs(
     ).localCheckpoint(eager=True)
     groups = members.groupBy("fp").agg(F.count(F.lit(1)).alias("m"))
 
-    fp_pairs = _hamming_fp_pairs(groups.select("fp"), bits, max_hamming)
+    fp_pairs = _hamming_fp_pairs(groups.select("fp"), bits)
 
     # Within-group (identical-fingerprint) pairs ride the SAME
     # expansion joins as cross-group pairs: a multi-member fingerprint
@@ -826,18 +817,17 @@ def hamming_near_dup_edges(
     fp_df: DataFrame,
     id_col: str = "doc_id",
     fp_col: str = "fp",
-    bits: int = 32,
-    max_hamming: int = 2,
 ) -> DataFrame:
-    """CONNECTIVITY-PRESERVING edge set for Hamming-≤k components —
-    the bounded input for connected-components consumers.
+    """CONNECTIVITY-PRESERVING edge set for Hamming-≤``MAX_HAMMING``
+    components over ``MEDIA_FP_BITS``-wide fingerprints — the bounded
+    input for connected-components consumers.
 
     Instead of the full (quadratic-in-group-size) pair relation,
     emits: (a) one STAR edge per non-representative member of each
     identical-fingerprint group (member → min-id representative,
     Hamming 0, m−1 edges for an m-copy group), and (b) the
     representative-level near-dup pairs between DISTINCT fingerprints
-    within Hamming ≤ k. The transitive closure over these edges is
+    within Hamming ≤ ``MAX_HAMMING``. The transitive closure over these edges is
     identical to the closure over :func:`hamming_near_dup_pairs`
     (members of one group are connected via the representative; two
     near-dup groups are connected via their representatives), so
@@ -865,7 +855,7 @@ def hamming_near_dup_edges(
         )
     )
 
-    fp_pairs = _hamming_fp_pairs(groups.select("fp"), bits, max_hamming)
+    fp_pairs = _hamming_fp_pairs(groups.select("fp"), MEDIA_FP_BITS)
     ra = groups.select(F.col("fp").alias("fp_a"), F.col("rep").alias("rep_a"))
     rb = groups.select(F.col("fp").alias("fp_b"), F.col("rep").alias("rep_b"))
     rep_edges = (
@@ -893,9 +883,9 @@ def hamming_near_dup_edges(
 # ---------------------------------------------------------------------------
 
 def ngram_jaccard_pairs(
-    df: DataFrame, id_col: str, text_col: str = "text", n: int = 3, threshold: float = 0.5
+    df: DataFrame, id_col: str, text_col: str = "text", threshold: float = 0.5
 ) -> DataFrame:
-    """Exact Jaccard similarity on distinct word n-gram sets.
+    """Exact Jaccard similarity on distinct word ``SHINGLE_N``-gram sets.
 
     Explode distinct shingles → self-join on shingle → group by pair.
     O(sum of pairs sharing a shingle) — at 100 TB this runs only on
@@ -907,7 +897,7 @@ def ngram_jaccard_pairs(
     # sh feeds three consumers (both self-join sides + sizes); Spark
     # shares no non-cached subtree, so materialize the distinct
     # shingle rows once instead of exploding/deduping the corpus 3×.
-    sh = shingle_rows(df, id_col, text_col, n).distinct().localCheckpoint(eager=True)
+    sh = shingle_rows(df, id_col, text_col, SHINGLE_N).distinct().localCheckpoint(eager=True)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -934,9 +924,6 @@ def dedup_incremental(
     is_new: Column,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 12,
-    bands: int = 6,
-    shingle_n: int = 3,
     jaccard_threshold: float = 0.8,
 ) -> DataFrame:
     """Incremental dedup: flag each NEW document against the existing
@@ -965,8 +952,7 @@ def dedup_incremental(
     the same deterministic rule the oracle replays). Verification
     touches only cross pairs.
     """
-    assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
+    rows_per_band = NUM_HASHES // BANDS
     tagged = df.withColumn("__new", is_new)
 
     # -- exact stage: one fingerprint groupBy-free semi join ----------
@@ -977,7 +963,7 @@ def dedup_incremental(
     )
 
     # -- near stage: asymmetric capped-bucket join --------------------
-    sig_df = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
+    sig_df = minhash_signatures(df, id_col, text_col, NUM_HASHES, SHINGLE_N)
     new_flags = tagged.select(id_col, "__new")
     # capped feeds BOTH sides of the asymmetric band join below; Spark
     # shares no non-cached subtree across join sides, so without
@@ -990,7 +976,7 @@ def dedup_incremental(
     # each eager checkpoint paid a full job's AQE stage-latency chain
     # before the query proper could start).
     capped = (
-        capped_band_rows(sig_df, id_col, rows_per_band, bands)
+        capped_band_rows(sig_df, id_col, rows_per_band, BANDS)
         .join(new_flags, id_col)
         .localCheckpoint(eager=False)
     )
@@ -1017,7 +1003,7 @@ def dedup_incremental(
     # new_id uniquely (lhs is new-only, rhs index-only), so the row set
     # is identical.
     verified = ngram_jaccard_for_pairs(
-        df, cand, id_col, text_col, shingle_n, carry=("new_id",)
+        df, cand, id_col, text_col, SHINGLE_N, carry=("new_id",)
     ).filter(F.col("jaccard") >= jaccard_threshold)
     near_hits = verified.select(F.col("new_id").alias(id_col)).distinct()
 
@@ -1216,9 +1202,7 @@ def merge_into_dedup_index(
     )
 
 
-def jaccard_join_prefix(
-    df: DataFrame, id_col: str, text_col: str = "text", n: int = 3, threshold: float = 0.5
-) -> DataFrame:
+def jaccard_join_prefix(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """Exact Jaccard self-join via prefix filtering (AllPairs, Bayardo
     et al. WWW'07) — same output as :func:`ngram_jaccard_pairs`, with
     candidate generation restricted to pairs sharing a token in their
@@ -1227,7 +1211,7 @@ def jaccard_join_prefix(
     Each document's distinct shingle set is ordered rarest-first by the
     (global frequency, shingle) tuple; a pair with Jaccard >= t must
     share at least one token inside both prefixes of length
-    ``|x| - ceil(t*|x|) + 1``, so only prefix tokens enter the
+    ``|x| - ceil(t*|x|) + 1`` (t = ``PREFIX_JACCARD_TAU``), so only prefix tokens enter the
     candidate self-join. The prefix holds the RAREST tokens, which is
     exactly where join buckets are smallest — the frequent-token
     buckets that make the naive shingle self-join quadratic never
@@ -1252,7 +1236,7 @@ def jaccard_join_prefix(
 
     from spk_sl_validation_spark.ext.hashing import shingle_rows
 
-    sh = shingle_rows(df, id_col, text_col, n).distinct().localCheckpoint(eager=True)
+    sh = shingle_rows(df, id_col, text_col, SHINGLE_N).distinct().localCheckpoint(eager=True)
 
     freq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("cnt"))
     w_doc = Window.partitionBy(id_col)
@@ -1264,7 +1248,7 @@ def jaccard_join_prefix(
         )
         .withColumn("n_sh", F.count(F.lit(1)).over(w_doc))
     )
-    prefix_len = F.col("n_sh") - F.ceil(F.col("n_sh") * F.lit(threshold)) + 1
+    prefix_len = F.col("n_sh") - F.ceil(F.col("n_sh") * F.lit(PREFIX_JACCARD_TAU)) + 1
     prefix = ranked.filter(F.col("pos") <= prefix_len).select(id_col, "s")
 
     a, b = prefix.alias("a"), prefix.alias("b")
@@ -1292,14 +1276,8 @@ def jaccard_join_prefix(
         inter.join(sa.hint("shuffle_hash"), "id_a")
         .join(sb.hint("shuffle_hash"), "id_b")
         .select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= PREFIX_JACCARD_TAU)
     )
-
-
-#: Shingle width of the exact incremental-dedup index: the index
-#: (:func:`prefix_index_tables`) and its probe
-#: (:func:`jaccard_incremental_prefix_indexed`) must agree on it.
-_PREFIX_SHINGLE_N = 3
 
 
 def prefix_index_tables(
@@ -1319,14 +1297,12 @@ def prefix_index_tables(
     :func:`jaccard_incremental_prefix_indexed` against them."""
     from spk_sl_validation_spark.ext.hashing import shingle_rows
 
-    sh = shingle_rows(corpus, id_col, text_col, _PREFIX_SHINGLE_N).distinct()
+    sh = shingle_rows(corpus, id_col, text_col, SHINGLE_N).distinct()
     freq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("cnt"))
     return sh, freq
 
 
-def _prefix_probe_tail(
-    sh_b: DataFrame, sh_c: DataFrame, freq: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
+def _prefix_probe_tail(sh_b: DataFrame, sh_c: DataFrame, freq: DataFrame, id_col: str) -> DataFrame:
     """Shared probe tail of the exact incremental paths: batch prefixes
     (rarest-first by corpus frequency) -> corpus candidate probe ->
     exact verify. ``sh_b`` must be materialized (it feeds four
@@ -1343,7 +1319,7 @@ def _prefix_probe_tail(
         )
         .withColumn("n_sh", F.count(F.lit(1)).over(w_doc))
     )
-    prefix_len = F.col("n_sh") - F.ceil(F.col("n_sh") * F.lit(threshold)) + 1
+    prefix_len = F.col("n_sh") - F.ceil(F.col("n_sh") * F.lit(PREFIX_JACCARD_TAU)) + 1
     prefix = ranked.filter(F.col("pos") <= prefix_len).select(
         F.col(id_col).alias("id_batch"), "s"
     )
@@ -1377,7 +1353,7 @@ def _prefix_probe_tail(
         inter.join(sb.hint("shuffle_hash"), "id_batch")
         .join(sc.hint("shuffle_hash"), "id_corpus")
         .select("id_batch", "id_corpus", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= PREFIX_JACCARD_TAU)
     )
 
 
@@ -1388,19 +1364,19 @@ def jaccard_incremental_prefix_indexed(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Exact batch-vs-corpus Jaccard (threshold 0.5) against a PREBUILT
-    index (:func:`prefix_index_tables`) — identical output to
-    :func:`jaccard_incremental_prefix` at its defaults; the index
+    """Exact batch-vs-corpus Jaccard (threshold ``PREFIX_JACCARD_TAU``)
+    against a PREBUILT index (:func:`prefix_index_tables`) — identical
+    output to :func:`jaccard_incremental_prefix`; the index
     tables are scanned, never recomputed, so the batch pays
     everything."""
     from spk_sl_validation_spark.ext.hashing import shingle_rows
 
     sh_b = (
-        shingle_rows(batch, id_col, text_col, _PREFIX_SHINGLE_N)
+        shingle_rows(batch, id_col, text_col, SHINGLE_N)
         .distinct()
         .localCheckpoint(eager=True)
     )
-    return _prefix_probe_tail(sh_b, index_sh, index_freq, id_col, 0.5)
+    return _prefix_probe_tail(sh_b, index_sh, index_freq, id_col)
 
 
 def jaccard_incremental_prefix(
@@ -1408,8 +1384,6 @@ def jaccard_incremental_prefix(
     corpus: DataFrame,
     id_col: str,
     text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
 ) -> DataFrame:
     """Exact batch-vs-corpus Jaccard pairs via ONE-SIDED prefix
     filtering — the lossless twin of :func:`dedup_incremental`'s LSH
@@ -1417,7 +1391,8 @@ def jaccard_incremental_prefix(
 
     Only the batch builds prefixes (rarest-first by corpus frequency;
     tokens unseen in the corpus sort first and hit empty buckets —
-    harmless and still lossless): a pair with J >= t shares at least
+    harmless and still lossless): a pair with J >= t =
+    ``PREFIX_JACCARD_TAU`` shares at least
     ``ceil(t*|B|)`` tokens, which cannot all hide in B's suffix of
     length ``ceil(t*|B|) - 1``, so some shared token is in B's prefix
     of length ``|B| - ceil(t*|B|) + 1``. The corpus side is probed
@@ -1426,11 +1401,11 @@ def jaccard_incremental_prefix(
     on the shingle; the batch pays everything else, so probe cost is
     proportional to batch size.
 
-    Returns (id_batch, id_corpus, jaccard) with jaccard >= threshold.
+    Returns (id_batch, id_corpus, jaccard) with jaccard >= t.
     """
     from spk_sl_validation_spark.ext.hashing import shingle_rows
 
-    sh_b = shingle_rows(batch, id_col, text_col, n).distinct().localCheckpoint(eager=True)
-    sh_c = shingle_rows(corpus, id_col, text_col, n).distinct().localCheckpoint(eager=True)
+    sh_b = shingle_rows(batch, id_col, text_col, SHINGLE_N).distinct().localCheckpoint(eager=True)
+    sh_c = shingle_rows(corpus, id_col, text_col, SHINGLE_N).distinct().localCheckpoint(eager=True)
     freq = sh_c.groupBy("s").agg(F.count(F.lit(1)).alias("cnt"))
-    return _prefix_probe_tail(sh_b, sh_c, freq, id_col, threshold)
+    return _prefix_probe_tail(sh_b, sh_c, freq, id_col)

@@ -15,11 +15,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+#: Token-bucket size and refill (tokens per second of event-time gap)
+#: of the registered rate-limit query and its oracle.
+RL_CAP = 5.0
+RL_RATE = 0.01
+
 
 def rate_limit_accept(
     df: DataFrame,
-    cap: float = 5.0,
-    rate_per_s: float = 0.01,
+    cap: float = RL_CAP,
+    rate_per_s: float = RL_RATE,
     user_col: str = "user_id",
     ts_col: str = "ts",
     id_col: str = "event_id",
@@ -89,15 +94,11 @@ def rate_limit_accept(
     )
 
 
-def rate_limit_oracle_sql(
-    table: str = "events",
-    cap: float = 5.0,
-    rate_per_s: float = 0.01,
-    where: str = "TRUE",
-) -> str:
-    """Recursive-CTE replay of :func:`rate_limit_accept` (same IEEE
-    expression order; ``avail`` is computed in a lateral-style
-    projection so the clamp appears exactly once per step)."""
+def rate_limit_oracle_sql(table: str = "events", where: str = "TRUE") -> str:
+    """Recursive-CTE replay of :func:`rate_limit_accept` at ``RL_CAP``
+    and ``RL_RATE`` (same IEEE expression order; ``avail`` is computed
+    in a lateral-style projection so the clamp appears exactly once
+    per step)."""
     return f"""
 WITH RECURSIVE ev AS (
   SELECT user_id, event_id, ts, epoch_us(ts) AS us,
@@ -106,8 +107,8 @@ WITH RECURSIVE ev AS (
 ),
 st(user_id, idx, us, tokens, accepted, event_id, ts) AS (
   SELECT user_id, idx, us,
-         CAST(CASE WHEN {cap!r} >= 1.0 THEN {cap!r} - 1.0 ELSE {cap!r} END AS DOUBLE),
-         {cap!r} >= 1.0, event_id, ts
+         CAST(CASE WHEN {RL_CAP!r} >= 1.0 THEN {RL_CAP!r} - 1.0 ELSE {RL_CAP!r} END AS DOUBLE),
+         {RL_CAP!r} >= 1.0, event_id, ts
   FROM ev WHERE idx = 1
   UNION ALL
   SELECT e.user_id, e.idx, e.us,
@@ -116,8 +117,8 @@ st(user_id, idx, us, tokens, accepted, event_id, ts) AS (
   FROM st
   JOIN ev e ON e.user_id = st.user_id AND e.idx = st.idx + 1
   CROSS JOIN LATERAL (
-    SELECT least(CAST({cap!r} AS DOUBLE), st.tokens
-                 + (CAST(e.us - st.us AS DOUBLE) / 1000000.0) * {rate_per_s!r}) AS avail
+    SELECT least(CAST({RL_CAP!r} AS DOUBLE), st.tokens
+                 + (CAST(e.us - st.us AS DOUBLE) / 1000000.0) * {RL_RATE!r}) AS avail
   ) a
 )
 SELECT event_id, user_id, ts, accepted, round(tokens, 6) AS tokens_after

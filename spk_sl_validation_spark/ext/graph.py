@@ -138,12 +138,9 @@ def _pagerank_step(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = ITERATIONS,
-) -> DataFrame:
+def pagerank(edges: DataFrame) -> DataFrame:
     """(node, rank): weighted PageRank with dangling-mass
-    redistribution, ``iterations`` fixed power iterations, damping
+    redistribution, ``ITERATIONS`` fixed power iterations, damping
     ``d = DAMPING``.
 
     update: rank'(v) = (1-d)/N + d * (Σ_{u→v} rank(u)·w(u,v)/out(u)
@@ -158,7 +155,7 @@ def pagerank(
     :func:`pagerank_until_delta`.
     """
     edges, nodes, n_df, out_w, ranks = _pagerank_setup(edges)
-    for _ in range(iterations):
+    for _ in range(ITERATIONS):
         ranks = _pagerank_step(edges, nodes, n_df, out_w, ranks)
         # rank_i feeds both next-iteration terms (inflow + dangling);
         # without truncation the lineage doubles per iteration. Lazy
@@ -284,8 +281,8 @@ def pagerank_until_delta(
     The production story at 100 TB, where a fixed unroll either wastes
     passes or stops short: per-iteration arithmetic is IDENTICAL to
     :func:`pagerank` (same round-to-12 exact-decimal updates), so with
-    ``eps=0.0, max_iter=k`` this returns bit-identical ranks to
-    ``pagerank(iterations=k)`` — pinned by test. Driver traffic is one
+    ``eps=0.0, max_iter=ITERATIONS`` this returns bit-identical ranks
+    to :func:`pagerank` — pinned by test. Driver traffic is one
     scalar (the L∞ delta) per iteration; lineage is truncated by an
     eager ``localCheckpoint`` every ``checkpoint_every`` iterations
     (between truncations the plan grows by at most that many steps —

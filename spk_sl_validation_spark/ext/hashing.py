@@ -167,7 +167,11 @@ def word_shingles_sql(tokens_expr: str, n: int = 3) -> str:
 # Z-order (Morton) bit interleave
 # ---------------------------------------------------------------------------
 
-def z_value_expr(x: str, y: str, bits: int = 16) -> str:
+#: Bits per coordinate of the z-order layout stats query and its oracle.
+Z_BITS = 16
+
+
+def z_value_expr(x: str, y: str, bits: int = Z_BITS) -> str:
     """Spark SQL expression interleaving the low ``bits`` of two
     integer expressions into a Morton z-value (x at even positions).
     Pure codegen'd integer bit math; shared by the z-order layout
@@ -185,12 +189,12 @@ def z_value_expr(x: str, y: str, bits: int = 16) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def z_value_sql(x: str, y: str, bits: int = 16) -> str:
-    """DuckDB twin of :func:`z_value_expr` (operator syntax; same
-    BIGINT widening)."""
+def z_value_sql(x: str, y: str) -> str:
+    """DuckDB twin of :func:`z_value_expr` at ``Z_BITS`` (operator
+    syntax; same BIGINT widening)."""
     xb, yb = f"CAST({x} AS BIGINT)", f"CAST({y} AS BIGINT)"
     terms = [
         f"((({xb} >> {i}) & 1) << {2 * i}) + ((({yb} >> {i}) & 1) << {2 * i + 1})"
-        for i in range(bits)
+        for i in range(Z_BITS)
     ]
     return "(" + " + ".join(terms) + ")"

@@ -290,8 +290,12 @@ RESIZED_SCHEMA = T.StructType(
 )
 
 
-def resize_media(df: DataFrame, factor: int = 4, media_col: str = "media") -> DataFrame:
-    """Downsample payloads by keeping every ``factor``-th byte — the
+#: Keep every RESIZE_FACTOR-th byte (:func:`resize_media`).
+RESIZE_FACTOR = 4
+
+
+def resize_media(df: DataFrame, media_col: str = "media") -> DataFrame:
+    """Downsample payloads by keeping every ``RESIZE_FACTOR``-th byte — the
     batch shape of an image/audio resample (binary in, smaller binary
     out). Output is summarized as (sizes, md5) so results stay compact
     and exactly verifiable."""
@@ -305,7 +309,7 @@ def resize_media(df: DataFrame, factor: int = 4, media_col: str = "media") -> Da
             digests: list[str] = []
             for doc_id, data in zip(pdf["doc_id"], pdf[media_col]):
                 raw = bytes(data)
-                small = raw[::factor]
+                small = raw[::RESIZE_FACTOR]
                 ids.append(doc_id)
                 n_in.append(len(raw))
                 n_out.append(len(small))
@@ -330,10 +334,12 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def sample_frames(
-    df: DataFrame, frame_size: int = 64, stride: int = 128, media_col: str = "media"
-) -> DataFrame:
-    """Sample fixed-size byte windows ('frames') every ``stride`` bytes
+FRAME_SIZE = 64  # bytes per sampled frame
+FRAME_STRIDE = 128  # bytes between frame starts
+
+
+def sample_frames(df: DataFrame, media_col: str = "media") -> DataFrame:
+    """Sample ``FRAME_SIZE``-byte windows ('frames') every ``FRAME_STRIDE`` bytes
     — the row-expanding (1→N) batch shape of video frame extraction.
     Returns the md5 of each frame so results are compact + verifiable."""
     import hashlib
@@ -345,10 +351,10 @@ def sample_frames(
             hashes: list[str] = []
             for doc_id, data in zip(pdf["doc_id"], pdf[media_col]):
                 raw = bytes(data)
-                for i, start in enumerate(range(0, len(raw), stride)):
+                for i, start in enumerate(range(0, len(raw), FRAME_STRIDE)):
                     ids.append(doc_id)
                     idxs.append(i)
-                    hashes.append(hashlib.md5(raw[start : start + frame_size]).hexdigest())
+                    hashes.append(hashlib.md5(raw[start : start + FRAME_SIZE]).hexdigest())
             yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame_md5": hashes})
 
     return df.mapInPandas(run, FRAME_SCHEMA)

@@ -114,27 +114,33 @@ def brute_force_topk(
     )
 
 
+#: Neighbors kept per query by the approximate top-k operators
+#: (:func:`bucketed_topk`, :func:`ivf_topk`, :func:`ivf_topk_indexed`,
+#: :func:`pq_adc_topk`).
+ANN_K = 5
+#: Sign-LSH bucket width of :func:`bucketed_topk`.
+LSH_BITS = 8
+
+
 def bucketed_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    bits: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's sign-LSH
+    """Approximate top-``ANN_K``: candidates restricted to the query's sign-LSH
     bucket, exact cosine rerank inside. The cross product becomes an
     equi-join on bucket — at 100 TB the corpus is hash-partitioned
     (or bucketed at rest) on the LSH key and the probe touches one
     partition per query."""
     from pyspark.sql import Window
 
-    cb = corpus.select(id_col, vec_col, sign_lsh_bucket(F.col(vec_col), bits).alias("bucket"))
+    cb = corpus.select(id_col, vec_col, sign_lsh_bucket(F.col(vec_col), LSH_BITS).alias("bucket"))
     qb = F.broadcast(
         queries.select(
             F.col(id_col).alias("q_id"),
             F.col(vec_col).alias("q_vec"),
-            sign_lsh_bucket(F.col(vec_col), bits).alias("bucket"),
+            sign_lsh_bucket(F.col(vec_col), LSH_BITS).alias("bucket"),
         )
     )
     scored = (
@@ -143,7 +149,7 @@ def bucketed_topk(
         .select("q_id", id_col, cosine(F.col("q_vec"), F.col(vec_col)).alias("cos_sim"))
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= ANN_K)
 
 
 def sq_l2(a: Column, b: Column) -> Column:
@@ -188,11 +194,10 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     centroids: DataFrame,
-    k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF approximate top-k (nprobe=1): assign corpus and queries to
+    """IVF approximate top-``ANN_K`` (nprobe=1): assign corpus and queries to
     centroids, equi-join on centroid id, exact cosine rerank within
     the probed list. At 100 TB the corpus is partitioned (or bucketed
     at rest) by centroid id, so a query touches one inverted list —
@@ -211,7 +216,7 @@ def ivf_topk(
         .select("q_id", id_col, cosine(F.col("q_vec"), F.col(vec_col)).alias("cos_sim"))
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= ANN_K)
 
 
 # ---------------------------------------------------------------------------
@@ -275,12 +280,11 @@ def ivf_topk_indexed(
     queries: DataFrame,
     centroids: DataFrame,
     lists: DataFrame,
-    k: int = 5,
     nprobe: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF top-k against prebuilt artifacts: queries assign to their
+    """IVF top-``ANN_K`` against prebuilt artifacts: queries assign to their
     ``nprobe`` nearest centroids (broadcast centroid table, no corpus
     work), then equi-join the persisted inverted lists and exact-
     cosine rerank inside the probed lists. Query cost is bounded by
@@ -303,7 +307,7 @@ def ivf_topk_indexed(
     # SAME query only via distinct lists — impossible here because each
     # corpus vector lives in exactly one list; no dedup needed.
     w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= ANN_K)
 
 
 def merge_into_ivf_index(
@@ -679,13 +683,12 @@ def pq_adc_topk(
     corpus: DataFrame,
     queries: DataFrame,
     train: DataFrame,
-    k: int = 5,
     n_sub: int = 8,
     sub_dim: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """PQ approximate top-k via Asymmetric Distance Computation:
+    """PQ approximate top-``ANN_K`` via Asymmetric Distance Computation:
     queries stay full-precision, corpus vectors are their PQ codes,
     distance ≈ Σ_s lookup(q, s, code[v][s]).
 
@@ -729,7 +732,7 @@ def pq_adc_topk(
         )
     )
     w = Window.partitionBy("q_id").orderBy(F.col("approx_dist").asc(), F.col(id_col).asc())
-    return dist.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return dist.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= ANN_K)
 
 
 def quantize_int8(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -781,24 +784,27 @@ def quantize_int8(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
 #: projection is part of the operator contract, like a shipped model.
 RP_SEED = 1234
 RP_OUT_DIM = 16
+#: :func:`projected_rerank_topk` reranks the top ``k·RP_SHORTLIST_MULT``
+#: projected candidates exactly.
+RP_SHORTLIST_MULT = 4
 
 
-def _rp_signs(in_dim: int, out_dim: int = RP_OUT_DIM) -> list[list[int]]:
+def _rp_signs(in_dim: int) -> list[list[int]]:
     import random
 
     rng = random.Random(RP_SEED)
-    return [[1 if rng.random() < 0.5 else -1 for _ in range(in_dim)] for _ in range(out_dim)]
+    return [[1 if rng.random() < 0.5 else -1 for _ in range(in_dim)] for _ in range(RP_OUT_DIM)]
 
 
-def random_projection(vec: str, in_dim: int, out_dim: int = RP_OUT_DIM) -> Column:
-    """JL sign random projection to ``out_dim`` dims: y_j = Σ_i ±x_i,
+def random_projection(vec: str, in_dim: int) -> Column:
+    """JL sign random projection to ``RP_OUT_DIM`` dims: y_j = Σ_i ±x_i,
     as a fully codegen'd unrolled expression (no interpreted HOFs, no
     UDF). With ±1 entries each output coordinate is a fixed
     left-associative chain of adds/subtracts of the (double-widened)
     inputs — bit-deterministic, so the SQL oracle replays it exactly.
 
     ``vec`` is a Spark-SQL expression string (column name), not a
-    Column: the whole out_dim×in_dim tree is built as ONE ``F.expr``
+    Column: the whole RP_OUT_DIM×in_dim tree is built as ONE ``F.expr``
     text and parsed JVM-side in a single call — building it from
     Column operators costs ~3 000 py4j round-trips (~5 s of plan
     analysis per query, measured), 12× the whole query.
@@ -809,9 +815,9 @@ def random_projection(vec: str, in_dim: int, out_dim: int = RP_OUT_DIM) -> Colum
     distortion; the rerank restores exactness of the final ranking
     within the shortlist).
     """
-    signs = _rp_signs(in_dim, out_dim)
+    signs = _rp_signs(in_dim)
     coords = []
-    for j in range(out_dim):
+    for j in range(RP_OUT_DIM):
         terms = []
         for i in range(in_dim):
             t = f"CAST({vec}[{i}] AS DOUBLE)"
@@ -839,34 +845,32 @@ def projected_rerank_topk(
     queries: DataFrame,
     k: int = 10,
     in_dim: int = 64,
-    out_dim: int = RP_OUT_DIM,
-    shortlist_mult: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Two-stage ANN: shortlist by projected dot product (cheap,
-    ``out_dim``-dim), exact-cosine rerank of the ``k·shortlist_mult``
+    ``RP_OUT_DIM``-dim), exact-cosine rerank of the ``k·RP_SHORTLIST_MULT``
     survivors (full ``in_dim``-dim) — top-k per query.
 
     Same physical shape as :func:`brute_force_topk` (broadcast
     queries, WindowGroupLimit top-k consolidation), but the wide
     crossJoin phase carries ONLY (q_id, id, projected score) — three
     narrow values per pair; the full ``in_dim`` vectors are joined
-    back to the ≤ k·shortlist_mult survivors for the exact rerank
+    back to the ≤ k·RP_SHORTLIST_MULT survivors for the exact rerank
     (the survivors are broadcast into the checkpointed projected
     corpus). The projected corpus is lazily checkpointed so
-    CollapseProject cannot push the out_dim×in_dim projection past the
+    CollapseProject cannot push the RP_OUT_DIM×in_dim projection past the
     join — it must evaluate once per corpus ROW, never once per PAIR.
     """
     from pyspark.sql import Window
 
     cp = corpus.select(
-        id_col, vec_col, random_projection(vec_col, in_dim, out_dim).alias("__p")
+        id_col, vec_col, random_projection(vec_col, in_dim).alias("__p")
     ).localCheckpoint(eager=False)
     q_all = queries.select(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("__q_vec"),
-        random_projection(vec_col, in_dim, out_dim).alias("__q_p"),
+        random_projection(vec_col, in_dim).alias("__q_p"),
     )
     scored = (
         cp.select(id_col, "__p")
@@ -881,7 +885,7 @@ def projected_rerank_topk(
     w = Window.partitionBy("q_id").orderBy(F.col("__pscore").desc(), F.col(id_col).asc())
     short = (
         scored.withColumn("__rs", F.row_number().over(w))
-        .filter(F.col("__rs") <= k * shortlist_mult)
+        .filter(F.col("__rs") <= k * RP_SHORTLIST_MULT)
         .select("q_id", id_col)
     )
     reranked = (
@@ -894,17 +898,20 @@ def projected_rerank_topk(
     return reranked.withColumn("rank", F.row_number().over(w2)).filter(F.col("rank") <= k)
 
 
+#: MMR relevance weight; ``1 - MMR_LAM`` weighs redundancy.
+MMR_LAM = 0.7
+
+
 def mmr_select(
     pool: DataFrame,
     k: int,
-    lam: float = 0.7,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     rel_col: str = "rel",
 ) -> DataFrame:
     """Maximal Marginal Relevance selection (Carbonell & Goldstein,
     SIGIR'98): greedily pick ``k`` items maximizing
-    ``lam * rel - (1 - lam) * max_sim_to_already_selected``.
+    ``MMR_LAM * rel - (1 - MMR_LAM) * max_sim_to_already_selected``.
 
     ``pool`` is the (id, vec, rel) candidate relation — in production
     the top-N output of a retrieval stage, so it is SMALL by
@@ -947,8 +954,8 @@ def mmr_select(
             .join(F.broadcast(msim), id_col, "left")
             .withColumn(
                 "__mmr",
-                F.lit(lam) * F.col(rel_col)
-                - F.lit(1.0 - lam) * F.coalesce(F.col("__m"), F.lit(0.0)),
+                F.lit(MMR_LAM) * F.col(rel_col)
+                - F.lit(1.0 - MMR_LAM) * F.coalesce(F.col("__m"), F.lit(0.0)),
             )
         )
         pick = (

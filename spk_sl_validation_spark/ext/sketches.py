@@ -35,6 +35,16 @@ from spk_sl_validation_spark.ext.hashing import md5_long, md5_long_sql
 
 HASH_BITS = 60  # md5_long yields a 60-bit positive long
 
+# Sketch sizes. Each Spark operator and its ``*_sql`` DuckDB twin read
+# the same constant, so the two engines build the same sketch.
+HLL_P = 6  # 2^6 = 64 registers
+CMS_DEPTH = 4
+CMS_WIDTH = 64
+KMV_K = 128
+BLOOM_BITS = 2048
+BLOOM_K = 5
+BOTTOMK_K = 1024
+
 # ---------------------------------------------------------------------------
 # HyperLogLog
 # ---------------------------------------------------------------------------
@@ -49,20 +59,20 @@ def _alpha(m: int) -> float:
     return _ALPHA.get(m, 0.7213 / (1 + 1.079 / m))
 
 
-def hll_registers(df: DataFrame, col: str, p: int = 6) -> DataFrame:
+def hll_registers(df: DataFrame, col: str) -> DataFrame:
     """(register, max_rank): the HLL sketch state for ``df[col]``.
 
-    h = md5_long(col); register = low ``p`` bits; rank = 1 + leading
-    zeros of the remaining ``B = 60 - p`` bits (B + 1 if they are all
+    h = md5_long(col); register = low ``HLL_P`` bits; rank = 1 + leading
+    zeros of the remaining ``B = 60 - HLL_P`` bits (B + 1 if they are all
     zero). One groupBy(register) max — partial aggregation collapses
-    every partition to ≤ 2^p rows before the shuffle, so sketch cost
-    at 100 TB is a 2^p-row exchange.
+    every partition to ≤ 2^HLL_P rows before the shuffle, so sketch
+    cost at 100 TB is a 64-row exchange.
     """
-    m = 1 << p
-    bits = HASH_BITS - p
+    m = 1 << HLL_P
+    bits = HASH_BITS - HLL_P
     h = md5_long(F.col(col).cast("string"))
     reg = (h % F.lit(m)).alias("register")
-    w = F.shiftright(h, p)
+    w = F.shiftright(h, HLL_P)
     first_one = F.instr(F.lpad(F.bin(w), bits, "0"), "1")
     rank = F.when(w == 0, F.lit(bits + 1)).otherwise(first_one)
     return (
@@ -72,7 +82,7 @@ def hll_registers(df: DataFrame, col: str, p: int = 6) -> DataFrame:
     )
 
 
-def hll_estimate(df: DataFrame, col: str, p: int = 6) -> DataFrame:
+def hll_estimate(df: DataFrame, col: str) -> DataFrame:
     """Single-row HLL cardinality estimate with the exact count and
     relative error alongside (the exact side exists for the oracle
     comparison; a production run would drop it).
@@ -91,20 +101,20 @@ def hll_estimate(df: DataFrame, col: str, p: int = 6) -> DataFrame:
     itself compares exact-arithmetic values, so both engines take the
     same branch).
     """
-    regs = hll_registers(df, col, p)
+    regs = hll_registers(df, col)
     exact = df.select(F.countDistinct(col).alias("exact_distinct"))
-    return hll_estimate_from_registers(regs, exact, p)
+    return hll_estimate_from_registers(regs, exact)
 
 
-def _hll_finish_exprs(p: int):
+def _hll_finish_exprs():
     """(raw, est) Column expressions over a relation carrying
     ``active_registers`` and ``z_present`` — THE single copy of the
     HLL finishing math (integer-domain harmonic sum, small-range
     linear-counting correction, round-6). Shared by the global,
     per-group, and profiling estimators so the correction can never
     desynchronize between them."""
-    m = 1 << p
-    b1 = HASH_BITS - p + 1
+    m = 1 << HLL_P
+    b1 = HASH_BITS - HLL_P + 1
     z_int = (
         F.col("z_present")
         + (F.lit(m) - F.col("active_registers")) * F.lit(1 << b1).cast("long")
@@ -118,7 +128,7 @@ def _hll_finish_exprs(p: int):
     return raw, est
 
 
-def hll_estimate_from_registers(regs: DataFrame, exact: DataFrame, p: int = 6) -> DataFrame:
+def hll_estimate_from_registers(regs: DataFrame, exact: DataFrame) -> DataFrame:
     """Finish the HLL estimate from a (register, max_rank) sketch table
     and a single-row ``exact`` frame with ``exact_distinct``.
 
@@ -127,15 +137,15 @@ def hll_estimate_from_registers(regs: DataFrame, exact: DataFrame, p: int = 6) -
     a streaming aggregation's state update or a cross-datacenter merge
     does — the batch and streaming HLL queries share this tail.
     """
-    m = 1 << p
-    b1 = HASH_BITS - p + 1
+    m = 1 << HLL_P
+    b1 = HASH_BITS - HLL_P + 1
     agg_row = regs.agg(
         F.count(F.lit(1)).cast("long").alias("active_registers"),
         # shiftleft's bit count must be a column here; F.shiftleft only
         # accepts a literal int, so spell it in SQL.
         F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {b1} - max_rank)")).alias("z_present"),
     )
-    raw, est = _hll_finish_exprs(p)
+    raw, est = _hll_finish_exprs()
     return (
         agg_row.crossJoin(exact)
         .select(
@@ -149,18 +159,18 @@ def hll_estimate_from_registers(regs: DataFrame, exact: DataFrame, p: int = 6) -
     )
 
 
-def hll_estimate_sql(table: str, col: str, p: int = 6) -> str:
+def hll_estimate_sql(table: str, col: str) -> str:
     """DuckDB twin of :func:`hll_estimate` (same bits, same integers)."""
-    m = 1 << p
-    bits = HASH_BITS - p
+    m = 1 << HLL_P
+    bits = HASH_BITS - HLL_P
     b1 = bits + 1
     h = md5_long_sql(f"CAST({col} AS VARCHAR)")
     return f"""
 WITH h AS (SELECT {h} AS h FROM {table}),
 r AS (
   SELECT h % {m} AS register,
-         CASE WHEN (h >> {p}) = 0 THEN {b1}
-              ELSE strpos(lpad(bin(h >> {p}), {bits}, '0'), '1') END AS rank
+         CASE WHEN (h >> {HLL_P}) = 0 THEN {b1}
+              ELSE strpos(lpad(bin(h >> {HLL_P}), {bits}, '0'), '1') END AS rank
   FROM h
 ),
 regs AS (SELECT register, max(rank) AS max_rank FROM r GROUP BY register),
@@ -193,7 +203,7 @@ FROM c
 """
 
 
-def hll_estimate_by(df: DataFrame, group_col: str, col: str, p: int = 6) -> DataFrame:
+def hll_estimate_by(df: DataFrame, group_col: str, col: str) -> DataFrame:
     """Per-group HLL cardinality estimates — the dashboard shape a
     100 TB pipeline queries constantly (distinct users per event type,
     distinct docs per source) where per-group exact COUNT(DISTINCT)
@@ -201,16 +211,16 @@ def hll_estimate_by(df: DataFrame, group_col: str, col: str, p: int = 6) -> Data
 
     Same bit-exact math as :func:`hll_estimate`, keyed by
     ``group_col``: partial aggregation collapses every partition to
-    ≤ n_groups · 2^p rows before the shuffle, and the finishing
+    ≤ n_groups · 2^HLL_P rows before the shuffle, and the finishing
     aggregate + exact-side join are n_groups-sized. The exact count
     rides along per group for the oracle comparison (a production run
     would drop it and the expand it costs).
     """
-    m = 1 << p
-    bits = HASH_BITS - p
+    m = 1 << HLL_P
+    bits = HASH_BITS - HLL_P
     b1 = bits + 1
     h = md5_long(F.col(col).cast("string"))
-    w = F.shiftright(h, p)
+    w = F.shiftright(h, HLL_P)
     first_one = F.instr(F.lpad(F.bin(w), bits, "0"), "1")
     rank = F.when(w == 0, F.lit(bits + 1)).otherwise(first_one)
     regs = (
@@ -223,7 +233,7 @@ def hll_estimate_by(df: DataFrame, group_col: str, col: str, p: int = 6) -> Data
         F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {b1} - max_rank)")).alias("z_present"),
     )
     exact = df.groupBy(group_col).agg(F.countDistinct(col).alias("exact_distinct"))
-    _, est = _hll_finish_exprs(p)
+    _, est = _hll_finish_exprs()
     return (
         agg.join(exact.hint("shuffle_hash"), group_col)
         .select(
@@ -236,18 +246,18 @@ def hll_estimate_by(df: DataFrame, group_col: str, col: str, p: int = 6) -> Data
     )
 
 
-def hll_estimate_by_sql(table: str, group_col: str, col: str, p: int = 6) -> str:
+def hll_estimate_by_sql(table: str, group_col: str, col: str) -> str:
     """DuckDB twin of :func:`hll_estimate_by`."""
-    m = 1 << p
-    bits = HASH_BITS - p
+    m = 1 << HLL_P
+    bits = HASH_BITS - HLL_P
     b1 = bits + 1
     h = md5_long_sql(f"CAST({col} AS VARCHAR)")
     return f"""
 WITH h AS (SELECT {group_col} AS g, {h} AS h FROM {table}),
 r AS (
   SELECT g, h % {m} AS register,
-         CASE WHEN (h >> {p}) = 0 THEN {b1}
-              ELSE strpos(lpad(bin(h >> {p}), {bits}, '0'), '1') END AS rank
+         CASE WHEN (h >> {HLL_P}) = 0 THEN {b1}
+              ELSE strpos(lpad(bin(h >> {HLL_P}), {bits}, '0'), '1') END AS rank
   FROM h
 ),
 regs AS (SELECT g, register, max(rank) AS max_rank FROM r GROUP BY g, register),
@@ -280,19 +290,19 @@ FROM c JOIN x USING (g)
 """
 
 
-def hll_profile(df: DataFrame, cols: list[str], p: int = 6) -> DataFrame:
+def hll_profile(df: DataFrame, cols: list[str]) -> DataFrame:
     """Per-column NDV estimates for many columns in ONE scan: each row
     explodes into (column-name, value) pairs and every column's HLL
     registers accumulate in the same grouped aggregate.
 
     Output: (cname, active_registers, hll_estimate, exact_distinct,
     rel_err). The profiling shape that matters at 100 TB: c columns
-    cost one pass and c·2^p aggregate rows, not c passes. (The exact
+    cost one pass and c·2^HLL_P aggregate rows, not c passes. (The exact
     NDV column exists for the oracle comparison; production profiling
     drops it — that's the entire point of the sketch.)
     """
-    m = 1 << p
-    bits = HASH_BITS - p
+    m = 1 << HLL_P
+    bits = HASH_BITS - HLL_P
     b1 = bits + 1
     pairs = F.array(
         *[
@@ -304,7 +314,7 @@ def hll_profile(df: DataFrame, cols: list[str], p: int = 6) -> DataFrame:
         F.col("val").isNotNull()
     )
     h = md5_long(F.col("val"))
-    w = F.shiftright(h, p)
+    w = F.shiftright(h, HLL_P)
     first_one = F.instr(F.lpad(F.bin(w), bits, "0"), "1")
     rank = F.when(w == 0, F.lit(b1)).otherwise(first_one)
     regs = (
@@ -316,7 +326,7 @@ def hll_profile(df: DataFrame, cols: list[str], p: int = 6) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("active_registers"),
         F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {b1} - max_rank)")).alias("z_present"),
     )
-    _, est = _hll_finish_exprs(p)
+    _, est = _hll_finish_exprs()
     exact = v.groupBy("cname").agg(F.countDistinct("val").alias("exact_distinct"))
     return (
         z.join(exact, "cname")
@@ -330,10 +340,10 @@ def hll_profile(df: DataFrame, cols: list[str], p: int = 6) -> DataFrame:
     )
 
 
-def hll_profile_sql(table: str, cols: list[str], p: int = 6) -> str:
+def hll_profile_sql(table: str, cols: list[str]) -> str:
     """DuckDB twin of :func:`hll_profile`."""
-    m = 1 << p
-    bits = HASH_BITS - p
+    m = 1 << HLL_P
+    bits = HASH_BITS - HLL_P
     b1 = bits + 1
     unions = " UNION ALL ".join(
         f"SELECT '{c}' AS cname, CAST({c} AS VARCHAR) AS val FROM {table}" for c in cols
@@ -344,8 +354,8 @@ WITH v AS (SELECT cname, val FROM ({unions}) WHERE val IS NOT NULL),
 hh AS (SELECT cname, {h} AS h FROM v),
 r AS (
   SELECT cname, h % {m} AS register,
-         CASE WHEN (h >> {p}) = 0 THEN {b1}
-              ELSE strpos(lpad(bin(h >> {p}), {bits}, '0'), '1') END AS rank
+         CASE WHEN (h >> {HLL_P}) = 0 THEN {b1}
+              ELSE strpos(lpad(bin(h >> {HLL_P}), {bits}, '0'), '1') END AS rank
   FROM hh
 ),
 regs AS (SELECT cname, register, max(rank) AS max_rank FROM r GROUP BY cname, register),
@@ -379,14 +389,14 @@ FROM c JOIN exact ON c.cname = exact.cname
 # Count-min sketch
 # ---------------------------------------------------------------------------
 
-def _cms_bucket(h: Column, seed: int, width: int) -> Column:
+def _cms_bucket(h: Column, seed: int) -> Column:
     from spk_sl_validation_spark.ext.hashing import seeded_perm
 
-    return seeded_perm(h, seed) % F.lit(width)
+    return seeded_perm(h, seed) % F.lit(CMS_WIDTH)
 
 
-def cms_counters(df: DataFrame, col: str, depth: int = 4, width: int = 64) -> DataFrame:
-    """(row, bucket, cnt): the d×w count-min counter matrix.
+def cms_counters(df: DataFrame, col: str) -> DataFrame:
+    """(row, bucket, cnt): the CMS_DEPTH×CMS_WIDTH count-min counter matrix.
 
     One explode to d rows per input row, one groupBy bounded at d·w
     output rows — partial aggregation means each executor ships at
@@ -395,8 +405,8 @@ def cms_counters(df: DataFrame, col: str, depth: int = 4, width: int = 64) -> Da
     h = md5_long(F.col(col).cast("string"))
     cells = F.array(
         *[
-            F.struct(F.lit(i).alias("drow"), _cms_bucket(h, i, width).alias("bucket"))
-            for i in range(depth)
+            F.struct(F.lit(i).alias("drow"), _cms_bucket(h, i).alias("bucket"))
+            for i in range(CMS_DEPTH)
         ]
     )
     return (
@@ -407,9 +417,7 @@ def cms_counters(df: DataFrame, col: str, depth: int = 4, width: int = 64) -> Da
     )
 
 
-def cms_estimate_counts(
-    df: DataFrame, col: str, depth: int = 4, width: int = 64
-) -> DataFrame:
+def cms_estimate_counts(df: DataFrame, col: str) -> DataFrame:
     """Per-key CMS count estimate next to the exact count.
 
     Output: (key, exact_n, cms_est, overestimate). CMS guarantees
@@ -417,14 +425,12 @@ def cms_estimate_counts(
     inflation visible. The counter matrix is broadcast-sized (d·w), so
     probing is a broadcast join against the exact groupBy.
     """
-    counters = cms_counters(df, col, depth, width)
+    counters = cms_counters(df, col)
     exact = df.groupBy(F.col(col).alias("key")).agg(F.count(F.lit(1)).alias("exact_n"))
-    return cms_estimate_from_counters(counters, exact, depth, width)
+    return cms_estimate_from_counters(counters, exact)
 
 
-def cms_estimate_from_counters(
-    counters: DataFrame, exact: DataFrame, depth: int = 4, width: int = 64
-) -> DataFrame:
+def cms_estimate_from_counters(counters: DataFrame, exact: DataFrame) -> DataFrame:
     """Finish CMS estimates from a (drow, bucket, cnt) counter matrix
     and an exact (key, exact_n) frame. Split out because the counter
     matrix is the MERGEABLE part: counters from shards/micro-batches
@@ -437,10 +443,8 @@ def cms_estimate_from_counters(
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(i).alias("drow"), _cms_bucket(h, i, width).alias("bucket")
-                    )
-                    for i in range(depth)
+                    F.struct(F.lit(i).alias("drow"), _cms_bucket(h, i).alias("bucket"))
+                    for i in range(CMS_DEPTH)
                 ]
             )
         ).alias("c"),
@@ -453,21 +457,19 @@ def cms_estimate_from_counters(
     )
 
 
-def cms_estimate_counts_sql(
-    table: str, col: str, depth: int = 4, width: int = 64
-) -> str:
+def cms_estimate_counts_sql(table: str, col: str) -> str:
     """DuckDB twin of :func:`cms_estimate_counts`."""
     from spk_sl_validation_spark.ext.hashing import seeded_perm_sql
 
     h = md5_long_sql(f"CAST({col} AS VARCHAR)")
     cell_rows = " UNION ALL ".join(
-        f"SELECT {i} AS drow, ({seeded_perm_sql('h', i)}) % {width} AS bucket FROM h"
-        for i in range(depth)
+        f"SELECT {i} AS drow, ({seeded_perm_sql('h', i)}) % {CMS_WIDTH} AS bucket FROM h"
+        for i in range(CMS_DEPTH)
     )
     hk = md5_long_sql("CAST(key AS VARCHAR)")
     probe_rows = " UNION ALL ".join(
-        f"SELECT key, exact_n, {i} AS drow, ({seeded_perm_sql('hk', i)}) % {width} AS bucket FROM ek"
-        for i in range(depth)
+        f"SELECT key, exact_n, {i} AS drow, ({seeded_perm_sql('hk', i)}) % {CMS_WIDTH} AS bucket FROM ek"
+        for i in range(CMS_DEPTH)
     )
     return f"""
 WITH h AS (SELECT {h} AS h FROM {table}),
@@ -485,18 +487,16 @@ GROUP BY p.key, p.exact_n
 # KMV (k-minimum values) — distinct sketch with SET ALGEBRA
 # ---------------------------------------------------------------------------
 
-def kmv_sketch(df: DataFrame, col: str, k: int = 128) -> DataFrame:
-    """(h): the k smallest distinct 60-bit hashes of ``df[col]`` — a
+def kmv_sketch(df: DataFrame, col: str) -> DataFrame:
+    """(h): the KMV_K smallest distinct 60-bit hashes of ``df[col]`` — a
     KMV distinct sketch. orderBy+limit compiles to TakeOrdered
     (per-partition top-k, then a k-row merge on one reducer) — no full
     sort, no full shuffle."""
     h = md5_long(F.col(col).cast("string"))
-    return df.select(h.alias("h")).distinct().orderBy("h").limit(k)
+    return df.select(h.alias("h")).distinct().orderBy("h").limit(KMV_K)
 
 
-def kmv_jaccard(
-    df_a: DataFrame, col_a: str, df_b: DataFrame, col_b: str, k: int = 128
-) -> DataFrame:
+def kmv_jaccard(df_a: DataFrame, col_a: str, df_b: DataFrame, col_b: str) -> DataFrame:
     """Jaccard similarity of two key SETS estimated from their KMV
     sketches — the set-intersection algebra HLL cannot do (HLL unions
     trivially but cannot intersect).
@@ -507,10 +507,10 @@ def kmv_jaccard(
     Everything is integer selection + two exact divisions — no float
     accumulation anywhere.
     """
-    a_k = kmv_sketch(df_a, col_a, k).withColumn("__a", F.lit(1))
-    b_k = kmv_sketch(df_b, col_b, k).withColumn("__b", F.lit(1))
+    a_k = kmv_sketch(df_a, col_a).withColumn("__a", F.lit(1))
+    b_k = kmv_sketch(df_b, col_b).withColumn("__b", F.lit(1))
     merged = (
-        a_k.select("h").unionByName(b_k.select("h")).distinct().orderBy("h").limit(k)
+        a_k.select("h").unionByName(b_k.select("h")).distinct().orderBy("h").limit(KMV_K)
     )
     kk = (
         merged.join(a_k, "h", "left")
@@ -540,19 +540,17 @@ def kmv_jaccard(
     )
 
 
-def kmv_jaccard_sql(
-    table_a: str, col_a: str, table_b: str, col_b: str, k: int = 128
-) -> str:
+def kmv_jaccard_sql(table_a: str, col_a: str, table_b: str, col_b: str) -> str:
     """DuckDB twin of :func:`kmv_jaccard`."""
     ha = md5_long_sql(f"CAST({col_a} AS VARCHAR)")
     hb = md5_long_sql(f"CAST({col_b} AS VARCHAR)")
     return f"""
 WITH da AS (SELECT DISTINCT {ha} AS h FROM {table_a}),
 db AS (SELECT DISTINCT {hb} AS h FROM {table_b}),
-ak AS (SELECT h FROM da ORDER BY h LIMIT {k}),
-bk AS (SELECT h FROM db ORDER BY h LIMIT {k}),
+ak AS (SELECT h FROM da ORDER BY h LIMIT {KMV_K}),
+bk AS (SELECT h FROM db ORDER BY h LIMIT {KMV_K}),
 merged AS (
-  SELECT h FROM (SELECT h FROM ak UNION SELECT h FROM bk) ORDER BY h LIMIT {k}
+  SELECT h FROM (SELECT h FROM ak UNION SELECT h FROM bk) ORDER BY h LIMIT {KMV_K}
 ),
 kk AS (
   SELECT count(*) AS k_actual,
@@ -596,8 +594,6 @@ def bloom_membership(
     build_col: str,
     probe: DataFrame,
     probe_col: str,
-    m_bits: int = 2048,
-    k: int = 5,
 ) -> DataFrame:
     """Probe ``probe[probe_col]`` against a Bloom filter of
     ``build[build_col]``.
@@ -605,22 +601,24 @@ def bloom_membership(
     Output: (key, bloom_hit, actual, false_positive) — the exact
     membership is computed alongside (left_semi) so the oracle can
     verify the false-positive set exactly, not just statistically.
-    At scale: the filter (≤ m_bits rows) broadcasts; this is how a
+    At scale: the filter (≤ BLOOM_BITS rows) broadcasts; this is how a
     Bloom-pruned join sidesteps shuffling the probe side.
     """
     from spk_sl_validation_spark.ext.hashing import seeded_perm
 
-    bits = bloom_positions(build, build_col, m_bits, k).withColumn("__set", F.lit(1))
+    bits = bloom_positions(build, build_col, BLOOM_BITS, BLOOM_K).withColumn("__set", F.lit(1))
     keys = probe.select(F.col(probe_col).alias("key")).distinct()
     hk = md5_long(F.col("key").cast("string"))
     probes = keys.select(
         "key",
-        F.explode(F.array(*[(seeded_perm(hk, i) % F.lit(m_bits)) for i in range(k)])).alias("pos"),
+        F.explode(
+            F.array(*[(seeded_perm(hk, i) % F.lit(BLOOM_BITS)) for i in range(BLOOM_K)])
+        ).alias("pos"),
     )
     hits = (
         probes.join(F.broadcast(bits), "pos", "left")
         .groupBy("key")
-        .agg((F.count("__set") == F.lit(k)).alias("bloom_hit"))
+        .agg((F.count("__set") == F.lit(BLOOM_K)).alias("bloom_hit"))
     )
     actual = (
         build.select(F.col(build_col).alias("key")).distinct().withColumn("__in", F.lit(True))
@@ -643,8 +641,6 @@ def bloom_membership_sql(
     build_col: str,
     probe_table: str,
     probe_col: str,
-    m_bits: int = 2048,
-    k: int = 5,
 ) -> str:
     """DuckDB twin of :func:`bloom_membership`."""
     from spk_sl_validation_spark.ext.hashing import seeded_perm_sql
@@ -652,10 +648,12 @@ def bloom_membership_sql(
     hb = md5_long_sql(f"CAST({build_col} AS VARCHAR)")
     hp = md5_long_sql("CAST(key AS VARCHAR)")
     build_pos = " UNION ALL ".join(
-        f"SELECT ({seeded_perm_sql('h', i)}) % {m_bits} AS pos FROM bh" for i in range(k)
+        f"SELECT ({seeded_perm_sql('h', i)}) % {BLOOM_BITS} AS pos FROM bh"
+        for i in range(BLOOM_K)
     )
     probe_pos = " UNION ALL ".join(
-        f"SELECT key, ({seeded_perm_sql('hk', i)}) % {m_bits} AS pos FROM pk" for i in range(k)
+        f"SELECT key, ({seeded_perm_sql('hk', i)}) % {BLOOM_BITS} AS pos FROM pk"
+        for i in range(BLOOM_K)
     )
     return f"""
 WITH bh AS (SELECT {hb} AS h FROM {build_table}),
@@ -663,7 +661,7 @@ bits AS (SELECT DISTINCT pos FROM ({build_pos})),
 pk AS (SELECT DISTINCT {probe_col} AS key, {hp} AS hk FROM {probe_table}),
 probes AS ({probe_pos}),
 hits AS (
-  SELECT p.key, (count(b.pos) = {k}) AS bloom_hit
+  SELECT p.key, (count(b.pos) = {BLOOM_K}) AS bloom_hit
   FROM probes p LEFT JOIN bits b ON p.pos = b.pos
   GROUP BY p.key
 ),
@@ -687,12 +685,11 @@ def bottomk_sample_quantiles(
     df: DataFrame,
     value_col: str,
     key_col: str,
-    k: int = 1024,
 ) -> DataFrame:
     """Approximate p50/p90/p99 from a bottom-k-by-hash uniform row
     sample — the mergeable-quantile member of the sketch family.
 
-    The sketch is the ``k`` rows whose 60-bit key hash is smallest: a
+    The sketch is the ``BOTTOMK_K`` rows whose 60-bit key hash is smallest: a
     deterministic uniform sample without replacement (the hash imposes
     a random-but-fixed total order on rows). Like KMV, it merges by
     "union partials, keep the k smallest hashes" — so per-partition
@@ -714,7 +711,7 @@ def bottomk_sample_quantiles(
             F.col(key_col).alias("key"),
         )
         .orderBy("h", "key")
-        .limit(k)
+        .limit(BOTTOMK_K)
     )
     est = sample.agg(
         F.count(F.lit(1)).alias("k"),
@@ -735,7 +732,6 @@ def bottomk_sample_quantiles_sql(
     table: str,
     value_col: str,
     key_col: str,
-    k: int = 1024,
 ) -> str:
     """DuckDB twin of :func:`bottomk_sample_quantiles` (QUALIFY replays
     the deterministic bottom-k rule; quantile_cont == Spark percentile)."""
@@ -751,7 +747,7 @@ def bottomk_sample_quantiles_sql(
 WITH s AS (
   SELECT CAST({value_col} AS DOUBLE) AS v
   FROM (SELECT {value_col}, {hsql} AS h, {key_col} FROM {table})
-  QUALIFY row_number() OVER (ORDER BY h, {key_col}) <= {k}
+  QUALIFY row_number() OVER (ORDER BY h, {key_col}) <= {BOTTOMK_K}
 ),
 est AS (SELECT count(*) AS k, {est_cols} FROM s),
 ex AS (SELECT {exact_cols} FROM {table})

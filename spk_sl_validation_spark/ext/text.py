@@ -383,14 +383,18 @@ def md5_fingerprint(col: str | Column) -> Column:
     return F.md5(normalized_text(col))
 
 
-def rolling_fingerprints(df, id_col: str, text_col: str = "text", n: int = 3):
-    """(id, rolling_fp) for a whole corpus: shingle rows → one
-    codegen'd md5 each → groupBy(id).min. Same plan shape (and
-    rationale) as dedup.minhash_signatures."""
+#: Word n-gram width of :func:`rolling_fingerprints`.
+ROLLING_SHINGLE_N = 3
+
+
+def rolling_fingerprints(df, id_col: str, text_col: str = "text"):
+    """(id, rolling_fp) for a whole corpus: ``ROLLING_SHINGLE_N``-word
+    shingle rows → one codegen'd md5 each → groupBy(id).min. Same plan
+    shape (and rationale) as dedup.minhash_signatures."""
     from spk_sl_validation_spark.ext.hashing import shingle_rows
 
     return (
-        shingle_rows(df, id_col, text_col, n)
+        shingle_rows(df, id_col, text_col, ROLLING_SHINGLE_N)
         .select(id_col, md5_long("s").alias("h"))
         .groupBy(id_col)
         .agg(F.min("h").alias("rolling_fp"))

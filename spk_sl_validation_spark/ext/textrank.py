@@ -29,6 +29,9 @@ from pyspark.sql import functions as F
 from spk_sl_validation_spark.ext.hashing import ws_tokens
 
 DAMPING = 0.85
+N_ITER = 3  # fixed iterations of the registered keyword query and its oracle
+TOP_K = 20  # keywords kept by the registered query and its oracle
+CHECKPOINT_EVERY = 5  # eager lineage truncation period of the convergence mode
 
 
 def token_adjacency_edges(
@@ -81,7 +84,7 @@ def textrank_scores(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_iter: int = 3,
+    n_iter: int = N_ITER,
 ) -> DataFrame:
     """(tok, score): damped PageRank over the adjacency graph after
     ``n_iter`` synchronous iterations from uniform init 1.0.
@@ -110,7 +113,6 @@ def textrank_scores_until_delta(
     text_col: str = "text",
     eps: float = 1e-9,
     max_iter: int = 50,
-    checkpoint_every: int = 5,
 ) -> tuple[DataFrame, int]:
     """Convergence-mode TextRank: iterate until the max per-token score
     change ≤ ``eps`` (L∞) or ``max_iter``; returns ``(scores, n_run)``.
@@ -118,7 +120,7 @@ def textrank_scores_until_delta(
     Same per-iteration arithmetic as :func:`textrank_scores`, so with
     ``eps=0.0, max_iter=k`` the scores are bit-identical to the fixed
     ``n_iter=k`` run (pinned by test). One scalar of driver traffic per
-    iteration; eager lineage truncation every ``checkpoint_every``
+    iteration; eager lineage truncation every ``CHECKPOINT_EVERY``
     iterations, lazy checkpoints in between keep plan depth bounded.
     """
     frac_edges = _frac_edges(df, id_col, text_col)
@@ -132,7 +134,7 @@ def textrank_scores_until_delta(
     for it in range(1, max_iter + 1):
         prev = scores
         scores = _textrank_step(frac_edges, prev).localCheckpoint(
-            eager=(it % checkpoint_every == 0)
+            eager=(it % CHECKPOINT_EVERY == 0)
         )
         delta_row = (
             scores.join(prev.withColumnRenamed("score", "__prev"), "tok")
@@ -148,8 +150,8 @@ def textrank_keywords(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_iter: int = 3,
-    top_k: int = 20,
+    n_iter: int = N_ITER,
+    top_k: int = TOP_K,
 ) -> DataFrame:
     """(tok, score, rank): the corpus's top-k TextRank keywords."""
     scores = textrank_scores(df, id_col, text_col, n_iter)
@@ -161,15 +163,14 @@ def textrank_keywords_sql(
     table: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_iter: int = 3,
-    top_k: int = 20,
 ) -> str:
-    """DuckDB twin: the same iterations unrolled as chained CTEs —
-    the oracle is literally iteration-by-iteration replay."""
+    """DuckDB twin of :func:`textrank_keywords` at ``N_ITER`` and
+    ``TOP_K``: the same iterations unrolled as chained CTEs — the
+    oracle is literally iteration-by-iteration replay."""
     toks = rf"string_split_regex(trim({text_col}), '\s+')"
     iters = []
     prev = "r0"
-    for i in range(1, n_iter + 1):
+    for i in range(1, N_ITER + 1):
         iters.append(
             f"""r{i} AS (
   SELECT fe.v AS tok,
@@ -212,5 +213,5 @@ ranked AS (
   SELECT tok, score, row_number() OVER (ORDER BY score DESC, tok ASC) AS rank
   FROM {prev}
 )
-SELECT tok, score, CAST(rank AS INTEGER) AS rank FROM ranked WHERE rank <= {top_k}
+SELECT tok, score, CAST(rank AS INTEGER) AS rank FROM ranked WHERE rank <= {TOP_K}
 """

@@ -1692,21 +1692,25 @@ def domain_reputation(df: DataFrame, score_col: str, url_col: str = "url") -> Da
     )
 
 
+#: Domains with fewer pages than this are kept by
+#: :func:`domain_reputation_filter` whatever their average score.
+REPUTATION_MIN_DOCS = 3
+
+
 def domain_reputation_filter(
     df: DataFrame,
     min_avg: float,
     score_col: str,
     url_col: str = "url",
-    min_docs: int = 1,
 ) -> DataFrame:
     """Keep documents whose registrable domain has ``avg_score >=
-    min_avg`` over at least ``min_docs`` pages (small-sample domains
+    min_avg`` over at least ``REPUTATION_MIN_DOCS`` pages (small-sample domains
     below the floor are KEPT — no evidence is not negative evidence).
     Reputation is a domain-count-sized relation riding a semi join;
     the document frame shuffles once, on the domain key."""
     rep = domain_reputation(df, score_col, url_col)
     passing = rep.filter(
-        (F.col("avg_score") >= min_avg) | (F.col("n_docs") < min_docs)
+        (F.col("avg_score") >= min_avg) | (F.col("n_docs") < REPUTATION_MIN_DOCS)
     ).select("domain")
     dom = _with_domain(df, url_col, False)
     return (

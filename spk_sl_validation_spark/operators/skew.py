@@ -7,7 +7,7 @@ runtime; these helpers cover the cases AQE does not:
 
 - ``salted_group_agg``: two-phase aggregation for *aggregations* with
   hot grouping keys. Phase 1 aggregates on (key, salt) — hot keys
-  split across ``n_salts`` reducers; phase 2 merges the partials on
+  split across ``N_SALTS`` reducers; phase 2 merges the partials on
   key. Semantics-preserving for any algebraic aggregate (sum/count/
   min/max) — verified against the plain GROUP BY oracle.
 - ``salted_shuffle_join``: explicit salting for large-to-large joins
@@ -31,39 +31,38 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: Salt fan-out of :func:`salted_group_agg`.
+N_SALTS = 16
+
 
 def salted_group_agg(
     df: DataFrame,
     keys: Sequence[str],
     sum_cols: Sequence[str] = (),
-    count: bool = True,
-    n_salts: int = 16,
     salt_source: str | Column | None = None,
 ) -> DataFrame:
-    """Two-phase (salted) aggregation: exact sums/counts per key even
-    when a few keys dominate the data.
+    """Two-phase (salted) aggregation: exact sums (``sum_<col>``) and
+    the row count ``n`` per key even when a few keys dominate the data.
 
     ``salt_source``: a column/expression whose hash spreads a hot
     key's rows (default: a uniform hash of all non-key columns via
     ``xxhash64``). Phase 1 runs with map-side partial aggregation on
     (keys, salt) — 16-way fan-out caps any single reducer at ~1/16 of
-    the hottest key; phase 2 merges ≤ n_salts rows per key.
+    the hottest key; phase 2 merges ≤ N_SALTS rows per key.
     """
     if salt_source is None:
         others = [c for c in df.columns if c not in keys] or list(keys)
-        salt = (F.abs(F.xxhash64(*[F.col(c) for c in others])) % n_salts).cast("int")
+        salt = (F.abs(F.xxhash64(*[F.col(c) for c in others])) % N_SALTS).cast("int")
     else:
         s = F.col(salt_source) if isinstance(salt_source, str) else salt_source
-        salt = (F.abs(F.xxhash64(s)) % n_salts).cast("int")
+        salt = (F.abs(F.xxhash64(s)) % N_SALTS).cast("int")
 
     phase1_aggs = [F.sum(c).alias(f"__sum_{c}") for c in sum_cols]
-    if count:
-        phase1_aggs.append(F.count(F.lit(1)).alias("__cnt"))
+    phase1_aggs.append(F.count(F.lit(1)).alias("__cnt"))
     partial = df.withColumn("__salt", salt).groupBy(*keys, "__salt").agg(*phase1_aggs)
 
     phase2_aggs = [F.sum(f"__sum_{c}").alias(f"sum_{c}") for c in sum_cols]
-    if count:
-        phase2_aggs.append(F.sum("__cnt").alias("n"))
+    phase2_aggs.append(F.sum("__cnt").alias("n"))
     return partial.groupBy(*keys).agg(*phase2_aggs)
 
 

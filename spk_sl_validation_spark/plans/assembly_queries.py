@@ -9,10 +9,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spk_sl_validation_spark.ext import assembly as A
+from spk_sl_validation_spark.ext.assembly import SEQ_LEN
 from spk_sl_validation_spark.plans.registry import register
 from spk_sl_validation_spark.sources.readers import load_table
-
-SEQ_LEN = 2048
 
 # Target mixture: upsample-ish weights by source band (sources are
 # src0..src19 in the testdata; unknown sources drop to 0).
@@ -31,7 +30,7 @@ MIX_WEIGHTS = {
         "two-phase distributed prefix sum (within-chunk window + broadcast chunk "
         "offsets) == the oracle's naive global window, with no single-task scan"
     ),
-    oracle=A.pack_sequences_sql("documents", seq_len=SEQ_LEN),
+    oracle=A.pack_sequences_sql("documents"),
 )
 def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")

@@ -211,13 +211,13 @@ def corpus_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
         "order so iterated double arithmetic is bit-exact vs the oracle's "
         "unrolled-CTE replay — an iterative graph algorithm under a value hash"
     ),
-    oracle=textrank_keywords_sql("documents", n_iter=3, top_k=20),
+    oracle=textrank_keywords_sql("documents"),
 )
 def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spk_sl_validation_spark.ext.textrank import textrank_keywords
 
     docs = load_table(spark, sf_dir, "documents")
-    return textrank_keywords(docs, n_iter=3, top_k=20)
+    return textrank_keywords(docs)
 
 
 @register(

@@ -26,10 +26,8 @@ from spk_sl_validation_spark.sources.readers import load_table, load_table_sprea
 
 _TOKS = r"string_split_regex(trim(text), '\s+')"
 
-# LSH geometry lives in dedup_shared (single source for Spark builders
-# and every oracle CTE); only the SimHash knobs are local to this file.
-SIMHASH_BITS = 32
-MAX_HAMMING = 2
+# LSH geometry lives in dedup_shared and the SimHash knobs in
+# ext/dedup.py (single sources for Spark builders and oracle CTEs).
 
 
 # ---------------------------------------------------------------------------
@@ -108,11 +106,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.lsh_candidate_pairs(docs, "doc_id", "text", NUM_HASHES, BANDS)
 
 
-# Patch in the generated oracle (register() takes literals; the LSH
-# oracle is assembled programmatically to stay in lockstep with the
-# constants above).
-
-
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
@@ -120,7 +113,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _simhash_oracle() -> str:
     bit_terms = " + ".join(
         f"(CASE WHEN 2 * len(list_filter(h, v -> (v >> {p}) & 1 = 1)) > n THEN {1 << p} ELSE 0 END)"
-        for p in range(SIMHASH_BITS)
+        for p in range(D.SIMHASH_BITS)
     )
     return f"""
 WITH tok AS (SELECT doc_id, {_TOKS} AS t FROM documents),
@@ -129,20 +122,20 @@ fp AS (SELECT doc_id, CAST({bit_terms} AS BIGINT) AS simhash FROM hs)
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
 FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {MAX_HAMMING}
+WHERE bit_count(xor(a.simhash, b.simhash)) <= {D.MAX_HAMMING}
 """
 
 
 @register(
     "dedup_simhash",
-    doc=f"SimHash({SIMHASH_BITS}-bit) near-dup pairs, Hamming ≤ {MAX_HAMMING}, lossless banded join",
+    doc=f"SimHash({D.SIMHASH_BITS}-bit) near-dup pairs, Hamming ≤ {D.MAX_HAMMING}, lossless banded join",
     oracle=_simhash_oracle(),
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.simhash_near_dup_pairs(docs, "doc_id", "text", SIMHASH_BITS, MAX_HAMMING)
+    pairs = D.simhash_near_dup_pairs(docs, "doc_id", "text")
     return pairs.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
 
@@ -271,9 +264,7 @@ def dedup_clusters_stars(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return D.duplicate_soft_weights(
-        docs, "doc_id", "text", NUM_HASHES, BANDS, 3, jaccard_threshold=JACCARD_TAU
-    )
+    return D.duplicate_soft_weights(docs, "doc_id", "text")
 
 
 @register(
@@ -326,7 +317,7 @@ WHERE CAST(n_inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_inter AS DOUBLE) >= 0
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return D.ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.5)
+    return D.ngram_jaccard_pairs(docs, "doc_id", "text", 0.5)
 
 
 _DECONTAMINATE_ORACLE = rf"""
@@ -414,9 +405,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         is_new=F.col("doc_id") % 5 == 0,
         id_col="doc_id",
         text_col="text",
-        num_hashes=NUM_HASHES,
-        bands=BANDS,
-        shingle_n=3,
         jaccard_threshold=JACCARD_TAU,
     )
 
@@ -506,7 +494,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = D.lsh_candidate_pairs(
         docs, "doc_id", "text", NUM_HASHES, BANDS, 3, with_estimate=False
     )
-    scored = D.containment_for_pairs(docs, pairs, "doc_id", "text", 3)
+    scored = D.containment_for_pairs(docs, pairs, "doc_id", "text")
     return scored.filter(
         F.greatest("cont_a_in_b", "cont_b_in_a") >= CONTAINMENT_TAU
     )
@@ -557,7 +545,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     docs = load_table(spark, sf_dir, "documents")
-    exact = D.ngram_jaccard_pairs(docs, "doc_id", "text", 3, RECALL_MIN_J)
+    exact = D.ngram_jaccard_pairs(docs, "doc_id", "text", RECALL_MIN_J)
     cand = D.lsh_candidate_pairs(
         docs, "doc_id", "text", NUM_HASHES, BANDS, 3, with_estimate=False
     ).withColumn("__hit", F.lit(1))
@@ -731,7 +719,7 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return D.jaccard_join_prefix(docs, "doc_id", "text", 3, 0.5)
+    return D.jaccard_join_prefix(docs, "doc_id", "text")
 
 
 SWEEP_THRESHOLDS = (0.3, 0.5, 0.7, 0.8, 0.9)
@@ -795,7 +783,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.0)
+    pairs = D.ngram_jaccard_pairs(docs, "doc_id", "text", 0.0)
     th = F.explode(F.array(*[F.lit(t) for t in SWEEP_THRESHOLDS])).alias("threshold")
 
     np_ = (
@@ -863,7 +851,7 @@ def dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    return D.jaccard_incremental_prefix(batch, corpus, "doc_id", "text", 3, 0.5)
+    return D.jaccard_incremental_prefix(batch, corpus, "doc_id", "text")
 
 
 @register(

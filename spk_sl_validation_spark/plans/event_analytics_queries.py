@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from spk_sl_validation_spark.ext.events import rate_limit_oracle_sql
+from spk_sl_validation_spark.ext.events import RL_CAP, RL_RATE, rate_limit_oracle_sql
 from spk_sl_validation_spark.plans.registry import register
 from spk_sl_validation_spark.sources.readers import load_table
 
@@ -626,8 +626,6 @@ def interval_overlap_months(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-RL_CAP = 5.0
-RL_RATE = 0.01  # tokens per second of event-time gap
 RL_USERS = 60
 
 
@@ -642,10 +640,10 @@ RL_USERS = 60
         "parallel), value-verified against a recursive-CTE replay of the "
         "identical IEEE arithmetic"
     ),
-    oracle=rate_limit_oracle_sql("events", RL_CAP, RL_RATE, f"user_id < {RL_USERS}"),
+    oracle=rate_limit_oracle_sql("events", f"user_id < {RL_USERS}"),
 )
 def rate_limit_accept(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spk_sl_validation_spark.ext.events import rate_limit_accept as _rl
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") < RL_USERS)
-    return _rl(ev, RL_CAP, RL_RATE)
+    return _rl(ev)

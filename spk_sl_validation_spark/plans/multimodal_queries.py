@@ -21,9 +21,6 @@ from spk_sl_validation_spark.plans.registry import register
 # tiny unsplittable scan so those chains use every core (guide §2.5).
 from spk_sl_validation_spark.sources.readers import load_table_spread as load_table
 
-FRAME_SIZE = 64
-STRIDE = 128
-
 
 @register(
     "multimodal_meta",
@@ -44,21 +41,24 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_frame_sample",
-    doc=f"frame sampling: {FRAME_SIZE}-byte windows every {STRIDE} bytes via mapInPandas (1→N rows)",
+    doc=(
+        f"frame sampling: {M.FRAME_SIZE}-byte windows every {M.FRAME_STRIDE} bytes "
+        "via mapInPandas (1→N rows)"
+    ),
     oracle=f"""
 WITH f AS (
   SELECT doc_id, text,
-         unnest(range(0, (octet_length(encode(text)) + {STRIDE} - 1) // {STRIDE})) AS i
+         unnest(range(0, (octet_length(encode(text)) + {M.FRAME_STRIDE} - 1) // {M.FRAME_STRIDE})) AS i
   FROM documents
 )
 SELECT doc_id, CAST(i AS INTEGER) AS frame_idx,
-       md5(substring(text, 1 + i * {STRIDE}, {FRAME_SIZE})) AS frame_md5
+       md5(substring(text, 1 + i * {M.FRAME_STRIDE}, {M.FRAME_SIZE})) AS frame_md5
 FROM f
 """,
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return M.sample_frames(M.as_media_table(docs), FRAME_SIZE, STRIDE)
+    return M.sample_frames(M.as_media_table(docs))
 
 
 @register(
@@ -79,18 +79,15 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return M.decode_media(M.as_media_table(docs))
 
 
-RESIZE_FACTOR = 4
-
-
 @register(
     "multimodal_resize",
-    doc=f"media resize (keep every {RESIZE_FACTOR}th byte) via mapInPandas; sizes + content md5 verified",
+    doc=f"media resize (keep every {M.RESIZE_FACTOR}th byte) via mapInPandas; sizes + content md5 verified",
     oracle=f"""
 WITH resized AS (
   SELECT doc_id,
          octet_length(encode(text)) AS n_bytes_in,
          array_to_string(list_transform(
-           range(1, octet_length(encode(text)) + 1, {RESIZE_FACTOR}),
+           range(1, octet_length(encode(text)) + 1, {M.RESIZE_FACTOR}),
            i -> substring(text, i, 1)), '') AS small
   FROM documents
 )
@@ -103,7 +100,7 @@ FROM resized
 )
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return M.resize_media(M.as_media_table(docs), RESIZE_FACTOR)
+    return M.resize_media(M.as_media_table(docs))
 
 
 @register(
@@ -616,7 +613,7 @@ def multimodal_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     fps = M.image_dhash(M.synthesize_bmp_variant_table(docs)).select("doc_id", "dhash")
-    pairs = hamming_near_dup_pairs(fps, "doc_id", "dhash", bits=64, max_hamming=2)
+    pairs = hamming_near_dup_pairs(fps, "doc_id", "dhash", bits=64)
     return pairs.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
 
@@ -708,7 +705,7 @@ def multimodal_image_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # representative-level near-dup pairs): identical CC labels to the
     # full pair relation, but an exact-copy image flood contributes
     # m−1 edges instead of m(m−1)/2 pairs.
-    edges = hamming_near_dup_edges(fps, "doc_id", "dhash", bits=64, max_hamming=2)
+    edges = hamming_near_dup_edges(fps, "doc_id", "dhash")
     labels, _rounds = connected_components_stars(edges.select("src", "dst"))
     # labels/sizes come off a localCheckpoint (stats-blind) — without
     # the hint the planner falls back to sort-merge; shuffle_hash is
@@ -841,7 +838,7 @@ def multimodal_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fps = M.audio_fingerprint(M.synthesize_wav_variant_table(docs)).select(
         "doc_id", "afp"
     )
-    pairs = hamming_near_dup_pairs(fps, "doc_id", "afp", bits=64, max_hamming=2)
+    pairs = hamming_near_dup_pairs(fps, "doc_id", "afp", bits=64)
     return pairs.select(
         "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
     )

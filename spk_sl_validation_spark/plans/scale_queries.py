@@ -28,9 +28,7 @@ def salted_group_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn(
         "value_dec", F.col("value").cast("decimal(18,2)")
     )
-    out = salted_group_agg(
-        ev, ["event_type"], sum_cols=["value_dec"], count=True, n_salts=16, salt_source="event_id"
-    )
+    out = salted_group_agg(ev, ["event_type"], sum_cols=["value_dec"], salt_source="event_id")
     return out.select(
         "event_type", F.col("sum_value_dec").cast("double").alias("sum_value"), "n"
     )
@@ -85,19 +83,9 @@ def salted_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # identical in Spark and DuckDB — so the oracle replays the layout and the
 # per-file stats exactly.
 
-_Z_BITS = 16
-_Z_FILES_SHIFT = 2 * _Z_BITS - 4  # top 4 z-bits -> 16 files
+from spk_sl_validation_spark.ext.hashing import Z_BITS, z_value_expr, z_value_sql
 
-
-from spk_sl_validation_spark.ext.hashing import z_value_expr, z_value_sql
-
-
-def _z_spark(x: str, y: str) -> str:
-    return z_value_expr(x, y, _Z_BITS)
-
-
-def _z_duck(x: str, y: str) -> str:
-    return z_value_sql(x, y, _Z_BITS)
+_Z_FILES_SHIFT = 2 * Z_BITS - 4  # top 4 z-bits -> 16 files
 
 
 @register(
@@ -115,7 +103,7 @@ WITH k AS (
   SELECT l_orderkey & 65535 AS x, l_partkey & 65535 AS y FROM lineitem
 ),
 z AS (
-  SELECT x, y, ({_z_duck("x", "y")}) AS zval FROM k
+  SELECT x, y, ({z_value_sql("x", "y")}) AS zval FROM k
 )
 SELECT zval >> {_Z_FILES_SHIFT} AS file_id,
        COUNT(*) AS n_rows,
@@ -128,7 +116,7 @@ GROUP BY file_id
 def layout_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     k = li.selectExpr("l_orderkey & 65535 AS x", "l_partkey & 65535 AS y")
-    z = k.selectExpr("x", "y", f"({_z_spark('x', 'y')}) AS zval")
+    z = k.selectExpr("x", "y", f"({z_value_expr('x', 'y')}) AS zval")
     return (
         z.selectExpr(f"shiftright(zval, {_Z_FILES_SHIFT}) AS file_id", "x", "y")
         .groupBy("file_id")

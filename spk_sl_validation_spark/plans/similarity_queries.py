@@ -16,7 +16,6 @@ from spk_sl_validation_spark.sources.readers import load_table, load_table_sprea
 
 N_QUERIES = 5  # vec_id < 5 are the probe vectors
 TOP_K = 10
-LSH_BITS = 8
 NEAR_DUP_TAU = 0.4
 
 _COS = S.cosine_sql("a.embedding", "b.embedding")
@@ -52,10 +51,10 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "similarity_topk_lsh",
-    doc=f"sign-LSH({LSH_BITS}-bit) bucketed ANN top-k: bucket equi-join + exact rerank within bucket",
+    doc=f"sign-LSH({S.LSH_BITS}-bit) bucketed ANN top-k: bucket equi-join + exact rerank within bucket",
     oracle=f"""
 WITH bucketed AS (
-  SELECT vec_id, embedding, {S.sign_lsh_bucket_sql('embedding', LSH_BITS)} AS bucket FROM embeddings
+  SELECT vec_id, embedding, {S.sign_lsh_bucket_sql('embedding', S.LSH_BITS)} AS bucket FROM embeddings
 ),
 scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS vec_id, {_QCOS} AS cos_sim
@@ -67,13 +66,13 @@ ranked AS (
          row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, vec_id ASC) AS rank
   FROM scored
 )
-SELECT q_id, vec_id, cos_sim, CAST(rank AS INTEGER) AS rank FROM ranked WHERE rank <= 5
+SELECT q_id, vec_id, cos_sim, CAST(rank AS INTEGER) AS rank FROM ranked WHERE rank <= {S.ANN_K}
 """,
 )
 def similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    out = S.bucketed_topk(emb, queries, k=5, bits=LSH_BITS)
+    out = S.bucketed_topk(emb, queries)
     return out.select("q_id", "vec_id", "cos_sim", F.col("rank").cast("int").alias("rank"))
 
 
@@ -107,7 +106,7 @@ ranked AS (
          row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, vec_id ASC) AS rank
   FROM scored
 )
-SELECT q_id, vec_id, cos_sim, CAST(rank AS INTEGER) AS rank FROM ranked WHERE rank <= 5
+SELECT q_id, vec_id, cos_sim, CAST(rank AS INTEGER) AS rank FROM ranked WHERE rank <= {S.ANN_K}
 """
 
 
@@ -122,7 +121,7 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    out = S.ivf_topk(emb, queries, centroids, k=5)
+    out = S.ivf_topk(emb, queries, centroids)
     return out.select("q_id", "vec_id", "cos_sim", F.col("rank").cast("int").alias("rank"))
 
 
@@ -289,14 +288,14 @@ ranked AS (
          row_number() OVER (PARTITION BY q_id ORDER BY approx_dist ASC, vec_id ASC) AS rank
   FROM dist
 )
-SELECT q_id, vec_id, approx_dist, CAST(rank AS INTEGER) AS rank FROM ranked WHERE rank <= 5
+SELECT q_id, vec_id, approx_dist, CAST(rank AS INTEGER) AS rank FROM ranked WHERE rank <= {S.ANN_K}
 """,
 )
 def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     train = emb.filter(F.col("vec_id") < PQ_TRAIN)
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    out = S.pq_adc_topk(emb, queries, train, k=5, n_sub=PQ_NSUB, sub_dim=PQ_SUBDIM)
+    out = S.pq_adc_topk(emb, queries, train, n_sub=PQ_NSUB, sub_dim=PQ_SUBDIM)
     return out.select("q_id", "vec_id", "approx_dist", F.col("rank").cast("int").alias("rank"))
 
 
@@ -399,7 +398,6 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 EMB_DIM = 64
-RP_SHORTLIST_MULT = 4
 
 _RP = S.random_projection_sql("embedding", EMB_DIM)
 
@@ -408,7 +406,7 @@ _RP = S.random_projection_sql("embedding", EMB_DIM)
     "similarity_topk_projected",
     doc=(
         f"two-stage ANN: JL ±1 random projection {EMB_DIM}->{S.RP_OUT_DIM} dims "
-        f"scores the crossJoin shortlist (top {TOP_K}x{RP_SHORTLIST_MULT}), exact "
+        f"scores the crossJoin shortlist (top {TOP_K}x{S.RP_SHORTLIST_MULT}), exact "
         f"cosine reranks only the shortlist — the projection matrix is a seeded "
         "shared literal, so both engines project identically"
     ),
@@ -429,7 +427,7 @@ short AS (
 ),
 rr AS (
   SELECT q_id, vec_id, {S.cosine_sql('qe', 'ce')} AS cos_sim
-  FROM short WHERE rs <= {TOP_K * RP_SHORTLIST_MULT}
+  FROM short WHERE rs <= {TOP_K * S.RP_SHORTLIST_MULT}
 ),
 ranked AS (
   SELECT q_id, vec_id, cos_sim,
@@ -442,9 +440,7 @@ SELECT q_id, vec_id, cos_sim, CAST(rank AS INTEGER) AS rank FROM ranked WHERE ra
 def similarity_topk_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    out = S.projected_rerank_topk(
-        emb, queries, TOP_K, EMB_DIM, S.RP_OUT_DIM, RP_SHORTLIST_MULT
-    )
+    out = S.projected_rerank_topk(emb, queries, TOP_K, EMB_DIM)
     return out.select("q_id", "vec_id", "cos_sim", F.col("rank").cast("int").alias("rank"))
 
 
@@ -469,7 +465,7 @@ ann AS (
   FROM (SELECT q_id, vec_id,
                row_number() OVER (PARTITION BY q_id ORDER BY {S.cosine_sql('qe', 'ce')} DESC,
                                   vec_id ASC) AS rank
-        FROM short WHERE rs <= {TOP_K * RP_SHORTLIST_MULT})
+        FROM short WHERE rs <= {TOP_K * S.RP_SHORTLIST_MULT})
   WHERE rank <= {TOP_K}
 ),
 exact AS (
@@ -504,9 +500,7 @@ def similarity_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     exact = S.brute_force_topk(emb, queries, TOP_K).select("q_id", "vec_id")
-    ann = S.projected_rerank_topk(
-        emb, queries, TOP_K, EMB_DIM, S.RP_OUT_DIM, RP_SHORTLIST_MULT
-    ).select("q_id", "vec_id", F.lit(1).alias("__hit"))
+    ann = S.projected_rerank_topk(emb, queries, TOP_K, EMB_DIM).select("q_id", "vec_id", F.lit(1).alias("__hit"))
     joined = exact.join(F.broadcast(ann), ["q_id", "vec_id"], "left")
     return joined.groupBy("q_id").agg(
         F.count(F.lit(1)).alias("k"),
@@ -517,7 +511,6 @@ def similarity_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MMR_POOL = 12  # retrieval-pool depth feeding the rerank
 MMR_K = 6  # selections
-MMR_LAM = 0.7  # relevance weight; 1-lam penalizes redundancy
 
 
 @register(
@@ -525,7 +518,7 @@ MMR_LAM = 0.7  # relevance weight; 1-lam penalizes redundancy
     doc=(
         f"MMR diverse selection (Carbonell & Goldstein '98): top-{MMR_POOL} "
         f"cosine pool for probe vec_id=0, then {MMR_K} greedy picks maximizing "
-        f"{MMR_LAM}*rel - {1 - MMR_LAM:.1f}*max-sim-to-selected — the "
+        f"{S.MMR_LAM}*rel - {1 - S.MMR_LAM:.1f}*max-sim-to-selected — the "
         "diversity-aware rerank that keeps an eval set from filling with "
         "near-duplicates. Rerank-stage shape: all iteration runs on the "
         "pool-sized relation, never the corpus; oracle replays the greedy "
@@ -552,8 +545,8 @@ sel(step, picked) AS (
   SELECT step + 1, list_append(picked, (
     SELECT p.vec_id FROM pool p
     WHERE NOT list_contains(picked, p.vec_id)
-    ORDER BY {MMR_LAM!r} * p.rel
-             - {1.0 - MMR_LAM!r} * coalesce((
+    ORDER BY {S.MMR_LAM!r} * p.rel
+             - {1.0 - S.MMR_LAM!r} * coalesce((
                  SELECT max(pr.sim) FROM pairs pr
                  WHERE pr.va = p.vec_id AND list_contains(picked, pr.vb)
                ), 0.0) DESC,
@@ -576,7 +569,7 @@ def embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", F.col("cos_sim").alias("rel"))
         .join(emb.select("vec_id", "embedding"), "vec_id")
     )
-    return S.mmr_select(pool, MMR_K, MMR_LAM).select(
+    return S.mmr_select(pool, MMR_K).select(
         F.col("rank").cast("int").alias("rank"), "vec_id", "rel"
     )
 
@@ -680,7 +673,7 @@ ranked AS (
          row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, vec_id ASC) AS rank
   FROM scored
 )
-SELECT q_id, vec_id, cos_sim, CAST(rank AS INTEGER) AS rank FROM ranked WHERE rank <= 5
+SELECT q_id, vec_id, cos_sim, CAST(rank AS INTEGER) AS rank FROM ranked WHERE rank <= {S.ANN_K}
 """,
 )
 def similarity_topk_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -696,7 +689,7 @@ def similarity_topk_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lists = S.ivf_index_tables(emb, centroids)
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    out = S.ivf_topk_indexed(queries, centroids, lists, k=5, nprobe=IVF_NPROBE)
+    out = S.ivf_topk_indexed(queries, centroids, lists, nprobe=IVF_NPROBE)
     return out.select("q_id", "vec_id", "cos_sim", F.col("rank").cast("int").alias("rank"))
 
 
@@ -720,7 +713,7 @@ def similarity_ivf_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     after_rm = S.remove_from_ivf_index(lists, churn.select("vec_id"))
     merged = S.merge_into_ivf_index(after_rm, centroids, churn)
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    out = S.ivf_topk_indexed(queries, centroids, merged, k=5, nprobe=1)
+    out = S.ivf_topk_indexed(queries, centroids, merged, nprobe=1)
     return out.select("q_id", "vec_id", "cos_sim", F.col("rank").cast("int").alias("rank"))
 
 

@@ -543,7 +543,6 @@ from spk_sl_validation_spark.plans import corpus_queries  # noqa: E402, F401
 
 DECON_N = 8
 DECON_MBITS = 8192
-DECON_K = 5
 
 
 def _streaming_decontaminate_oracle() -> str:
@@ -606,7 +605,7 @@ def streaming_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    mask = bloom_mask_row(bench_g, "s", DECON_MBITS, DECON_K).localCheckpoint(eager=True)
+    mask = bloom_mask_row(bench_g, "s", DECON_MBITS).localCheckpoint(eager=True)
 
     stream = P.stream_documents(spark, sf_dir).filter(F.col("doc_id") % 97 != 0)
     # array-transform shingling: narrow map (the window-based
@@ -619,7 +618,7 @@ def streaming_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (
         g.withColumn("__h", md5_long(F.col("s").cast("string")))
         .crossJoin(F.broadcast(mask))
-        .filter(F.expr(bloom_bit_tests(DECON_MBITS, DECON_K)))
+        .filter(F.expr(bloom_bit_tests(DECON_MBITS)))
         .drop("__h", "__mask")
     )
     hits = (
@@ -741,7 +740,7 @@ def streaming_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lists = spark.read.parquet(f"{index_dir}/lists").select("centroid_id", "vec_id", "embedding")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    out = S.ivf_topk_indexed(queries, centroids, lists, k=5, nprobe=1)
+    out = S.ivf_topk_indexed(queries, centroids, lists, nprobe=1)
     return out.select("q_id", "vec_id", "cos_sim", F.col("rank").cast("int").alias("rank"))
 
 
@@ -757,7 +756,7 @@ def streaming_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "batch pack_sequences over the whole corpus, i.e. its oracle "
         "verbatim"
     ),
-    oracle=pack_sequences_sql("documents", seq_len=2048),
+    oracle=pack_sequences_sql("documents"),
 )
 def streaming_pack_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream == batch for the packed token stream: bootstrap a zero

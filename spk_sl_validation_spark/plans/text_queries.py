@@ -124,7 +124,7 @@ FROM documents
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     exact = docs.select("doc_id", X.md5_fingerprint("text").alias("exact_fp"))
-    rolling = X.rolling_fingerprints(docs, "doc_id", "text", 3)
+    rolling = X.rolling_fingerprints(docs, "doc_id", "text")
     return exact.join(rolling, "doc_id").select("doc_id", "exact_fp", "rolling_fp")
 
 

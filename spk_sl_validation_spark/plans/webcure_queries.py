@@ -1016,18 +1016,18 @@ def web_idna_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the same gate with window aggregates over the law"
     ),
     oracle=_ORACLE_LAW
-    + """
+    + f"""
 SELECT doc_id, domain, CAST(doc_id % 7 AS DOUBLE) AS score
 FROM n
 QUALIFY avg(doc_id % 7) OVER (PARTITION BY domain) >= 2.9
-     OR count(*) OVER (PARTITION BY domain) < 3
+     OR count(*) OVER (PARTITION BY domain) < {W.REPUTATION_MIN_DOCS}
 """,
 )
 def web_domain_reputation_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     urls = _urls(spark, sf_dir).withColumn(
         "score", (F.col("doc_id") % 7).cast("double")
     )
-    kept = W.domain_reputation_filter(urls, 2.9, "score", min_docs=3)
+    kept = W.domain_reputation_filter(urls, 2.9, "score")
     return kept.select(
         "doc_id", W.extract_domain(W.normalize_url("url")).alias("domain"), "score"
     )

@@ -71,9 +71,7 @@ def test_boilerplate_plan_shape(spark, sf_dir):
     honest minimum: materializing the corpus-scale span stream to save
     a scan would cost more than the scan at 100 TB."""
     import re
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     from tools.dump_plans import plan_stats
 
     from spk_sl_validation_spark.plans.registry import REGISTRY, _ensure_loaded

@@ -23,7 +23,7 @@ def test_containment_detects_doc_in_doc(spark):
     small = " ".join(words[10:16])
     docs = _docs(spark, [(1, small), (2, big)])
     pairs = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
-    [row] = D.containment_for_pairs(docs, pairs, "doc_id", "text", 3).collect()
+    [row] = D.containment_for_pairs(docs, pairs, "doc_id", "text").collect()
     # every 3-shingle of A appears in B; A has 4 shingles, B has 28
     assert row["cont_a_in_b"] == pytest.approx(1.0)
     assert row["cont_b_in_a"] == pytest.approx(4 / 28)
@@ -37,7 +37,7 @@ def test_containment_symmetric_for_identical_docs(spark):
     text = "alpha beta gamma delta epsilon zeta"
     docs = _docs(spark, [(1, text), (2, text)])
     pairs = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
-    [row] = D.containment_for_pairs(docs, pairs, "doc_id", "text", 3).collect()
+    [row] = D.containment_for_pairs(docs, pairs, "doc_id", "text").collect()
     assert row["cont_a_in_b"] == pytest.approx(1.0)
     assert row["cont_b_in_a"] == pytest.approx(1.0)
 

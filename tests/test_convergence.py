@@ -32,7 +32,7 @@ def _ranks(df):
 
 def test_pagerank_until_delta_parity_with_fixed(spark, sf_dir):
     edges = transition_edges(load_table(spark, sf_dir, "events"))
-    fixed = _ranks(pagerank(edges, iterations=ITERATIONS))
+    fixed = _ranks(pagerank(edges))
     conv, n_run = pagerank_until_delta(edges, eps=0.0, max_iter=ITERATIONS)
     assert n_run <= ITERATIONS
     assert _ranks(conv) == fixed
@@ -62,7 +62,7 @@ def test_textrank_until_delta_parity_with_fixed(spark, sf_dir):
 
 def test_textrank_until_delta_converges(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(50)
-    conv, n_run = textrank_scores_until_delta(docs, eps=1e-6, max_iter=60, checkpoint_every=5)
+    conv, n_run = textrank_scores_until_delta(docs, eps=1e-6, max_iter=60)
     assert n_run < 60, "did not converge within the cap"
     scores = [r["score"] for r in conv.collect()]
     assert all(s > 0 for s in scores)

@@ -182,7 +182,7 @@ def test_threshold_sweep_matches_exact_pairs(spark, sf_dir):
     from spk_sl_validation_spark.sources.readers import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    exact_05 = ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.5).count()
+    exact_05 = ngram_jaccard_pairs(docs, "doc_id", "text", 0.5).count()
     rows = {r["threshold"]: r for r in dedup_threshold_sweep(spark, sf_dir).collect()}
     assert rows[0.5]["n_pairs"] == exact_05
 
@@ -202,9 +202,9 @@ def test_vocab_oov_invariants(spark, sf_dir):
 def test_mmr_matches_python_reference(spark, sf_dir):
     """Full selection order must match an independent in-Python greedy
     MMR over the same pool (exact ordered-fold cosine arithmetic)."""
+    from spk_sl_validation_spark.ext.similarity import MMR_LAM
     from spk_sl_validation_spark.plans.similarity_queries import (
         MMR_K,
-        MMR_LAM,
         MMR_POOL,
         embedding_mmr_select,
     )

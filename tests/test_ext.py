@@ -42,7 +42,7 @@ def _py_perm(h: int, i: int) -> int:
 
 def test_minhash_signature_values(spark):
     df = spark.createDataFrame([Row(doc_id=1, text="w1 w2 w3 w4 w5")])
-    sig = D.with_minhash_signature(df, num_hashes=4).collect()[0].sig
+    sig = D.minhash_signatures(df, "doc_id", num_hashes=4).collect()[0].sig
     shingles = ["w1 w2 w3", "w2 w3 w4", "w3 w4 w5"]
     expected = [min(_py_perm(_py_md5_long(s), i) for s in shingles) for i in range(4)]
     assert sig == expected
@@ -98,7 +98,7 @@ def test_simhash_identical_and_different(spark):
             Row(doc_id=3, text="zeta eta theta iota kappa lambda mu nu xi"),
         ]
     )
-    pairs = D.simhash_near_dup_pairs(df, "doc_id", max_hamming=2).collect()
+    pairs = D.simhash_near_dup_pairs(df, "doc_id").collect()
     found = {(r.id_a, r.id_b): r.hamming for r in pairs}
     assert found.get((1, 2)) == 0
     assert (1, 3) not in found and (2, 3) not in found

@@ -81,7 +81,7 @@ def test_byte_histogram_sums_to_one(spark):
 def test_frame_sample_shapes(spark):
     text = "x" * 300
     docs = spark.createDataFrame([Row(doc_id=1, text=text)])
-    frames = M.sample_frames(M.as_media_table(docs), frame_size=64, stride=128).collect()
+    frames = M.sample_frames(M.as_media_table(docs)).collect()
     assert [f.frame_idx for f in sorted(frames, key=lambda f: f.frame_idx)] == [0, 1, 2]
     raw = text.encode()
     assert frames[0].frame_md5 == hashlib.md5(raw[0:64]).hexdigest()
@@ -265,8 +265,8 @@ def test_random_projection_matches_python(spark, sf_dir):
     from spk_sl_validation_spark.sources.readers import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    row = emb.select("vec_id", "embedding", random_projection("embedding", 64, 16).alias("p")).first()
-    signs = _rp_signs(64, 16)
+    row = emb.select("vec_id", "embedding", random_projection("embedding", 64).alias("p")).first()
+    signs = _rp_signs(64)
 
     def chain(j):  # same left-associative order as the expression
         acc = None
@@ -290,7 +290,7 @@ def test_projected_rerank_results_are_exact_cosines(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 3)
     brute = {(r["q_id"], r["vec_id"]): r["cos_sim"] for r in brute_force_topk(emb, q, 10).collect()}
-    proj = projected_rerank_topk(emb, q, 10, 64, 16, 4).collect()
+    proj = projected_rerank_topk(emb, q, 10, 64).collect()
     assert len(proj) > 0
     overlap = 0
     for r in proj:
@@ -333,7 +333,7 @@ def test_projected_rerank_recall_on_structured_corpus(spark):
         "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
     )
     q = emb.filter(F.col("vec_id") % 100 == 0).filter(F.col("vec_id") < 1000)
-    out = projected_rerank_topk(emb, q, 3, 64, 16, 4).collect()
+    out = projected_rerank_topk(emb, q, 3, 64).collect()
     got = {}
     for r in out:
         got.setdefault(r["q_id"], set()).add(r["vec_id"])
@@ -386,10 +386,10 @@ def _ivf_fixture(spark, n=60, dim=8, n_centroids=4):
 def test_ivf_indexed_nprobe1_equals_direct(spark):
     emb, centroids = _ivf_fixture(spark)
     queries = emb.filter(emb.vec_id < 3)
-    direct = sorted(map(tuple, S.ivf_topk(emb, queries, centroids, k=5).collect()))
+    direct = sorted(map(tuple, S.ivf_topk(emb, queries, centroids).collect()))
     lists = S.ivf_index_tables(emb, centroids)
     indexed = sorted(
-        map(tuple, S.ivf_topk_indexed(queries, centroids, lists, k=5, nprobe=1).collect())
+        map(tuple, S.ivf_topk_indexed(queries, centroids, lists, nprobe=1).collect())
     )
     assert indexed == direct
 
@@ -408,7 +408,7 @@ def test_ivf_multiprobe_recall_monotone(spark):
     for nprobe in (1, 2, 4):
         got = {
             (r.q_id, r.vec_id)
-            for r in S.ivf_topk_indexed(queries, centroids, lists, k=5, nprobe=nprobe).collect()
+            for r in S.ivf_topk_indexed(queries, centroids, lists, nprobe=nprobe).collect()
         }
         recalls.append(len(got & truth) / len(truth))
     assert recalls == sorted(recalls), f"recall not monotone in nprobe: {recalls}"
@@ -454,8 +454,8 @@ def test_ivf_persisted_roundtrip_identity(spark, tmp_path):
     path = str(tmp_path / "ivf_lists")
     lists.write.partitionBy("centroid_id").parquet(path)
     lists2 = spark.read.parquet(path)
-    a = sorted(map(tuple, S.ivf_topk_indexed(queries, centroids, lists, k=5, nprobe=2).collect()))
-    b = sorted(map(tuple, S.ivf_topk_indexed(queries, centroids, lists2, k=5, nprobe=2).collect()))
+    a = sorted(map(tuple, S.ivf_topk_indexed(queries, centroids, lists, nprobe=2).collect()))
+    b = sorted(map(tuple, S.ivf_topk_indexed(queries, centroids, lists2, nprobe=2).collect()))
     assert a == b
 
 

@@ -81,9 +81,6 @@ def test_transition_edges_counts(spark):
 def test_transition_edges_plan_shape(spark, sf_dir):
     """Edge derivation is the 100 TB stage: one window shuffle + one
     aggregate shuffle, no sort-merge join."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.dump_plans import plan_stats
 
     from spk_sl_validation_spark.sources.readers import load_table

@@ -99,7 +99,7 @@ def test_containment_property_matches_python(spark, texts):
     )
     got = {
         (r["id_a"], r["id_b"]): (r["cont_a_in_b"], r["cont_b_in_a"])
-        for r in D.containment_for_pairs(docs, pairs, "doc_id", "text", 3).collect()
+        for r in D.containment_for_pairs(docs, pairs, "doc_id", "text").collect()
     }
     for (i, j), (cab, cba) in got.items():
         a, b = _py_shingles(texts[i]), _py_shingles(texts[j])

@@ -1269,7 +1269,7 @@ def test_image_dup_groups_pairs_are_components(spark):
         [(d, M._make_bmp_group(d)) for d in ids], "doc_id long, media binary"
     )
     fps = M.image_dhash(df).select("doc_id", "dhash")
-    pairs = hamming_near_dup_pairs(fps, "doc_id", "dhash", bits=64, max_hamming=2)
+    pairs = hamming_near_dup_pairs(fps, "doc_id", "dhash", bits=64)
     got_pairs = {(r.id_a, r.id_b) for r in pairs.collect()}
     for m in range(0, 8, 2):
         assert (m, m + 1) in got_pairs, f"constructed pair ({m},{m+1}) missing"

@@ -16,13 +16,9 @@ fails the gate — tighten the budget when that happens.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from tools.dump_plans import plan_stats  # noqa: E402
+from tools.dump_plans import plan_stats
 
 # name -> (max shuffle exchanges, max sort-merge joins)
 # pricing_summary / revenue_by_nation carry 2 exchanges by design:

@@ -103,9 +103,6 @@ def test_fallback_to_host(spark):
 def test_psl_plan_zero_shuffles(spark, sf_dir):
     """The lookup is a broadcast-join cascade: ZERO shuffle exchanges,
     zero sort-merge joins — a crawl manifest keeps its partitioning."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.dump_plans import plan_stats
 
     from spk_sl_validation_spark.plans.registry import REGISTRY, _ensure_loaded

@@ -4,9 +4,12 @@ sort-merge join or a cartesian product.
 The per-query budgets in test_plan_budgets.py cover only the bench
 headline set; this sweep is the automatic defense for the other ~165
 queries against a future edit silently degrading a pinned shuffle-hash
-or broadcast join. Uses the INITIAL physical plan (planning only, no
-job) so the whole registry sweeps in ~1 minute; anything that is
-SMJ-free before AQE stays SMJ-free after (AQE only upgrades joins).
+or broadcast join. Inspects the INITIAL physical plan; anything that
+is SMJ-free before AQE stays SMJ-free after (AQE only upgrades joins).
+Planning itself runs no job, but building the plans does: builders
+that materialize intermediates (eager ``localCheckpoint``, small
+driver collects) run those jobs first. The sweep took 145-184 s at
+4 CPUs, the slowest test of the default tier.
 
 BroadcastNestedLoopJoin is allowed ONLY for the allowlisted names:
 every entry is either a documented 1-row broadcast scalar fan-in

@@ -186,7 +186,7 @@ def test_hamming_flood_pairs_lossless(spark):
     from spk_sl_validation_spark.ext.dedup import hamming_near_dup_pairs
 
     fps = _flood_fps(spark, 1000, 100)
-    pairs = hamming_near_dup_pairs(fps, "doc_id", "fp", 64, 2)
+    pairs = hamming_near_dup_pairs(fps, "doc_id", "fp", 64)
     zero = pairs.filter(F.col("hamming") == 0)
     assert zero.count() == 100 * 99 // 2
     # every zero-distance pair is inside the flood, ordered id_a < id_b
@@ -204,7 +204,7 @@ def test_hamming_flood_edges_bounded_and_cc_labels(spark):
     from spk_sl_validation_spark.ext.graph import connected_components_stars
 
     fps = _flood_fps(spark, 2000, 1000)
-    edges = hamming_near_dup_edges(fps, "doc_id", "fp", 64, 2)
+    edges = hamming_near_dup_edges(fps, "doc_id", "fp")
     assert edges.filter(F.col("hamming") == 0).count() == 999
     labels, _rounds = connected_components_stars(edges.select("src", "dst"))
     top = (

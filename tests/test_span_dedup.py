@@ -87,9 +87,6 @@ def test_span_dedup_plan_shape(spark, sf_dir):
     (skinny fingerprint arm + the pure-map span-array arm; the extra
     scan is the price of keeping span TEXT off the fingerprint
     shuffle entirely)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.dump_plans import plan_stats
 
     from spk_sl_validation_spark.plans.registry import REGISTRY, _ensure_loaded

@@ -6,9 +6,6 @@ no-op once the input is big enough to parallelize by itself."""
 from __future__ import annotations
 
 import math
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from spk_sl_validation_spark.sources import readers as R
 

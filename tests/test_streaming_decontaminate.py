@@ -49,12 +49,12 @@ def test_bloom_prefilter_prunes(spark, sf_dir):
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     train = docs.filter(F.col("doc_id") % 97 != 0)
     bench_g = shingle_rows(bench, "doc_id", "text", 8).select("s").distinct()
-    mask = bloom_mask_row(bench_g, "s", 8192, 5)
+    mask = bloom_mask_row(bench_g, "s", 8192)
     g = (
         shingle_rows(train, "doc_id", "text", 8)
         .withColumn("__h", md5_long(F.col("s").cast("string")))
         .crossJoin(F.broadcast(mask))
     )
     total = g.count()
-    cand = g.filter(F.expr(bloom_bit_tests(8192, 5))).count()
+    cand = g.filter(F.expr(bloom_bit_tests(8192))).count()
     assert cand < total * 0.5

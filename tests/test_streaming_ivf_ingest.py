@@ -68,13 +68,13 @@ def test_stream_built_index_equals_batch_built(spark, sf_dir, tmp_path):
         "centroid_id", "vec_id", "embedding"
     )
     got_topk = sorted(
-        map(tuple, S.ivf_topk_indexed(queries, centroids, on_disk, k=5).collect())
+        map(tuple, S.ivf_topk_indexed(queries, centroids, on_disk).collect())
     )
     want_topk = sorted(
         map(
             tuple,
             S.ivf_topk_indexed(
-                queries, centroids, S.ivf_index_tables(emb, centroids), k=5
+                queries, centroids, S.ivf_index_tables(emb, centroids)
             ).collect(),
         )
     )

@@ -175,9 +175,7 @@ def test_substring_dedup_plan_shape(spark, sf_dir):
     at most three times (two fingerprint arms + token arm; the extra
     pure-map scan is the price of killing the unsplittable window)."""
     import re
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     from tools.dump_plans import plan_stats
 
     from spk_sl_validation_spark.plans.registry import REGISTRY, _ensure_loaded

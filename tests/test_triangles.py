@@ -108,9 +108,7 @@ def test_triangle_plan_shape(spark, sf_dir):
     the final plan reads only checkpointed relations, <=6 exchanges,
     zero sort-merge joins, zero repeated parquet scans."""
     import re
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     from tools.dump_plans import plan_stats
 
     from spk_sl_validation_spark.plans.registry import REGISTRY, _ensure_loaded
