@@ -118,6 +118,36 @@ def _py_worker_calibrator(spark, runs: int) -> dict:
     }
 
 
+def py_worker_cpu_s(spark) -> float:
+    """CPU seconds so far of the driver JVM's descendant processes (the
+    Python worker daemon and its workers): utime+stime+cutime+cstime
+    from ``/proc/<pid>/stat``. The cutime/cstime terms keep the workers
+    the daemon has already reaped. The difference of two readings is
+    the Python-worker CPU of what ran between them."""
+    import collections
+
+    children: dict[int, list[int]] = collections.defaultdict(list)
+    ticks: dict[int, int] = {}
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as fh:
+                stat = fh.read()
+        except OSError:  # exited while listing
+            continue
+        # fields after "(comm)": state, ppid, ..., utime at index 11
+        fields = stat[stat.rindex(")") + 2:].split()
+        children[int(fields[1])].append(int(entry))
+        ticks[int(entry)] = sum(int(f) for f in fields[11:15])
+    total, stack = 0, list(children[spark.sparkContext._gateway.proc.pid])
+    while stack:
+        pid = stack.pop()
+        total += ticks[pid]
+        stack.extend(children[pid])
+    return total / os.sysconf("SC_CLK_TCK")
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -139,16 +169,19 @@ def main() -> None:
     detail: dict[str, dict] = {}
     for name, spec in specs.items():
         samples: list[float] = []
+        py_cpu: list[float] = []
         warmup_s = 0.0
         compiles = 0
         for run in range(RUNS + 1):  # run 0 = unmeasured warm-up
             c0 = codegen_compiles(spark)
+            p0 = py_worker_cpu_s(spark)
             t0 = time.time()
             spec.builder(spark, sf_dir).write.mode("overwrite").format("noop").save()
             dt = time.time() - t0
             if run > 0:
                 samples.append(dt)
                 compiles += codegen_compiles(spark) - c0
+                py_cpu.append(py_worker_cpu_s(spark) - p0)
             else:
                 warmup_s = dt
             # Isolate measurements: drop cached/checkpointed RDDs and
@@ -172,6 +205,9 @@ def main() -> None:
             # Janino compiles during the measured runs. Non-zero after
             # the warm-up means the generated-code cache is thrashing.
             "codegen_compiles": compiles,
+            # CPU of the Python workers per measured run: the share of a
+            # query's cost that an Arrow-batched or JVM rewrite can move.
+            "py_worker_cpu_s": round(statistics.median(py_cpu), 3),
         }
 
     host = _host_fingerprint()

@@ -57,26 +57,30 @@ def cosine_sql(a: str, b: str) -> str:
     return f"{dot_sql(a, b)} / (sqrt({dot_sql(a, a)}) * sqrt({dot_sql(b, b)}))"
 
 
-def sign_lsh_bucket(vec: Column, bits: int = 8, offset: int = 0) -> Column:
+def _sign_lsh_text(vec: str, bits: int, offset: int, base: int) -> str:
+    """SQL text of the sign-LSH bucket id; ``base`` is the engine's first
+    list index (Spark 0, DuckDB 1), the only difference between the twins."""
+    terms = " + ".join(
+        f"(CASE WHEN {vec}[{offset + i + base}] > 0 THEN {1 << i} ELSE 0 END)" for i in range(bits)
+    )
+    return f"CAST({terms} AS BIGINT)"
+
+
+def sign_lsh_bucket(vec_col: str, bits: int = 8, offset: int = 0) -> Column:
     """Axis-aligned sign-LSH bucket id in [0, 2^bits): bit i set iff
     coordinate ``offset + i`` is positive. A narrow map; cosine-similar
     vectors land in the same bucket with probability (1 - θ/π)^bits.
     ``offset`` selects a disjoint coordinate slice so multiple
-    independent bands can be derived from one vector (banded LSH)."""
-    b = F.lit(0).cast("long")
-    for i in range(bits):
-        b = b + (
-            F.when(vec[offset + i] > 0, F.lit(1 << i).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-        )
-    return b
+    independent bands can be derived from one vector (banded LSH).
+
+    One ``F.expr`` from the same text as :func:`sign_lsh_bucket_sql`:
+    a Column chain of ``bits`` when/otherwise terms costs a py4j round
+    trip per node on every build."""
+    return F.expr(_sign_lsh_text(vec_col, bits, offset, 0))
 
 
 def sign_lsh_bucket_sql(vec: str, bits: int = 8, offset: int = 0) -> str:
-    terms = " + ".join(
-        f"(CASE WHEN {vec}[{offset + i + 1}] > 0 THEN {1 << i} ELSE 0 END)" for i in range(bits)
-    )
-    return f"CAST({terms} AS BIGINT)"
+    return _sign_lsh_text(vec, bits, offset, 1)
 
 
 def brute_force_topk(
@@ -135,12 +139,12 @@ def bucketed_topk(
     partition per query."""
     from pyspark.sql import Window
 
-    cb = corpus.select(id_col, vec_col, sign_lsh_bucket(F.col(vec_col), LSH_BITS).alias("bucket"))
+    cb = corpus.select(id_col, vec_col, sign_lsh_bucket(vec_col, LSH_BITS).alias("bucket"))
     qb = F.broadcast(
         queries.select(
             F.col(id_col).alias("q_id"),
             F.col(vec_col).alias("q_vec"),
-            sign_lsh_bucket(F.col(vec_col), LSH_BITS).alias("bucket"),
+            sign_lsh_bucket(vec_col, LSH_BITS).alias("bucket"),
         )
     )
     scored = (
@@ -358,6 +362,41 @@ def remove_from_ivf_index(
 #: bucketed plan, which never materializes the corpus anywhere.
 NEAR_DUP_EXACT_MAX_ROWS = 500_000
 
+#: Output of both near-dup paths.
+_PAIRS_SCHEMA = "id_a long, id_b long, cos_sim double"
+
+
+def _unit_rows(vecs, vec_col: str):
+    """Arrow list array, one vector per row -> row-normalized float64
+    matrix, read as one flat buffer. Flattening skips NULL lists and
+    runs ragged rows together, so either would silently misalign the
+    rows: both are refused here instead."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(vecs, pa.ChunkedArray):
+        vecs = vecs.combine_chunks()
+    lo, hi = (v.as_py() for v in pc.min_max(pc.list_value_length(vecs)).values())
+    if vecs.null_count or lo != hi:
+        raise ValueError(
+            f"near-dup verify: {vec_col} needs non-NULL vectors of one length, "
+            f"got lengths {lo}..{hi} and {vecs.null_count} NULL"
+        )
+    mat = vecs.flatten().to_numpy(zero_copy_only=False)
+    mat = mat.reshape(len(vecs), hi or 0).astype(np.float64)
+    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    return mat
+
+
+def _pairs(ids_a, ids_b, sims):
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [pa.array(ids_a, pa.int64()), pa.array(ids_b, pa.int64()), pa.array(sims, pa.float64())],
+        names=["id_a", "id_b", "cos_sim"],
+    )
+
 
 def near_dup_pairs(
     df: DataFrame,
@@ -369,12 +408,14 @@ def near_dup_pairs(
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cos ≥ τ).
 
     Exact all-pairs, computed as a **broadcast matrix product**: the
-    (normalized) corpus matrix is broadcast to every executor — the
-    same pattern as broadcasting a dimension table — and each
-    partition multiplies its own rows against it with one BLAS
-    matmul inside ``mapInPandas``. A JVM expression per pair would be
-    an interpreted 64-element fold × O(n²) pairs (~70 s at sf0.1 vs
-    ~2 s for this plan); per-pair Python would be worse still.
+    (normalized) corpus matrix is collected with ``toArrow`` and
+    broadcast to every executor — the same pattern as broadcasting a
+    dimension table — and each partition multiplies its own rows
+    against it with one BLAS matmul inside ``mapInArrow``. A JVM
+    expression per pair would be an interpreted 64-element fold ×
+    O(n²) pairs (~70 s at sf0.1 vs ~2 s for this plan); per-pair
+    Python would be worse still. NULL vectors are dropped first: their
+    cosine is NULL, so they pair with nothing.
 
     Valid while n·d floats fit in driver + executor memory (n≈10⁶·
     d=1024 ≈ 8 GB). Above ``max_exact_rows`` the call dispatches to
@@ -385,48 +426,29 @@ def near_dup_pairs(
     fold only below ~1e-14 relative — invisible at the oracle's
     10-significant-digit comparison.
     """
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
-    from pyspark.sql import types as T
-
+    vecs = df.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
     # Dispatch probe: LIMIT cap+1 short-circuits the scan at the first
     # cap+1 rows instead of counting the whole (possibly 100 TB) input
     # just to learn "big" — the full count's answer beyond the cap is
     # irrelevant.
-    if df.limit(max_exact_rows + 1).count() > max_exact_rows:
+    if vecs.limit(max_exact_rows + 1).count() > max_exact_rows:
         return near_dup_pairs_bucketed(df, threshold, id_col, vec_col)
 
-    spark = df.sparkSession
-    corpus = df.select(id_col, vec_col).toPandas()
-    ids = corpus[id_col].to_numpy()
-    mat = np.stack(corpus[vec_col].to_numpy()).astype(np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((ids, mat))
+    corpus = vecs.toArrow()
+    ids = corpus.column(id_col).to_numpy()
+    bc = df.sparkSession.sparkContext.broadcast((ids, _unit_rows(corpus.column(vec_col), vec_col)))
 
-    schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         all_ids, all_mat = bc.value
-        for pdf in batches:
-            part_ids = pdf[id_col].to_numpy()
-            part = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            part /= np.linalg.norm(part, axis=1, keepdims=True)
-            sims = part @ all_mat.T
+        for batch in batches:
+            part_ids = batch.column(id_col).to_numpy()
+            sims = _unit_rows(batch.column(vec_col), vec_col) @ all_mat.T
             rows, cols = np.nonzero((sims >= threshold) & (part_ids[:, None] < all_ids[None, :]))
-            yield pd.DataFrame(
-                {"id_a": part_ids[rows], "id_b": all_ids[cols], "cos_sim": sims[rows, cols]}
-            )
+            yield _pairs(part_ids[rows], all_ids[cols], sims[rows, cols])
 
-    return df.select(id_col, vec_col).mapInPandas(run, schema)
+    return vecs.mapInArrow(run, _PAIRS_SCHEMA)
 
 
 #: Per-(band, bucket) row bound for near_dup_pairs_bucketed. A block
@@ -451,10 +473,13 @@ def near_dup_pairs_bucketed(
     slices (band b = sign pattern of dims [b·bits, (b+1)·bits)); a
     pair becomes a candidate iff it collides in ANY band — the same
     band/bucket construction MinHash-LSH uses for text (ext/dedup.py),
-    applied in embedding space. Candidates are verified with one BLAS
-    matmul per (band, bucket) group inside ``applyInPandas``; pairs
-    caught by several bands are deduplicated with a final (id_a, id_b)
-    aggregate.
+    applied in embedding space. One scan explodes every row into its
+    ``n_bands`` (band, bucket) keys (NULL vectors are dropped first:
+    their cosine is NULL, so they pair with nothing). Candidates are
+    verified with one BLAS matmul per (band, bucket) group inside
+    ``applyInArrow``, which reads the group's vectors as one flat Arrow
+    buffer; pairs caught by several bands are deduplicated with a final
+    (id_a, id_b) aggregate.
 
     Nothing is ever collected to the driver and no global matrix is
     broadcast: the only movement is an n·n_bands-row shuffle keyed on
@@ -481,22 +506,22 @@ def near_dup_pairs_bucketed(
     results are value-identical to a single whole-bucket matmul (each
     pairwise dot product involves only the two rows' dims).
     """
-    from collections.abc import Iterator  # noqa: F401
-
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from pyspark.sql import types as T
-
-    banded = None
-    for band in range(n_bands):
-        b = df.select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.lit(band).alias("band"),
-            sign_lsh_bucket(F.col(vec_col), bits, band * bits).alias("bucket"),
-        )
-        banded = b if banded is None else banded.unionByName(b)
+    # One scan: an array of (band, bucket) structs exploded per row, not
+    # a union of per-band selects, which reads the input n_bands times
+    # on each side of the census join.
+    band_keys = F.array(
+        *[
+            F.struct(
+                F.lit(band).alias("band"),
+                sign_lsh_bucket(vec_col, bits, band * bits).alias("bucket"),
+            )
+            for band in range(n_bands)
+        ]
+    )
+    banded = df.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col, F.inline(band_keys))
 
     # Bucket census: one row per (band, bucket) — at most 2^bits rows
     # per band by construction, always broadcastable for sane bits.
@@ -506,7 +531,7 @@ def near_dup_pairs_bucketed(
         F.lit(1).cast("long"), F.ceil(F.col("__n") / F.lit(max_bucket_rows))
     ).cast("int")
     salt = F.pmod(F.xxhash64(F.col(id_col)), n_blocks).cast("int")
-    sized = sized.withColumn("__nb", n_blocks).withColumn("__salt", salt)
+    sized = sized.withColumns({"__nb": n_blocks, "__salt": salt})
     blocks = F.transform(
         F.sequence(F.lit(0), F.col("__nb") - 1),
         lambda i: F.struct(
@@ -514,44 +539,25 @@ def near_dup_pairs_bucketed(
             F.greatest(i, F.col("__salt")).alias("sb"),
         ),
     )
-    exploded = sized.select(
-        id_col, vec_col, "band", "bucket", "__salt", F.explode(blocks).alias("blk")
-    ).select(
-        id_col,
-        vec_col,
-        "band",
-        "bucket",
-        "__salt",
-        F.col("blk.sa").alias("sa"),
-        F.col("blk.sb").alias("sb"),
-    )
+    exploded = sized.select(id_col, vec_col, "band", "bucket", "__salt", F.inline(blocks))
 
-    schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
-        mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    def verify(key, table):
+        ids = table.column(id_col).to_numpy()
+        mat = _unit_rows(table.column(vec_col), vec_col)
         sims = mat @ mat.T
         # Canonical-block mask: a pair belongs to block (min(salts),
         # max(salts)) only — dedups replicated members across blocks.
-        salts = pdf["__salt"].to_numpy()
-        sa, sb = int(pdf["sa"].iloc[0]), int(pdf["sb"].iloc[0])
+        salts = table.column("__salt").to_numpy()
+        sa, sb = key[2].as_py(), key[3].as_py()
         canonical = ((salts[:, None] == sa) & (salts[None, :] == sb)) | (
             (salts[:, None] == sb) & (salts[None, :] == sa)
         )
         rows, cols = np.nonzero(
             (sims >= threshold) & (ids[:, None] < ids[None, :]) & canonical
         )
-        return pd.DataFrame({"id_a": ids[rows], "id_b": ids[cols], "cos_sim": sims[rows, cols]})
+        return pa.Table.from_batches([_pairs(ids[rows], ids[cols], sims[rows, cols])])
 
-    pairs = exploded.groupBy("band", "bucket", "sa", "sb").applyInPandas(verify, schema)
+    pairs = exploded.groupBy("band", "bucket", "sa", "sb").applyInArrow(verify, _PAIRS_SCHEMA)
     return pairs.groupBy("id_a", "id_b").agg(F.max("cos_sim").alias("cos_sim"))
 
 

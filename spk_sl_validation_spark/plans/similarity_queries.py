@@ -861,7 +861,7 @@ def dedup_cross_modal(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.struct(
                         F.lit(o).alias("band"),
                         S.sign_lsh_bucket(
-                            F.col("embedding"), CROSS_MODAL_BITS, offset=o * CROSS_MODAL_BITS
+                            "embedding", CROSS_MODAL_BITS, offset=o * CROSS_MODAL_BITS
                         ).alias("bucket"),
                     )
                     for o in range(CROSS_MODAL_BANDS)

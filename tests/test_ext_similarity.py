@@ -44,7 +44,7 @@ def test_sign_lsh_bucket_groups_similar(spark):
     )
     buckets = {
         r.vec_id: r.b
-        for r in df.select("vec_id", S.sign_lsh_bucket(F.col("embedding"), 4).alias("b")).collect()
+        for r in df.select("vec_id", S.sign_lsh_bucket("embedding", 4).alias("b")).collect()
     }
     assert buckets[1] == buckets[2] != buckets[3]
 
@@ -258,6 +258,51 @@ def test_near_dup_bucketed_escalation_value_identical(spark, sf_dir):
     }
     assert set(esc) == set(base)
     assert all(abs(esc[p] - base[p]) < 1e-12 for p in esc)
+
+
+_NEAR_DUP_INPUT = "vid long, emb_v array<float>"
+_BASE_VEC = [1.0, 2.0, -0.5, 3.0, 0.25, -1.5, 2.5, 0.75]
+
+
+def _near_dup_both_paths(emb, threshold):
+    """(exact pairs, bucketed pairs) on a tiny frame: 4 bits x 2 bands."""
+    exact = S.near_dup_pairs(emb, threshold, id_col="vid", vec_col="emb_v")
+    bucketed = S.near_dup_pairs_bucketed(
+        emb, threshold, id_col="vid", vec_col="emb_v", bits=4, n_bands=2
+    )
+    return exact, bucketed
+
+
+def test_near_dup_null_embedding_never_paired(spark):
+    """A NULL vector's cosine is NULL in the oracle, so it pairs with
+    nothing: both paths drop it instead of failing the verify."""
+    emb = spark.createDataFrame(
+        [(1, _BASE_VEC), (2, [v * 2 for v in _BASE_VEC]), (3, None)], _NEAR_DUP_INPUT
+    )
+    for out in _near_dup_both_paths(emb, 0.9):
+        assert [(r.id_a, r.id_b) for r in out.collect()] == [(1, 2)]
+
+
+def test_near_dup_mixed_lengths_name_the_column(spark):
+    """Vectors of different lengths in one verify group (both longer
+    than bits·n_bands, so they share every band) raise a ValueError
+    naming the vector column, not a misaligned matrix."""
+    from pyspark.errors import PythonException
+
+    emb = spark.createDataFrame([(1, _BASE_VEC), (2, _BASE_VEC + [1.0, 1.0])], _NEAR_DUP_INPUT)
+    with pytest.raises(ValueError, match="emb_v"):
+        S.near_dup_pairs(emb, 0.9, id_col="vid", vec_col="emb_v")
+    with pytest.raises(PythonException, match=r"ValueError.*emb_v"):
+        S.near_dup_pairs_bucketed(
+            emb, 0.9, id_col="vid", vec_col="emb_v", bits=4, n_bands=2
+        ).collect()
+
+
+def test_near_dup_empty_input(spark):
+    emb = spark.createDataFrame([], _NEAR_DUP_INPUT)
+    for out in _near_dup_both_paths(emb, 0.9):
+        assert out.columns == ["id_a", "id_b", "cos_sim"]
+        assert out.collect() == []
 
 
 def test_random_projection_matches_python(spark, sf_dir):
@@ -488,7 +533,7 @@ def test_cross_modal_pairs_are_verified_text_neardups(spark, sf_dir):
     buckets = {
         o: {r.vec_id: r.bucket for r in emb.select(
             "vec_id",
-            S.sign_lsh_bucket(F.col("embedding"), CROSS_MODAL_BITS, offset=o * CROSS_MODAL_BITS).alias("bucket"),
+            S.sign_lsh_bucket("embedding", CROSS_MODAL_BITS, offset=o * CROSS_MODAL_BITS).alias("bucket"),
         ).collect()}
         for o in range(CROSS_MODAL_BANDS)
     }

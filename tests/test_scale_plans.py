@@ -485,6 +485,11 @@ def test_near_dup_bucketed_plan_shape(spark, sf_dir):
     )
     assert plan.count("BroadcastExchange") == 1  # the census, never the vectors
     assert "SortMergeJoin" not in plan
+    # one exploded (band, bucket) scan per side of the census join, not
+    # a per-band union (8 scans at 4 bands)
+    assert plan.count("FileScan") == 2
+    assert "Union" not in plan
+    assert "FlatMapGroupsInArrow" in plan
 
 
 def test_write_zorder_bounds_both_dims(spark, sf_dir, tmp_path):

@@ -49,6 +49,21 @@ def frame_fingerprint(pdf) -> tuple[int, list[str], str]:
     return len(pdf), cols, h
 
 
+def oracle_memory_limit_mb(spark) -> int:
+    """DuckDB memory limit for the oracles: half of the host RAM left
+    beside the driver JVM, whose ``spark.driver.memory`` counts for at
+    most half the host. DuckDB's default, 80 % of RAM, ignores the JVM
+    in the same process tree: an sf0.1 sweep's Python process reached
+    9.3 GB, at the basket_association_rules oracle, next to a 4.6 GB
+    JVM and was OOM-killed."""
+    with open("/proc/meminfo") as fh:
+        total_mb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:")) // 1024
+    driver_mb = spark.sparkContext._jvm.org.apache.spark.util.Utils.memoryStringToMb(
+        spark.sparkContext.getConf().get("spark.driver.memory", "1g")
+    )
+    return (total_mb - min(driver_mb, total_mb // 2)) // 2
+
+
 def main() -> int:
     import duckdb
 
@@ -84,6 +99,7 @@ def main() -> int:
     assert n >= 0
 
     con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{oracle_memory_limit_mb(spark)}MB'")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
 
