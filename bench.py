@@ -5,6 +5,10 @@ Runs the registry's headline queries at $SPARK_GRAFT_SF_DIR (default
 line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
+    python bench.py                               # the headline set
+    python bench.py web_url_dedup dedup_pipeline  # any registered queries;
+                                                  # metric "selected_queries_*"
+
 Each query is executed with a noop write (forces full computation on
 the executors, no driver-side collect) — what a cluster run would
 measure.
@@ -148,15 +152,24 @@ def py_worker_cpu_s(spark) -> float:
     return total / os.sysconf("SC_CLK_TCK")
 
 
-def main() -> None:
+def main(names: list[str] | None = None) -> None:
+    """Time ``names`` (any registered queries), default the headline set."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from spk_sl_validation_spark.plans.registry import headline_queries
+    from spk_sl_validation_spark.plans.registry import REGISTRY, headline_queries
     from spk_sl_validation_spark.session import build_session, codegen_compiles, release
 
+    specs = headline_queries()  # also loads the registry
+    if names:
+        unknown = [name for name in names if name not in REGISTRY]
+        if unknown:
+            sys.exit(f"not registered: {', '.join(unknown)}")
+        specs = {name: REGISTRY[name] for name in names}
+    # A chosen subset is not the headline total: name its lines apart.
+    metric = "selected_queries" if names else "headline_queries"
+
     spark = build_session(app_name="bench")
-    specs = headline_queries()
 
     # warm-up: JVM/codegen/filesystem caches
     spark.range(1_000_000).selectExpr("sum(id)").collect()
@@ -219,7 +232,7 @@ def main() -> None:
     print(
         json.dumps(
             {
-                "metric": "headline_queries_detail",
+                "metric": f"{metric}_detail",
                 "queries_detail": detail,
                 "py_worker_calibrator": py_cal,
                 "runs": RUNS,
@@ -232,7 +245,7 @@ def main() -> None:
     print(
         json.dumps(
             {
-                "metric": "headline_queries_total_wall_clock",
+                "metric": f"{metric}_total_wall_clock",
                 "value": round(sum(medians.values()), 3),
                 "unit": "sec",
                 "queries": medians,
@@ -248,4 +261,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -21,11 +21,21 @@ needs, designed Spark-first:
 
 All hashes are the 60-bit md5 family (hashing.py) — deterministic
 across engines so the DuckDB oracle can replay every step in SQL.
+
+The dedup geometry (signature length, bands, rows per band, shingle
+width, near-dup threshold) is the module constants below, not
+per-call options: every operator here and every oracle CTE in
+plans/dedup_shared.py reads the same values, so retuning the (b, r)
+S-curve is a one-constant edit. Each rule is stated once — the
+hot-bucket cap (:func:`capped_band_rows`), the count-based Jaccard
+tail (:func:`_count_jaccard`), the shingle-hash-set Jaccard
+(:func:`_set_jaccard`) and the incremental keep/reason verdict
+(:func:`_verdicts`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spk_sl_validation_spark.ext.hashing import md5_long, seeded_perm, ws_tokens
@@ -35,8 +45,11 @@ from spk_sl_validation_spark.ext.text import md5_fingerprint
 # (plans/dedup_shared.py, plans/dedup_queries.py) read these, so engine
 # and oracle cannot desync.
 NUM_HASHES = 12  # MinHash signature length
-BANDS = 6  # LSH bands of NUM_HASHES // BANDS rows each
+BANDS = 6  # LSH bands
+ROWS_PER_BAND = NUM_HASHES // BANDS  # signature slots per band
+assert ROWS_PER_BAND * BANDS == NUM_HASHES, "BANDS must divide NUM_HASHES"
 SHINGLE_N = 3  # word n-gram width of every shingle set
+_HCOLS = tuple(f"h{r}" for r in range(ROWS_PER_BAND))  # a band's hash columns
 JACCARD_TAU = 0.8  # near-dup Jaccard threshold
 PREFIX_JACCARD_TAU = 0.5  # threshold of the exact prefix-filter joins
 SIMHASH_BITS = 32
@@ -80,11 +93,10 @@ def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str = "text",
-    num_hashes: int = 12,
-    shingle_n: int = 3,
+    num_hashes: int = NUM_HASHES,
 ) -> DataFrame:
     """(id, sig array<bigint> of length num_hashes): per seed i, the
-    min permuted hash over word n-gram shingles.
+    min permuted hash over word ``SHINGLE_N``-gram shingles.
 
     Shape: shingle rows (hashing.shingle_rows: posexplode + window
     lead, codegen'd, one exchange) → one md5 per shingle → groupBy(id)
@@ -101,7 +113,7 @@ def minhash_signatures(
     """
     from spk_sl_validation_spark.ext.hashing import shingle_rows
 
-    hashed = shingle_rows(df, id_col, text_col, shingle_n).select(id_col, md5_long("s").alias("h"))
+    hashed = shingle_rows(df, id_col, text_col, SHINGLE_N).select(id_col, md5_long("s").alias("h"))
     aggs = [F.min(seeded_perm(F.col("h"), i)).alias(f"mh{i}") for i in range(num_hashes)]
     return (
         hashed.groupBy(id_col)
@@ -123,12 +135,11 @@ MAX_BUCKET_SIZE = 256
 def capped_band_rows(
     sig_df: DataFrame,
     id_col: str,
-    rows_per_band: int,
-    bands: int,
     max_bucket_size: int = MAX_BUCKET_SIZE,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, band, h0..h{r-1}, *carry): one row per (doc, band), each
+    """(id, band, h0..h{r-1}, *carry): one row per (doc, band) —
+    ``BANDS`` bands of r = ``ROWS_PER_BAND`` signature slots — each
     (band, band-hashes) bucket capped to its ``max_bucket_size``
     smallest ids via row_number BEFORE any downstream expansion.
 
@@ -145,16 +156,15 @@ def capped_band_rows(
         *[
             F.struct(
                 F.lit(b).alias("band"),
-                *[F.col("sig")[b * rows_per_band + r].alias(f"h{r}") for r in range(rows_per_band)],
+                *[F.col("sig")[b * ROWS_PER_BAND + r].alias(f"h{r}") for r in range(ROWS_PER_BAND)],
             )
-            for b in range(bands)
+            for b in range(BANDS)
         ]
     )
-    hcols = [f"h{r}" for r in range(rows_per_band)]
     exploded = sig_df.select(id_col, "sig", F.explode(band_structs).alias("bk")).select(
-        id_col, *carry, "bk.band", *[F.col(f"bk.{h}").alias(h) for h in hcols]
+        id_col, *carry, "bk.band", *[F.col(f"bk.{h}").alias(h) for h in _HCOLS]
     )
-    w = Window.partitionBy("band", *hcols).orderBy(id_col)
+    w = Window.partitionBy("band", *_HCOLS).orderBy(id_col)
     return (
         exploded.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= max_bucket_size)
@@ -166,9 +176,6 @@ def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str = "text",
-    num_hashes: int = 12,
-    bands: int = 6,
-    shingle_n: int = 3,
     max_bucket_size: int = MAX_BUCKET_SIZE,
     with_estimate: bool = True,
 ) -> DataFrame:
@@ -188,7 +195,7 @@ def lsh_candidate_pairs(
     and two extra shuffle-hash stages cost more than the byte saving
     until signatures dominate the shuffle, which at k=12 they do not.
 
-    Signature → split into ``bands`` bands of ``num_hashes/bands``
+    Signature → split into ``BANDS`` bands of ``ROWS_PER_BAND``
     rows → self-join on (band index, band hashes) → distinct pairs,
     with the Jaccard estimate = fraction of agreeing signature slots.
     With r=2 rows/band and b=6 bands the S-curve threshold is
@@ -213,9 +220,7 @@ def lsh_candidate_pairs(
     it isn't run. The cap is part of the operator's contract and is
     replayed verbatim in the DuckDB oracles (QUALIFY row_number()).
     """
-    assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
-    sig_df = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
+    sig_df = minhash_signatures(df, id_col, text_col)
 
     # Candidate generation via groupBy-collect instead of a self-join:
     # a self-join would evaluate the signature subtree twice (Spark
@@ -226,11 +231,10 @@ def lsh_candidate_pairs(
     # window and the aggregate share the same partitioning key, so
     # the cap costs a sort inside the existing exchange, not a new
     # shuffle.
-    hcols = [f"h{r}" for r in range(rows_per_band)]
     if not with_estimate:
-        capped = capped_band_rows(sig_df, id_col, rows_per_band, bands, max_bucket_size)
+        capped = capped_band_rows(sig_df, id_col, max_bucket_size)
         buckets = (
-            capped.groupBy("band", *hcols)
+            capped.groupBy("band", *_HCOLS)
             .agg(F.collect_list(F.col(id_col)).alias("members"))
             .filter(F.size("members") > 1)
         )
@@ -246,11 +250,9 @@ def lsh_candidate_pairs(
             .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
             .distinct()
         )
-    capped = capped_band_rows(
-        sig_df, id_col, rows_per_band, bands, max_bucket_size, carry=("sig",)
-    )
+    capped = capped_band_rows(sig_df, id_col, max_bucket_size, carry=("sig",))
     buckets = (
-        capped.groupBy("band", *hcols)
+        capped.groupBy("band", *_HCOLS)
         .agg(
             F.collect_list(
                 F.struct(F.col(id_col).alias("id"), F.col("sig").alias("sig"))
@@ -274,7 +276,7 @@ def lsh_candidate_pairs(
     return pairs.select(
         "id_a",
         "id_b",
-        (matches.cast("double") / F.lit(float(num_hashes))).alias("est_jaccard"),
+        (matches.cast("double") / F.lit(float(NUM_HASHES))).alias("est_jaccard"),
     )
 
 
@@ -283,7 +285,6 @@ def ngram_jaccard_for_pairs(
     pairs: DataFrame,
     id_col: str,
     text_col: str = "text",
-    n: int = 3,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Exact Jaccard computed ONLY for the given (id_a, id_b) pairs —
@@ -311,10 +312,15 @@ def ngram_jaccard_for_pairs(
     the pair relation (r12: saved dedup_incremental a shuffle-hash
     semi join and one consumer of the candidate checkpoint).
     """
-    joined = _pair_doc_sets(df, pairs, id_col, text_col, n, carry=carry)
+    joined = _pair_doc_sets(df, pairs, id_col, text_col, carry=carry)
+    return joined.select("id_a", "id_b", *carry, _set_jaccard().alias("jaccard"))
+
+
+def _set_jaccard() -> Column:
+    """``|A ∩ B| / |A ∪ B|`` of the distinct shingle-hash arrays
+    ``__ha`` and ``__hb`` (:func:`shingle_hash_sets` rows)."""
     inter = F.size(F.array_intersect("__ha", "__hb"))
-    jac = inter.cast("double") / (F.size("__ha") + F.size("__hb") - inter).cast("double")
-    return joined.select("id_a", "id_b", *carry, jac.alias("jaccard"))
+    return inter.cast("double") / (F.size("__ha") + F.size("__hb") - inter).cast("double")
 
 
 def _pair_doc_sets(
@@ -322,7 +328,6 @@ def _pair_doc_sets(
     pairs: DataFrame,
     id_col: str,
     text_col: str = "text",
-    n: int = 3,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """(id_a, id_b, __ha, __hb): each candidate pair joined with both
@@ -342,20 +347,14 @@ def _pair_doc_sets(
     involved doc — the same bytes the second evaluation would shuffle
     anyway, in MEMORY_AND_DISK storage (spills, never OOMs).
     """
-    from spk_sl_validation_spark.ext.hashing import md5_long, shingle_rows
-
     involved = pairs.select(F.col("id_a").alias(id_col)).unionByName(
         pairs.select(F.col("id_b").alias(id_col))
     ).distinct()
-    sh = shingle_rows(df.join(involved, id_col, "left_semi"), id_col, text_col, n)
-    doc_sets = (
-        sh.select(id_col, md5_long("s").alias("h"))
-        .groupBy(id_col)
-        .agg(F.array_sort(F.array_distinct(F.collect_list("h"))).alias("hs"))
-        # lazy (r12): compute-once persistence without the serialized
-        # eager job — materializes inside the consumer's own job.
-        .localCheckpoint(eager=False)
-    )
+    # lazy (r12): compute-once persistence without the serialized
+    # eager job — materializes inside the consumer's own job.
+    doc_sets = shingle_hash_sets(
+        df.join(involved, id_col, "left_semi"), id_col, text_col
+    ).localCheckpoint(eager=False)
     a = doc_sets.select(F.col(id_col).alias("id_a"), F.col("hs").alias("__ha"))
     b = doc_sets.select(F.col(id_col).alias("id_b"), F.col("hs").alias("__hb"))
     return pairs.select("id_a", "id_b", *carry).join(a, "id_a").join(b, "id_b")
@@ -385,7 +384,7 @@ def containment_for_pairs(
     (suffix-array / seed-shingle sampling), out of scope here; within
     the candidate set the computed containment is exact.
     """
-    joined = _pair_doc_sets(df, pairs, id_col, text_col, SHINGLE_N)
+    joined = _pair_doc_sets(df, pairs, id_col, text_col)
     inter = F.size(F.array_intersect("__ha", "__hb")).cast("double")
     return joined.select(
         "id_a",
@@ -399,10 +398,7 @@ def dedup_corpus(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 12,
-    bands: int = 6,
-    shingle_n: int = 3,
-    jaccard_threshold: float = 0.8,
+    jaccard_threshold: float = JACCARD_TAU,
     exact_first: bool = False,
 ) -> DataFrame:
     """The full near-dup dedup pipeline: MinHash-LSH candidates →
@@ -432,7 +428,7 @@ def dedup_corpus(
     identical when no capped band bucket overflows: an exact copy has
     the same text as its rep, so every near-dup relation through a
     copy exists through the rep with a smaller-or-equal id. (Under a
-    >``max_bucket_size`` bucket, removing copies can only RESTORE
+    >``MAX_BUCKET_SIZE`` bucket, removing copies can only RESTORE
     candidacy the copies' cap slots were wasting — strictly better
     recall.) On a dup-heavy corpus this removes the dominant LSH cost
     — SCALE.md §7 records the difference at 1M docs (3.8×) — which is
@@ -449,8 +445,7 @@ def dedup_corpus(
             "left_semi",
         )
         rep_keep = dedup_corpus(
-            rep_docs, id_col, text_col, num_hashes, bands, shingle_n,
-            jaccard_threshold, exact_first=False,
+            rep_docs, id_col, text_col, jaccard_threshold, exact_first=False
         ).withColumnRenamed(id_col, "__rep").withColumnRenamed("keep", "__rep_keep")
         return membership.join(rep_keep, "__rep").select(
             id_col,
@@ -469,10 +464,10 @@ def dedup_corpus(
     # At 100 TB the same holds: candidates ≪ corpus, so materializing
     # them is the cheap side of the trade. Lazy (r12): same
     # compute-once persistence, no serialized eager job per run.
-    candidates = lsh_candidate_pairs(
-        df, id_col, text_col, num_hashes, bands, shingle_n, with_estimate=False
-    ).localCheckpoint(eager=False)
-    verified = ngram_jaccard_for_pairs(df, candidates, id_col, text_col, shingle_n).filter(
+    candidates = lsh_candidate_pairs(df, id_col, text_col, with_estimate=False).localCheckpoint(
+        eager=False
+    )
+    verified = ngram_jaccard_for_pairs(df, candidates, id_col, text_col).filter(
         F.col("jaccard") >= jaccard_threshold
     )
     # The checkpointed candidate lineage erases size stats, so without
@@ -492,10 +487,7 @@ def dedup_clusters(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 12,
-    bands: int = 6,
-    shingle_n: int = 3,
-    jaccard_threshold: float = 0.8,
+    jaccard_threshold: float = JACCARD_TAU,
     max_iterations: int | None = None,
     method: str = "propagate",
 ) -> DataFrame:
@@ -542,10 +534,10 @@ def dedup_clusters(
     # Candidates checkpointed for the same reason as dedup_corpus;
     # symmetric edges come from ONE explode over verified rather than a
     # self-union, so the verify subtree appears once in the plan.
-    candidates = lsh_candidate_pairs(
-        df, id_col, text_col, num_hashes, bands, shingle_n, with_estimate=False
-    ).localCheckpoint(eager=True)
-    verified = ngram_jaccard_for_pairs(df, candidates, id_col, text_col, shingle_n).filter(
+    candidates = lsh_candidate_pairs(df, id_col, text_col, with_estimate=False).localCheckpoint(
+        eager=True
+    )
+    verified = ngram_jaccard_for_pairs(df, candidates, id_col, text_col).filter(
         F.col("jaccard") >= jaccard_threshold
     )
     edges = (
@@ -635,9 +627,7 @@ def duplicate_soft_weights(
     identical by construction (pinned by test).
     """
     if clusters is None:
-        clusters = dedup_clusters(
-            df, id_col, text_col, NUM_HASHES, BANDS, SHINGLE_N, JACCARD_TAU
-        )
+        clusters = dedup_clusters(df, id_col, text_col)
     sizes = clusters.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
     toks = df.select(
         F.col(id_col),
@@ -898,23 +888,49 @@ def ngram_jaccard_pairs(
     # shares no non-cached subtree, so materialize the distinct
     # shingle rows once instead of exploding/deduping the corpus 3×.
     sh = shingle_rows(df, id_col, text_col, SHINGLE_N).distinct().localCheckpoint(eager=True)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
         a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
         .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    jac = F.col("n_inter").cast("double") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double")
-    # sizes is one row per input doc — corpus-cardinality standalone,
-    # so never force a broadcast; shuffle_hash by repo convention and
-    # let AQE upgrade genuinely small cases to broadcast at runtime.
+    return _count_jaccard(inter, sh, sh, "id_a", "id_b", id_col, threshold)
+
+
+def _count_jaccard(
+    inter: DataFrame,
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    key_a: str,
+    key_b: str,
+    id_col: str,
+    threshold: float,
+    n_cols: tuple[str, str] = ("n_a", "n_b"),
+) -> DataFrame:
+    """The verify tail of the exploded-shingle Jaccard joins:
+    ``inter`` (key_a, key_b, n_inter) → (key_a, key_b, jaccard) with
+    ``jaccard = n_inter / (n_a + n_b − n_inter) >= threshold``.
+
+    A side's set size is one count per doc of its distinct shingle
+    rows (``sh_a`` for ``key_a``, ``sh_b`` for ``key_b``), named by
+    ``n_cols``. The size relations are one row per doc —
+    corpus-cardinality — so never force a broadcast; shuffle_hash by
+    repo convention and let AQE upgrade genuinely small cases to
+    broadcast at runtime.
+    """
+    n_a, n_b = n_cols
+
+    def sizes(sh: DataFrame, key: str, n: str) -> DataFrame:
+        counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias(n))
+        return counts.withColumnRenamed(id_col, key).hint("shuffle_hash")
+
+    jac = F.col("n_inter").cast("double") / (
+        F.col(n_a) + F.col(n_b) - F.col("n_inter")
+    ).cast("double")
     return (
-        inter.join(sa.hint("shuffle_hash"), "id_a")
-        .join(sb.hint("shuffle_hash"), "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
+        inter.join(sizes(sh_a, key_a, n_a), key_a)
+        .join(sizes(sh_b, key_b, n_b), key_b)
+        .select(key_a, key_b, jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -924,7 +940,7 @@ def dedup_incremental(
     is_new: Column,
     id_col: str = "doc_id",
     text_col: str = "text",
-    jaccard_threshold: float = 0.8,
+    jaccard_threshold: float = JACCARD_TAU,
 ) -> DataFrame:
     """Incremental dedup: flag each NEW document against the existing
     index — the shape a production corpus pipeline actually runs when
@@ -952,7 +968,6 @@ def dedup_incremental(
     the same deterministic rule the oracle replays). Verification
     touches only cross pairs.
     """
-    rows_per_band = NUM_HASHES // BANDS
     tagged = df.withColumn("__new", is_new)
 
     # -- exact stage: one fingerprint groupBy-free semi join ----------
@@ -963,7 +978,7 @@ def dedup_incremental(
     )
 
     # -- near stage: asymmetric capped-bucket join --------------------
-    sig_df = minhash_signatures(df, id_col, text_col, NUM_HASHES, SHINGLE_N)
+    sig_df = minhash_signatures(df, id_col, text_col)
     new_flags = tagged.select(id_col, "__new")
     # capped feeds BOTH sides of the asymmetric band join below; Spark
     # shares no non-cached subtree across join sides, so without
@@ -976,18 +991,17 @@ def dedup_incremental(
     # each eager checkpoint paid a full job's AQE stage-latency chain
     # before the query proper could start).
     capped = (
-        capped_band_rows(sig_df, id_col, rows_per_band, BANDS)
+        capped_band_rows(sig_df, id_col)
         .join(new_flags, id_col)
         .localCheckpoint(eager=False)
     )
-    hcols = [f"h{r}" for r in range(rows_per_band)]
-    lhs = capped.filter(F.col("__new")).select(F.col(id_col).alias("__nid"), "band", *hcols)
-    rhs = capped.filter(~F.col("__new")).select(F.col(id_col).alias("__iid"), "band", *hcols)
+    lhs = capped.filter(F.col("__new")).select(F.col(id_col).alias("__nid"), "band", *_HCOLS)
+    rhs = capped.filter(~F.col("__new")).select(F.col(id_col).alias("__iid"), "band", *_HCOLS)
     # cand feeds the verify stage's three pair consumers; without
     # materialization the banding subtree runs three times (same trade
     # as dedup_corpus — candidates ≪ corpus, three longs per row).
     cand = (
-        lhs.join(rhs, ["band", *hcols])
+        lhs.join(rhs, ["band", *_HCOLS])
         .select(
             F.least("__nid", "__iid").alias("id_a"),
             F.greatest("__nid", "__iid").alias("id_b"),
@@ -1003,13 +1017,21 @@ def dedup_incremental(
     # new_id uniquely (lhs is new-only, rhs index-only), so the row set
     # is identical.
     verified = ngram_jaccard_for_pairs(
-        df, cand, id_col, text_col, SHINGLE_N, carry=("new_id",)
+        df, cand, id_col, text_col, carry=("new_id",)
     ).filter(F.col("jaccard") >= jaccard_threshold)
     near_hits = verified.select(F.col("new_id").alias(id_col)).distinct()
+    return _verdicts(tagged.filter(F.col("__new")).select(id_col), exact_hits, near_hits, id_col)
 
-    new_docs = tagged.filter(F.col("__new")).select(id_col)
+
+def _verdicts(
+    docs: DataFrame, exact_hits: DataFrame, near_hits: DataFrame, id_col: str
+) -> DataFrame:
+    """(id, keep, reason) for every id of ``docs``: ``exact_dup`` if
+    it is in ``exact_hits``, else ``near_dup`` if it is in
+    ``near_hits``, else ``unique`` (kept) — the output contract of
+    both incremental dedup paths."""
     out = (
-        new_docs.join(exact_hits.withColumn("__e", F.lit(True)), id_col, "left")
+        docs.join(exact_hits.withColumn("__e", F.lit(True)), id_col, "left")
         .join(near_hits.withColumn("__n", F.lit(True)).hint("shuffle_hash"), id_col, "left")
     )
     reason = (
@@ -1028,17 +1050,16 @@ def dedup_incremental(
 # Precomputed dedup index (the 100 TB incremental path made literal)
 # ---------------------------------------------------------------------------
 
-def shingle_hash_sets(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """(id, hs): each document's sorted distinct shingle-hash array —
+def shingle_hash_sets(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """(id, hs): each document's sorted distinct ``SHINGLE_N``-gram
+    shingle-hash array —
     the verification-stage representation (see
     :func:`ngram_jaccard_for_pairs`), exposed as a persistable
     artifact so an index can verify candidates without re-reading
     corpus text."""
-    from spk_sl_validation_spark.ext.hashing import md5_long, shingle_rows
+    from spk_sl_validation_spark.ext.hashing import shingle_rows
 
-    sh = shingle_rows(df, id_col, text_col, n)
+    sh = shingle_rows(df, id_col, text_col, SHINGLE_N)
     return (
         sh.select(id_col, md5_long("s").alias("h"))
         .groupBy(id_col)
@@ -1050,9 +1071,6 @@ def dedup_index_tables(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 12,
-    bands: int = 6,
-    shingle_n: int = 3,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The three persistable artifacts of a corpus dedup index:
 
@@ -1067,12 +1085,9 @@ def dedup_index_tables(
     At 100 TB the index is built once per corpus version and each
     arriving shard runs :func:`dedup_incremental_indexed` against it —
     index-side work is a bucketed scan, never a recompute."""
-    assert num_hashes % bands == 0
     fp = df.select(id_col, md5_fingerprint(text_col).alias("fp"))
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    band_rows = capped_band_rows(sig, id_col, num_hashes // bands, bands)
-    hs = shingle_hash_sets(df, id_col, text_col, shingle_n)
-    return fp, band_rows, hs
+    band_rows = capped_band_rows(minhash_signatures(df, id_col, text_col), id_col)
+    return fp, band_rows, shingle_hash_sets(df, id_col, text_col)
 
 
 def dedup_incremental_indexed(
@@ -1082,10 +1097,6 @@ def dedup_incremental_indexed(
     index_hs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 12,
-    bands: int = 6,
-    shingle_n: int = 3,
-    jaccard_threshold: float = 0.8,
     batch_tables: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """:func:`dedup_incremental` against a PRECOMPUTED index — the
@@ -1093,32 +1104,25 @@ def dedup_incremental_indexed(
     :func:`dedup_index_tables`) are read from storage and only the
     arriving batch pays signature/shingle computation.
 
-    Same output contract: (id, keep, reason∈{exact_dup, near_dup,
-    unique}) for every batch document. One deliberate semantic
-    difference: the hot-bucket cap applies per side (index capped at
+    Same output contract at the ``JACCARD_TAU`` threshold: (id, keep,
+    reason∈{exact_dup, near_dup, unique}) for every batch document.
+    One deliberate semantic difference: the hot-bucket cap applies per side (index capped at
     build time, batch capped here) rather than over batch+index
     jointly, so a bucket may admit up to 2×cap members across the two
     sides; whenever no bucket is cap-bound the keep/drop set is
     IDENTICAL to :func:`dedup_incremental` (pinned by test).
     """
-    assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
-    hcols = [f"h{r}" for r in range(rows_per_band)]
-
     # Exact stage: the index is PROBED with a broadcast of the batch's
     # fingerprints (shard-bounded), then the handful of hit
     # fingerprints broadcasts back — the index fp table is scanned,
     # never shuffled, so this stage's data movement is ∝ shard even
     # against a corpus-scale index.
     if batch_tables is None:
-        batch_tables = dedup_index_tables(
-            batch_df, id_col, text_col, num_hashes, bands, shingle_n
-        )
+        batch_tables = dedup_index_tables(batch_df, id_col, text_col)
     # A caller that already built the batch's artifacts (e.g. the
     # streaming ingest loop, which also merges them into the index)
     # passes them in instead of recomputing the tokenize→hash→aggregate
-    # pipeline. They must come from dedup_index_tables with the same
-    # num_hashes/bands/shingle_n/cap parameters.
+    # pipeline. They must come from dedup_index_tables.
     fp, batch_bands, batch_hs = batch_tables
     batch_fps = fp.select("fp").distinct()
     hit_fps = (
@@ -1127,8 +1131,8 @@ def dedup_incremental_indexed(
     exact_hits = fp.join(F.broadcast(hit_fps), "fp", "left_semi").select(id_col)
 
     cand = (
-        batch_bands.select(F.col(id_col).alias("__nid"), "band", *hcols)
-        .join(index_bands.select(F.col(id_col).alias("__iid"), "band", *hcols), ["band", *hcols])
+        batch_bands.select(F.col(id_col).alias("__nid"), "band", *_HCOLS)
+        .join(index_bands.select(F.col(id_col).alias("__iid"), "band", *_HCOLS), ["band", *_HCOLS])
         .select("__nid", "__iid")
         .distinct()
         .localCheckpoint(eager=True)
@@ -1150,29 +1154,12 @@ def dedup_incremental_indexed(
             "__iid",
         )
     )
-    inter = F.size(F.array_intersect("__ha", "__hb"))
-    jac = inter.cast("double") / (F.size("__ha") + F.size("__hb") - inter).cast("double")
     near_hits = (
-        pairs.filter(jac >= jaccard_threshold)
+        pairs.filter(_set_jaccard() >= JACCARD_TAU)
         .select(F.col("__nid").alias(id_col))
         .distinct()
     )
-
-    out = (
-        batch_df.select(id_col)
-        .join(exact_hits.withColumn("__e", F.lit(True)), id_col, "left")
-        .join(near_hits.withColumn("__n", F.lit(True)).hint("shuffle_hash"), id_col, "left")
-    )
-    reason = (
-        F.when(F.col("__e"), F.lit("exact_dup"))
-        .when(F.col("__n"), F.lit("near_dup"))
-        .otherwise(F.lit("unique"))
-    )
-    return out.select(
-        id_col,
-        (F.col("__e").isNull() & F.col("__n").isNull()).alias("keep"),
-        reason.alias("reason"),
-    )
+    return _verdicts(batch_df.select(id_col), exact_hits, near_hits, id_col)
 
 
 def merge_into_dedup_index(
@@ -1266,18 +1253,7 @@ def jaccard_join_prefix(df: DataFrame, id_col: str, text_col: str = "text") -> D
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    jac = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    ).cast("double")
-    return (
-        inter.join(sa.hint("shuffle_hash"), "id_a")
-        .join(sb.hint("shuffle_hash"), "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= PREFIX_JACCARD_TAU)
-    )
+    return _count_jaccard(inter, sh, sh, "id_a", "id_b", id_col, PREFIX_JACCARD_TAU)
 
 
 def prefix_index_tables(
@@ -1340,20 +1316,8 @@ def _prefix_probe_tail(sh_b: DataFrame, sh_c: DataFrame, freq: DataFrame, id_col
         .groupBy("id_batch", "id_corpus")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    sb = sh_b.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_b")).withColumnRenamed(
-        id_col, "id_batch"
-    )
-    sc = sh_c.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_c")).withColumnRenamed(
-        id_col, "id_corpus"
-    )
-    jac = F.col("n_inter").cast("double") / (
-        F.col("n_b") + F.col("n_c") - F.col("n_inter")
-    ).cast("double")
-    return (
-        inter.join(sb.hint("shuffle_hash"), "id_batch")
-        .join(sc.hint("shuffle_hash"), "id_corpus")
-        .select("id_batch", "id_corpus", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= PREFIX_JACCARD_TAU)
+    return _count_jaccard(
+        inter, sh_b, sh_c, "id_batch", "id_corpus", id_col, PREFIX_JACCARD_TAU, ("n_b", "n_c")
     )
 
 

@@ -44,6 +44,7 @@ from spk_sl_validation_spark.ext.hashing import ws_tokens
 
 BM25_K1 = 1.2
 BM25_B = 0.75
+RRF_K = 60  # standard reciprocal-rank-fusion constant (Cormack et al. 2009)
 
 
 def _query_terms_df(docs_or_any: DataFrame, queries: Sequence[tuple[int, str]]) -> DataFrame:
@@ -230,10 +231,10 @@ def rrf_fuse(
     bm25_pool: DataFrame,
     cos_pool: DataFrame,
     id_col: str = "doc_id",
-    rrf_k: int = 60,
     top_k: int = 10,
 ) -> DataFrame:
-    """Reciprocal-rank fusion of two (query_id, id, rnk) pools —
+    """Reciprocal-rank fusion (``1 / (RRF_K + rnk)`` per pool) of two
+    (query_id, id, rnk) pools —
     the SINGLE fusion tail shared by the direct and indexed hybrid
     queries (they borrow each other's oracle verbatim, so the
     equality must be structural, not copy-paste).
@@ -246,7 +247,7 @@ def rrf_fuse(
     """
 
     def _c(r: str):
-        return F.lit(1.0) / (F.lit(float(rrf_k)) + F.col(r).cast("double"))
+        return F.lit(1.0) / (F.lit(float(RRF_K)) + F.col(r).cast("double"))
 
     contrib = bm25_pool.select(
         "query_id",
@@ -285,7 +286,6 @@ def hybrid_rrf_rank_indexed(
     stats: DataFrame,
     nd_tbl: DataFrame,
     id_col: str = "doc_id",
-    rrf_k: int = 60,
     pool: int = 20,
     top_k: int = 10,
 ) -> DataFrame:
@@ -329,7 +329,7 @@ def hybrid_rrf_rank_indexed(
         .filter(F.col("rnk") <= pool)
         .select("query_id", id_col, "rnk")
     )
-    return rrf_fuse(bm25_pool, cos_pool, id_col, rrf_k, top_k)
+    return rrf_fuse(bm25_pool, cos_pool, id_col, top_k)
 
 
 def merge_into_bm25_index(

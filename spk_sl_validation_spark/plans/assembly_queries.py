@@ -173,15 +173,11 @@ def compose_training_pipeline(docs: DataFrame) -> DataFrame:
 
     from spk_sl_validation_spark.ext import dedup as D
     from spk_sl_validation_spark.ext.hashing import ws_tokens
-    from spk_sl_validation_spark.plans.dedup_shared import (
-        BANDS,
-        JACCARD_TAU,
-        NUM_HASHES,
-    )
+    from spk_sl_validation_spark.plans.dedup_shared import JACCARD_TAU
 
     n_tok = F.size(ws_tokens("text"))
     q = docs.filter(n_tok >= MIN_TOKENS)
-    keep = D.dedup_corpus(q, "doc_id", "text", NUM_HASHES, BANDS, 3, JACCARD_TAU)
+    keep = D.dedup_corpus(q, "doc_id", "text", JACCARD_TAU)
     meta = docs.select("doc_id", "source", n_tok.alias("n_tokens")).filter(
         F.col("n_tokens") >= MIN_TOKENS
     )

@@ -809,12 +809,10 @@ FROM keepflag GROUP BY source
 )
 def dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spk_sl_validation_spark.ext.dedup import dedup_corpus
-    from spk_sl_validation_spark.plans.dedup_shared import BANDS, JACCARD_TAU, NUM_HASHES
+    from spk_sl_validation_spark.plans.dedup_shared import JACCARD_TAU
 
     docs = load_table(spark, sf_dir, "documents")
-    keep = dedup_corpus(
-        docs, "doc_id", "text", NUM_HASHES, BANDS, 3, jaccard_threshold=JACCARD_TAU
-    )
+    keep = dedup_corpus(docs, "doc_id", "text", jaccard_threshold=JACCARD_TAU)
     joined = docs.join(keep.hint("shuffle_hash"), "doc_id").select(
         "source", "keep", F.size(ws_tokens("text")).alias("n_tok")
     )
@@ -869,12 +867,10 @@ FROM scored GROUP BY keep
 def quality_by_dup_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spk_sl_validation_spark.ext.dedup import dedup_corpus
     from spk_sl_validation_spark.ext.text import quality_model_prob
-    from spk_sl_validation_spark.plans.dedup_shared import BANDS, JACCARD_TAU, NUM_HASHES
+    from spk_sl_validation_spark.plans.dedup_shared import JACCARD_TAU
 
     docs = load_table(spark, sf_dir, "documents")
-    keep = dedup_corpus(
-        docs, "doc_id", "text", NUM_HASHES, BANDS, 3, jaccard_threshold=JACCARD_TAU
-    )
+    keep = dedup_corpus(docs, "doc_id", "text", jaccard_threshold=JACCARD_TAU)
     p = F.round(quality_model_prob("text"), 12).cast("decimal(28,12)")
     joined = docs.join(keep.hint("shuffle_hash"), "doc_id").select(
         "keep", p.alias("p12")

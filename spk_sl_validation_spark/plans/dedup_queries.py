@@ -103,7 +103,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cost and otherwise runs in the single scan task (guide §2.5);
     # measured 4.47 -> 2.11 s at sf0.1 (r11 bench)
     docs = load_table_spread(spark, sf_dir, "documents")
-    return D.lsh_candidate_pairs(docs, "doc_id", "text", NUM_HASHES, BANDS)
+    return D.lsh_candidate_pairs(docs, "doc_id", "text")
 
 
 # ---------------------------------------------------------------------------
@@ -183,9 +183,7 @@ JOIN toks t USING (doc_id)
 )
 def dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return D.dedup_corpus(
-        docs, "doc_id", "text", NUM_HASHES, BANDS, 3, jaccard_threshold=JACCARD_TAU
-    )
+    return D.dedup_corpus(docs, "doc_id", "text", jaccard_threshold=JACCARD_TAU)
 
 
 @register(
@@ -204,14 +202,7 @@ def dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_pipeline_exact_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return D.dedup_corpus(
-        docs,
-        "doc_id",
-        "text",
-        NUM_HASHES,
-        BANDS,
-        3,
-        jaccard_threshold=JACCARD_TAU,
-        exact_first=True,
+        docs, "doc_id", "text", jaccard_threshold=JACCARD_TAU, exact_first=True
     )
 
 
@@ -222,9 +213,7 @@ def dedup_pipeline_exact_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return D.dedup_clusters(
-        docs, "doc_id", "text", NUM_HASHES, BANDS, 3, jaccard_threshold=JACCARD_TAU
-    )
+    return D.dedup_clusters(docs, "doc_id", "text", jaccard_threshold=JACCARD_TAU)
 
 
 @register(
@@ -242,14 +231,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_clusters_stars(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return D.dedup_clusters(
-        docs,
-        "doc_id",
-        "text",
-        NUM_HASHES,
-        BANDS,
-        3,
-        jaccard_threshold=JACCARD_TAU,
-        method="stars",
+        docs, "doc_id", "text", jaccard_threshold=JACCARD_TAU, method="stars"
     )
 
 
@@ -281,7 +263,7 @@ def dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_soft_weights_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     stored = D.dedup_clusters(
-        docs, "doc_id", "text", NUM_HASHES, BANDS, 3, jaccard_threshold=JACCARD_TAU
+        docs, "doc_id", "text", jaccard_threshold=JACCARD_TAU
     ).localCheckpoint(eager=True)
     return D.duplicate_soft_weights(docs, "doc_id", "text", clusters=stored)
 
@@ -429,19 +411,8 @@ def dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % 5 == 0
-    index = D.dedup_index_tables(
-        docs.filter(~is_new), "doc_id", "text", NUM_HASHES, BANDS, 3
-    )
-    return D.dedup_incremental_indexed(
-        docs.filter(is_new),
-        *index,
-        id_col="doc_id",
-        text_col="text",
-        num_hashes=NUM_HASHES,
-        bands=BANDS,
-        shingle_n=3,
-        jaccard_threshold=JACCARD_TAU,
-    )
+    index = D.dedup_index_tables(docs.filter(~is_new), "doc_id", "text")
+    return D.dedup_incremental_indexed(docs.filter(is_new), *index)
 
 
 # ---------------------------------------------------------------------------
@@ -491,9 +462,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.lsh_candidate_pairs(
-        docs, "doc_id", "text", NUM_HASHES, BANDS, 3, with_estimate=False
-    )
+    pairs = D.lsh_candidate_pairs(docs, "doc_id", "text", with_estimate=False)
     scored = D.containment_for_pairs(docs, pairs, "doc_id", "text")
     return scored.filter(
         F.greatest("cont_a_in_b", "cont_b_in_a") >= CONTAINMENT_TAU
@@ -547,7 +516,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     exact = D.ngram_jaccard_pairs(docs, "doc_id", "text", RECALL_MIN_J)
     cand = D.lsh_candidate_pairs(
-        docs, "doc_id", "text", NUM_HASHES, BANDS, 3, with_estimate=False
+        docs, "doc_id", "text", with_estimate=False
     ).withColumn("__hit", F.lit(1))
     joined = exact.join(cand.hint("shuffle_hash"), ["id_a", "id_b"], "left")
     return joined.groupBy(
@@ -609,10 +578,8 @@ def dedup_source_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.lsh_candidate_pairs(
-        docs, "doc_id", "text", NUM_HASHES, BANDS, 3, with_estimate=False
-    )
-    verified = D.ngram_jaccard_for_pairs(docs, pairs, "doc_id", "text", 3).filter(
+    pairs = D.lsh_candidate_pairs(docs, "doc_id", "text", with_estimate=False)
+    verified = D.ngram_jaccard_for_pairs(docs, pairs, "doc_id", "text").filter(
         F.col("jaccard") >= JACCARD_TAU
     )
     prio_expr = F.lit(_DEFAULT_PRIORITY)
@@ -691,10 +658,8 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     docs = load_table(spark, sf_dir, "documents")
-    cand = D.lsh_candidate_pairs(
-        docs, "doc_id", "text", NUM_HASHES, BANDS, 3, with_estimate=False
-    )
-    scored = D.ngram_jaccard_for_pairs(docs, cand, "doc_id", "text", 3)
+    cand = D.lsh_candidate_pairs(docs, "doc_id", "text", with_estimate=False)
+    scored = D.ngram_jaccard_for_pairs(docs, cand, "doc_id", "text")
     pos = scored.filter(F.col("jaccard") >= JACCARD_TAU).withColumn(
         "label", F.lit(1).cast("int")
     )

@@ -10,15 +10,19 @@ registration order drives the driver's correctness sampling
 
 from __future__ import annotations
 
-from spk_sl_validation_spark.ext.dedup import BANDS, JACCARD_TAU, MAX_BUCKET_SIZE, NUM_HASHES
-from spk_sl_validation_spark.ext.hashing import md5_long_sql, seeded_perm_sql, word_shingles_sql
-
-_TOKS = r"string_split_regex(trim(text), '\s+')"
-
 # The LSH geometry, near-dup threshold and hot-bucket cap come from
 # ext/dedup.py: the Spark builders and every DuckDB oracle CTE below
 # must agree or engine and oracle silently desync.
-ROWS_PER_BAND = NUM_HASHES // BANDS
+from spk_sl_validation_spark.ext.dedup import (
+    BANDS,
+    JACCARD_TAU,
+    MAX_BUCKET_SIZE,
+    NUM_HASHES,
+    ROWS_PER_BAND,
+)
+from spk_sl_validation_spark.ext.hashing import md5_long_sql, seeded_perm_sql, word_shingles_sql
+
+_TOKS = r"string_split_regex(trim(text), '\s+')"
 
 # Boilerplate-span geometry: the batch census (corpus_queries) and the
 # streaming ingest gate (streaming_queries) must agree with their oracles.

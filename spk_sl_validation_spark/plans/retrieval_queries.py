@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from spk_sl_validation_spark.ext.retrieval import (
     BM25_B,
     BM25_K1,
+    RRF_K,
     bm25_doc_term_counts,
     bm25_index_tables,
     bm25_rank,
@@ -115,7 +116,6 @@ def bm25_retrieval_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_rank_indexed(BM25_QUERIES, postings, df_tbl, stats, top_k=BM25_TOP_K)
 
 
-RRF_K = 60  # standard reciprocal-rank-fusion constant (Cormack et al. 2009)
 RRF_POOL = 20  # per-ranker candidate pool depth
 RRF_TOP_K = 10
 
@@ -286,7 +286,7 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rnk") <= RRF_POOL)
         .select("query_id", "doc_id", "rnk")
     )
-    return rrf_fuse(bm25_pool, cos_pool, "doc_id", RRF_K, RRF_TOP_K)
+    return rrf_fuse(bm25_pool, cos_pool, "doc_id", RRF_TOP_K)
 
 
 @register(
@@ -322,7 +322,6 @@ def hybrid_rrf_retrieval_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         df_tbl,
         stats,
         nd_tbl,
-        rrf_k=RRF_K,
         pool=RRF_POOL,
         top_k=RRF_TOP_K,
     )

@@ -72,12 +72,10 @@ def dataset_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     that have near-duplicates. Rides dedup_clusters; one extra narrow
     projection, no additional shuffle."""
     from spk_sl_validation_spark.ext.dedup import dedup_clusters
-    from spk_sl_validation_spark.plans.dedup_shared import BANDS, JACCARD_TAU, NUM_HASHES
+    from spk_sl_validation_spark.plans.dedup_shared import JACCARD_TAU
 
     docs = load_table(spark, sf_dir, "documents")
-    clusters = dedup_clusters(
-        docs, "doc_id", "text", NUM_HASHES, BANDS, 3, jaccard_threshold=JACCARD_TAU
-    )
+    clusters = dedup_clusters(docs, "doc_id", "text", jaccard_threshold=JACCARD_TAU)
     bucket = md5_long(F.col("cluster_id").cast("string")) % 100
     split = F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
     return clusters.select("doc_id", "cluster_id", split.alias("split"))

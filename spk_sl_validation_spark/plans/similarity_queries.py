@@ -884,7 +884,7 @@ def dedup_cross_modal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(eb.hint("shuffle_hash"), "id_b")
         .select("id_a", "id_b", S.cosine(F.col("__ea"), F.col("__eb")).alias("cos_sim"))
     )
-    verified = ngram_jaccard_for_pairs(docs, cand, "doc_id", "text", 3).filter(
+    verified = ngram_jaccard_for_pairs(docs, cand, "doc_id", "text").filter(
         F.col("jaccard") >= CROSS_MODAL_TAU
     )
     return verified.join(ce.hint("shuffle_hash"), ["id_a", "id_b"]).select(

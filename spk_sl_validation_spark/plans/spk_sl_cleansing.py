@@ -16,6 +16,10 @@ wide shuffle is the dual-source window over (Material/Plant).
 ``after_a3`` is cached because four branches consume it (the
 reference reuses the same frame — SL_SPK_Cleansing.py:141,149,214,286;
 without caching Spark would recompute the join tree per branch).
+Its ``InMemoryRelation`` embeds the cached physical plan, whose
+exchange ``plan_id``s count every plan built before it in the
+session, so the optimized plan's text varies by those ids with what
+ran earlier; output and execution do not.
 
 ``run_ts`` is injected (never ``current_timestamp()``) so runs are
 reproducible — SURVEY.md §4.4.7.

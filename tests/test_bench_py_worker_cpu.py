@@ -1,6 +1,9 @@
-"""bench.py's Python-worker CPU reader sees the CPU of Python workers."""
+"""bench.py's Python-worker CPU reader sees the CPU of Python workers,
+and its query-name check runs before any Spark session starts."""
 
 from __future__ import annotations
+
+import pytest
 
 
 def test_py_worker_cpu_counts_an_arrow_grouped_map(spark):
@@ -16,3 +19,12 @@ def test_py_worker_cpu_counts_an_arrow_grouped_map(spark):
     rows = spark.range(4).selectExpr("id % 2 AS k").groupBy("k").applyInArrow(burn, "k long, s long").collect()
     assert len(rows) == 4
     assert py_worker_cpu_s(spark) - before > 0
+
+
+def test_unknown_query_name_exits_before_the_session(monkeypatch):
+    import bench
+    from spk_sl_validation_spark import session
+
+    monkeypatch.setattr(session, "build_session", lambda **kw: pytest.fail("session built"))
+    with pytest.raises(SystemExit, match="not registered: no_such_query"):
+        bench.main(["dedup_minhash_lsh", "no_such_query"])

@@ -28,7 +28,7 @@ def test_containment_detects_doc_in_doc(spark):
     assert row["cont_a_in_b"] == pytest.approx(1.0)
     assert row["cont_b_in_a"] == pytest.approx(4 / 28)
     # Jaccard under-scores the same pair by the size ratio
-    [j] = D.ngram_jaccard_for_pairs(docs, pairs, "doc_id", "text", 3).collect()
+    [j] = D.ngram_jaccard_for_pairs(docs, pairs, "doc_id", "text").collect()
     assert j["jaccard"] == pytest.approx(4 / 28)
     assert j["jaccard"] < row["cont_a_in_b"]
 

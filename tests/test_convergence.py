@@ -148,9 +148,7 @@ def test_dedup_clusters_propagate_raises_on_diameter_blowup(spark):
     words = [f"w{i}" for i in range(120)]
     docs_rows = [(i, " ".join(words[i : i + 30])) for i in range(60)]
     docs = spark.createDataFrame(docs_rows, "doc_id long, text string")
-    kwargs = dict(
-        num_hashes=12, bands=6, shingle_n=3, jaccard_threshold=0.8, max_iterations=5
-    )
+    kwargs = dict(jaccard_threshold=0.8, max_iterations=5)
     with pytest.raises(ValueError, match="stars"):
         dedup_clusters(docs, **kwargs).collect()
     # max_iterations now bounds BOTH modes (ADVICE r5 item 3): stars

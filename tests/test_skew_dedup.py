@@ -62,8 +62,8 @@ def _hot_corpus(spark, n=N):
 
 def test_hot_corpus_overflows_uncapped_buckets(spark):
     docs = _hot_corpus(spark)
-    sig = minhash_signatures(docs, "doc_id", "text", 12, 3)
-    uncapped = capped_band_rows(sig, "doc_id", 2, 6, N)
+    sig = minhash_signatures(docs, "doc_id", "text")
+    uncapped = capped_band_rows(sig, "doc_id", N)
     pre = (
         uncapped.groupBy("band", "h0", "h1")
         .count()
@@ -78,8 +78,8 @@ def test_hot_corpus_overflows_uncapped_buckets(spark):
 
 def test_cap_bounds_every_bucket_exactly(spark):
     docs = _hot_corpus(spark)
-    sig = minhash_signatures(docs, "doc_id", "text", 12, 3)
-    capped = capped_band_rows(sig, "doc_id", 2, 6, CAP)
+    sig = minhash_signatures(docs, "doc_id", "text")
+    capped = capped_band_rows(sig, "doc_id", CAP)
     post = (
         capped.groupBy("band", "h0", "h1")
         .count()
@@ -89,7 +89,7 @@ def test_cap_bounds_every_bucket_exactly(spark):
     assert post == CAP  # bound hit, never exceeded
     # and therefore candidate pairs are bounded by bands * C(cap, 2)
     pairs = lsh_candidate_pairs(
-        docs, "doc_id", "text", 12, 6, 3, max_bucket_size=CAP, with_estimate=False
+        docs, "doc_id", "text", max_bucket_size=CAP, with_estimate=False
     )
     assert pairs.count() <= 6 * CAP * (CAP - 1) // 2
 

@@ -68,7 +68,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as contract
-    from spk_sl_validation_spark.session import build_session
+    from spk_sl_validation_spark.session import build_session, release
 
     args = sys.argv[1:]
     json_out = None
@@ -110,6 +110,9 @@ def main() -> int:
             continue
         t0 = time.time()
         spdf = builder(spark, SF_DIR).toPandas()
+        # drop the query's cached/checkpointed state, as bench.py does:
+        # hundreds of builders in one session otherwise pile it up
+        release(spark)
         s_n, s_cols, s_hash = frame_fingerprint(spdf)
         ddf = con.execute(oracles[name]).df()
         d_n, d_cols, d_hash = frame_fingerprint(ddf)
