@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spk_sl_validation_spark.ext.graph import connected_components_stars
 from spk_sl_validation_spark.ext.hashing import md5_long, seeded_perm, ws_tokens
 from spk_sl_validation_spark.ext.text import md5_fingerprint
 
@@ -488,49 +489,22 @@ def dedup_clusters(
     id_col: str = "doc_id",
     text_col: str = "text",
     jaccard_threshold: float = JACCARD_TAU,
-    max_iterations: int | None = None,
-    method: str = "propagate",
+    max_iterations: int = 60,
 ) -> DataFrame:
     """Transitive near-dup clusters: connected components over the
     verified LSH near-dup graph, labeled by each component's min id.
 
-    ``method="propagate"`` (default, the oracle-checked mode): min-
-    label propagation — each round every node takes the min of its own
-    label and its neighbors' labels; the loop stops when a round
-    changes nothing. Rounds = graph diameter (near-dup chains are
-    short, so a handful). Each round is one join + aggregate;
-    ``localCheckpoint`` truncates the lineage so the plan doesn't grow
-    per iteration — the standard Spark idiom for iterative algorithms
-    (Pregel-style, the same scheme GraphX's connectedComponents uses).
-    Raises ``ValueError`` if the graph hasn't converged after
-    ``max_iterations`` (a silent partial answer would mislabel long
-    chains) and points at the stars mode.
-
-    ``method="stars"``: alternating large-star/small-star contraction
-    (``ext/graph.py connected_components_stars``) — until-converged in
-    O(log² n) rounds regardless of diameter. Identical output on any
-    graph where both converge (pinned by test).
-
-    Dispatch, measured (SCALE.md §7, round-6 10M-edge sweep): the
-    crossover is in EDGE VOLUME, not diameter. At ≥10⁷ edges stars
-    wins at EVERY diameter — 1.3× even at d=2 where propagation is
-    theoretically optimal, 8× at d=32, because propagation re-joins
-    the full static symmetric edge set every round (shuffle mass
-    linear in rounds: 3.6→32 GB across the sweep) while stars
-    contracts the relation (rounds ≈ 2·log d, mass bounded). Below
-    ~10⁶ edges the two are seconds apart and propagation's
-    recursive-CTE oracle replay makes it the verifiable choice. Use
-    propagate for oracle-checked paths; stars for production volume.
-
-    ``max_iterations`` bounds work in BOTH modes and either mode
-    fails loudly past it. Defaults are per-mode: 20 propagation
-    rounds (rounds = diameter, so 20 already means a pathological
-    chain) but 60 star rounds (rounds ≈ 2·log2(d), so 60 covers
-    diameters ≈ 2^29 — star rounds are cheap and the mode exists
-    precisely for graphs whose diameter nobody predicted).
+    Components come from alternating large-star/small-star contraction
+    (``ext/graph.py`` :func:`connected_components_stars`, Kiveris et
+    al. 2014): O(log² n) rounds whatever the diameter, ~2·log2(d) in
+    practice, so the default 60 rounds cover diameters ≈ 2^29. SCALE.md
+    §7 measured it equal to or faster than min-label propagation at
+    every diameter from 10⁷ edges up (propagation re-joins the full
+    static edge set every round and needs one round per unit of
+    diameter). Raises ``ValueError`` past ``max_iterations`` rounds: a
+    silent partial labeling would mislabel long chains. The DuckDB
+    oracle is still a recursive-CTE propagation; the labels are equal.
     """
-    if method not in ("propagate", "stars"):
-        raise ValueError(f"unknown method {method!r}: use 'propagate' or 'stars'")
     # Candidates checkpointed for the same reason as dedup_corpus;
     # symmetric edges come from ONE explode over verified rather than a
     # self-union, so the verify subtree appears once in the plan.
@@ -553,43 +527,10 @@ def dedup_clusters(
         .distinct()
         .localCheckpoint(eager=True)
     )
-
-    if method == "stars":
-        from spk_sl_validation_spark.ext.graph import connected_components_stars
-
-        star_labels, _ = connected_components_stars(
-            edges, max_rounds=60 if max_iterations is None else max_iterations
-        )
-        return (
-            df.select(F.col(id_col))
-            .join(
-                star_labels.withColumnRenamed("node", id_col).hint("shuffle_hash"),
-                id_col,
-                "left",
-            )
-            .select(id_col, F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"))
-        )
-
-    # Propagation shares ONE implementation with the scale probe
-    # (ext/graph.py min_label_propagation — edge-node-subset labels,
-    # static relation per round, hard failure past the cap; the
-    # subset restriction's equivalence argument and the 200k-doc A/B
-    # live in that docstring). Singletons fold back below.
-    from spk_sl_validation_spark.ext.graph import min_label_propagation
-
-    prop_rounds = 20 if max_iterations is None else max_iterations
-    try:
-        labels, _ = min_label_propagation(edges, prop_rounds, id_col=id_col)
-    except ValueError as exc:
-        raise ValueError(
-            f"dedup_clusters(method='propagate') did not converge in "
-            f"{prop_rounds} rounds — the dup graph has a component with "
-            f"diameter > {prop_rounds} (e.g. a long near-dup chain); "
-            "use method='stars', which converges in O(log² n) rounds"
-        ) from exc
+    labels, _ = connected_components_stars(edges, max_rounds=max_iterations)
     return (
         df.select(F.col(id_col))
-        .join(labels.hint("shuffle_hash"), id_col, "left")
+        .join(labels.withColumnRenamed("node", id_col).hint("shuffle_hash"), id_col, "left")
         .select(id_col, F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"))
     )
 
@@ -612,7 +553,7 @@ def duplicate_soft_weights(
     token budget a mixture planner should use.
 
     Scale shape: rides :func:`dedup_clusters` (capped-LSH candidates,
-    min-label propagation); on top of it one hash aggregate on
+    star contraction); on top of it one hash aggregate on
     cluster_id (≤ one row per document, uniform key) joined back, plus
     a narrow token-count map on the corpus. Both derived columns are a
     single double division — no ordering-sensitive float sums — so the

@@ -1,4 +1,5 @@
-"""Graph centrality over event-derived edges: fixed-iteration PageRank.
+"""Graph centrality over event-derived edges: PageRank, triangles and
+connected components by star contraction.
 
 North-star extension (no counterpart in the reference, whose surface
 is tabular cleansing — SURVEY.md §2). Link-style centrality is a
@@ -16,7 +17,7 @@ Design notes for scale and determinism:
   groupBy count (one shuffle on the edge key). Both keys are
   well-distributed; no driver state.
 - **Power iterations run on the aggregated graph.** The edge list is
-  ``localCheckpoint``-ed once — each of the 3 fixed iterations joins
+  ``localCheckpoint``-ed once — each iteration joins
   against the materialized small relation instead of replaying the
   events scan (lineage otherwise doubles per iteration: rank_i feeds
   both the inflow term and the dangling-mass term).
@@ -92,8 +93,7 @@ def _pagerank_step(
     out_w: DataFrame,
     ranks: DataFrame,
 ) -> DataFrame:
-    """One synchronous power iteration (shared by the fixed-iteration
-    oracle mode and the until_delta production mode)."""
+    """One synchronous power iteration of :func:`pagerank`."""
     contribs = (
         edges.join(F.broadcast(out_w), "src")
         .join(
@@ -138,10 +138,26 @@ def _pagerank_step(
     )
 
 
-def pagerank(edges: DataFrame) -> DataFrame:
+def linf_delta(cur: DataFrame, prev: DataFrame, key: str, val: str) -> float:
+    """max |cur.val - prev.val| over the keys both frames share: the
+    L∞ convergence probe of the iterative operators. One global
+    aggregate, one scalar to the driver; it also materializes ``cur``'s
+    lazy checkpoint, so the next iteration reads stored rows. An empty
+    frame has a NULL max, read as 0.0: nothing left to move."""
+    d = (
+        cur.join(prev.withColumnRenamed(val, "__prev"), key)
+        .agg(F.max(F.abs(F.col(val) - F.col("__prev"))).alias("d"))
+        .first()["d"]
+    )
+    return 0.0 if d is None else d
+
+
+def pagerank(
+    edges: DataFrame, n_iter: int = ITERATIONS, eps: float | None = None
+) -> tuple[DataFrame, int]:
     """(node, rank): weighted PageRank with dangling-mass
-    redistribution, ``ITERATIONS`` fixed power iterations, damping
-    ``d = DAMPING``.
+    redistribution, damping ``d = DAMPING``. Returns ``(ranks,
+    n_iterations_run)``.
 
     update: rank'(v) = (1-d)/N + d * (Σ_{u→v} rank(u)·w(u,v)/out(u)
     + dangling/N), where dangling = Σ rank(u) over nodes with no
@@ -150,18 +166,27 @@ def pagerank(edges: DataFrame) -> DataFrame:
     the DuckDB oracle's unrolled-CTE replay lands on identical doubles
     regardless of either engine's aggregation order.
 
-    This fixed-iteration mode is the ORACLE mode (cheap to unroll in
-    SQL); production at 100 TB iterates to a threshold with
-    :func:`pagerank_until_delta`.
+    ``n_iter`` fixed power iterations (the oracle mode, cheap to unroll
+    in SQL), or — when ``eps`` is given — iterate until the max
+    per-node rank change ≤ ``eps`` (L∞, :func:`linf_delta`) with
+    ``n_iter`` as the cap: the production mode at 100 TB, where a
+    fixed unroll either wastes passes or stops short. With ``eps=0.0``
+    and the same cap the ranks are bit-identical to the fixed mode
+    (pinned by test): a zero delta is a fixed point, so stopping there
+    changes nothing.
     """
     edges, nodes, n_df, out_w, ranks = _pagerank_setup(edges)
-    for _ in range(ITERATIONS):
-        ranks = _pagerank_step(edges, nodes, n_df, out_w, ranks)
+    it = 0
+    for it in range(1, n_iter + 1):
+        prev = ranks
         # rank_i feeds both next-iteration terms (inflow + dangling);
         # without truncation the lineage doubles per iteration. Lazy
-        # checkpoint: materialized once at first use, N-node relation.
-        ranks = ranks.localCheckpoint(eager=False)
-    return ranks.select("node", F.round("rank", 6).alias("rank"))
+        # checkpoint: materialized once at first use (the delta probe's
+        # job in eps mode), N-node relation.
+        ranks = _pagerank_step(edges, nodes, n_df, out_w, prev).localCheckpoint(eager=False)
+        if eps is not None and linf_delta(ranks, prev, "node", "rank") <= eps:
+            break
+    return ranks.select("node", F.round("rank", 6).alias("rank")), it
 
 
 def co_occurrence_edges(
@@ -268,59 +293,21 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     )
 
 
-def pagerank_until_delta(
-    edges: DataFrame,
-    eps: float = 1e-9,
-    max_iter: int = 50,
-    checkpoint_every: int = 5,
-) -> tuple[DataFrame, int]:
-    """Convergence-mode PageRank: iterate until the max per-node rank
-    change ≤ ``eps`` (L∞), or ``max_iter``. Returns
-    ``(ranks, n_iterations_run)``.
-
-    The production story at 100 TB, where a fixed unroll either wastes
-    passes or stops short: per-iteration arithmetic is IDENTICAL to
-    :func:`pagerank` (same round-to-12 exact-decimal updates), so with
-    ``eps=0.0, max_iter=ITERATIONS`` this returns bit-identical ranks
-    to :func:`pagerank` — pinned by test. Driver traffic is one
-    scalar (the L∞ delta) per iteration; lineage is truncated by an
-    eager ``localCheckpoint`` every ``checkpoint_every`` iterations
-    (between truncations the plan grows by at most that many steps —
-    the delta probe materializes nothing extra since each step is also
-    lazily checkpointed at first use).
-    """
-    edges, nodes, n_df, out_w, ranks = _pagerank_setup(edges)
-    ranks = ranks.localCheckpoint(eager=True)
-    it = 0
-    for it in range(1, max_iter + 1):
-        prev = ranks
-        ranks = _pagerank_step(edges, nodes, n_df, out_w, prev)
-        ranks = ranks.localCheckpoint(eager=(it % checkpoint_every == 0))
-        delta_row = (
-            ranks.join(prev.withColumnRenamed("rank", "__prev"), "node")
-            .agg(F.max(F.abs(F.col("rank") - F.col("__prev"))).alias("d"))
-            .first()
-        )
-        if (delta_row["d"] or 0.0) <= eps:
-            break
-    return ranks.select("node", F.round("rank", 6).alias("rank")), it
-
-
 def connected_components_stars(
     edges: DataFrame, max_rounds: int = 60
 ) -> tuple[DataFrame, int]:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC 2014) — the until-converged mode for graphs
-    whose diameter makes per-round label propagation unaffordable
-    (a d-diameter component needs d propagation rounds but only
-    O(log² n) star rounds, ~2·log n in practice).
+    and Beyond", SoCC 2014): O(log² n) rounds (~2·log n in practice)
+    whatever the diameter, where min-label propagation needs one round
+    per unit of diameter and fails outright on long chains (SCALE.md
+    §7).
 
     ``edges`` is any (src, dst) pair list (direction ignored,
     self-loops dropped). Returns ``(labels, n_rounds)`` where labels
     is (node, cluster_id = component-min id) covering every node that
-    appears in the edge list; callers fold singletons back with a
-    left join exactly as min-label propagation does.
+    appears in the edge list; callers fold singletons back with one
+    left join.
 
     One round = large-star (every node points its strictly-larger
     neighbors at the min of its closed neighborhood — keeps the graph
@@ -384,63 +371,3 @@ def connected_components_stars(
         .distinct()
     )
     return labels, rounds
-
-
-def min_label_propagation(
-    edges: DataFrame, max_rounds: int, id_col: str = "node"
-) -> tuple[DataFrame, int]:
-    """Connected components by min-label propagation over a SYMMETRIC
-    (src, dst) edge relation — the oracle-replayable mode (its
-    per-round semantics are exactly a recursive CTE, which is what
-    DuckDB can evaluate; `dedup_clusters(method='propagate')` and the
-    round-6 diameter sweep in SCALE.md §7 both run THIS implementation,
-    so the sweep measured the production loop, not a replica).
-
-    Labels cover only nodes appearing in the edge relation — a node
-    with no edges never receives a neighbor_min row, so iterating
-    over the edge-node subset is provably identical to carrying every
-    isolated node through every round; callers fold singletons back
-    with one left join. Per round the shuffled relation is the edge
-    set + the edge-node label table; the relation is STATIC across
-    rounds (contrast :func:`connected_components_stars`, which
-    contracts it — the measured dispatch threshold lives in SCALE.md
-    §7). ``localCheckpoint`` truncates lineage per round (the
-    standard Spark iterative-algorithm idiom). Raises ``ValueError``
-    after ``max_rounds`` non-converged rounds — a silent partial
-    labeling would mislabel long chains.
-
-    Returns ``(labels, n_rounds)`` with columns (id_col, cluster_id =
-    component-min id).
-    """
-    labels = (
-        edges.select(F.col("src").alias(id_col))
-        .distinct()
-        .select(F.col(id_col), F.col(id_col).alias("cluster_id"))
-        .localCheckpoint(eager=True)
-    )
-    for rnd in range(1, max_rounds + 1):
-        neighbor_min = (
-            edges.join(labels, edges.src == F.col(id_col))
-            .groupBy(F.col("dst").alias(id_col))
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, id_col, "left")
-            .select(
-                id_col,
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), id_col)
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            return labels, rnd
-    raise ValueError(f"min-label propagation did not converge in {max_rounds} rounds")

@@ -291,7 +291,7 @@ def train_quality_model_until_delta(
     absolute weight change drops below ``tol`` (or ``max_iters``).
     Collects the 1-row weight relation per iteration to test the stop
     condition — the canonical iterative-algorithm driver loop (cf.
-    ``pagerank_until_delta``, ext/cluster.py): k floats per round, the
+    ``graph.pagerank(eps=...)``, ext/cluster.py): k floats per round, the
     corpus itself never leaves the executors. Returns (weights dict
     usable by :func:`quality_model_prob`, iterations run)."""
     features = _quality_training_set(df, text_col, label_col).localCheckpoint()

@@ -2,17 +2,17 @@
 
 North-star text-analysis extension (Mihalcea & Tarau 2004): build an
 undirected co-occurrence graph over corpus tokens (edge weight = count
-of adjacent occurrences), run N damped PageRank iterations, rank
-tokens by final score. The iterative shape is the same Pregel-style
-loop as ``dedup_clusters``'s label propagation and ``cluster.kmeans``:
-one join + one aggregate per round, ``localCheckpoint`` to truncate
-lineage.
+of adjacent occurrences), run damped PageRank iterations, rank tokens
+by final score. One loop, the shape of ``graph.pagerank`` and
+``cluster.kmeans``: one join + one aggregate per iteration, a lazy
+``localCheckpoint`` to truncate lineage, ``N_ITER`` fixed iterations
+(the registered query and its oracle) or, with ``eps``, until the
+L∞ score change falls to ``eps``.
 
-Determinism: every per-node score is built exclusively from +, *, /
-over doubles in a FIXED order — neighbor contributions fold in
-ascending neighbor-token order (``array_sort`` / ``list(... ORDER BY)``)
-— so after any number of iterations the scores are bit-identical to
-the DuckDB oracle's unrolled replay. No tolerance, no rounding.
+Determinism: each neighbor contribution is rounded to 12 decimals and
+summed as exact DECIMAL(28,12), which no summation order can change,
+so after any number of iterations the scores are bit-identical to the
+DuckDB oracle's unrolled replay. No tolerance.
 
 Scale shape: the graph is vocabulary-bounded (edges ≤ distinct
 bigrams), typically millions of nodes for a 100 TB corpus — a small
@@ -26,12 +26,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spk_sl_validation_spark.ext.graph import linf_delta
 from spk_sl_validation_spark.ext.hashing import ws_tokens
 
 DAMPING = 0.85
 N_ITER = 3  # fixed iterations of the registered keyword query and its oracle
 TOP_K = 20  # keywords kept by the registered query and its oracle
-CHECKPOINT_EVERY = 5  # eager lineage truncation period of the convergence mode
 
 
 def token_adjacency_edges(
@@ -62,7 +62,7 @@ def _frac_edges(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def _textrank_step(frac_edges: DataFrame, scores: DataFrame) -> DataFrame:
-    """One synchronous damped update (shared by fixed and until_delta)."""
+    """One synchronous damped update of :func:`textrank_scores`."""
     contribs = frac_edges.join(scores, frac_edges.u == scores.tok).select(
         F.col("v"),
         F.round(F.col("score") * F.col("frac"), 12).cast("decimal(28,12)").alias("c"),
@@ -85,9 +85,10 @@ def textrank_scores(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_iter: int = N_ITER,
-) -> DataFrame:
-    """(tok, score): damped PageRank over the adjacency graph after
-    ``n_iter`` synchronous iterations from uniform init 1.0.
+    eps: float | None = None,
+) -> tuple[DataFrame, int]:
+    """(tok, score): damped PageRank over the adjacency graph from
+    uniform init 1.0. Returns ``(scores, n_iterations_run)``.
 
     score(v) ← 0.15 + 0.85 · Σ_u score(u)·w(u,v)/wdeg(u); each
     contribution is rounded to 12 decimals and summed as exact
@@ -95,6 +96,12 @@ def textrank_scores(
     so the aggregate is a plain codegen'd hash aggregate (the same
     round-then-exact-decimal rule as the LM scorers; replaces the
     interpreted position-ordered fold).
+
+    ``n_iter`` fixed synchronous iterations (the oracle mode), or —
+    when ``eps`` is given — iterate until the max per-token score
+    change ≤ ``eps`` (L∞, ``ext/graph.py`` :func:`linf_delta`) with
+    ``n_iter`` as the cap. With ``eps=0.0`` and the same cap the
+    scores are bit-identical to the fixed mode (pinned by test).
     """
     # Pre-divide each edge by its source degree once: contributions are
     # then score(u) * frac — one multiply per edge per iteration.
@@ -102,46 +109,13 @@ def textrank_scores(
     scores = frac_edges.select(F.col("u").alias("tok")).distinct().select(
         "tok", F.lit(1.0).alias("score")
     )
-    for _ in range(n_iter):
-        scores = _textrank_step(frac_edges, scores).localCheckpoint(eager=True)
-    return scores
-
-
-def textrank_scores_until_delta(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    eps: float = 1e-9,
-    max_iter: int = 50,
-) -> tuple[DataFrame, int]:
-    """Convergence-mode TextRank: iterate until the max per-token score
-    change ≤ ``eps`` (L∞) or ``max_iter``; returns ``(scores, n_run)``.
-
-    Same per-iteration arithmetic as :func:`textrank_scores`, so with
-    ``eps=0.0, max_iter=k`` the scores are bit-identical to the fixed
-    ``n_iter=k`` run (pinned by test). One scalar of driver traffic per
-    iteration; eager lineage truncation every ``CHECKPOINT_EVERY``
-    iterations, lazy checkpoints in between keep plan depth bounded.
-    """
-    frac_edges = _frac_edges(df, id_col, text_col)
-    scores = (
-        frac_edges.select(F.col("u").alias("tok"))
-        .distinct()
-        .select("tok", F.lit(1.0).alias("score"))
-        .localCheckpoint(eager=True)
-    )
     it = 0
-    for it in range(1, max_iter + 1):
+    for it in range(1, n_iter + 1):
         prev = scores
-        scores = _textrank_step(frac_edges, prev).localCheckpoint(
-            eager=(it % CHECKPOINT_EVERY == 0)
-        )
-        delta_row = (
-            scores.join(prev.withColumnRenamed("score", "__prev"), "tok")
-            .agg(F.max(F.abs(F.col("score") - F.col("__prev"))).alias("d"))
-            .first()
-        )
-        if (delta_row["d"] or 0.0) <= eps:
+        # lazy: materialized once at first use (the delta probe's job
+        # in eps mode), so each iteration reads the previous one's rows
+        scores = _textrank_step(frac_edges, prev).localCheckpoint(eager=False)
+        if eps is not None and linf_delta(scores, prev, "tok", "score") <= eps:
             break
     return scores, it
 
@@ -154,7 +128,7 @@ def textrank_keywords(
     top_k: int = TOP_K,
 ) -> DataFrame:
     """(tok, score, rank): the corpus's top-k TextRank keywords."""
-    scores = textrank_scores(df, id_col, text_col, n_iter)
+    scores, _ = textrank_scores(df, id_col, text_col, n_iter)
     w = Window.orderBy(F.col("score").desc(), F.col("tok").asc())
     return scores.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= top_k)
 

@@ -206,33 +206,29 @@ def dedup_pipeline_exact_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_clusters",
-    doc="transitive near-dup clusters: iterative min-label propagation == recursive-CTE connected components",
-    oracle=_dedup_clusters_oracle(),
-)
-def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return D.dedup_clusters(docs, "doc_id", "text", jaccard_threshold=JACCARD_TAU)
 
 
-@register(
-    "dedup_clusters_stars",
-    doc=(
-        "transitive near-dup clusters via alternating large-star/small-star "
-        "contraction (Kiveris et al. 2014) — the until-converged mode for "
-        "adversarial dup graphs: O(log² n) rounds regardless of diameter "
-        "(a 100k-node path converges in 18 rounds where propagation needs "
-        "99,999 — SCALE.md §7). Identical output to dedup_clusters wherever "
-        "both converge; same oracle"
+# Two names, one builder: both run star contraction. The second name
+# stays for callers and ledgers that know it; the oracle is shared.
+for _name, _doc in (
+    (
+        "dedup_clusters",
+        "transitive near-dup clusters: star-contraction connected components "
+        "== recursive-CTE min-label propagation",
     ),
-    oracle=_dedup_clusters_oracle(),
-)
-def dedup_clusters_stars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return D.dedup_clusters(
-        docs, "doc_id", "text", jaccard_threshold=JACCARD_TAU, method="stars"
-    )
+    (
+        "dedup_clusters_stars",
+        "transitive near-dup clusters via alternating large-star/small-star "
+        "contraction (Kiveris et al. 2014): O(log² n) rounds regardless of "
+        "diameter (a 100k-node path converges in 18 rounds where propagation "
+        "needs 99,999 — SCALE.md §7). The same builder as dedup_clusters; "
+        "same oracle",
+    ),
+):
+    register(_name, oracle=_dedup_clusters_oracle(), doc=_doc)(_dedup_clusters)
 
 
 @register(

@@ -80,7 +80,8 @@ SELECT node, round(rank, 6) AS rank FROM r{iterations}
 )
 def graph_pagerank_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    return pagerank(transition_edges(events))
+    ranks, _ = pagerank(transition_edges(events))
+    return ranks
 
 
 @register(

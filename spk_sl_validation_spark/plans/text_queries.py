@@ -519,7 +519,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return X.bpe_encode_stats(docs, merges)
 
 
-TRAIN_ITERS = 3  # bounded-iteration oracle mode (until_delta is the prod mode)
+TRAIN_ITERS = 3  # bounded-iteration oracle mode (prod: ext/text.py train_quality_model_until_delta)
 _FEATS = ("bias", "length", "stopword", "punct", "distinct")
 _X_SQL = {
     "length": "least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)",

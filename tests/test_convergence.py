@@ -1,6 +1,6 @@
-"""Convergence-mode iteration (until_delta) for the three iterative
-algorithms — the production story at 100 TB, alongside the pinned
-fixed-iteration oracle mode.
+"""Convergence mode (``eps``) of the three iterative algorithms — the
+production story at 100 TB — against their fixed-iteration oracle mode
+(``eps=None``), one loop each.
 
 Two properties per algorithm:
 1. parity — with ``eps=0`` and the fixed count as the cap, the
@@ -16,13 +16,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from spk_sl_validation_spark.ext.graph import (
-    ITERATIONS,
-    pagerank,
-    pagerank_until_delta,
-    transition_edges,
-)
-from spk_sl_validation_spark.ext.textrank import textrank_scores, textrank_scores_until_delta
+from spk_sl_validation_spark.ext.graph import ITERATIONS, pagerank, transition_edges
+from spk_sl_validation_spark.ext.textrank import textrank_scores
 from spk_sl_validation_spark.sources.readers import load_table
 
 
@@ -32,29 +27,33 @@ def _ranks(df):
 
 def test_pagerank_until_delta_parity_with_fixed(spark, sf_dir):
     edges = transition_edges(load_table(spark, sf_dir, "events"))
-    fixed = _ranks(pagerank(edges))
-    conv, n_run = pagerank_until_delta(edges, eps=0.0, max_iter=ITERATIONS)
+    fixed, n_fixed = pagerank(edges)
+    assert n_fixed == ITERATIONS
+    fixed = _ranks(fixed)
+    conv, n_run = pagerank(edges, eps=0.0)
     assert n_run <= ITERATIONS
     assert _ranks(conv) == fixed
 
 
 def test_pagerank_until_delta_converges_before_cap(spark, sf_dir):
     edges = transition_edges(load_table(spark, sf_dir, "events"))
-    conv, n_run = pagerank_until_delta(edges, eps=1e-7, max_iter=40, checkpoint_every=4)
+    conv, n_run = pagerank(edges, n_iter=40, eps=1e-7)
     assert n_run < 40, "did not converge within the cap"
     # ranks still sum to ~1 after many iterations
     total = conv.agg(F.sum("rank")).first()[0]
     assert abs(total - 1.0) < 1e-3
-    # converged = one more until_delta run from scratch with a larger
+    # converged = one more convergence run from scratch with a larger
     # budget lands on the same values (the fixed point is stable)
-    conv2, n2 = pagerank_until_delta(edges, eps=1e-7, max_iter=n_run + 5, checkpoint_every=3)
+    conv2, n2 = pagerank(edges, n_iter=n_run + 5, eps=1e-7)
     assert _ranks(conv2) == _ranks(conv)
 
 
 def test_textrank_until_delta_parity_with_fixed(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(50)
-    fixed = {r["tok"]: r["score"] for r in textrank_scores(docs, n_iter=3).collect()}
-    conv, n_run = textrank_scores_until_delta(docs, eps=0.0, max_iter=3)
+    fixed, n_fixed = textrank_scores(docs, n_iter=3)
+    assert n_fixed == 3
+    fixed = {r["tok"]: r["score"] for r in fixed.collect()}
+    conv, n_run = textrank_scores(docs, n_iter=3, eps=0.0)
     assert n_run <= 3
     got = {r["tok"]: r["score"] for r in conv.collect()}
     assert got == fixed
@@ -62,7 +61,7 @@ def test_textrank_until_delta_parity_with_fixed(spark, sf_dir):
 
 def test_textrank_until_delta_converges(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(50)
-    conv, n_run = textrank_scores_until_delta(docs, eps=1e-6, max_iter=60)
+    conv, n_run = textrank_scores(docs, n_iter=60, eps=1e-6)
     assert n_run < 60, "did not converge within the cap"
     scores = [r["score"] for r in conv.collect()]
     assert all(s > 0 for s in scores)
@@ -82,8 +81,8 @@ def test_kmeans_eps_parity_and_early_stop(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Connected components: star contraction (the until-converged mode for
-# adversarial graphs) vs min-label propagation (the oracle mode).
+# Connected components: star contraction, the one algorithm behind
+# dedup_clusters (the DuckDB oracle replays min-label propagation).
 # ---------------------------------------------------------------------------
 
 
@@ -124,18 +123,9 @@ def test_stars_cc_direction_and_duplicate_insensitive(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}
 
 
-def test_dedup_clusters_stars_equals_propagate(spark, sf_dir):
-    from spk_sl_validation_spark.ext.dedup import dedup_clusters
-
-    docs = load_table(spark, sf_dir, "documents")
-    prop = sorted(map(tuple, dedup_clusters(docs).collect()))
-    stars = sorted(map(tuple, dedup_clusters(docs, method="stars").collect()))
-    assert stars == prop
-
-
-def test_dedup_clusters_propagate_raises_on_diameter_blowup(spark):
-    """A near-dup CHAIN whose diameter exceeds max_iterations must
-    fail loudly, not return a silent partial labeling."""
+def test_dedup_clusters_raises_on_diameter_blowup(spark):
+    """A near-dup CHAIN that needs more rounds than max_iterations
+    must fail loudly, not return a silent partial labeling."""
     import pytest
 
     from spk_sl_validation_spark.ext.dedup import dedup_clusters
@@ -148,25 +138,21 @@ def test_dedup_clusters_propagate_raises_on_diameter_blowup(spark):
     words = [f"w{i}" for i in range(120)]
     docs_rows = [(i, " ".join(words[i : i + 30])) for i in range(60)]
     docs = spark.createDataFrame(docs_rows, "doc_id long, text string")
-    kwargs = dict(jaccard_threshold=0.8, max_iterations=5)
-    with pytest.raises(ValueError, match="stars"):
-        dedup_clusters(docs, **kwargs).collect()
-    # max_iterations now bounds BOTH modes (ADVICE r5 item 3): stars
-    # needs ~2·log2(21) ≈ 9 rounds here, so the same 5-round cap must
-    # fail loudly in stars mode too — no silent partial labeling in
-    # either mode
+    # star contraction needs ~2·log2(21) ≈ 9 rounds here, so a 5-round
+    # cap must fail loudly
     with pytest.raises(ValueError, match="did not converge"):
-        dedup_clusters(docs, method="stars", **kwargs).collect()
-    # and with an adequate bound the stars mode labels the whole chain
-    # as one component
-    kwargs["max_iterations"] = 20
-    got = {r.doc_id: r.cluster_id for r in dedup_clusters(docs, method="stars", **kwargs).collect()}
+        dedup_clusters(docs, jaccard_threshold=0.8, max_iterations=5).collect()
+    # and with an adequate bound the whole chain is one component
+    got = {
+        r.doc_id: r.cluster_id
+        for r in dedup_clusters(docs, jaccard_threshold=0.8, max_iterations=20).collect()
+    }
     assert got == {i: 0 for i in range(60)}
 
 
 def test_stars_cc_empty_edges(spark):
-    """Zero edges → zero labels in one round (and dedup_clusters'
-    stars mode degrades to all-singletons via the fold-back join)."""
+    """Zero edges → zero labels in one round (and dedup_clusters
+    degrades to all-singletons via the fold-back join)."""
     from spk_sl_validation_spark.ext.graph import connected_components_stars
 
     edges = spark.createDataFrame([], "src long, dst long")

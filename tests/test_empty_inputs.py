@@ -57,3 +57,26 @@ def test_triangles_empty(spark):
     out = triangle_counts(spark.createDataFrame([], schema))
     assert out.count() == 0
     assert set(out.columns) == {"node", "degree", "n_triangles", "clustering_coeff"}
+
+
+@pytest.mark.parametrize("eps", [None, 1e-9])
+def test_pagerank_empty(spark, eps):
+    """No edges: an empty rank table, in both modes. The eps probe's
+    max over no rows is NULL, which ends the loop after one iteration."""
+    from spk_sl_validation_spark.ext.graph import ITERATIONS, pagerank
+
+    edges = spark.createDataFrame([], "src string, dst string, w double")
+    ranks, n_run = pagerank(edges, eps=eps)
+    assert ranks.count() == 0
+    assert ranks.columns == ["node", "rank"]
+    assert n_run == (ITERATIONS if eps is None else 1)
+
+
+@pytest.mark.parametrize("eps", [None, 1e-9])
+def test_textrank_scores_empty(spark, empty_docs, eps):
+    from spk_sl_validation_spark.ext.textrank import N_ITER, textrank_scores
+
+    scores, n_run = textrank_scores(empty_docs, "doc_id", "text", eps=eps)
+    assert scores.count() == 0
+    assert scores.columns == ["tok", "score"]
+    assert n_run == (N_ITER if eps is None else 1)

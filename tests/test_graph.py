@@ -45,7 +45,7 @@ def test_pagerank_matches_python_reference(spark):
     df = spark.createDataFrame(edges, ["src", "dst", "w"]).withColumn(
         "w", F.col("w").cast("double")
     )
-    got = {r["node"]: r["rank"] for r in pagerank(df).collect()}
+    got = {r["node"]: r["rank"] for r in pagerank(df)[0].collect()}
     assert got == _python_pagerank(edges)
 
 
@@ -53,7 +53,7 @@ def test_pagerank_ranks_sum_to_one(spark, sf_dir):
     from spk_sl_validation_spark.sources.readers import load_table
 
     events = load_table(spark, sf_dir, "events")
-    ranks = pagerank(transition_edges(events)).collect()
+    ranks = pagerank(transition_edges(events))[0].collect()
     assert len(ranks) >= 2
     total = sum(r["rank"] for r in ranks)
     assert total == pytest.approx(1.0, abs=1e-4)

@@ -66,7 +66,7 @@ def test_pagerank_property_matches_python(spark, raw):
     df = spark.createDataFrame(edges, ["src", "dst", "w"]).withColumn(
         "w", F.col("w").cast("double")
     )
-    got = {r["node"]: r["rank"] for r in pagerank(df).collect()}
+    got = {r["node"]: r["rank"] for r in pagerank(df)[0].collect()}
     expected = _python_pagerank(edges)
     # allow 1-ulp-at-the-rounding-boundary slack: compare at 1e-6
     assert set(got) == set(expected)

@@ -199,6 +199,8 @@ NONHEADLINE_BUDGETS = {
     # side; bloom decontamination pays candidate/bench-sized
     # exchanges (in-plan mask agg + pinned shuffle-hash verify) in
     # exchange for never broadcasting the bench string set.
+    # dedup_clusters is the same builder as dedup_clusters_stars.
+    "dedup_clusters": (3, 0),
     "dedup_clusters_stars": (3, 0),
     "sketch_hll_by_type": (4, 0),
     "decontaminate_bloom": (11, 0),

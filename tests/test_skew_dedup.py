@@ -96,9 +96,7 @@ def test_cap_bounds_every_bucket_exactly(spark):
 
 def test_capped_hot_cluster_still_found(spark):
     docs = _hot_corpus(spark)
-    clusters = dedup_clusters(
-        docs, "doc_id", "text", max_iterations=20, method="stars"
-    )
+    clusters = dedup_clusters(docs, "doc_id", "text", max_iterations=20)
     big = (
         clusters.groupBy("cluster_id")
         .agg(F.count(F.lit(1)).alias("n"), F.collect_list("doc_id").alias("members"))

@@ -13,7 +13,7 @@ def test_textrank_conserves_total_mass(spark, sf_dir):
     redistributes exactly its own score, so sum(scores) stays n after
     ANY number of iterations: sum' = 0.15*n + 0.85*sum."""
     docs = load_table(spark, sf_dir, "documents")
-    scores = textrank_scores(docs, n_iter=2)
+    scores, _ = textrank_scores(docs, n_iter=2)
     n = scores.count()
     total = scores.agg(F.sum("score")).first()[0]
     assert abs(total - n) < 1e-6 * n
