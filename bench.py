@@ -48,18 +48,11 @@ except OSError:
 
 def _host_fingerprint() -> dict:
     import platform
-    import subprocess
 
     import pyspark
 
-    try:
-        rev = subprocess.run(
-            ["git", "-C", os.path.dirname(os.path.abspath(__file__)), "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, timeout=5,
-        ).stdout.strip()
-    except Exception:
-        rev = ""
-    load1 = _LOAD1_AT_LAUNCH
+    from perfbench.run import source_rev
+
     return {
         "cpus": os.cpu_count(),
         "platform": platform.platform(),
@@ -69,9 +62,11 @@ def _host_fingerprint() -> dict:
         # attribution: which code produced the numbers, and how busy the
         # host was at measurement start (day-to-day drift has measured
         # 2x+ on this box — per-query deltas without a rev+load context
-        # are uninterpretable).
-        "git_rev": rev,
-        "load1_at_start": load1,
+        # are uninterpretable). git_rev is None outside a repository and
+        # names the last commit of a dirty tree; src_sha hashes the
+        # package sources, so it tells both cases apart.
+        **source_rev(),
+        "load1_at_start": _LOAD1_AT_LAUNCH,
     }
 
 
@@ -251,7 +246,8 @@ def main(names: list[str] | None = None) -> None:
                 "queries": medians,
                 "py_worker_calibrator": py_cal["median"],
                 "sf": sf_val,
-                "git_rev": host.get("git_rev"),
+                "git_rev": host["git_rev"],
+                "src_sha": host["src_sha"],
                 "runs": RUNS,
                 "aggregation": "median",
             }

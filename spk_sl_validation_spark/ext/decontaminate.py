@@ -59,11 +59,6 @@ def benchmark_overlap(
     )
 
 
-#: Bloom hash functions of the decontamination prefilter: the mask
-#: (:func:`bloom_mask_row`) and its probe (:func:`bloom_bit_tests`).
-_BLOOM_K = 5
-
-
 def bloom_mask_row(bench_g: DataFrame, s_col: str = "s", m_bits: int = 8192) -> DataFrame:
     """1-row ``map<word_idx, word>`` Bloom bitmask over the distinct
     strings in ``bench_g[s_col]`` — the persistable filter artifact.
@@ -75,7 +70,7 @@ def bloom_mask_row(bench_g: DataFrame, s_col: str = "s", m_bits: int = 8192) -> 
     from spk_sl_validation_spark.ext.sketches import bloom_positions
 
     words = (
-        bloom_positions(bench_g, s_col, m_bits, _BLOOM_K)
+        bloom_positions(bench_g, s_col, m_bits)
         .groupBy((F.col("pos") / 64).cast("int").alias("w"))
         .agg(F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))")).alias("v"))
     )
@@ -86,20 +81,19 @@ def bloom_mask_row(bench_g: DataFrame, s_col: str = "s", m_bits: int = 8192) -> 
 
 def bloom_bit_tests(m_bits: int, h_col: str = "__h", mask_col: str = "__mask") -> str:
     """SQL predicate string testing ``h_col`` against a crossJoined
-    :func:`bloom_mask_row` column: ``_BLOOM_K`` shiftright-&-1 bit tests.
-    Arithmetic shift is bit-test-safe (the ``& 1`` reads only the
-    lowest post-shift bit, sign fill never reaches it for shifts
-    < 64); a missing word key yields NULL, which ``= 1`` rejects."""
-    from spk_sl_validation_spark.ext.hashing import seeded_perm_sql
+    :func:`bloom_mask_row` column: one shiftright-&-1 bit test per
+    position of ``sketches.bloom_pos_sql``, the positions the mask was
+    built from. Arithmetic shift is bit-test-safe (the ``& 1`` reads
+    only the lowest post-shift bit, sign fill never reaches it for
+    shifts < 64); a missing word key yields NULL, which ``= 1``
+    rejects."""
+    from spk_sl_validation_spark.ext.sketches import bloom_pos_sql
 
-    tests = []
-    for i in range(_BLOOM_K):
-        pos = f"({seeded_perm_sql(h_col, i)} % {m_bits})"
-        tests.append(
-            f"(shiftright(element_at({mask_col}, CAST({pos} / 64 AS INT)),"
-            f" CAST({pos} % 64 AS INT)) & 1) = 1"
-        )
-    return " AND ".join(tests)
+    return " AND ".join(
+        f"(shiftright(element_at({mask_col}, CAST(({pos}) / 64 AS INT)),"
+        f" CAST(({pos}) % 64 AS INT)) & 1) = 1"
+        for pos in bloom_pos_sql(h_col, m_bits)
+    )
 
 
 def benchmark_overlap_bloom(
@@ -126,7 +120,7 @@ def benchmark_overlap_bloom(
        house fan-in pattern), so m_bits scales to millions of bits
        where a plan-text literal would hit the codegen method limit
        around 2^17.
-    2. The corpus-side probe is ``_BLOOM_K`` ``element_at``+bit-test conditions
+    2. The corpus-side probe is ``sketches.BLOOM_K`` ``element_at``+bit-test conditions
        per shingle — no shuffle; an absent map key means no bits set
        in that word, and the NULL bit-test correctly rejects. Bloom
        has no false negatives, so candidates ⊇ true matches and the

@@ -86,17 +86,13 @@ def sketch_bloom_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=SK.hll_estimate_sql("events", "user_id"),
 )
 def streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyspark.sql.functions as F
-
     from spk_sl_validation_spark.streaming import pipeline as P
 
     stream = P.stream_events(spark, sf_dir)
     regs = P.run_available_now(
         SK.hll_registers(stream, "user_id"), output_mode="complete"
     )
-    exact = load_table(spark, sf_dir, "events").select(
-        F.countDistinct("user_id").alias("exact_distinct")
-    )
+    exact = SK.hll_exact(load_table(spark, sf_dir, "events"), "user_id")
     return SK.hll_estimate_from_registers(regs, exact)
 
 
@@ -149,19 +145,13 @@ def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=SK.cms_estimate_counts_sql("events", "user_id"),
 )
 def streaming_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyspark.sql.functions as F
-
     from spk_sl_validation_spark.streaming import pipeline as P
 
     stream = P.stream_events(spark, sf_dir)
     counters = P.run_available_now(
         SK.cms_counters(stream, "user_id"), output_mode="complete"
     )
-    exact = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(F.col("user_id").alias("key"))
-        .agg(F.count(F.lit(1)).alias("exact_n"))
-    )
+    exact = SK.cms_exact(load_table(spark, sf_dir, "events"), "user_id")
     return SK.cms_estimate_from_counters(counters, exact)
 
 

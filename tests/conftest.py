@@ -28,3 +28,24 @@ def spark(tmp_path_factory):
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def assert_twin():
+    """``assert_twin(frame, sql, **tables)``: the Spark ``frame`` and its
+    DuckDB twin ``sql``, run over the pandas ``tables`` (registered by
+    name), return the same rows — row count, columns and value hash, as
+    tools/check_contract.py compares a query with its oracle."""
+    import duckdb
+
+    from tools.check_contract import frame_fingerprint
+
+    def check(frame, sql, **tables):
+        con = duckdb.connect()
+        for name, pdf in tables.items():
+            con.register(name, pdf)
+        want = con.execute(sql).df()
+        got = frame.toPandas()
+        assert frame_fingerprint(got) == frame_fingerprint(want), (got, want)
+
+    return check

@@ -383,7 +383,7 @@ def test_bloom_pruned_join_equals_plain_join(spark, sf_dir):
     result-identical to the plain join (no false negatives) while
     shrinking the shuffled probe — the broadcast-Bloom join-pruning
     pattern for selective build sides."""
-    from spk_sl_validation_spark.ext.sketches import bloom_positions
+    from spk_sl_validation_spark.ext.sketches import BLOOM_K, bloom_pos_array, bloom_positions
     from spk_sl_validation_spark.ext.hashing import md5_long
     from pyspark.sql import functions as SF
 
@@ -392,19 +392,16 @@ def test_bloom_pruned_join_equals_plain_join(spark, sf_dir):
 
     plain = orders.join(hot, orders.o_custkey == hot.c_custkey).select("o_orderkey", "c_custkey")
 
-    m_bits, k = 4096, 5
-    bits = bloom_positions(hot, "c_custkey", m_bits, k).withColumn("__set", SF.lit(1))
+    m_bits = 4096
+    bits = bloom_positions(hot, "c_custkey", m_bits).withColumn("__set", SF.lit(1))
     h = md5_long(SF.col("o_custkey").cast("string"))
-    from spk_sl_validation_spark.ext.hashing import seeded_perm
-
     probe_pos = orders.select(
-        "o_orderkey", "o_custkey",
-        SF.explode(SF.array(*[(seeded_perm(h, i) % SF.lit(m_bits)) for i in range(k)])).alias("pos"),
+        "o_orderkey", "o_custkey", SF.explode(bloom_pos_array(h, m_bits)).alias("pos"),
     )
     pruned_keys = (
         probe_pos.join(SF.broadcast(bits), "pos", "left")
         .groupBy("o_orderkey", "o_custkey")
-        .agg((SF.count("__set") == SF.lit(k)).alias("maybe"))
+        .agg((SF.count("__set") == SF.lit(BLOOM_K)).alias("maybe"))
         .filter(SF.col("maybe"))
     )
     pruned = pruned_keys.join(hot, pruned_keys.o_custkey == hot.c_custkey).select(

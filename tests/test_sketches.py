@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from spk_sl_validation_spark.sources.readers import load_table
@@ -35,15 +37,24 @@ def test_approx_percentile_brackets_exact(spark, sf_dir):
 # guarantees that must hold regardless of data.
 # ---------------------------------------------------------------------------
 
+def _null_every(df, col, n):
+    """``df`` with ``col`` set to NULL on every n-th ``event_id``."""
+    return df.withColumn(col, F.when(F.col("event_id") % n == 0, None).otherwise(F.col(col)))
+
+
 def test_hll_estimate_within_theoretical_error(spark, sf_dir):
+    """Also on NULL-bearing input, where NULL values are not counted:
+    the estimate equals the one on the NULL-free rows."""
     from spk_sl_validation_spark.ext.sketches import hll_estimate
 
-    ev = load_table(spark, sf_dir, "events")
-    row = hll_estimate(ev, "user_id").collect()[0]
-    # standard error for m=64 is 1.04/sqrt(64) = 13%; allow 3 sigma
-    assert abs(row.rel_err) <= 3 * 1.04 / 8
-    assert row.m == 64
-    assert 0 < row.active_registers <= 64
+    events = load_table(spark, sf_dir, "events")
+    for ev in (events, _null_every(events, "user_id", 10)):
+        row = hll_estimate(ev, "user_id").collect()[0]
+        # standard error for m=64 is 1.04/sqrt(64) = 13%; allow 3 sigma
+        assert abs(row.rel_err) <= 3 * 1.04 / 8
+        assert row.m == 64
+        assert 0 < row.active_registers <= 64
+        assert row == hll_estimate(ev.filter(F.col("user_id").isNotNull()), "user_id").first()
 
 
 def test_cms_never_underestimates(spark, sf_dir):
@@ -122,16 +133,95 @@ def test_bottomk_quantile_estimates_near_exact(spark, sf_dir):
 def test_hll_estimate_by_groups_match_global_per_group(spark):
     """Per-group registers are the global sketch restricted to the
     group's rows, so each group's estimate equals hll_estimate run on
-    that group's slice alone."""
+    that group's slice alone; with NULL values, both equal their result
+    on the NULL-free rows (2000 distinct users fill all 64 registers)."""
     from spk_sl_validation_spark.ext.sketches import hll_estimate, hll_estimate_by
 
-    rows = [(i, f"t{i % 3}", i % 40) for i in range(500)]
-    df = spark.createDataFrame(rows, "event_id long, event_type string, user_id long")
-    by = {
-        r["event_type"]: (r["hll_estimate"], r["exact_distinct"])
-        for r in hll_estimate_by(df, "event_type", "user_id").collect()
+    for n_rows, n_users, null_every in ((500, 40, None), (500, 40, 10), (2000, 2000, 10)):
+        rows = [(i, f"t{i % 3}", i % n_users) for i in range(n_rows)]
+        df = spark.createDataFrame(rows, "event_id long, event_type string, user_id long")
+        if null_every:
+            df = _null_every(df, "user_id", null_every)
+        clean = df.filter(df.user_id.isNotNull())
+        by_rows = hll_estimate_by(df, "event_type", "user_id").collect()
+        assert sorted(by_rows) == sorted(hll_estimate_by(clean, "event_type", "user_id").collect())
+        assert all(0 < r["active_registers"] <= 64 for r in by_rows)
+        by = {r["event_type"]: (r["hll_estimate"], r["exact_distinct"]) for r in by_rows}
+        assert set(by) == {"t0", "t1", "t2"}
+        for t in by:
+            solo = hll_estimate(df.filter(df.event_type == t), "user_id").first()
+            assert by[t] == (solo["hll_estimate"], solo["exact_distinct"])
+        glob = hll_estimate(df, "user_id").first()
+        assert glob == hll_estimate(clean, "user_id").first()
+        assert 0 < glob["active_registers"] <= 64
+
+
+def test_hll_profile_column_equals_hll_estimate(spark):
+    """Each profiled column is the global sketch keyed by column name:
+    its row equals hll_estimate on that column, NULL values uncounted."""
+    from spk_sl_validation_spark.ext.sketches import hll_estimate, hll_profile
+
+    rows = [(i, None if i % 10 == 0 else i % 150, f"s{i % 7}" if i % 4 else None) for i in range(2000)]
+    df = spark.createDataFrame(rows, "event_id long, user_id long, source string")
+    prof = {r["cname"]: r for r in hll_profile(df, ["user_id", "source"]).collect()}
+    assert set(prof) == {"user_id", "source"}
+    for c, r in prof.items():
+        solo = hll_estimate(df, c).first()
+        assert 0 < r["active_registers"] <= 64
+        assert (r["active_registers"], r["hll_estimate"], r["exact_distinct"]) == (
+            solo["active_registers"], solo["hll_estimate"], solo["exact_distinct"]
+        )
+        assert r == hll_profile(df.filter(F.col(c).isNotNull()), [c]).first()
+
+
+def _null_keyed(spark):
+    """2000 events, ``user_id`` NULL on every 10th: one pandas frame
+    with a nullable Int64 key and the Spark frame made from it."""
+    n = 2000
+    pdf = pd.DataFrame(
+        {
+            "event_id": pd.array(range(n), dtype="Int64"),
+            "event_type": ["a" if i % 3 else "b" for i in range(n)],
+            "user_id": pd.array([None if i % 10 == 0 else i % 700 for i in range(n)], dtype="Int64"),
+            "value": [float(i * 37 % 1000) for i in range(n)],
+        }
+    )
+    return pdf, spark.createDataFrame(pdf, "event_id long, event_type string, user_id long, value double")
+
+
+def _null_key_cases(ev):
+    """name -> (sketch over the events frame, its DuckDB twin over t)."""
+    from spk_sl_validation_spark.ext import sketches as SK
+
+    a, b = ev.filter(F.col("event_type") == "a"), ev.filter(F.col("event_type") == "b")
+    ta, tb = "(SELECT * FROM t WHERE event_type = 'a')", "(SELECT * FROM t WHERE event_type = 'b')"
+    return {
+        "kmv_jaccard": (
+            SK.kmv_jaccard(a, "user_id", b, "user_id"),
+            SK.kmv_jaccard_sql(ta, "user_id", tb, "user_id"),
+        ),
+        "bottomk_sample_quantiles": (
+            SK.bottomk_sample_quantiles(ev, "value", "user_id"),
+            SK.bottomk_sample_quantiles_sql("t", "value", "user_id"),
+        ),
+        "cms_estimate_counts": (SK.cms_estimate_counts(ev, "user_id"), SK.cms_estimate_counts_sql("t", "user_id")),
+        "bloom_membership": (
+            SK.bloom_membership(a, "user_id", ev, "user_id"),
+            SK.bloom_membership_sql(ta, "user_id", "t", "user_id"),
+        ),
     }
-    assert set(by) == {"t0", "t1", "t2"}
-    for t in by:
-        solo = hll_estimate(df.filter(df.event_type == t), "user_id").first()
-        assert by[t] == (solo["hll_estimate"], solo["exact_distinct"])
+
+
+@pytest.mark.parametrize(
+    "name", ["kmv_jaccard", "bottomk_sample_quantiles", "cms_estimate_counts", "bloom_membership"]
+)
+def test_sketch_equals_twin_on_null_keys(spark, assert_twin, name):
+    """NULL keys are not sketched in either engine (Spark sorts a NULL
+    hash first and DuckDB last, so sketching one splits the KMV and
+    bottom-k twins), and a NULL probe key yields no count-min or Bloom
+    row."""
+    pdf, ev = _null_keyed(spark)
+    frame, sql = _null_key_cases(ev)[name]
+    if "key" in frame.columns:
+        assert frame.filter(F.col("key").isNull()).count() == 0
+    assert_twin(frame, sql, t=pdf)
